@@ -14,7 +14,7 @@ after it — a left join on the key with ``follow.ts >= anchor.ts`` plus a
 min-aggregate, then a CASE over the deadline. The no-anchor state is an
 anti-join from the follow side. Each piece is one hash exchange on the key;
 Catalyst pushes the event-type filters to the parquet scan. The streaming
-twin (per-key state + EventTimeTimeout) lives in streaming/order_timeout.py
+twin (keyed state + EventTimeTimeout) lives in streaming/order_timeout.py
 — the reference itself proves the two formulations equivalent by shipping
 both.
 

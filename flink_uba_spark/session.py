@@ -10,13 +10,31 @@ Defaults chosen for the 100 TB design point, testable on local[32]:
 - Arrow enabled for the (rare) Pandas-UDF paths,
 - shuffle partitions from SPARK_GRAFT_CPUS locally; a real cluster would
   raise it (AQE coalesces back down, so over-provisioning is cheap).
+
+Python workers fork from ``flink_uba_spark._pydaemon`` instead of
+``pyspark.daemon``. Every PySpark task calls ``importlib.invalidate_caches()``,
+and under Python 3.11 that re-reads the zip directory behind every cached
+archive importer. A stream worker holds about 18 of them: 13 for
+``pyspark.zip``, 2 for the py4j zip and 3 for the 5,359-entry spark-core
+jar. On a 4-vCPU machine that cost 0.18-0.36 CPU-s per task, even for an
+empty partition, and it dominated the small micro-batches of the stateful
+stream operators.
+The daemon skips those installation archives, the ones on the workers'
+path when it starts; every other importer, ``addPyFile`` archives and the
+SparkFiles directory included, is still invalidated on every task. The
+engine root goes on ``spark.executorEnv.PYTHONPATH`` so the daemon (and
+every pickled engine function) imports from any working directory.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+# the directory holding the flink_uba_spark package
+ENGINE_ROOT = str(Path(__file__).resolve().parent.parent)
 
 
 def get_spark(
@@ -58,6 +76,8 @@ def get_spark(
         # keep managed-table data (bucketed tables etc.) out of the repo
         .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.python.daemon.module", "flink_uba_spark._pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", ENGINE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -13,10 +13,23 @@ Semantics reproduced (keyed by the order/user key):
 - timer fires (watermark ≥ deadline) → pending anchor emits ``timeout``;
 - pay with no anchor ever seen → ``pay_no_create`` (:139).
 
-State per key is O(pending anchors) plus one bool — the same footprint as
-the reference's ValueState flags. At 100 TB the key space shards across
-executors via the groupBy exchange; a production deployment would TTL the
-``seen_anchor`` bool (kept forever here for exact orphan semantics).
+State is kept per hash bucket, under the same scale contract as
+streaming/pattern.py: the operator groups on pmod(hash(key), B) through
+pattern.py's ``_keyed_state_apply`` (B = SPARK_GRAFT_STATE_BUCKETS, else
+the session's defaultParallelism; 0 groups on the raw key), and one
+micro-batch of a bucket resolves every member key in one vectorized pass.
+The bucket's state is one blob of columnar arrays, behind pattern.py's
+versioned header that pins B: per member key the ``seen`` flag, the
+pending anchors and the key's own timer as it was set. Per key that is
+O(pending anchors) plus one bool and one timer — the same footprint as the
+reference's ValueState flags; a production deployment would TTL ``seen``
+(kept forever here for exact orphan semantics).
+
+Each member key behaves exactly as under per-key grouping with Spark's
+timer rule. A key with rows in the batch fires its pending anchors with
+``anchor_us + deadline ≤ watermark_ms·1000``; a key without rows is
+visited only when its stored timer is ``< watermark_ms`` (Spark evicts on
+a strict comparison). The bucket's own timer is the earliest member timer.
 
 Batch equivalence: on a bounded replay, payed/payed_late/pay_no_create rows
 match operators.order_lifecycle exactly; ``timeout`` rows appear only for
@@ -27,7 +40,7 @@ never emit) — the oracle encodes that watermark filter.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
+from typing import Any, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -35,6 +48,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from flink_uba_spark.streaming.pattern import (
+    _keyed_state_apply,
+    pack_bucket_blob,
+    unpack_bucket_blob,
+)
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -47,161 +66,225 @@ OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("anchor_ids", T.ArrayType(T.LongType())),
-        T.StructField("anchor_ts_us", T.ArrayType(T.LongType())),
-        T.StructField("seen_anchor", T.BooleanType()),
-    ]
-)
-
 _US = 1_000_000
+CODEC = (b"otmo", 1)
+NO_TIMER = np.iinfo(np.int64).min
+_END = np.iinfo(np.int64).max
+VERDICTS = np.array(["payed", "payed_late", "pay_no_create", "timeout"], dtype=object)
+PAYED, PAYED_LATE, PAY_NO_CREATE, TIMEOUT = range(4)
 
 
-def _ts(us: int):
-    return pd.Timestamp(us, unit="us")
+class BucketState(NamedTuple):
+    """Member keys in ascending order, and per key its ``seen`` flag, its
+    timer in ms (NO_TIMER when none is set) and its count of pending
+    anchors; the pending anchors' ids and µs times follow key order."""
+
+    keys: np.ndarray
+    seen: np.ndarray
+    timer: np.ndarray
+    n_pend: np.ndarray
+    p_ids: np.ndarray
+    p_us: np.ndarray
 
 
-def make_detector(deadline_us: int, anchor_type: str = "signup", follow_type: str = "purchase"):
-    """Build the per-key state function (returned separately so unit tests
-    can drive it with a fake GroupState).
+def _empty_state() -> BucketState:
+    z = np.empty(0, dtype="int64")
+    return BucketState(z, np.empty(0, dtype=bool), z, z, z, z)
 
-    The whole micro-batch resolves in O(n log n) numpy ops — sort once, then
-    each anchor's resolver is the first follow after it in sort order
-    (``searchsorted``), state-pending anchors resolve against the batch's
-    first follow, and orphan pays are the follow prefix before the first
-    anchor ever seen. No per-event Python loop: at 100 TB micro-batch sizes
-    the per-key cost is vectorized pandas, same treatment as
-    transitions.py's shift-based linker.
-    """
 
-    def _frame(a_ids, f_ids, user_id, a_us, f_us, st):
-        """One output block; None for a_* / f_* means that side is absent
-        for the whole block (NaT/NA broadcast), so every column stays a
-        single concrete dtype — no object columns, no per-row branching."""
-        n = len(st)
+def encode_state(st: BucketState, n_buckets: int) -> bytes:
+    head = np.array([st.keys.size, st.p_ids.size], dtype="<i8").tobytes()
+    cols = (st.keys, st.timer, st.n_pend, st.p_ids, st.p_us)
+    body = b"".join(np.ascontiguousarray(c, dtype="<i8").tobytes() for c in cols)
+    return pack_bucket_blob(CODEC, n_buckets, head + body + st.seen.astype("u1").tobytes())
 
-        def _ids(v):  # nullable int64 column, all-absent when v is None
-            if v is None:
-                return pd.arrays.IntegerArray(
-                    np.zeros(n, dtype="int64"), np.ones(n, dtype=bool)
-                )
-            return pd.arrays.IntegerArray(
-                np.asarray(v, dtype="int64"), np.zeros(n, dtype=bool)
-            )
 
-        def _tss(v):  # datetime64[us] column, all-NaT when v is None
-            if v is None:
-                return np.full(n, np.datetime64("NaT"), "datetime64[us]")
-            return np.asarray(v, dtype="int64").astype("datetime64[us]")
+def decode_state(blob: bytes, n_buckets: int) -> BucketState:
+    buf = unpack_bucket_blob(blob, CODEC, n_buckets)
+    k, p = (int(x) for x in np.frombuffer(buf, dtype="<i8", count=2))
+    off = 16
+    cols = []
+    for n in (k, k, k, p, p):
+        cols.append(np.frombuffer(buf, dtype="<i8", count=n, offset=off).astype("int64"))
+        off += 8 * n
+    seen = np.frombuffer(buf, dtype="u1", count=k, offset=off).astype(bool)
+    keys, timer, n_pend, p_ids, p_us = cols
+    return BucketState(keys, seen, timer, n_pend, p_ids, p_us)
 
-        # raw numpy/masked buffers — per-column pd.array/to_datetime was a
-        # measured per-group hot spot (round 10); all freshly allocated
+
+def _first_in(pos: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """Per segment [start, end): the first of the sorted positions ``pos``
+    inside it, or _END."""
+    first = np.append(pos, _END)[np.searchsorted(pos, starts)]
+    return np.where(first < ends, first, _END)
+
+
+class _Emitted:
+    """Output blocks in columnar form; one frame is built at the end."""
+
+    def __init__(self) -> None:
+        self.blocks: list[tuple] = []
+
+    def add(self, a_id, f_id, uid, a_us, f_us, verdict) -> None:
+        """``a_id``/``a_us`` or ``f_id``/``f_us`` None: that side is absent."""
+        if len(uid):
+            self.blocks.append((a_id, f_id, uid, a_us, f_us, verdict))
+
+    def frame(self) -> pd.DataFrame:
+        n = [len(b[2]) for b in self.blocks]
+
+        def ids(i):
+            vals = [np.zeros(m, "int64") if b[i] is None else b[i] for b, m in zip(self.blocks, n)]
+            mask = [np.full(m, b[i] is None) for b, m in zip(self.blocks, n)]
+            return pd.arrays.IntegerArray(np.concatenate(vals), np.concatenate(mask))
+
+        def tss(i):
+            vals = [
+                np.full(m, np.datetime64("NaT"), "datetime64[us]") if b[i] is None
+                else b[i].astype("datetime64[us]")
+                for b, m in zip(self.blocks, n)
+            ]
+            return np.concatenate(vals)
+
         return pd.DataFrame(
             {
-                "anchor_id": _ids(a_ids),
-                "follow_id": _ids(f_ids),
-                "user_id": np.full(n, user_id, dtype="int64"),
-                "anchor_ts": _tss(a_us),
-                "follow_ts": _tss(f_us),
-                "state": np.asarray(st, dtype=object),
+                "anchor_id": ids(0),
+                "follow_id": ids(1),
+                "user_id": np.concatenate([b[2] for b in self.blocks]),
+                "anchor_ts": tss(3),
+                "follow_ts": tss(4),
+                "state": VERDICTS[np.concatenate([b[5] for b in self.blocks])],
             },
             copy=False,
         )
 
+
+def _verdict(f_us: np.ndarray, a_us: np.ndarray, deadline_us: int) -> np.ndarray:
+    return np.where(f_us <= a_us + deadline_us, PAYED, PAYED_LATE)
+
+
+def advance(
+    st: BucketState,
+    rows: pd.DataFrame | None,
+    wm_ms: int,
+    deadline_us: int,
+    anchor_type: str,
+    follow_type: str,
+    out: _Emitted,
+) -> BucketState:
+    """One micro-batch of one bucket: ``rows`` (None on a timer call)
+    resolved against ``st``; emissions go to ``out``, the new state is
+    returned."""
+    keys, seen, timer = st.keys, st.seen, st.timer
+    p_key = np.repeat(keys, st.n_pend)
+    p_ids, p_us = st.p_ids, st.p_us
+    in_batch = np.zeros(keys.size, dtype=bool)
+
+    if rows is not None and len(rows):
+        et = rows["event_type"].to_numpy()
+        uid = rows["user_id"].to_numpy(dtype="int64")
+        ts = rows["ts"].to_numpy().astype("datetime64[us]", copy=False).view("int64")
+        eid = rows["event_id"].to_numpy(dtype="int64")
+        # per key, time order with anchors first at equal timestamps (batch
+        # uses follow_ts >= anchor_ts), then event id
+        order = np.lexsort((eid, et != anchor_type, ts, uid))
+        uid, ts, eid, et = uid[order], ts[order], eid[order], et[order]
+        starts = np.flatnonzero(np.r_[True, uid[1:] != uid[:-1]])
+        ends = np.r_[starts[1:], uid.size]
+        seg = np.repeat(np.arange(starts.size), ends - starts)
+        bkeys = uid[starts]
+        a_pos = np.flatnonzero(et == anchor_type)
+        f_pos = np.flatnonzero(et == follow_type)
+        first_a, first_f = _first_in(a_pos, starts, ends), _first_in(f_pos, starts, ends)
+
+        # batch keys against the stored member keys
+        si = np.searchsorted(keys, bkeys)
+        found = si < keys.size
+        found[found] = keys[si[found]] == bkeys[found]
+        prev_seen = np.zeros(bkeys.size, dtype=bool)
+        prev_seen[found] = seen[si[found]]
+
+        # orphan pays: follows before the first anchor their key ever saw
+        orph = f_pos[~prev_seen[seg[f_pos]] & (f_pos < first_a[seg[f_pos]])]
+        out.add(None, eid[orph], uid[orph], None, ts[orph], np.full(orph.size, PAY_NO_CREATE))
+
+        # stored pending anchors resolve against their key's first batch follow
+        f0 = np.full(keys.size, _END)
+        f0[si[found]] = first_f[found]
+        f0 = np.repeat(f0, st.n_pend)
+        res = f0 < _END
+        f = f0[res]
+        out.add(p_ids[res], eid[f], p_key[res], p_us[res], ts[f], _verdict(ts[f], p_us[res], deadline_us))
+
+        # each batch anchor's resolver: the first follow after it, same key
+        fa = np.append(f_pos, _END)[np.searchsorted(f_pos, a_pos)]
+        hit = fa < ends[seg[a_pos]]
+        a, f = a_pos[hit], fa[hit]
+        out.add(eid[a], eid[f], uid[a], ts[a], ts[f], _verdict(ts[f], ts[a], deadline_us))
+        un = a_pos[~hit]
+
+        # merge the batch keys into the member keys; unresolved batch
+        # anchors stay pending after their key's stored ones
+        new = bkeys[~found]
+        keys = np.concatenate([keys, new])
+        seen = np.concatenate([seen, np.zeros(new.size, dtype=bool)])
+        timer = np.concatenate([timer, np.full(new.size, NO_TIMER)])
+        in_batch = np.concatenate([in_batch, np.ones(new.size, dtype=bool)])
+        in_batch[si[found]] = True
+        by_key = np.argsort(keys, kind="stable")
+        keys, seen, timer, in_batch = keys[by_key], seen[by_key], timer[by_key], in_batch[by_key]
+        seen[np.searchsorted(keys, bkeys[first_a < _END])] = True
+        p_key = np.concatenate([p_key[~res], uid[un]])
+        by_key = np.argsort(p_key, kind="stable")
+        p_key = p_key[by_key]
+        p_ids = np.concatenate([p_ids[~res], eid[un]])[by_key]
+        p_us = np.concatenate([p_us[~res], ts[un]])[by_key]
+
+    # timers: keys with rows, and row-less keys whose timer Spark would fire
+    active = in_batch | ((timer != NO_TIMER) & (timer < wm_ms))
+    p_at = np.searchsorted(keys, p_key)
+    if wm_ms > 0 and p_key.size:
+        fired = active[p_at] & (p_us + deadline_us <= wm_ms * 1000)
+        out.add(p_ids[fired], None, p_key[fired], p_us[fired], None, np.full(int(fired.sum()), TIMEOUT))
+        p_ids, p_us, p_at = p_ids[~fired], p_us[~fired], p_at[~fired]
+    n_pend = np.bincount(p_at, minlength=keys.size)
+    # an active key's timer is re-armed at its earliest pending deadline
+    first_us = np.full(keys.size, _END)
+    if p_at.size:
+        has = n_pend > 0
+        first_us[has] = np.minimum.reduceat(p_us, (np.cumsum(n_pend) - n_pend)[has])
+    rearm = np.maximum(first_us // 1000 + deadline_us // 1000, wm_ms + 1)
+    timer = np.where(active, np.where(n_pend > 0, rearm, NO_TIMER), timer)
+
+    # a key with nothing pending that never saw an anchor is no state at all
+    keep = seen | (n_pend > 0)
+    return BucketState(keys[keep], seen[keep], timer[keep], n_pend[keep], p_ids, p_us)
+
+
+def make_bucket_detector(
+    deadline_us: int, anchor_type: str, follow_type: str, n_buckets: int
+):
+    """The state function of one bucket (B = ``n_buckets``; under B = 0
+    each group is one key)."""
+
     def detect(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.exists:
-            anchor_ids, anchor_ts_us, seen = state.get
-            pend_ids = np.asarray(anchor_ids, dtype="int64")
-            pend_us = np.asarray(anchor_ts_us, dtype="int64")
-        else:
-            pend_ids = pend_us = np.empty(0, dtype="int64")
-            seen = False
-
-        out: list[pd.DataFrame] = []
-
-        chunks = [] if state.hasTimedOut else list(pdfs)
-        if chunks:
-            # hot path: the serializer almost always delivers one chunk
-            rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-            if len(rows):
-                # anchors first at equal timestamps (batch uses follow_ts >= anchor_ts)
-                rows["__anchor_first"] = (rows["event_type"] != anchor_type).astype(int)
-                rows = rows.sort_values(
-                    ["ts", "__anchor_first", "event_id"], kind="mergesort"
-                ).reset_index(drop=True)
-                # explicit us resolution (zero-copy int64 view in the us case)
-                ts_us = (
-                    rows["ts"]
-                    .to_numpy()
-                    .astype("datetime64[us]", copy=False)
-                    .view("int64")
-                )
-                ev_ids = rows["event_id"].to_numpy()
-                anchor_pos = np.flatnonzero((rows["event_type"] == anchor_type).to_numpy())
-                follow_pos = np.flatnonzero((rows["event_type"] == follow_type).to_numpy())
-
-                # orphan pays: follows before the first anchor this key ever saw
-                if not seen and anchor_pos.size == 0:
-                    orphans = follow_pos
-                elif not seen:
-                    orphans = follow_pos[follow_pos < anchor_pos[0]]
-                else:
-                    orphans = np.empty(0, dtype="int64")
-                if orphans.size:
-                    out.append(
-                        _frame(None, ev_ids[orphans], user_id, None, ts_us[orphans], ["pay_no_create"] * orphans.size)
-                    )
-
-                # state-pending anchors resolve against the batch's first follow
-                if follow_pos.size and pend_ids.size:
-                    f0 = follow_pos[0]
-                    f0_us = np.full(pend_ids.size, ts_us[f0])
-                    verdicts = np.where(f0_us <= pend_us + deadline_us, "payed", "payed_late")
-                    out.append(
-                        _frame(pend_ids, np.full(pend_ids.size, ev_ids[f0]), user_id, pend_us, f0_us, verdicts)
-                    )
-                    pend_ids = pend_us = np.empty(0, dtype="int64")
-
-                # each batch anchor's resolver: first follow strictly after it
-                if anchor_pos.size:
-                    seen = True
-                    j = np.searchsorted(follow_pos, anchor_pos)
-                    hit = j < follow_pos.size
-                    if hit.any():
-                        a_pos = anchor_pos[hit]
-                        f_pos = follow_pos[j[hit]]
-                        verdicts = np.where(
-                            ts_us[f_pos] <= ts_us[a_pos] + deadline_us, "payed", "payed_late"
-                        )
-                        out.append(
-                            _frame(ev_ids[a_pos], ev_ids[f_pos], user_id, ts_us[a_pos], ts_us[f_pos], verdicts)
-                        )
-                    unresolved = anchor_pos[~hit]
-                    if unresolved.size:
-                        pend_ids = np.concatenate([pend_ids, ev_ids[unresolved].astype("int64")])
-                        pend_us = np.concatenate([pend_us, ts_us[unresolved]])
-
-        # fire timers: watermark passed a pending deadline → timeout
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if pend_ids.size:
-            fired = (pend_us + deadline_us <= wm_us) if wm_us > 0 else np.zeros(pend_ids.size, dtype=bool)
-            if fired.any():
-                out.append(
-                    _frame(pend_ids[fired], None, user_id, pend_us[fired], None, ["timeout"] * int(fired.sum()))
-                )
-            pend_ids, pend_us = pend_ids[~fired], pend_us[~fired]
-
-        state.update((pend_ids.tolist(), pend_us.tolist(), seen))
-        if pend_ids.size:
-            next_fire_ms = int(pend_us.min()) // 1000 + deadline_us // 1000
-            state.setTimeoutTimestamp(max(next_fire_ms, state.getCurrentWatermarkMs() + 1))
-
-        if len(out) == 1:  # hot path: skip the per-group concat
-            yield out[0]
-        elif out:
-            yield pd.concat(out, ignore_index=True)
+        chunks = [] if state.hasTimedOut else [c for c in pdfs if len(c)]
+        rows = chunks[0] if len(chunks) == 1 else (pd.concat(chunks, ignore_index=True) if chunks else None)
+        wm_ms = state.getCurrentWatermarkMs()
+        st = decode_state(state.get[0], n_buckets) if state.exists else _empty_state()
+        out = _Emitted()
+        st = advance(st, rows, wm_ms, deadline_us, anchor_type, follow_type, out)
+        if st.keys.size:
+            state.update((encode_state(st, n_buckets),))
+            armed = st.timer[st.timer != NO_TIMER]
+            if armed.size:
+                # every member timer is >= wm (a smaller one fired above), so
+                # the bucket fires in exactly the batches a member's would
+                state.setTimeoutTimestamp(max(int(armed.min()), wm_ms))
+        elif state.exists:
+            state.remove()
+        if out.blocks:
+            yield out.frame()
 
     return detect
 
@@ -226,10 +309,7 @@ def stream_order_timeout(
         .select("event_id", "ts", F.col(key).alias("user_id"), "event_type")
         .withWatermark("ts", watermark_delay)
     )
-    return filtered.groupBy("user_id").applyInPandasWithState(
-        make_detector(deadline_us, anchor_type, follow_type),
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return _keyed_state_apply(
+        filtered, None, OUTPUT_SCHEMA, None, GroupStateTimeout.EventTimeTimeout,
+        bucket_det=lambda nb: make_bucket_detector(deadline_us, anchor_type, follow_type, nb),
     )

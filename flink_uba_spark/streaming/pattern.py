@@ -73,11 +73,15 @@ cannot migrate a checkpointed state layout: a streaming job resuming from
 a checkpoint written by an earlier build will fail to restore — restart
 such jobs with a NEW checkpoint directory (replays are deterministic, so
 a fresh ``availableNow`` replay reproduces the stream). Any future field
-change to ``STATE_SCHEMA`` carries the same break; note it here.
+change to ``STATE_SCHEMA`` carries the same break; note it here. Hash-bucket
+blobs (see ``make_bucketed_matcher``) carry a header naming their codec,
+its version and the bucket count B; a blob without it, from another codec
+or written under another B is refused with ``StateLayoutError``.
 """
 
 from __future__ import annotations
 
+import struct
 from collections.abc import Iterator
 from typing import Any
 
@@ -1476,7 +1480,55 @@ class _BranchStateSlot:
 # toward keys/target_keys_per_bucket; 0 restores per-key grouping (the
 # exact pre-round-13 plan). The bench's 1,500-key replays put ~47 keys in
 # a bucket at the local default of 32.
+#
+# B is part of the checkpoint: a key's state lives in bucket
+# pmod(hash(key), B), so a restart under another B would look every key up
+# in the wrong bucket and silently lose its state. Every bucket blob
+# therefore starts with a fixed header (magic, codec name and version, B);
+# decoding refuses a blob written under another B or by another codec
+# instead of guessing. A bucket-native operator (order_timeout) keeps the
+# same header around its own columnar payload.
 BUCKET_STATE_SCHEMA = T.StructType([T.StructField("pkl", T.BinaryType())])
+
+_BLOB_HEADER = struct.Struct("<4s4sHi")  # magic, codec name, codec version, B
+_BLOB_MAGIC = b"FUBS"
+# make_bucketed_matcher's payload: a pickled {key: (per-key state, timer)}
+KMAP_CODEC = (b"kmap", 1)
+
+
+class StateLayoutError(RuntimeError):
+    """A checkpointed bucket blob this build cannot read as written."""
+
+
+def pack_bucket_blob(codec: tuple[bytes, int], n_buckets: int, payload: bytes) -> bytes:
+    """``payload`` behind the header recording ``codec`` and ``n_buckets``."""
+    name, version = codec
+    return _BLOB_HEADER.pack(_BLOB_MAGIC, name, version, n_buckets) + payload
+
+
+def unpack_bucket_blob(blob: bytes, codec: tuple[bytes, int], n_buckets: int) -> memoryview:
+    """The payload of a blob written by ``codec`` under ``n_buckets``
+    buckets; raises StateLayoutError for anything else."""
+    if len(blob) < _BLOB_HEADER.size or blob[:4] != _BLOB_MAGIC:
+        raise StateLayoutError(
+            "checkpointed stream state has no bucket-blob header (written by an "
+            "older build); restart the query with a new checkpoint directory"
+        )
+    _, name, version, got_b = _BLOB_HEADER.unpack_from(blob)
+    if (name, version) != codec:
+        raise StateLayoutError(
+            f"checkpointed stream state uses codec {name.decode()} v{version}, this "
+            f"build reads {codec[0].decode()} v{codec[1]}; restart the query with a "
+            "new checkpoint directory"
+        )
+    if got_b != n_buckets:
+        raise StateLayoutError(
+            f"state bucket count changed: the checkpoint was written with B={got_b} "
+            f"state buckets, this run uses B={n_buckets}, so keys would miss their "
+            f"state; resume with SPARK_GRAFT_STATE_BUCKETS={got_b} or restart the "
+            "query with a new checkpoint directory"
+        )
+    return memoryview(blob)[_BLOB_HEADER.size:]
 
 
 def _state_buckets(df: DataFrame) -> int:
@@ -1488,11 +1540,11 @@ def _state_buckets(df: DataFrame) -> int:
     return int(df.sparkSession.sparkContext.defaultParallelism)
 
 
-def make_bucketed_matcher(inner_det, timers: bool):
+def make_bucketed_matcher(inner_det, timers: bool, n_buckets: int):
     """Per-BUCKET state function running the per-key ``inner_det`` for each
     member key of the bucket — emissions, state evolution and timeout
     firing order per key are the per-key operator's own (see block comment
-    above)."""
+    above). ``n_buckets`` is the B the blobs record."""
     import pickle
 
     def detect(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
@@ -1506,7 +1558,10 @@ def make_bucketed_matcher(inner_det, timers: bool):
             wm_ms = state.getCurrentWatermarkMs()
         except Exception:  # noqa: BLE001 — NoTimeout queries have no watermark
             wm_ms = 0
-        kmap: dict = pickle.loads(state.get[0]) if state.exists else {}
+        kmap: dict = (
+            pickle.loads(unpack_bucket_blob(state.get[0], KMAP_CODEC, n_buckets))
+            if state.exists else {}
+        )
         out_frames: list[pd.DataFrame] = []
 
         def run(uid, frames, fire):
@@ -1539,11 +1594,14 @@ def make_bucketed_matcher(inner_det, timers: bool):
         ]:
             run(uid, iter([]), True)
         if kmap:
-            state.update((pickle.dumps(kmap, protocol=4),))
+            state.update((pack_bucket_blob(KMAP_CODEC, n_buckets, pickle.dumps(kmap, protocol=4)),))
             if timers:
                 pend = [t for (_v, t) in kmap.values() if t is not None]
                 if pend:
-                    state.setTimeoutTimestamp(max(min(pend), wm_ms + 1))
+                    # every member timer left is >= wm (a smaller one fired
+                    # above), so the bucket fires in exactly the batches in
+                    # which some member's own timer would
+                    state.setTimeoutTimestamp(max(min(pend), wm_ms))
         elif state.exists:
             state.remove()
         if len(out_frames) == 1:  # hot path
@@ -1554,29 +1612,33 @@ def make_bucketed_matcher(inner_det, timers: bool):
     return detect
 
 
-def _keyed_state_apply(filtered, det, out_schema, state_schema, timeout):
-    """Shared wiring for every pattern-family stateful operator: per-key
-    grouping when SPARK_GRAFT_STATE_BUCKETS=0, hash-bucketed grouping (the
+def _keyed_state_apply(filtered, det, out_schema, state_schema, timeout, bucket_det=None):
+    """Shared wiring for every keyed stateful operator: per-key grouping
+    when SPARK_GRAFT_STATE_BUCKETS=0, hash-bucketed grouping (the
     round-13 default, see the block comment above) otherwise. Results are
     identical by construction — only the Spark-visible grouping key
-    changes; the per-key NFA, emissions and timers are ``det``'s own."""
+    changes; the per-key NFA, emissions and timers are ``det``'s own.
+
+    A bucket-native operator passes ``bucket_det(B)`` instead of ``det``:
+    a state function over the whole bucket and BUCKET_STATE_SCHEMA, used
+    for every B (under B=0 each group holds one key)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     nb = _state_buckets(filtered)
+    if bucket_det is not None:
+        fn, state_schema = bucket_det(nb), BUCKET_STATE_SCHEMA
+    elif nb > 0:
+        timers = timeout == GroupStateTimeout.EventTimeTimeout
+        fn, state_schema = make_bucketed_matcher(det, timers, nb), BUCKET_STATE_SCHEMA
+    else:
+        fn = det
     if nb <= 0:
-        return filtered.groupBy("user_id").applyInPandasWithState(
-            det, out_schema, state_schema, "append", timeout
-        )
-    bucketed = filtered.withColumn(
-        "__bucket", F.pmod(F.hash(F.col("user_id")), F.lit(nb))
-    )
-    return bucketed.groupBy("__bucket").applyInPandasWithState(
-        make_bucketed_matcher(det, timeout == GroupStateTimeout.EventTimeTimeout),
-        out_schema,
-        BUCKET_STATE_SCHEMA,
-        "append",
-        timeout,
-    )
+        grouped = filtered.groupBy("user_id")
+    else:
+        grouped = filtered.withColumn(
+            "__bucket", F.pmod(F.hash(F.col("user_id")), F.lit(nb))
+        ).groupBy("__bucket")
+    return grouped.applyInPandasWithState(fn, out_schema, state_schema, "append", timeout)
 
 
 def make_branching_matcher(

@@ -10,6 +10,8 @@ import tempfile
 import uuid
 from pathlib import Path
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -370,38 +372,50 @@ def test_over_agg_recovers_from_checkpoint(spark, sf_dir):
     )
 
 
-def _crash_recover_compare(spark, events, build, out_prefix):
-    """Run a stateful streaming build crash/recover vs uninterrupted and
-    return (got, want) pandas frames (shared round-9 harness)."""
+def _split_replay(events, out_prefix):
+    """Two-file replay of ``events`` cut at the median event time."""
     mid = events.agg(F.expr("percentile_approx(unix_micros(ts), 0.5)")).collect()[0][0]
     b0 = events.filter(F.unix_micros("ts") <= mid)
     b1 = events.filter(F.unix_micros("ts") > mid)
-    replay = write_replay([b0, b1], tag=f"recov_{out_prefix}_{uuid.uuid4().hex[:8]}")
+    return write_replay([b0, b1], tag=f"recov_{out_prefix}_{uuid.uuid4().hex[:8]}")
+
+
+def _run_replay(spark, replay, schema, build, ckpt, out_dir, hide_second):
+    """Drain ``replay`` through ``build`` into a parquet sink; with
+    ``hide_second`` only its first file exists during the run (a crash
+    after batch 0)."""
+    second = Path(replay) / "01.parquet"
+    hidden = Path(replay).parent / (Path(replay).name + "_h01")
+    if hide_second:
+        second.rename(hidden)
+    try:
+        sdf = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(replay)
+        )
+        q = (
+            build(sdf)
+            .writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        if hide_second:
+            hidden.rename(second)
+
+
+def _crash_recover_compare(spark, events, build, out_prefix):
+    """Run a stateful streaming build crash/recover vs uninterrupted and
+    return (got, want) pandas frames (shared round-9 harness)."""
+    replay = _split_replay(events, out_prefix)
 
     def run_to_dir(ckpt, out_dir, hide_second):
-        second = Path(replay) / "01.parquet"
-        hidden = Path(replay).parent / (Path(replay).name + "_h01")
-        if hide_second:
-            second.rename(hidden)
-        try:
-            sdf = (
-                spark.readStream.schema(events.schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(replay)
-            )
-            q = (
-                build(sdf)
-                .writeStream.format("parquet")
-                .outputMode("append")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            if hide_second:
-                hidden.rename(second)
+        _run_replay(spark, replay, events.schema, build, ckpt, out_dir, hide_second)
 
     ckpt = str(Path(tempfile.mkdtemp(prefix=f"sg_ckpt_{out_prefix}_")))
     out_dir = str(Path(tempfile.mkdtemp(prefix=f"sg_out_{out_prefix}_")))
@@ -411,6 +425,83 @@ def _crash_recover_compare(spark, events, build, out_prefix):
     out2 = str(Path(tempfile.mkdtemp(prefix=f"sg_out2_{out_prefix}_")))
     run_to_dir(ckpt2, out2, hide_second=False)
     return spark.read.parquet(out_dir).toPandas(), spark.read.parquet(out2).toPandas()
+
+
+def _assert_same_rows(got, want):
+    c = sorted(want.columns)
+    assert (
+        got[c].sort_values(c).reset_index(drop=True)
+        .equals(want[c].sort_values(c).reset_index(drop=True))
+    )
+
+
+def _order_timeout(events):
+    """An order-timeout build whose deadline outlasts the first half of
+    ``events``. A timer is then never due at the cut: a crashed run has a
+    watermark-only batch there, the uninterrupted run does not, and a due
+    timer would fire in one run while the next batch's pay resolves the
+    anchor in the other."""
+    from flink_uba_spark.streaming.order_timeout import stream_order_timeout
+
+    lo, mid = events.agg(
+        F.min(F.unix_micros("ts")), F.expr("percentile_approx(unix_micros(ts), 0.5)")
+    ).collect()[0]
+    hours = (mid - lo) // 3_600_000_000 + 1
+    return lambda sdf: stream_order_timeout(sdf, deadline=f"{hours} hours")
+
+
+def _view_click_purchase(sdf):
+    from flink_uba_spark.streaming.pattern import stream_pattern_detect
+
+    steps = [("view", None), ("click", "INTERVAL 30 MINUTES"), ("purchase", "INTERVAL 2 HOURS")]
+    return stream_pattern_detect(sdf, key="user_id", steps=steps)
+
+
+def test_order_timeout_recovers_from_checkpoint(spark, sf_dir):
+    """The order-timeout bucket state (seen flags, pending anchors and
+    per-key timers in one columnar blob) must round-trip the state store:
+    crash/recover equals uninterrupted, exactly-once per anchor."""
+    events = load_testdata(spark, sf_dir, ("events",))["events"].select(
+        "event_id", "ts", "user_id", "event_type"
+    )
+    got, want = _crash_recover_compare(spark, events, _order_timeout(events), "otimeout")
+    mid = events.agg(F.expr("percentile_approx(unix_micros(ts), 0.5)")).collect()[0][0]
+    cut = pd.Timestamp(mid, unit="us")
+    # anchors pending at the cut resolve after the restart
+    assert ((want["anchor_ts"] <= cut) & (want["follow_ts"] > cut)).any()
+    assert got.dropna(subset=["anchor_id"])["anchor_id"].is_unique
+    _assert_same_rows(got, want)
+
+
+@pytest.mark.parametrize("op", ["pattern", "order_timeout"])
+def test_restart_with_other_bucket_count_is_refused(spark, sf_dir, monkeypatch, op):
+    """A key's state lives in bucket pmod(hash(key), B): restarting a
+    checkpoint under another B must fail loudly (it used to drop matches
+    silently), and resuming under the checkpoint's B must still equal the
+    uninterrupted run."""
+    from pyspark.errors import StreamingQueryException
+
+    events = load_testdata(spark, sf_dir, ("events",))["events"].select(
+        "event_id", "ts", "user_id", "event_type"
+    )
+    build = _view_click_purchase if op == "pattern" else _order_timeout(events)
+    replay = _split_replay(events, "rebucket")
+    ckpt, out_dir, ckpt2, out2 = (
+        str(Path(tempfile.mkdtemp(prefix=f"sg_rebucket{i}_"))) for i in range(4)
+    )
+
+    def run(b, ckpt, out_dir, hide_second):
+        monkeypatch.setenv("SPARK_GRAFT_STATE_BUCKETS", str(b))
+        _run_replay(spark, replay, events.schema, build, ckpt, out_dir, hide_second)
+
+    run(4, ckpt, out_dir, hide_second=True)
+    with pytest.raises(StreamingQueryException, match="state bucket count changed"):
+        run(3, ckpt, out_dir, hide_second=False)
+    run(4, ckpt, out_dir, hide_second=False)
+    run(4, ckpt2, out2, hide_second=False)
+    want = spark.read.parquet(out2).toPandas()
+    assert len(want) > 0
+    _assert_same_rows(spark.read.parquet(out_dir).toPandas(), want)
 
 
 def test_skip_to_replayer_recovers_from_checkpoint(spark, sf_dir):

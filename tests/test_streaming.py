@@ -8,7 +8,7 @@ import pytest
 
 from flink_uba_spark.queries import streaming as SQ
 from flink_uba_spark.queries import uba
-from flink_uba_spark.streaming.order_timeout import make_detector
+from flink_uba_spark.streaming.order_timeout import decode_state, make_bucket_detector
 from tests.conftest import assert_matches_oracle
 
 US = 1_000_000
@@ -46,7 +46,7 @@ class FakeState:
 def _rows(*evs):
     return pd.DataFrame(
         [
-            {"event_id": i, "ts": pd.Timestamp(ts_us, unit="us"), "event_type": t}
+            {"event_id": i, "ts": pd.Timestamp(ts_us, unit="us"), "user_id": 7, "event_type": t}
             for i, ts_us, t in evs
         ]
     )
@@ -62,13 +62,22 @@ def _collect(gen):
     return pd.concat(frames, ignore_index=True)
 
 
+# the bucket detector runs key 7 in bucket 0 of B=4
 def _run(detector, pdf, state):
-    return _collect(detector((7,), iter([pdf]), state))
+    return _collect(detector((0,), iter([pdf]), state))
+
+
+def _fire(detector, state):
+    return _collect(detector((0,), iter([]), state))
+
+
+def _pending(state):
+    return decode_state(state._v[0], 4).p_ids.tolist()
 
 
 @pytest.fixture(scope="module")
 def detector():
-    return make_detector(H6)
+    return make_bucket_detector(H6, "signup", "purchase", 4)
 
 
 def test_detector_payed_within_deadline(detector):
@@ -99,37 +108,44 @@ def test_detector_timer_fires_timeout(detector):
     assert len(out) == 0 and st.timeout_set is not None
     # watermark passes the deadline → timeout emitted on the timer call
     st2 = FakeState(watermark_ms=(H6 + US) // 1000, value=st._v, timed_out=True)
-    out2 = _collect(detector((7,), iter([]), st2))
+    out2 = _fire(detector, st2)
     assert list(out2["state"]) == ["timeout"]
-    assert out2.loc[0, "anchor_id"] == 1
+    assert out2.loc[0, "anchor_id"] == 1 and out2.loc[0, "user_id"] == 7
 
 
 def test_detector_timer_boundary_is_ms_floored(detector):
-    """ADVICE r1 boundary pin: the timer fires on deadline_us <= wm_ms*1000.
-    An anchor whose deadline exceeds the ms-floored watermark by even 0.4 ms
-    does NOT fire; exact ms equality DOES (non-strict <=). The streaming
-    oracle replicates this with (epoch_us(w) // 1000) * 1000."""
+    """ADVICE r1 boundary pin: a key with rows in the batch fires on
+    deadline_us <= wm_ms*1000. An anchor whose deadline exceeds the
+    ms-floored watermark by even 0.4 ms does NOT fire; exact ms equality
+    DOES (non-strict <=). The streaming oracle replicates this with
+    (epoch_us(w) // 1000) * 1000. A key without rows fires only once the
+    watermark passes its stored timer (Spark's strict rule)."""
     # anchor at 400us: deadline = H6 + 400us; wm_ms floor(H6/1000) → no fire
     st = FakeState()
     _run(detector, _rows((1, 400, "signup")), st)
-    st2 = FakeState(watermark_ms=H6 // 1000, value=st._v, timed_out=True)
-    out = _collect(detector((7,), iter([]), st2))
-    assert len(out) == 0 and st2._v[0] == [1]
+    st2 = FakeState(watermark_ms=H6 // 1000, value=st._v)
+    out = _run(detector, _rows((2, H6 // 2, "signup")), st2)
+    assert len(out) == 0 and _pending(st2) == [1, 2]
     # anchor at 0: deadline == wm_ms*1000 exactly → fires (<= is non-strict)
     st3 = FakeState()
     _run(detector, _rows((1, 0, "signup")), st3)
-    st4 = FakeState(watermark_ms=H6 // 1000, value=st3._v, timed_out=True)
-    out2 = _collect(detector((7,), iter([]), st4))
-    assert list(out2["state"]) == ["timeout"]
+    st4 = FakeState(watermark_ms=H6 // 1000, value=st3._v)
+    out2 = _run(detector, _rows((2, H6 // 2, "signup")), st4)
+    assert list(out2["anchor_id"]) == [1] and list(out2["state"]) == ["timeout"]
+    # without rows the same key waits until the watermark passes its timer
+    st5 = FakeState(watermark_ms=H6 // 1000, value=st3._v, timed_out=True)
+    assert len(_fire(detector, st5)) == 0 and _pending(st5) == [1]
+    st6 = FakeState(watermark_ms=H6 // 1000 + 1, value=st3._v, timed_out=True)
+    assert list(_fire(detector, st6)["state"]) == ["timeout"]
 
 
 def test_detector_unfired_timer_stays_pending(detector):
     st = FakeState()
     _run(detector, _rows((1, 0, "signup")), st)
     st2 = FakeState(watermark_ms=US // 1000, value=st._v, timed_out=True)  # before deadline
-    out = _collect(detector((7,), iter([]), st2))
+    out = _fire(detector, st2)
     assert len(out) == 0
-    assert st2._v[0] == [1]  # anchor still pending
+    assert _pending(st2) == [1]  # anchor still pending
 
 
 def test_stream_queries_match_oracle(spark, duck, sf_dir):
@@ -233,7 +249,7 @@ def _p_collect(gen):
 def _p_rows(*evs):
     return pd.DataFrame(
         [
-            {"event_id": i, "ts": pd.Timestamp(ts_us, unit="us"), "event_type": t}
+            {"event_id": i, "ts": pd.Timestamp(ts_us, unit="us"), "user_id": 7, "event_type": t}
             for i, ts_us, t in evs
         ]
     )

@@ -14,11 +14,13 @@ import hashlib
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the repository this tool belongs to, wherever it is checked out
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
