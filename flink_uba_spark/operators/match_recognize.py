@@ -1657,14 +1657,14 @@ def _stream_skip_to(
     chain replayer's candidates ARE the per-step ids, so the explode is
     in-operator and the batch (seq, var) projection applies after."""
     from flink_uba_spark.streaming.skip_replay import (
-        stream_chain_skip_to_detect,
+        stream_quantified_chain_detect,
     )
 
     steps, _ = _steps_and_sets(parsed, define, wmap, default_within)
-    out = stream_chain_skip_to_detect(
-        events, key=partition_by, steps=steps, skip_step=skip_step,
-        event_id=event_id, ts=order_by, within_overall=within_overall,
-        all_rows=(rows_per_match == "all"),
+    out = stream_quantified_chain_detect(
+        events, key=partition_by, steps=steps, mode="skip_to",
+        skip_step=skip_step, event_id=event_id, ts=order_by,
+        within_overall=within_overall, all_rows=(rows_per_match == "all"),
     )
     if rows_per_match == "all":
         return _stream_all_rows_project(
@@ -2047,9 +2047,8 @@ def stream_match_recognize(
     runs (the batch band join), the replay routes (no per-step ids) and
     MEASURES keep their raises.
     The in-NFA streaming skip fold serves plain chains; quantified and
-    optional patterns under SKIP PAST LAST route to the replay family
-    (round 9: ``stream_trailing_run_detect`` for trailing runs; round
-    11: ``stream_quantified_chain_detect`` for runs at ANY position and
+    optional patterns under SKIP PAST LAST route to the chain replayer
+    (``stream_quantified_chain_detect``: runs at ANY position and
     interior optional steps — finite caps/withins mandatory, they bound
     the replay horizon; a trailing reluctant quantifier rewrites to
     ``times(mn, mn)`` first, the batch rule). A RELUCTANT
@@ -2059,8 +2058,9 @@ def stream_match_recognize(
     default ``SKIP PAST LAST ROW`` on the 3-variable shape: the lazy
     preference + non-overlap horizon replay runs watermark-driven
     (``stream_reluctant_lazy_detect``). ``SKIP TO FIRST/LAST <var>``
-    streams on plain chains (round 9, ``stream_chain_skip_to_detect``)
-    with every within finite — the within sum is the replay horizon.
+    streams on plain chains (``stream_quantified_chain_detect``,
+    ``mode="skip_to"``) with every within finite — the within sum is
+    the replay horizon.
     Alternation/PERMUTE stream under NO SKIP via the preference-folded
     fused operator (round 9). Prefix-referencing DEFINE streams under
     NO SKIP through ``stream_pattern_detect_iterative`` (round 9 second
@@ -2176,7 +2176,6 @@ def stream_match_recognize(
             )
         v0, _ = parsed[-1]
         parsed = parsed[:-1] + [(v0, ("kleene", _slq[1], _slq[1]))]
-        _slq = parsed[-1][1]
     if (
         rows_per_match == "all"
         and not iter_define_py
@@ -2232,37 +2231,6 @@ def stream_match_recognize(
         )
     if (
         mode == "skip_past_last"
-        and _slq is not None
-        and _slq[0] == "kleene"
-        and not iter_define_py
-        and not any(isinstance(v, tuple) for v, _q in parsed)
-        and all(q is None for _v, q in parsed[:-1])
-    ):
-        from flink_uba_spark.streaming.skip_replay import (
-            stream_trailing_run_detect,
-        )
-
-        if _slq[2] is None:
-            raise ValueError(
-                "a trailing uncapped run (B+ / B{n,}) streams under SKIP "
-                "PAST LAST with a finite cap only (mx·gap is part of the "
-                "replay horizon) — write the cap or use no_skip"
-            )
-        steps, _ = _steps_and_sets(
-            parsed, define, dict(withins or {}), default_within
-        )
-        out = stream_trailing_run_detect(
-            events, key=partition_by, steps=steps,
-            event_id=event_id, ts=order_by,
-            within_overall=within_overall,
-        )
-        if partition_by != "user_id":
-            out = out.withColumnRenamed("user_id", partition_by)
-        out = _rename(out, parsed)
-        out = _drop_excluded(out, excluded)
-        return _measures(out, partition_by, measures)
-    if (
-        mode == "skip_past_last"
         and not iter_define_py
         and rows_per_match == "one"
         and any(q is not None for _v, q in parsed)
@@ -2273,14 +2241,11 @@ def stream_match_recognize(
         and not any(isinstance(v, tuple) for v, _q in parsed)
         and parsed[0][1] is None
     ):
-        # round 11 (VERDICT r10 item 6 — the last within_overall cell,
-        # and with it the whole quantified/optional-chain-under-SKIP-
-        # PAST-LAST family): MID-pattern greedy runs AND interior
-        # optional steps stream through the GENERAL quantified-chain
-        # replayer (the trailing-run recompute generalized: runs at any
-        # position, the optional greedy race per anchor; finite caps +
-        # withins bound the horizon). within_overall prunes in-replayer
-        # before the fold, exactly the plain-chain route's rule.
+        # quantified/optional chains under SKIP PAST LAST: greedy runs
+        # at ANY position (trailing ones included) and interior
+        # optional steps stream through the chain replayer (finite
+        # caps + withins bound the horizon); within_overall prunes
+        # in-replayer before the fold, the plain-chain route's rule.
         from flink_uba_spark.streaming.skip_replay import (
             stream_quantified_chain_detect,
         )
@@ -2438,10 +2403,9 @@ def stream_match_recognize(
     if mode == "skip_past_last" and within_overall is not None:
         # round 10 (VERDICT r9 item 5): the overall bound must prune
         # candidates BEFORE the skip fold, and the single-plan NFA folds
-        # in-operator — route plain chains to the past-last replayer
-        # (trailing runs and mid-pattern quantified chains took their
-        # own replay branches above — round 11 closed the quantified
-        # cell; only OPTIONAL steps remain on the in-NFA fold)
+        # in-operator — route plain chains to the chain replayer
+        # (quantified chains took the replay branch above; only
+        # OPTIONAL steps remain on the in-NFA fold)
         if any(q is not None for _v, q in parsed):
             raise ValueError(
                 "within_overall under streaming SKIP PAST LAST runs on "
@@ -2450,13 +2414,13 @@ def stream_match_recognize(
                 "fold, which cannot compose with the overall bound"
             )
         from flink_uba_spark.streaming.skip_replay import (
-            stream_chain_skip_past_detect,
+            stream_quantified_chain_detect,
         )
 
         steps, _ = _steps_and_sets(
             parsed, define, dict(withins or {}), default_within
         )
-        out = stream_chain_skip_past_detect(
+        out = stream_quantified_chain_detect(
             events, key=partition_by, steps=steps,
             event_id=event_id, ts=order_by, within_overall=within_overall,
         )

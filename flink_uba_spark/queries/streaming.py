@@ -1384,8 +1384,8 @@ def stream_match_recognize_trailing_run(spark: SparkSession, sf_dir: str) -> Dat
     (round 9 second pass — the streaming twin of
     match_recognize_trailing_run): ``PATTERN (S E{1,4})``, the match's
     end being the run's LAST repetition. Served by the
-    recompute-over-buffer replay (streaming/skip_replay.py
-    make_trailing_run_replayer): per key the classified rows inside the
+    recompute-over-buffer chain replay (streaming/skip_replay.py
+    make_quantified_chain_replayer): per key the classified rows inside the
     horizon are buffered, candidates re-derive each invoke, and the
     non-overlap walk emits the decidable completion-order prefix
     (``end + H < wm``, H = entry-within + mx·gap — the cap is therefore
@@ -3429,8 +3429,8 @@ WHERE epoch_us(b.P_ts) + {h_us} <
 def stream_match_recognize_within_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming overall WITHIN under ``SKIP PAST LAST ROW`` (round 10 —
     VERDICT r9 item 5 lifted the raise): ``PATTERN (S C P) WITHIN 12h``
-    through the past-last chain replayer
-    (streaming/skip_replay.py:stream_chain_skip_past_detect) — the
+    through the chain replayer in its past-last mode
+    (streaming/skip_replay.py:stream_quantified_chain_detect) — the
     bound prunes candidates BEFORE the fold, so a pruned candidate
     never advances the skip horizon and a later overlapping candidate
     can emit (the corner the batch twin's oracle pins). Decidable once
@@ -3477,7 +3477,7 @@ def stream_match_recognize_sql_text(spark: SparkSession, sf_dir: str) -> DataFra
     ``stream_match_recognize_sql``): the same ISO clause string a Flink
     SQL user types, compiled onto the streaming engines — here the
     within_overall + SKIP PAST LAST spec, so the text twin rides the
-    round-10 past-last replayer end-to-end. Shares
+    chain replayer's past-last mode end-to-end. Shares
     stream_match_recognize_within_skip's oracle (same NFA, same cut),
     pinning text-parse ≡ dict-spec ≡ DuckDB on the STREAM side too."""
     from flink_uba_spark.operators.match_recognize_sql import (
@@ -4055,8 +4055,8 @@ def stream_match_recognize_all_rows_within_skip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """``ALL ROWS PER MATCH`` + overall ``WITHIN`` + SKIP PAST LAST as
-    a CONTINUOUS query (round 12): the plain-chain skip replayer
-    (streaming/skip_replay.py make_chain_skip_replayer) emits one row
+    a CONTINUOUS query (round 12): the chain replayer
+    (streaming/skip_replay.py make_quantified_chain_replayer) emits one row
     per bound event — the chain IS the per-step id list, so the explode
     is in-operator enumeration; the 12h overall bound prunes candidates
     BEFORE the fold (a pruned candidate never advances the skip

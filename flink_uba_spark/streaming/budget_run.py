@@ -244,7 +244,7 @@ def stream_budget_run_detect(
     the state horizon."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from flink_uba_spark.streaming.pattern import _interval_us
+    from flink_uba_spark.streaming.pattern import _interval_us, _keyed_state_apply
 
     if cap is None or cap < 1:
         raise ValueError(
@@ -268,12 +268,12 @@ def stream_budget_run_detect(
         )
         .withWatermark("ts", watermark_delay)
     )
-    return filtered.groupBy("user_id").applyInPandasWithState(
+    return _keyed_state_apply(
+        filtered,
         make_budget_run_matcher(
             budget, cap, _interval_us(gap), _interval_us(suffix_within)
         ),
         BUDGET_OUTPUT_SCHEMA,
         BUDGET_STATE_SCHEMA,
-        "append",
         GroupStateTimeout.EventTimeTimeout,
     )

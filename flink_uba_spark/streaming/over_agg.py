@@ -257,7 +257,7 @@ def stream_over_aggregate(
     ``user_id, event_id, ts, val, <agg columns>``."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from flink_uba_spark.streaming.pattern import _interval_us
+    from flink_uba_spark.streaming.pattern import _interval_us, _keyed_state_apply
 
     src = events if row_filter is None else events.filter(row_filter)
     filtered = (
@@ -269,7 +269,8 @@ def stream_over_aggregate(
         )
         .withWatermark("ts", watermark_delay)
     )
-    return filtered.groupBy("user_id").applyInPandasWithState(
+    return _keyed_state_apply(
+        filtered,
         make_over_aggregator(
             None if range_interval is None else _interval_us(range_interval),
             rows_preceding,
@@ -277,6 +278,5 @@ def stream_over_aggregate(
         ),
         over_output_schema(aggs),
         OVER_STATE_SCHEMA,
-        "append",
         GroupStateTimeout.EventTimeTimeout,
     )

@@ -1613,11 +1613,17 @@ def make_bucketed_matcher(inner_det, timers: bool, n_buckets: int):
 
 
 def _keyed_state_apply(filtered, det, out_schema, state_schema, timeout, bucket_det=None):
-    """Shared wiring for every keyed stateful operator: per-key grouping
-    when SPARK_GRAFT_STATE_BUCKETS=0, hash-bucketed grouping (the
-    round-13 default, see the block comment above) otherwise. Results are
-    identical by construction — only the Spark-visible grouping key
-    changes; the per-key NFA, emissions and timers are ``det``'s own.
+    """The one ``applyInPandasWithState`` call: every keyed stateful
+    operator in ``streaming/`` (pattern matchers, skip replayers, budget
+    run, OVER aggregate, temporal join, transitions, order timeout) goes
+    through it. Per-key grouping when SPARK_GRAFT_STATE_BUCKETS=0,
+    hash-bucketed grouping (the default, see the block comment above)
+    otherwise. Results are identical by construction — only the
+    Spark-visible grouping key changes; the per-key state, emissions and
+    timers are ``det``'s own. ``det`` may touch its state only through
+    the ``_BranchStateSlot`` surface (exists/get/update/remove,
+    getCurrentWatermarkMs, setTimeoutTimestamp, hasTimedOut) and must
+    group on a ``user_id`` column.
 
     A bucket-native operator passes ``bucket_det(B)`` instead of ``det``:
     a state function over the whole bucket and BUCKET_STATE_SCHEMA, used

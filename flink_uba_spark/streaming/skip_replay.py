@@ -1,16 +1,25 @@
-"""Watermark-driven AFTER MATCH skip replays as continuous queries
-(round 9) — the two batch-only MATCH_RECOGNIZE routes lifted:
+"""Watermark-driven AFTER MATCH skip replays as continuous queries — the
+batch-only MATCH_RECOGNIZE skip routes lifted onto a stream. Two
+replayers:
 
-- ``stream_chain_skip_to_detect``: plain chains under ``SKIP TO
-  FIRST/LAST <var>`` — Flink's AfterMatchSkipStrategy.SKIP_TO_FIRST /
-  SKIP_TO_LAST (one event binds per variable on a plain chain, so
-  FIRST ≡ LAST), the streaming twin of
-  ``operators/sequence.py:after_match_skip_to_first`` over the chain
-  engine's skip-till-next candidates;
-- ``stream_reluctant_lazy_detect``: the reluctant lazy fold under
-  ``SKIP PAST LAST ROW`` — per anchor the candidate completing EARLIEST
-  (ties to the smaller repetition count) wins, then the non-overlap
-  horizon replay — the streaming twin of
+- ``make_quantified_chain_replayer`` (wired by
+  ``stream_quantified_chain_detect``): skip-till-next chains whose steps
+  may be plain, capped greedy runs (any position past the anchor) or
+  interior optionals, under one of three modes —
+
+  - ``past_last``: Flink's SKIP_PAST_LAST_EVENT — survivors start
+    STRICTLY past the emitted match's END, which becomes the horizon;
+  - ``no_skip``: every anchor's candidate emits, the horizon never moves;
+  - ``skip_to``: Flink's SKIP_TO_FIRST/SKIP_TO_LAST on plain chains (one
+    event binds per variable, so FIRST ≡ LAST) — survivors have their
+    anchor AT-or-past the horizon, which is the bound entry of step
+    ``skip_step``; the streaming twin of
+    ``operators/sequence.py:after_match_skip_to_first``.
+
+- ``make_lazy_reluctant_replayer`` (``stream_reluctant_lazy_detect``):
+  the reluctant lazy fold under ``SKIP PAST LAST ROW`` — per anchor the
+  candidate completing EARLIEST (ties to the smaller repetition count)
+  wins, then the non-overlap horizon replay — the streaming twin of
   ``match_recognize_reluctant_lazy``'s batch compile.
 
 Both use the recompute-over-buffer pattern (the budget-run twin's
@@ -20,22 +29,24 @@ every invoke; the skip replay itself is then a SEQUENTIAL horizon walk
 that must observe candidates in completion order — the part that makes
 these folds non-trivial on a stream. Decidability: every MATCHED
 candidate satisfies ``end ≤ t1 + H`` (H = the spec's total within
-budget: Σ withins for the chain, ``max_reps·gap + suffix_within`` for
-the lazy run), and any future anchor has ``t1 ≥ wm − H`` — so once
-``end + H < wm`` STRICTLY, no yet-unknown candidate can precede
-``end`` in completion order and the replay prefix is final. State
-beyond the row buffer is three scalars: the skip horizon pair and the
-last-processed completion key (exactly-once: re-derived candidates at
-or before it are skipped). Rows evict at ``ts < wm − 2H`` — processed
-candidates reach back at most H from their end, ends still pending are
-above ``wm − H``, and run/availability lookups are FORWARD-only from
-the entry, so truncation never changes a pending candidate.
+budget: Σ withins + Σ mx·gap over the chain's runs,
+``max_reps·gap + suffix_within`` for the lazy run), and any future
+anchor has ``t1 ≥ wm − H`` — so once ``end + H < wm`` STRICTLY, no
+yet-unknown candidate can precede ``end`` in completion order and the
+replay prefix is final. State beyond the row buffer is three scalars:
+the skip horizon pair and the last-processed completion key
+(exactly-once: re-derived candidates at or before it are skipped). Rows
+evict at ``ts < wm − 2H`` — processed candidates reach back at most H
+from their end, ends still pending are above ``wm − H``, and
+run/availability lookups are FORWARD-only from the entry, so truncation
+never changes a pending candidate.
 
-Scale: one keyed exchange, per-key state = row density × 2H, per
-invoke O(buffer log buffer + candidates); the replay loop is
-candidate-sized. Reference: Flink CEP AfterMatchSkipStrategy
-(SKIP_TO_FIRST/SKIP_TO_LAST/SKIP_PAST_LAST_EVENT), the Pattern API
-family of OrderPayTimeout.java:52-64.
+Scale: one keyed exchange through ``pattern._keyed_state_apply`` (hash
+buckets; each member key replays against its own state), per-key state
+= row density × 2H, per invoke O(buffer log buffer + candidates); the
+replay loop is candidate-sized. Reference: Flink CEP
+AfterMatchSkipStrategy (SKIP_TO_FIRST/SKIP_TO_LAST/SKIP_PAST_LAST_EVENT),
+the Pattern API family of OrderPayTimeout.java:52-64.
 """
 
 from __future__ import annotations
@@ -116,20 +127,6 @@ def _agg_val(func: str, n_off: int, sl) -> float | None:
     return float(good.max())
 
 
-def chain_skip_output_schema(n_steps: int) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("anchor_id", T.LongType()),
-            *[
-                T.StructField(f"t{k}", T.TimestampType())
-                for k in range(1, n_steps + 1)
-            ],
-            T.StructField("end_id", T.LongType()),
-        ]
-    )
-
-
 LAZY_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -165,173 +162,6 @@ def _bind_next(st_ts, st_id, st_pos, prev_ts, prev_pos):
             return j
         j += 1
     return j if j < len(st_ts) else -1
-
-
-def make_chain_skip_replayer(n: int, withins_us: list, skip_step: int,
-                             h_us: int, mode: str = "skip_to",
-                             within_overall_us: int | None = None,
-                             all_rows: bool = False):
-    """Plain-chain skip-till-next candidates + the AFTER MATCH horizon
-    replay (see module docstring). ``withins_us[k-1]`` bounds the
-    transition INTO step k (entry None); all must be finite past the
-    first — their sum is the decidability horizon ``h_us``.
-
-    ``mode`` (round 10): ``"skip_to"`` — Flink's SKIP_TO_FIRST/LAST:
-    survivors have their anchor AT-or-past the skip point
-    (``chain[skip_step]``), which becomes the horizon; ``"past_last"``
-    — SKIP_PAST_LAST_EVENT: survivors start STRICTLY past the emitted
-    match's END (``chain[n]``), the trailing-run replayer's rule.
-
-    ``within_overall_us`` (round 10, VERDICT r9 item 5): Flink's overall
-    window — candidates with ``end > t1 + bound`` (inclusive bound, the
-    repo convention) are NOT matches, so they prune BEFORE the fold and
-    never advance the horizon or the last-processed key — exactly the
-    batch compile's pre-fold filter. The prune only shrinks the
-    candidate set (survivors still satisfy ``end ≤ t1 + H``), so the
-    family's decidability contract is unchanged."""
-    if mode not in ("skip_to", "past_last"):
-        raise ValueError("mode: skip_to | past_last")
-    past_last = mode == "past_last"
-
-    def detect(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
-        timed_out = getattr(state, "hasTimedOut", False)
-        chunks = [] if timed_out else [c for c in pdfs if len(c)]
-        wm_us = state.getCurrentWatermarkMs() * 1000
-
-        if state.exists:
-            ts, ids, mask, ctrl = (
-                np.asarray(f, dtype="int64") for f in state.get
-            )
-            ctrl = list(ctrl)
-        else:
-            ts = ids = mask = np.empty(0, dtype="int64")
-            ctrl = [_NULL] * 6
-        if chunks:
-            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-            ts = np.concatenate(
-                [ts, pdf["ts"].astype("datetime64[us]").astype("int64").to_numpy()]
-            )
-            ids = np.concatenate([ids, pdf["event_id"].to_numpy().astype("int64")])
-            m = np.zeros(len(pdf), dtype="int64")
-            for k in range(1, n + 1):
-                m |= pdf[f"f{k}"].to_numpy().astype("int64") << (k - 1)
-            mask = np.concatenate([mask, m])
-
-        out = None
-        if len(ts):
-            s_ts, s_id, s_mask, _rank, _ord = _order_and_pos(ts, ids, mask, n)
-            pos = np.arange(len(s_ts))
-            legs = []
-            for k in range(1, n + 1):
-                sel = np.nonzero((s_mask >> (k - 1)) & 1)[0]
-                sel = sel[np.lexsort((s_id[sel], s_ts[sel]))]
-                legs.append((s_ts[sel], s_id[sel], pos[sel]))
-            cands = []
-            a_ts, a_id, a_pos = legs[0]
-            for ai in range(len(a_ts)):
-                chain_ts, chain_id = [int(a_ts[ai])], [int(a_id[ai])]
-                p_ts, p_pos = int(a_ts[ai]), int(a_pos[ai])
-                ok = True
-                for k in range(2, n + 1):
-                    lt, li, lp = legs[k - 1]
-                    j = _bind_next(lt, li, lp, p_ts, p_pos)
-                    if j < 0:
-                        ok = False
-                        break
-                    chain_ts.append(int(lt[j]))
-                    chain_id.append(int(li[j]))
-                    p_ts, p_pos = int(lt[j]), int(lp[j])
-                    if (
-                        withins_us[k - 1] is not None
-                        and chain_ts[-1] > chain_ts[-2] + withins_us[k - 1]
-                    ):
-                        ok = False  # matched_late never emits under skip
-                        break
-                if not ok:
-                    continue
-                if (
-                    within_overall_us is not None
-                    and chain_ts[-1] > chain_ts[0] + within_overall_us
-                ):
-                    continue  # not a match — prunes BEFORE the fold
-                cands.append((chain_ts, chain_id))
-            # completion-order replay over the decidable prefix
-            cands.sort(
-                key=lambda c: (c[0][n - 1], c[1][n - 1], c[0][0], c[1][0])
-            )
-            rows = []
-            h_ts, h_id = ctrl[0], ctrl[1]
-            lp = tuple(ctrl[2:6])
-            for chain_ts, chain_id in cands:
-                ckey = (chain_ts[n - 1], chain_id[n - 1],
-                        chain_ts[0], chain_id[0])
-                if chain_ts[n - 1] + h_us >= wm_us:
-                    break
-                if lp[0] != _NULL and ckey <= lp:
-                    continue
-                lp = ckey
-                anchor = (chain_ts[0], chain_id[0])
-                survives = h_ts == _NULL or (
-                    anchor > (h_ts, h_id) if past_last
-                    else anchor >= (h_ts, h_id)
-                )
-                if survives:
-                    if all_rows:
-                        # one row per bound event (round 12 — the plain
-                        # chain's per-step ids are the chain itself)
-                        rows.extend(
-                            {
-                                "user_id": key[0],
-                                "anchor_id": chain_id[0],
-                                "seq": k,
-                                "event_id": chain_id[k - 1],
-                                "ts": chain_ts[k - 1],
-                            }
-                            for k in range(1, n + 1)
-                        )
-                    else:
-                        rows.append(
-                            {
-                                "user_id": key[0],
-                                "anchor_id": chain_id[0],
-                                **{
-                                    f"t{k}": chain_ts[k - 1]
-                                    for k in range(1, n + 1)
-                                },
-                                "end_id": chain_id[n - 1],
-                            }
-                        )
-                    sp = (
-                        (chain_ts[n - 1], chain_id[n - 1])
-                        if past_last
-                        else (chain_ts[skip_step - 1], chain_id[skip_step - 1])
-                    )
-                    if h_ts == _NULL or sp > (h_ts, h_id):
-                        h_ts, h_id = sp
-            ctrl = [h_ts, h_id, *lp] if lp[0] != _NULL else [h_ts, h_id] + [_NULL] * 4
-            if rows:
-                out = pd.DataFrame(rows)
-                if all_rows:
-                    out["ts"] = pd.to_datetime(out["ts"], unit="us")
-                else:
-                    for k in range(1, n + 1):
-                        out[f"t{k}"] = pd.to_datetime(out[f"t{k}"], unit="us")
-            keep = s_ts >= wm_us - 2 * h_us
-            ts, ids, mask = s_ts[keep], s_id[keep], s_mask[keep]
-
-        if len(ts) or ctrl[0] != _NULL or ctrl[2] != _NULL:
-            state.update(
-                (ts.tolist(), ids.tolist(), mask.tolist(),
-                 [int(x) for x in ctrl])
-            )
-            if len(ts):
-                state.setTimeoutTimestamp(wm_us // 1000 + 1)
-        elif state.exists:
-            state.remove()
-        if out is not None:
-            yield out
-
-    return detect
 
 
 def make_lazy_reluctant_replayer(gap_us: int, sfx_us: int | None,
@@ -476,247 +306,6 @@ def make_lazy_reluctant_replayer(gap_us: int, sfx_us: int | None,
     return detect
 
 
-def trailing_run_output_schema(n_steps: int) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("anchor_id", T.LongType()),
-            *[
-                T.StructField(f"t{k}", T.TimestampType())
-                for k in range(1, n_steps + 1)
-            ],
-            T.StructField(f"t{n_steps}_last", T.TimestampType()),
-            T.StructField(f"n{n_steps}", T.LongType()),
-            T.StructField("end_id", T.LongType()),
-        ]
-    )
-
-
-def make_trailing_run_replayer(n: int, withins_us: list, gap_us: int,
-                               mn: int, mx: int, h_us: int,
-                               within_overall_us: int | None = None):
-    """Trailing-GREEDY-run SKIP PAST LAST replay (round 9 second pass —
-    the streaming twin of the batch trailing-run compile): plain steps
-    1..n−1 bound skip-till-next, step n is a capped greedy run (gap
-    sessions over the step's rows, entry = earliest admissible row with
-    ≥ mn reachable repetitions — the times(mn, mx) binding), and the
-    match's END is the run's LAST repetition.
-
-    Decidability mirrors the family contract: a candidate's end sits
-    ≤ t1 + H (H = Σ plain withins + entry within + mx·gap), future
-    anchors produce ends ≥ wm, a pending prefix completed by a
-    post-watermark row yields an end ≥ wm, and — the run-specific
-    pieces — `end + H < wm` implies the run is gap-CLOSED (no future
-    row can extend it: they all sit ≥ wm > end + gap) and the ENTRY
-    choice is final (an earlier entry could only become valid if its
-    own session were still open, but that session's last row precedes
-    the bound entry, so it closed strictly earlier). Hence candidates
-    with `end + H < wm` form a final completion-order prefix, exactly
-    the chain replayer's rule."""
-
-    def detect(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
-        timed_out = getattr(state, "hasTimedOut", False)
-        chunks = [] if timed_out else [c for c in pdfs if len(c)]
-        wm_us = state.getCurrentWatermarkMs() * 1000
-
-        if state.exists:
-            ts, ids, mask, ctrl = (
-                np.asarray(f, dtype="int64") for f in state.get
-            )
-            ctrl = list(ctrl)
-        else:
-            ts = ids = mask = np.empty(0, dtype="int64")
-            ctrl = [_NULL] * 6
-        if chunks:
-            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-            ts = np.concatenate(
-                [ts, pdf["ts"].astype("datetime64[us]").astype("int64").to_numpy()]
-            )
-            ids = np.concatenate([ids, pdf["event_id"].to_numpy().astype("int64")])
-            m = np.zeros(len(pdf), dtype="int64")
-            for k in range(1, n + 1):
-                m |= pdf[f"f{k}"].to_numpy().astype("int64") << (k - 1)
-            mask = np.concatenate([mask, m])
-
-        out = None
-        if len(ts):
-            s_ts, s_id, s_mask, _rank, _ord = _order_and_pos(ts, ids, mask, n)
-            pos = np.arange(len(s_ts))
-            legs = []
-            for k in range(1, n + 1):
-                sel = np.nonzero((s_mask >> (k - 1)) & 1)[0]
-                sel = sel[np.lexsort((s_id[sel], s_ts[sel]))]
-                legs.append((s_ts[sel], s_id[sel], pos[sel]))
-            bt, bi, bp = legs[n - 1]
-            # greedy-run reachability over the run leg's (ts, id) order:
-            # avail[j] = length of the gap-linked chain starting at j
-            avail = np.ones(len(bt), dtype="int64")
-            for i in range(len(bt) - 2, -1, -1):
-                if bt[i + 1] <= bt[i] + gap_us:
-                    avail[i] += avail[i + 1]
-            cands = []
-            a_ts, a_id, a_pos = legs[0]
-            for ai in range(len(a_ts)):
-                chain_ts, chain_id = [int(a_ts[ai])], [int(a_id[ai])]
-                p_ts, p_pos = int(a_ts[ai]), int(a_pos[ai])
-                ok = True
-                for k in range(2, n):
-                    lt, li, lp = legs[k - 1]
-                    j = _bind_next(lt, li, lp, p_ts, p_pos)
-                    if j < 0:
-                        ok = False
-                        break
-                    chain_ts.append(int(lt[j]))
-                    chain_id.append(int(li[j]))
-                    p_ts, p_pos = int(lt[j]), int(lp[j])
-                    if (
-                        withins_us[k - 1] is not None
-                        and chain_ts[-1] > chain_ts[-2] + withins_us[k - 1]
-                    ):
-                        ok = False  # matched_late never emits under skip
-                        break
-                if not ok:
-                    continue
-                # run entry: earliest admissible row with avail >= mn
-                # (times(mn, mx): a shorter entry is not a valid binding
-                # and the previous step binds the next valid one)
-                j = int(np.searchsorted(bt, p_ts, side="left"))
-                while j < len(bt) and (
-                    (bt[j] == p_ts and bp[j] <= p_pos) or avail[j] < mn
-                ):
-                    j += 1
-                if j >= len(bt):
-                    continue
-                if withins_us[n - 1] is not None and bt[j] > p_ts + withins_us[n - 1]:
-                    continue  # matched_late
-                cnt = int(min(avail[j], mx))
-                last = j + cnt - 1
-                if (
-                    within_overall_us is not None
-                    and int(bt[last]) > chain_ts[0] + within_overall_us
-                ):
-                    # overall WITHIN (round 10): a candidate whose run-last
-                    # END exceeds the anchor bound is NOT a match — it
-                    # prunes BEFORE the fold (batch-compile parity; the
-                    # greedy run does NOT back off, Flink's timeout rule)
-                    continue
-                cands.append(
-                    (chain_ts, chain_id, int(bt[j]), int(bi[j]),
-                     int(bt[last]), int(bi[last]), cnt)
-                )
-            # completion-order replay over the decidable prefix — the
-            # end is the run's LAST repetition
-            cands.sort(key=lambda c: (c[4], c[5], c[0][0], c[1][0]))
-            rows = []
-            h_ts, h_id = ctrl[0], ctrl[1]
-            lp = tuple(ctrl[2:6])
-            for chain_ts, chain_id, e_ts, e_id, l_ts, l_id, cnt in cands:
-                ckey = (l_ts, l_id, chain_ts[0], chain_id[0])
-                if l_ts + h_us >= wm_us:
-                    break
-                if lp[0] != _NULL and ckey <= lp:
-                    continue
-                lp = ckey
-                # SKIP PAST LAST: the anchor must be STRICTLY past the
-                # previously emitted match's last event (the skip-to
-                # replay's >= rule is the other strategy)
-                if (h_ts == _NULL
-                        or (chain_ts[0], chain_id[0]) > (h_ts, h_id)):
-                    rows.append(
-                        {
-                            "user_id": key[0],
-                            "anchor_id": chain_id[0],
-                            **{
-                                f"t{k}": chain_ts[k - 1]
-                                for k in range(1, n)
-                            },
-                            f"t{n}": e_ts,
-                            f"t{n}_last": l_ts,
-                            f"n{n}": cnt,
-                            "end_id": l_id,
-                        }
-                    )
-                    if h_ts == _NULL or (l_ts, l_id) > (h_ts, h_id):
-                        h_ts, h_id = l_ts, l_id
-            ctrl = [h_ts, h_id, *lp] if lp[0] != _NULL else [h_ts, h_id] + [_NULL] * 4
-            if rows:
-                out = pd.DataFrame(rows)
-                for c in [f"t{k}" for k in range(1, n + 1)] + [f"t{n}_last"]:
-                    out[c] = pd.to_datetime(out[c], unit="us")
-            keep = s_ts >= wm_us - 2 * h_us
-            ts, ids, mask = s_ts[keep], s_id[keep], s_mask[keep]
-
-        if len(ts) or ctrl[0] != _NULL or ctrl[2] != _NULL:
-            state.update(
-                (ts.tolist(), ids.tolist(), mask.tolist(),
-                 [int(x) for x in ctrl])
-            )
-            if len(ts):
-                state.setTimeoutTimestamp(wm_us // 1000 + 1)
-        elif state.exists:
-            state.remove()
-        if out is not None:
-            yield out
-
-    return detect
-
-
-def stream_trailing_run_detect(
-    events: DataFrame,
-    key: str,
-    steps: list[tuple],
-    event_id: str = "event_id",
-    ts: str = "ts",
-    watermark_delay: str = "0 seconds",
-    within_overall: str | None = None,
-) -> DataFrame:
-    """Wire the trailing-run SKIP PAST LAST replay: ``steps`` is n−1
-    plain ``(pred, within)`` entries followed by one
-    ``(pred, within, (mn, mx))`` capped-run entry (finite cap mandatory
-    — ``mx·gap`` is part of the replay horizon; every within after the
-    first mandatory too)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from flink_uba_spark.streaming.pattern import _interval_us
-
-    n = len(steps)
-    if n < 2:
-        raise ValueError("need at least 2 steps")
-    if len(steps[-1]) != 3:
-        raise ValueError("the last step must carry the (mn, mx) run spec")
-    mn, mx = steps[-1][2]
-    if mx == float("inf"):
-        raise ValueError(
-            "the streaming trailing-run replay needs a FINITE cap "
-            "(mx·gap is part of the replay horizon)"
-        )
-    mn, mx = int(mn), int(mx)
-    if mn < 1 or mx < mn:
-        raise ValueError("need 1 <= mn <= mx")
-    withins_us = [None] + [
-        None if s[1] is None else _interval_us(s[1]) for s in steps[1:]
-    ]
-    if any(w is None for w in withins_us[1:]):
-        raise ValueError(
-            "the streaming trailing-run replay needs a FINITE within on "
-            "every transition (their sum bounds the replay horizon)"
-        )
-    gap_us = withins_us[n - 1]  # the front-end ties entry within + gap
-    h_us = sum(withins_us[1:]) + mx * gap_us
-    flags = {f"f{k}": s[0].cast("boolean") for k, s in enumerate(steps, 1)}
-    filtered = _wire(events, key, flags, event_id, ts, watermark_delay)
-    wo_us = None if within_overall is None else _interval_us(within_overall)
-    return filtered.groupBy("user_id").applyInPandasWithState(
-        make_trailing_run_replayer(
-            n, withins_us, gap_us, mn, mx, h_us, within_overall_us=wo_us
-        ),
-        trailing_run_output_schema(n),
-        SKIP_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-
-
 def quantified_chain_output_schema(
     n_steps: int, quant: set[int],
     agg_fields: list[tuple[str, bool]] | None = None,
@@ -749,12 +338,11 @@ def make_quantified_chain_replayer(n: int, withins_us: list, kleenes: list,
                                    mode: str = "past_last",
                                    all_rows: bool = False,
                                    n_vals: int = 0,
-                                   aggs: list[tuple] | None = None):
-    """GENERAL quantified-chain SKIP PAST LAST replay (round 11 — VERDICT
-    r10 item 6, the last within_overall cell, and with it the whole
-    'quantified chain under SKIP PAST LAST' streaming family): any step
-    may be a capped GREEDY run (``kleenes[k-1] = (gap_us, mn, mx)``,
-    finite mx), at ANY position — the trailing-run replayer generalized.
+                                   aggs: list[tuple] | None = None,
+                                   skip_step: int | None = None):
+    """The chain replayer (see module docstring): skip-till-next chains
+    in which any step past the anchor may be a capped GREEDY run
+    (``kleenes[k-1] = (gap_us, mn, mx)``, finite mx), at ANY position.
 
     Per step the binding is the batch single-plan rule: a plain step
     binds the earliest (ts, id) row strictly after the frontier; a
@@ -768,15 +356,14 @@ def make_quantified_chain_replayer(n: int, withins_us: list, kleenes: list,
     bound BEFORE the fold — pruned candidates never advance the
     horizon, the batch compile's rule.
 
-    Decidability is the family contract with the trailing replayer's
-    run-specific arguments applied PER quantified step: every candidate
-    end sits ≤ t1 + H (H = Σ entry withins + Σ mx·gap over quantified
-    steps); once ``end + H < wm`` strictly, every involved run is
-    gap-closed (any extending row would sit ≥ wm > run_last + gap,
-    since each run_last ≤ end) and each entry choice is final (an
-    earlier admissible entry's session would have closed strictly
-    earlier), so candidates below the cut form a final
-    completion-order prefix.
+    Decidability is the family contract with run-specific arguments
+    applied PER quantified step: every candidate end sits ≤ t1 + H
+    (H = Σ entry withins + Σ mx·gap over quantified steps); once
+    ``end + H < wm`` strictly, every involved run is gap-closed (any
+    extending row would sit ≥ wm > run_last + gap, since each
+    run_last ≤ end) and each entry choice is final (an earlier
+    admissible entry's session would have closed strictly earlier), so
+    candidates below the cut form a final completion-order prefix.
 
     ``optionals`` (round 11 second pass — the last in-NFA-fold cell):
     interior OPTIONAL steps take the engines' greedy race — the step
@@ -787,8 +374,13 @@ def make_quantified_chain_replayer(n: int, withins_us: list, kleenes: list,
     within classifies from the pre-optional frontier (the batch
     fall-through rule).
 
-    Round 12 (VERDICT r11 items 2/3):
+    Modes and output shapes:
 
+    - ``mode="past_last"`` (SKIP PAST LAST) — a survivor's anchor sits
+      STRICTLY past the horizon, and its END becomes the horizon.
+    - ``mode="skip_to"`` (SKIP TO FIRST/LAST ``skip_step``) — a
+      survivor's anchor sits AT-or-past the horizon, and the bound
+      entry of step ``skip_step`` becomes the horizon.
     - ``mode="no_skip"`` — every anchor's candidate emits (the NO SKIP
       strategy): the horizon never advances and ``survives`` is always
       true. The decidability cut and the last-processed exactly-once
@@ -807,8 +399,12 @@ def make_quantified_chain_replayer(n: int, withins_us: list, kleenes: list,
       column = ``func`` over step k's bound rows' ``vi``-th value —
       exact run membership, the batch band join's stream twin."""
     opts = set(optionals or ())
-    if mode not in ("past_last", "no_skip"):
-        raise ValueError("mode: past_last | no_skip")
+    if mode not in ("past_last", "no_skip", "skip_to"):
+        raise ValueError("mode: past_last | no_skip | skip_to")
+    if mode == "skip_to" and not (skip_step and 2 <= skip_step <= n):
+        raise ValueError(f"skip_step must be in [2, {n}]")
+    if mode == "skip_to" and skip_step in opts:
+        raise ValueError("the SKIP TO step cannot be optional")
     if all_rows and aggs:
         raise ValueError("ALL ROWS and aggregate MEASURES are exclusive")
     aggs = list(aggs or ())
@@ -966,8 +562,10 @@ def make_quantified_chain_replayer(n: int, withins_us: list, kleenes: list,
                 if lp_key[0] != _NULL and ckey <= lp_key:
                     continue
                 lp_key = ckey
+                anchor = (rec[0][0], rec[0][1])
                 if mode == "no_skip" or h_ts == _NULL or (
-                    (rec[0][0], rec[0][1]) > (h_ts, h_id)
+                    anchor >= (h_ts, h_id) if mode == "skip_to"
+                    else anchor > (h_ts, h_id)
                 ):
                     if all_rows:
                         # one row per bound event; a quantified step's
@@ -1008,10 +606,15 @@ def make_quantified_chain_replayer(n: int, withins_us: list, kleenes: list,
                                 leg_vals[k - 1][lj:lj + cnt, vi],
                             )
                         rows.append(row)
-                    if mode != "no_skip" and (
-                        h_ts == _NULL or (end_ts, end_id) > (h_ts, h_id)
-                    ):
-                        h_ts, h_id = end_ts, end_id
+                    if mode != "no_skip":
+                        # past_last: the END (the last step's run-last);
+                        # skip_to: step skip_step's bound entry
+                        sp = (
+                            (end_ts, end_id) if mode == "past_last"
+                            else rec[skip_step - 1][:2]
+                        )
+                        if h_ts == _NULL or sp > (h_ts, h_id):
+                            h_ts, h_id = sp
             ctrl = (
                 [h_ts, h_id, *lp_key]
                 if lp_key[0] != _NULL
@@ -1073,16 +676,20 @@ def stream_quantified_chain_detect(
     all_rows: bool = False,
     values: dict[str, Column] | None = None,
     aggs: list[tuple] | None = None,
+    skip_step: int | None = None,
 ) -> DataFrame:
-    """Wire the general quantified-chain SKIP PAST LAST replay:
-    ``steps`` entries are ``(pred, within)`` (plain) or
-    ``(pred, within, (mn, mx))`` (capped greedy run, ANY position past
-    the first; finite cap and finite withins mandatory — Σ within +
-    Σ mx·gap is the replay horizon). ``optional`` marks interior plain
-    steps with the engines' greedy-race single-match semantics.
+    """Wire the chain replay: ``steps`` entries are ``(pred, within)``
+    (plain) or ``(pred, within, (mn, mx))`` (capped greedy run, ANY
+    position past the first; finite cap and finite withins mandatory —
+    Σ within + Σ mx·gap is the replay horizon). ``optional`` marks
+    interior plain steps with the engines' greedy-race single-match
+    semantics.
 
-    Round 12: ``mode="no_skip"`` emits every anchor's candidate (no
-    fold); ``all_rows=True`` emits per-BOUND-EVENT rows
+    ``mode`` picks the AFTER MATCH strategy: ``"past_last"`` (SKIP PAST
+    LAST ROW), ``"skip_to"`` with ``skip_step`` (SKIP TO FIRST/LAST of
+    that step's variable) or ``"no_skip"`` (every anchor's candidate
+    emits). ``within_overall`` prunes candidates whose end exceeds the
+    anchor bound BEFORE the fold. ``all_rows=True`` emits per-BOUND-EVENT rows
     (``ALL_ROWS_SCHEMA``); ``values`` declares named value Columns that
     ride the buffer (cast to double; state schema gains the ``vals``
     field) and ``aggs`` entries ``(k, value_name, func, n_offset,
@@ -1090,7 +697,7 @@ def stream_quantified_chain_detect(
     bound rows — see ``make_quantified_chain_replayer``."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from flink_uba_spark.streaming.pattern import _interval_us
+    from flink_uba_spark.streaming.pattern import _interval_us, _keyed_state_apply
 
     n = len(steps)
     if n < 2:
@@ -1151,16 +758,16 @@ def stream_quantified_chain_detect(
                      extra=extra)
     wo_us = None if within_overall is None else _interval_us(within_overall)
     quant = {k for k in range(1, n + 1) if kleenes[k - 1] is not None}
-    return filtered.groupBy("user_id").applyInPandasWithState(
+    return _keyed_state_apply(
+        filtered,
         make_quantified_chain_replayer(
             n, withins_us, kleenes, h_us, within_overall_us=wo_us,
             optionals=opts, mode=mode, all_rows=all_rows,
-            n_vals=len(values), aggs=raggs,
+            n_vals=len(values), aggs=raggs, skip_step=skip_step,
         ),
         ALL_ROWS_SCHEMA if all_rows
         else quantified_chain_output_schema(n, quant, agg_fields),
         skip_state_schema(bool(values)),
-        "append",
         GroupStateTimeout.EventTimeTimeout,
     )
 
@@ -1182,90 +789,6 @@ def _wire(events, key, flag_cols, event_id, ts, watermark_delay, extra=None):
             *[c.alias(nm) for nm, c in (extra or {}).items()],
         )
         .withWatermark("ts", watermark_delay)
-    )
-
-
-def stream_chain_skip_to_detect(
-    events: DataFrame,
-    key: str,
-    steps: list[tuple[Column, str | None]],
-    skip_step: int,
-    event_id: str = "event_id",
-    ts: str = "ts",
-    watermark_delay: str = "0 seconds",
-    within_overall: str | None = None,
-    all_rows: bool = False,
-) -> DataFrame:
-    """Wire the SKIP TO FIRST/LAST replay over a streaming frame (plain
-    chains; every within after the first MANDATORY — their sum is the
-    emission horizon). ``within_overall`` (round 10) prunes candidates
-    whose end exceeds the anchor bound BEFORE the fold. ``all_rows``
-    (round 12) emits per-BOUND-EVENT rows instead of the ONE-row shape
-    — the chain IS the per-step id list, so the explode is in-replayer."""
-    return _wire_chain_replay(
-        events, key, steps, skip_step, "skip_to", event_id, ts,
-        watermark_delay, within_overall, all_rows=all_rows,
-    )
-
-
-def stream_chain_skip_past_detect(
-    events: DataFrame,
-    key: str,
-    steps: list[tuple[Column, str | None]],
-    event_id: str = "event_id",
-    ts: str = "ts",
-    watermark_delay: str = "0 seconds",
-    within_overall: str | None = None,
-) -> DataFrame:
-    """Wire the plain-chain SKIP PAST LAST replay (round 10 — VERDICT r9
-    item 5): the same candidate machinery with the past-last fold
-    (survivors start STRICTLY past the emitted END, which is the
-    horizon). The in-NFA fold (streaming/pattern.py after_match) serves
-    this strategy WITHOUT an overall bound; this replayer exists for
-    ``within_overall``, whose prune must happen before the fold — a
-    post-filter after the in-NFA fold would let pruned candidates
-    advance the skip horizon."""
-    return _wire_chain_replay(
-        events, key, steps, len(steps), "past_last", event_id, ts,
-        watermark_delay, within_overall,
-    )
-
-
-def _wire_chain_replay(
-    events, key, steps, skip_step, mode, event_id, ts,
-    watermark_delay, within_overall, all_rows=False,
-):
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from flink_uba_spark.streaming.pattern import _interval_us
-
-    n = len(steps)
-    if n < 2:
-        raise ValueError("need at least 2 steps")
-    if not 2 <= skip_step <= n:
-        raise ValueError(f"skip_step must be in [2, {n}]")
-    withins_us = [None] + [
-        None if s[1] is None else _interval_us(s[1]) for s in steps[1:]
-    ]
-    if any(w is None for w in withins_us[1:]):
-        raise ValueError(
-            "the streaming skip replay needs a FINITE within on every "
-            "transition (their sum bounds when a candidate's replay "
-            "prefix is final)"
-        )
-    h_us = sum(withins_us[1:])
-    wo_us = None if within_overall is None else _interval_us(within_overall)
-    flags = {f"f{k}": s[0].cast("boolean") for k, s in enumerate(steps, 1)}
-    filtered = _wire(events, key, flags, event_id, ts, watermark_delay)
-    return filtered.groupBy("user_id").applyInPandasWithState(
-        make_chain_skip_replayer(
-            n, withins_us, skip_step, h_us, mode=mode,
-            within_overall_us=wo_us, all_rows=all_rows,
-        ),
-        ALL_ROWS_SCHEMA if all_rows else chain_skip_output_schema(n),
-        SKIP_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -1291,7 +814,7 @@ def stream_reluctant_lazy_detect(
     preference + fold."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from flink_uba_spark.streaming.pattern import _interval_us
+    from flink_uba_spark.streaming.pattern import _interval_us, _keyed_state_apply
 
     if mn < 1 or mx < mn:
         raise ValueError("need 1 <= mn <= mx")
@@ -1305,12 +828,12 @@ def stream_reluctant_lazy_detect(
         "f3": suffix.cast("boolean"),
     }
     filtered = _wire(events, key, flags, event_id, ts, watermark_delay)
-    return filtered.groupBy("user_id").applyInPandasWithState(
+    return _keyed_state_apply(
+        filtered,
         make_lazy_reluctant_replayer(
             gap_us, sfx_us, mn, mx, h_us, within_overall_us=wo_us
         ),
         LAZY_OUTPUT_SCHEMA,
         SKIP_STATE_SCHEMA,
-        "append",
         GroupStateTimeout.EventTimeTimeout,
     )

@@ -6,9 +6,9 @@ once the watermark guarantees no earlier-timestamped version can still
 arrive.
 
 Spark has no built-in event-time temporal join (stream-stream joins are
-band/equality joins), so this is a per-key ``applyInPandasWithState``
-operator — the engine family's NFA construction applied to the asof
-relation:
+band/equality joins), so this is a keyed stateful operator (through
+``pattern._keyed_state_apply``) — the engine family's NFA construction
+applied to the asof relation:
 
 - State per key: the version buffer + pending (not-yet-final) facts.
 - A fact is FINAL once ``fact_ts < wm`` (strict µs): any later arrival
@@ -154,6 +154,8 @@ def stream_temporal_table_join(
     version side carried into state."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    from flink_uba_spark.streaming.pattern import _keyed_state_apply
+
     f = facts.select(
         F.col(key).alias("user_id"),
         F.col(fact_id).alias("row_id"),
@@ -169,10 +171,10 @@ def stream_temporal_table_join(
         payload.cast("long").alias("payload"),
     )
     tagged = f.unionByName(v).withWatermark("ts", watermark_delay)
-    return tagged.groupBy("user_id").applyInPandasWithState(
+    return _keyed_state_apply(
+        tagged,
         make_temporal_join_matcher(),
         temporal_output_schema(),
         TEMPORAL_STATE_SCHEMA,
-        "append",
         GroupStateTimeout.EventTimeTimeout,
     )

@@ -88,11 +88,13 @@ def stream_transition_pairs(events: DataFrame, gap_us: int = 30 * 60 * _US) -> D
     """(user_id, src, dst) transition pairs from a watermarked stream."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    from flink_uba_spark.streaming.pattern import _keyed_state_apply
+
     ev = events.select("user_id", "event_id", "event_type", "ts")
-    return ev.groupBy("user_id").applyInPandasWithState(
+    return _keyed_state_apply(
+        ev,
         make_transition_extractor(gap_us),
         PAIR_SCHEMA,
         STATE_SCHEMA,
-        "append",
         GroupStateTimeout.NoTimeout,
     )

@@ -457,6 +457,14 @@ def _view_click_purchase(sdf):
     return stream_pattern_detect(sdf, key="user_id", steps=steps)
 
 
+def _rolling_event_count(sdf):
+    from flink_uba_spark.streaming.over_agg import stream_over_aggregate
+
+    return stream_over_aggregate(
+        sdf, key="user_id", value=F.lit(1), range_interval="INTERVAL 7 DAYS"
+    )
+
+
 def test_order_timeout_recovers_from_checkpoint(spark, sf_dir):
     """The order-timeout bucket state (seen flags, pending anchors and
     per-key timers in one columnar blob) must round-trip the state store:
@@ -473,7 +481,7 @@ def test_order_timeout_recovers_from_checkpoint(spark, sf_dir):
     _assert_same_rows(got, want)
 
 
-@pytest.mark.parametrize("op", ["pattern", "order_timeout"])
+@pytest.mark.parametrize("op", ["pattern", "order_timeout", "over_agg"])
 def test_restart_with_other_bucket_count_is_refused(spark, sf_dir, monkeypatch, op):
     """A key's state lives in bucket pmod(hash(key), B): restarting a
     checkpoint under another B must fail loudly (it used to drop matches
@@ -484,7 +492,11 @@ def test_restart_with_other_bucket_count_is_refused(spark, sf_dir, monkeypatch, 
     events = load_testdata(spark, sf_dir, ("events",))["events"].select(
         "event_id", "ts", "user_id", "event_type"
     )
-    build = _view_click_purchase if op == "pattern" else _order_timeout(events)
+    build = {
+        "pattern": _view_click_purchase,
+        "order_timeout": _order_timeout(events),
+        "over_agg": _rolling_event_count,
+    }[op]
     replay = _split_replay(events, "rebucket")
     ckpt, out_dir, ckpt2, out2 = (
         str(Path(tempfile.mkdtemp(prefix=f"sg_rebucket{i}_"))) for i in range(4)
@@ -509,7 +521,7 @@ def test_skip_to_replayer_recovers_from_checkpoint(spark, sf_dir):
     round-trip the state store (round 9): crash/recover equals
     uninterrupted, exactly-once per anchor."""
     from flink_uba_spark.streaming.skip_replay import (
-        stream_chain_skip_to_detect,
+        stream_quantified_chain_detect,
     )
 
     events = load_testdata(spark, sf_dir, ("events",))["events"].select(
@@ -517,13 +529,14 @@ def test_skip_to_replayer_recovers_from_checkpoint(spark, sf_dir):
     )
 
     def build(sdf):
-        return stream_chain_skip_to_detect(
+        return stream_quantified_chain_detect(
             sdf, key="user_id",
             steps=[
                 (F.col("event_type") == "signup", None),
                 (F.col("event_type") == "click", "INTERVAL 6 HOURS"),
                 (F.col("event_type") == "purchase", "INTERVAL 24 HOURS"),
             ],
+            mode="skip_to",
             skip_step=2,
         )
 
@@ -609,7 +622,7 @@ def test_trailing_run_replayer_recovers_from_checkpoint(spark, sf_dir):
     last-processed key must round-trip the state store (round 9 second
     pass): crash/recover equals uninterrupted, exactly-once per anchor."""
     from flink_uba_spark.streaming.skip_replay import (
-        stream_trailing_run_detect,
+        stream_quantified_chain_detect,
     )
 
     events = load_testdata(spark, sf_dir, ("events",))["events"].select(
@@ -617,7 +630,7 @@ def test_trailing_run_replayer_recovers_from_checkpoint(spark, sf_dir):
     )
 
     def build(sdf):
-        return stream_trailing_run_detect(
+        return stream_quantified_chain_detect(
             sdf, key="user_id",
             steps=[
                 (F.col("event_type") == "signup", None),

@@ -419,57 +419,6 @@ def _mk_stream_like(spark):
     )
 
 
-# ---- transformWithStateInPandas prototype (VERDICT r9 item 2) --------------
-
-
-def test_tws_prototype(spark, sf_dir):
-    """The plain-chain NFA on Spark 4's transformWithStateInPandas: the
-    shim construction + wiring always compile; the EXECUTION equality
-    check runs whenever the environment ships protobuf (the TWS Python
-    state-server dependency — absent in this sandbox, pinned as the
-    gate; same environment-blocked class as the Kafka connector)."""
-    from flink_uba_spark.streaming.runner import stream_events
-    from flink_uba_spark.streaming.tws_prototype import (
-        ROCKSDB_PROVIDER,
-        tws_available,
-        tws_pattern_detect,
-    )
-
-    steps = [
-        ("signup", None),
-        ("click", "INTERVAL 6 HOURS"),
-        ("purchase", "INTERVAL 24 HOURS"),
-    ]
-    if not tws_available():
-        with pytest.raises(ImportError, match="protobuf"):
-            tws_pattern_detect(
-                stream_events(spark, sf_dir), "user_id", steps
-            )
-        pytest.skip(
-            "transformWithStateInPandas needs google.protobuf (absent "
-            "in this environment) — wiring + gate pinned, execution "
-            "equality skipped"
-        )
-    from flink_uba_spark.streaming.pattern import stream_pattern_detect
-
-    want = run_to_table(
-        stream_pattern_detect(stream_events(spark, sf_dir), "user_id", steps)
-    ).filter(F.col("state") == "matched")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-    )
-    try:
-        got = run_to_table(
-            tws_pattern_detect(stream_events(spark, sf_dir), "user_id", steps)
-        ).filter(F.col("state") == "matched")
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 # ---- batched BPE merge selection (VERDICT r9 item 8) -----------------------
 
 

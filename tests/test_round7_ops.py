@@ -16,11 +16,14 @@ non-deterministic contiguity, the family of OrderPayTimeout.java:52-64.
 from __future__ import annotations
 
 import datetime
+from pathlib import Path
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
+
+TESTS_DIR = str(Path(__file__).resolve().parent)
 
 
 def brute_any(events, withins_us):
@@ -191,7 +194,7 @@ def _drive_any(events, withins_us, n, cuts):
     import pandas as pd
 
     import sys
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from test_properties_round5 import _FakeState
     from flink_uba_spark.streaming.pattern import make_any_matcher
 
@@ -258,7 +261,7 @@ def test_stream_any_out_of_order_within_watermark():
     import pandas as pd
 
     import sys
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from test_properties_round5 import _FakeState
     from flink_uba_spark.streaming.pattern import make_any_matcher
 
@@ -299,7 +302,7 @@ def test_stream_any_eviction_respects_horizon():
     import pandas as pd
 
     import sys
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from test_properties_round5 import _FakeState
     from flink_uba_spark.streaming.pattern import make_any_matcher
 
@@ -721,7 +724,7 @@ def test_stream_until_truncates_run_cross_batch():
     import pandas as pd
 
     import sys
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from test_properties_round5 import _FakeState
     from flink_uba_spark.streaming.pattern import make_pattern_matcher
 
@@ -760,7 +763,7 @@ def test_stream_until_dual_row_ends_run():
     import pandas as pd
 
     import sys
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from test_properties_round5 import _FakeState
     from flink_uba_spark.streaming.pattern import make_pattern_matcher
 
@@ -1030,7 +1033,7 @@ def _drive_consec_stream(batches, steps, kleenes, consecs, final_wm_ms=0):
     import pandas as pd
 
     import sys
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from test_properties_round5 import _FakeState
     from flink_uba_spark.streaming.pattern import make_pattern_matcher
 

@@ -4,9 +4,10 @@ The bucket-native order-timeout detector and the per-key reference run
 under the same emulation of Spark's group-state protocol
 (``tests/order_timeout_reference.GroupRunner``): the reference grouped on
 the raw key, the bucket detector grouped on ``key % B``. Every micro-batch
-must emit the same rows; the end-to-end check runs the catalog twin under
-several bucket counts. The bucket blob header and the bucket timer of the
-pattern operators' per-key replay are pinned here too.
+must emit the same rows; the end-to-end check runs one catalog twin per
+keyed stateful operator under several bucket counts. The bucket blob
+header and the bucket timer of the pattern operators' per-key replay are
+pinned here too.
 """
 
 from __future__ import annotations
@@ -114,16 +115,47 @@ def test_bucket_detector_watermark_edges(anchor_us, wm_delta_ms, with_rows):
         assert _assert_same(batches, b) > 0
 
 
-@pytest.mark.parametrize("buckets", ["0", "1", "3", None])
-def test_order_timeout_twin_same_for_every_bucket_count(spark, duck, sf_dir, monkeypatch, buckets):
-    """The catalog twin hash-matches its oracle under per-key grouping
-    (B=0), one bucket, a prime B and the session default."""
+def _twin_matches_oracle(spark, duck, sf_dir, monkeypatch, name, buckets):
     if buckets is None:
         monkeypatch.delenv("SPARK_GRAFT_STATE_BUCKETS", raising=False)
     else:
         monkeypatch.setenv("SPARK_GRAFT_STATE_BUCKETS", buckets)
-    name = "stream_order_timeout_states"
     assert_matches_oracle(SQ.QUERIES[name](spark, sf_dir), duck, SQ.ORACLES[name])
+
+
+@pytest.mark.parametrize("buckets", ["0", "1", "3", None])
+def test_order_timeout_twin_same_for_every_bucket_count(spark, duck, sf_dir, monkeypatch, buckets):
+    """The catalog twin hash-matches its oracle under per-key grouping
+    (B=0), one bucket, a prime B and the session default."""
+    _twin_matches_oracle(
+        spark, duck, sf_dir, monkeypatch, "stream_order_timeout_states", buckets
+    )
+
+
+# one twin per keyed stateful operator family routed through
+# _keyed_state_apply (order_timeout is covered above)
+BUCKETED_TWINS = [
+    "stream_pattern_view_click_purchase",
+    "stream_match_recognize_skip_to_first",
+    "stream_match_recognize_trailing_run",
+    "stream_match_recognize_reluctant_lazy",
+    "stream_rolling_7d_user_purchases",
+    "stream_temporal_join_price_at_view",
+    "stream_event_transitions",
+    "stream_pattern_budget_error_run",
+]
+
+
+@pytest.mark.parametrize(
+    "buckets",
+    ["0", "3", pytest.param("1", marks=pytest.mark.slow), pytest.param(None, marks=pytest.mark.slow)],
+)
+@pytest.mark.parametrize("name", BUCKETED_TWINS)
+def test_twin_same_for_every_bucket_count(spark, duck, sf_dir, monkeypatch, name, buckets):
+    """Each operator's twin hash-matches its oracle under per-key
+    grouping (B=0) and a prime B; one bucket and the session default run
+    in the slow tier."""
+    _twin_matches_oracle(spark, duck, sf_dir, monkeypatch, name, buckets)
 
 
 def test_bucketed_matcher_fires_member_timer_at_next_watermark():

@@ -11,7 +11,8 @@ import ast
 import re
 from pathlib import Path
 
-TOOLS = Path("/root/repo/tools")
+ROOT = Path(__file__).resolve().parents[1]
+TOOLS = ROOT / "tools"
 
 
 def _nfa_soak_tree():
@@ -66,7 +67,7 @@ def test_vanilla_probe_tracks_latest_check_full():
     latest = vanilla_probe.latest_check_full()
     rounds = [
         int(re.search(r"_r(\d+)\.txt$", str(p)).group(1))
-        for p in Path("/root/repo").glob("CHECK_FULL_r*.txt")
+        for p in ROOT.glob("CHECK_FULL_r*.txt")
     ]
     assert rounds, "no CHECK_FULL artifact in the repo"
     assert latest is not None
@@ -79,7 +80,7 @@ def test_vanilla_probe_tracks_latest_check_full():
 def test_bench_headline_covers_catalog_by_construction():
     """bench.py must append every non-HEADLINE catalog query (VERDICT r6
     item 3's rule) — the complement-append line is the contract."""
-    src = Path("/root/repo/bench.py").read_text()
+    src = (ROOT / "bench.py").read_text()
     assert re.search(
         r"names = \[n for n in HEADLINE if n in qs\] \+ sorted\(set\(qs\) - set\(HEADLINE\)\)",
         src,
@@ -96,7 +97,7 @@ def test_check_full_artifact_names_match_catalog():
     was skipped."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(ROOT))
     sys.path.insert(0, str(TOOLS))
     import vanilla_probe
 

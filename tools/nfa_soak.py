@@ -75,9 +75,11 @@ from __future__ import annotations
 import random
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+_ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(_ROOT))
+sys.path.insert(0, str(_ROOT / "tests"))
 
 
 def random_case(rnd, max_steps=6, ts_range=200, with_untils=False, with_consecs=False):
@@ -1951,9 +1953,10 @@ def _skip_brute_chain_cands(events, n, withins_us):
 
 
 def soak_skip_to_stream(n_cases):
-    """Streaming chain-replay soak (round 9; round 10 widens it to the
-    past-last mode and the overall-WITHIN prune):
-    ``make_chain_skip_replayer`` driven over random micro-batch splits
+    """Streaming plain-chain replay soak (round 9; round 10 widens it to
+    the past-last mode and the overall-WITHIN prune):
+    ``make_quantified_chain_replayer`` with no quantified step, in its
+    skip_to and past_last modes, driven over random micro-batch splits
     with timer firings vs an independent per-anchor chain brute + the
     horizon replay (``>=`` for skip_to, strictly-past for past_last;
     bound-violating candidates pruned BEFORE the fold), candidates
@@ -1961,7 +1964,9 @@ def soak_skip_to_stream(n_cases):
     import pandas as pd
 
     from test_properties_round5 import _FakeState
-    from flink_uba_spark.streaming.skip_replay import make_chain_skip_replayer
+    from flink_uba_spark.streaming.skip_replay import (
+        make_quantified_chain_replayer,
+    )
 
     t0, fails = time.time(), 0
     for seed in range(n_cases):
@@ -1982,9 +1987,9 @@ def soak_skip_to_stream(n_cases):
         ]
         cuts = sorted({rnd.randint(1, 200) * 1000
                        for _ in range(rnd.randint(0, 4))})
-        detect = make_chain_skip_replayer(
-            n, withins_us, skip_step, h_us, mode=mode,
-            within_overall_us=wo_us,
+        detect = make_quantified_chain_replayer(
+            n, withins_us, [None] * n, h_us, within_overall_us=wo_us,
+            mode=mode, skip_step=skip_step,
         )
         state = _FakeState()
         got = []
@@ -2292,7 +2297,8 @@ def soak_trailing(n_cases, cases_per_spec=100):
 
 def soak_trail_stream(n_cases):
     """Streaming trailing-run SKIP PAST LAST replay soak (round 9 second
-    pass): ``make_trailing_run_replayer`` over arbitrary batch splits +
+    pass): ``make_quantified_chain_replayer`` with one capped greedy run
+    as its last step, over arbitrary batch splits +
     mid-stream timer fires vs brute_skip_past_last truncated at the
     family's decidability cut (emitted ends are non-decreasing, so the
     stream result is exactly the batch fold's ``end + H < final_wm``
@@ -2301,7 +2307,7 @@ def soak_trail_stream(n_cases):
 
     from test_properties_round5 import _FakeState, brute_skip_past_last
     from flink_uba_spark.streaming.skip_replay import (
-        make_trailing_run_replayer,
+        make_quantified_chain_replayer,
     )
 
     t0, fails = time.time(), 0
@@ -2325,8 +2331,9 @@ def soak_trail_stream(n_cases):
         ]
         cuts = sorted({rnd.randint(1, 200) * 1000
                        for _ in range(rnd.randint(0, 4))})
-        detect = make_trailing_run_replayer(
-            n, withins_us, gap_us, mn, mx, h_us, within_overall_us=wo_us
+        detect = make_quantified_chain_replayer(
+            n, withins_us, [None] * (n - 1) + [(gap_us, mn, mx)], h_us,
+            within_overall_us=wo_us,
         )
         state = _FakeState()
         got = []
