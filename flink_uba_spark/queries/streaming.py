@@ -1901,10 +1901,10 @@ def stream_pattern_optional_branching(spark: SparkSession, sf_dir: str) -> DataF
     reference's branching NFA (Pattern.optional()).
     streaming/pattern.py:stream_pattern_detect_branching — each
     optional-subset runs as its own plain-chain NFA (within bounds
-    re-anchored on the surviving predecessor) and the branches union into
-    one append stream; `skipped` names the branch. The oracle is the
-    batch branching form minus its incomplete rows (a streaming chain
-    that never completes never emits)."""
+    re-anchored on the surviving predecessor), all of them packed into
+    one stateful operator by make_fused_matcher; `skipped` names the
+    branch. The oracle is the batch branching form minus its incomplete
+    rows (a streaming chain that never completes never emits)."""
     from flink_uba_spark.streaming.pattern import stream_pattern_detect_branching
 
     ev = stream_events(spark, sf_dir)
@@ -2921,29 +2921,29 @@ FROM events GROUP BY 1
 def stream_pattern_error_burst_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The bounded-Kleene CEP chain (signup → error.oneOrMore(30 min gap,
     cap 5) → purchase within 2 h of the run's LAST error) in its native
-    streaming form: streaming/pattern.py:stream_kleene_detect — a per-key
-    NFA whose open runs close on cap, on in-batch gap evidence, or at the
-    stream's end via event-time timers; recovery candidates that arrive
-    while a run is open wait in a gap-horizon buffer.
+    streaming form: streaming/pattern.py:stream_pattern_detect with a
+    Kleene step — a per-key NFA whose open runs close on cap, on in-batch
+    gap evidence, or at the stream's end via event-time timers; recovery
+    candidates that arrive while a run is open wait in a gap-horizon
+    buffer. The signup → error transition is bounded by the same 30
+    minutes as the repetition gap.
 
     The oracle is the batch Kleene result restricted to chains whose run
     CLOSED before the stream ended: cap reached, a same-key event beyond
     the gap, or the final (ms-floored, order-timeout-style) watermark
     passing last_rep + gap."""
-    from flink_uba_spark.streaming.pattern import stream_kleene_detect
+    from flink_uba_spark.streaming.pattern import stream_pattern_detect
 
     ev = stream_events(spark, sf_dir)
     return run_to_table(
-        stream_kleene_detect(
+        stream_pattern_detect(
             ev,
             key="user_id",
-            anchor="signup",
-            repeat="error",
-            final="purchase",
-            gap="INTERVAL 30 MINUTES",
-            cap=5,
-            within1="INTERVAL 30 MINUTES",
-            within3="INTERVAL 2 HOURS",
+            steps=[
+                ("signup", None),
+                ("error", "INTERVAL 30 MINUTES", 5),
+                ("purchase", "INTERVAL 2 HOURS"),
+            ],
         )
     )
 

@@ -60,8 +60,8 @@ rows and the concatenated timeline is sorted.
 
 CHECKPOINT COMPATIBILITY: round 5 widened ``STATE_SCHEMA`` from 3 to 17
 fields (the general-chain state replaced the dedicated 3-step layouts,
-and ``stream_kleene_detect`` switched from the 11-field
-``KLEENE_STATE_SCHEMA`` to it); round 6 appended the 18th field
+the bounded-Kleene chain's 11-field ``KLEENE_STATE_SCHEMA`` among them);
+round 6 appended the 18th field
 (``nn_flags``, the latched notNext decisions) and then the 19th
 (``ams_horizon``, the SKIP_PAST_LAST_EVENT after-match horizon).
 Round 7 appended fields 20-21
@@ -1315,57 +1315,11 @@ def stream_pattern_detect(
     unt = dict(until or {})
     stricts = set(strict or ())
     consecs = set(consecutive or ())
-    preds = [
-        (F.col("event_type") == s) if isinstance(s, str) else s.cast("boolean")
-        for s in specs
-    ]
-    gpreds = {
-        k: (F.col("event_type") == v) if isinstance(v, str) else v.cast("boolean")
-        for k, v in nfb.items()
-    }
-    xpreds = {
-        k: (F.col("event_type") == v) if isinstance(v, str) else v.cast("boolean")
-        for k, v in nnx.items()
-    }
-    upreds = {
-        k: (F.col("event_type") == v) if isinstance(v, str) else v.cast("boolean")
-        for k, v in unt.items()
-    }
-    n = len(preds)
-    flag_cols = {
-        f"__p{i}": F.coalesce(p, F.lit(False)).alias(f"__p{i}")
-        for i, p in enumerate(preds, 1)
-    }
-    flag_cols.update(
-        {f"__g{k}": F.coalesce(p, F.lit(False)).alias(f"__g{k}") for k, p in gpreds.items()}
-    )
-    flag_cols.update(
-        {f"__x{k}": F.coalesce(p, F.lit(False)).alias(f"__x{k}") for k, p in xpreds.items()}
-    )
-    flag_cols.update(
-        {f"__u{k}": F.coalesce(p, F.lit(False)).alias(f"__u{k}") for k, p in upreds.items()}
-    )
-    # rows matching no step (and no guard) are dropped at the scan (an OR
-    # of the raw predicates — pushdown-friendly, unlike greatest() over
-    # aliases), and only the slot booleans ride through the keyed shuffle.
-    # Strict/notNext semantics disable the drop: every key row is a
-    # contiguity witness (the inherent price of next()/notNext())
-    src = events
-    if not stricts and not nnx and not consecs:
-        any_step = preds[0]
-        for p in preds[1:]:
-            any_step = any_step | p
-        for p in gpreds.values():
-            any_step = any_step | p
-        for p in upreds.values():
-            any_step = any_step | p
-        src = events.filter(any_step)
-    filtered = src.withColumns(flag_cols).select(
-        F.col(event_id).alias("event_id"),
-        F.col(ts).alias("ts"),
-        F.col(key).alias("user_id"),
-        *flag_cols.keys(),
-    )
+    n = len(specs)
+    flags = {f"__p{i}": _pred(s) for i, s in enumerate(specs, 1)}
+    flags.update({f"__g{k}": _pred(v) for k, v in nfb.items()})
+    flags.update({f"__x{k}": _pred(v) for k, v in nnx.items()})
+    flags.update({f"__u{k}": _pred(v) for k, v in unt.items()})
     step_types = [s if isinstance(s, str) else f"step{i}" for i, s in enumerate(specs, 1)]
     negations = {
         k: (v if isinstance(v, str) else f"not{k}") for k, v in nfb.items()
@@ -1378,8 +1332,14 @@ def stream_pattern_detect(
     }
     ttl_us = None if state_ttl is None else _interval_us(state_ttl)
     timers = ttl_us is not None or any(k is not None for k in kleenes)
-    if timers:
-        filtered = filtered.withWatermark("ts", watermark_delay)
+    # strict/notNext/consecutive semantics keep the rows matching no slot:
+    # every key row is a contiguity witness (the inherent price of
+    # next()/notNext()); only timers need the watermark
+    filtered = _keyed_input(
+        events, key, flags, event_id, ts,
+        watermark_delay=watermark_delay if timers else None,
+        scan_filter=not (stricts or nnx or consecs),
+    )
     return _keyed_state_apply(
         filtered,
         make_pattern_matcher(
@@ -1395,18 +1355,6 @@ def stream_pattern_detect(
         STATE_SCHEMA,
         GroupStateTimeout.EventTimeTimeout if timers else GroupStateTimeout.NoTimeout,
     )
-
-
-# outer state of the BRANCHING matcher: every STATE_SCHEMA field holds the
-# branch-major concatenation of the per-branch arrays, and seg_lens
-# ([branch][field] lengths, len = n_branches * n_fields) restores the
-# segmentation — ONE state row carries all 2^|optional| branch NFAs, since
-# Spark allows only a single applyInPandasWithState per streaming query
-_N_STATE_FIELDS = len(STATE_SCHEMA.fields)
-BRANCHING_STATE_SCHEMA = T.StructType(
-    list(STATE_SCHEMA.fields)
-    + [T.StructField("seg_lens", T.ArrayType(T.LongType()))]
-)
 
 
 def branching_output_schema(n_steps: int) -> T.StructType:
@@ -1426,7 +1374,7 @@ def branching_output_schema(n_steps: int) -> T.StructType:
 
 class _BranchStateSlot:
     """GroupState facade handed to one branch's detect function; captures
-    its update/remove/timer calls so the branching matcher can pack all
+    its update/remove/timer calls so the fused matcher can pack all
     branch states into the single real state row."""
 
     def __init__(self, value, wm_ms, timed_out, timer_sink):
@@ -1647,6 +1595,44 @@ def _keyed_state_apply(filtered, det, out_schema, state_schema, timeout, bucket_
     return grouped.applyInPandasWithState(fn, out_schema, state_schema, "append", timeout)
 
 
+def _keyed_input(events, key, flags, event_id, ts, watermark_delay=None,
+                 extra=None, scan_filter=True):
+    """The keyed input of every flag-based matcher: ``flags`` maps a
+    column name to a boolean predicate (see ``_pred``), evaluated JVM-side
+    once and carried null-safe, so the keyed exchange holds one boolean
+    per flag instead of the predicate inputs. Rows matching no flag are
+    dropped at the scan — an OR of the raw predicates, pushdown-friendly,
+    unlike greatest() over the aliases — unless ``scan_filter`` is off.
+    Columns: ``event_id, ts, user_id``, the flags, then ``extra``
+    (name -> Column payloads). ``watermark_delay`` applies the watermark
+    on ``ts``; None leaves the stream without one."""
+    src = events
+    if scan_filter:
+        any_flag = None
+        for c in flags.values():
+            any_flag = c if any_flag is None else (any_flag | c)
+        src = events.filter(any_flag)
+    named = {nm: F.coalesce(c, F.lit(False)).alias(nm) for nm, c in flags.items()}
+    filtered = src.withColumns(named).select(
+        F.col(event_id).alias("event_id"),
+        F.col(ts).alias("ts"),
+        F.col(key).alias("user_id"),
+        *named.keys(),
+        *[c.alias(nm) for nm, c in (extra or {}).items()],
+    )
+    if watermark_delay is None:
+        return filtered
+    return filtered.withWatermark("ts", watermark_delay)
+
+
+def _pred(spec):
+    """A step spec as a boolean predicate: an event-type string matches
+    ``event_type``; a Column is cast to boolean."""
+    if isinstance(spec, str):
+        return F.col("event_type") == spec
+    return spec.cast("boolean")
+
+
 def make_branching_matcher(
     step_types: list[str],
     withins_us: list[int | None],
@@ -1658,8 +1644,10 @@ def make_branching_matcher(
     Flink's branching NFA, whose partial-match set is also the set of
     live branches. Each branch is the ``make_pattern_matcher`` chain for
     one optional-subset (within bounds re-anchored on the surviving
-    predecessor via the shortened step list); emitted rows are remapped
-    to the full step numbering with ``skipped`` naming the branch."""
+    predecessor via the shortened step list), fed the ``__p{k}`` flags of
+    its kept steps; emitted rows are remapped to the full step numbering
+    with ``skipped`` naming the branch. The branches pack into one state
+    row through ``make_fused_matcher``."""
     from itertools import combinations
 
     n = len(step_types)
@@ -1673,64 +1661,8 @@ def make_branching_matcher(
                 ttl_us=ttl_us,
             )
             tag = ",".join(str(k) for k in skip) or "none"
-            branches.append((skip, kept, tag, det))
-    B = len(branches)
 
-    def detect(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
-        timed_out = getattr(state, "hasTimedOut", False)
-        chunks = [] if timed_out else [c for c in pdfs if len(c)]
-        if len(chunks) == 1:  # hot path: skip the per-group concat
-            pdf = chunks[0]
-        else:
-            pdf = pd.concat(chunks, ignore_index=True) if chunks else None
-        try:
-            # raises on a watermark-free stream (no-ttl branching runs
-            # without withWatermark); 0 = "no watermark yet" either way
-            wm_ms = state.getCurrentWatermarkMs()
-        except Exception:  # noqa: BLE001
-            wm_ms = 0
-
-        if state.exists:
-            *flat, seg = state.get
-            seg = [int(x) for x in seg]
-            bvals: list[tuple | None] = []
-            pos = [0] * _N_STATE_FIELDS
-            for b in range(B):
-                tup, empty = [], True
-                for f in range(_N_STATE_FIELDS):
-                    ln = seg[b * _N_STATE_FIELDS + f]
-                    tup.append(list(flat[f][pos[f]:pos[f] + ln]))
-                    pos[f] += ln
-                    empty = empty and ln == 0
-                bvals.append(None if empty else tuple(tup))
-        else:
-            bvals = [None] * B
-
-        timer_cands: list[int] = []
-        new_vals: list[tuple | None] = [None] * B
-        out_frames: list[pd.DataFrame] = []
-        for bi, (skip, kept, tag, det) in enumerate(branches):
-            slot = _BranchStateSlot(bvals[bi], wm_ms, timed_out, timer_cands)
-            if pdf is not None:
-                if "__p1" in pdf.columns:
-                    bpdf = pd.DataFrame(
-                        {
-                            "event_id": pdf["event_id"],
-                            "ts": pdf["ts"],
-                            **{
-                                f"__p{j}": pdf[f"__p{k}"]
-                                for j, k in enumerate(kept, start=1)
-                            },
-                        }
-                    )
-                else:
-                    # event_type test mode: each branch matches its own
-                    # (subset) step_types against the raw column
-                    bpdf = pdf
-                it: Iterator[pd.DataFrame] = iter([bpdf])
-            else:
-                it = iter([])
-            for frame in det(key, it, slot):
+            def project(frame, kept=kept, tag=tag):
                 # build in output order (skips the reindex selection);
                 # NaT/tag columns as raw numpy buffers (hot path)
                 m = len(frame)
@@ -1742,9 +1674,7 @@ def make_branching_matcher(
                         f"t{k}": (
                             tmap[k]
                             if k in tmap
-                            else np.full(
-                                m, np.datetime64("NaT"), "datetime64[us]"
-                            )
+                            else np.full(m, np.datetime64("NaT"), "datetime64[us]")
                         )
                         for k in range(1, n + 1)
                     },
@@ -1752,30 +1682,10 @@ def make_branching_matcher(
                     "state": frame["state"],
                     "skipped": np.full(m, tag, dtype=object),
                 }
-                out_frames.append(pd.DataFrame(cols, copy=False))
-            new_vals[bi] = slot.value
+                return pd.DataFrame(cols, copy=False)
 
-        if any(v is not None for v in new_vals):
-            flat_out: list[list] = [[] for _ in range(_N_STATE_FIELDS)]
-            seg_out: list[int] = []
-            for v in new_vals:
-                for f in range(_N_STATE_FIELDS):
-                    arr = [] if v is None else list(v[f])
-                    flat_out[f].extend(arr)
-                    seg_out.append(len(arr))
-            state.update(tuple([*flat_out, seg_out]))
-            if timer_cands:
-                # each branch already clamped its request to wm+1
-                state.setTimeoutTimestamp(max(min(timer_cands), wm_ms + 1))
-        elif state.exists:
-            state.remove()
-
-        if len(out_frames) == 1:  # hot path: skip the per-group concat
-            yield out_frames[0]
-        elif out_frames:
-            yield pd.concat(out_frames, ignore_index=True)
-
-    return detect
+            branches.append((det, [f"__p{k}" for k in kept], project))
+    return make_fused_matcher(branches, len(STATE_SCHEMA.fields))
 
 
 def stream_pattern_detect_branching(
@@ -1824,114 +1734,20 @@ def stream_pattern_detect_branching(
 
     specs = [s[0] for s in steps]
     withins_us = [None if s[1] is None else _interval_us(s[1]) for s in steps]
-    preds = [
-        (F.col("event_type") == s) if isinstance(s, str) else s.cast("boolean")
-        for s in specs
-    ]
-    flag_cols = {
-        f"__p{i}": F.coalesce(p, F.lit(False)).alias(f"__p{i}")
-        for i, p in enumerate(preds, 1)
-    }
-    any_step = preds[0]
-    for p in preds[1:]:
-        any_step = any_step | p
-    filtered = (
-        events.filter(any_step)
-        .withColumns(flag_cols)
-        .select(
-            F.col(event_id).alias("event_id"),
-            F.col(ts).alias("ts"),
-            F.col(key).alias("user_id"),
-            *flag_cols.keys(),
-        )
-    )
+    flags = {f"__p{i}": _pred(s) for i, s in enumerate(specs, 1)}
     step_types = [s if isinstance(s, str) else f"step{i}" for i, s in enumerate(specs, 1)]
     ttl_us = None if state_ttl is None else _interval_us(state_ttl)
-    if ttl_us is not None:
-        filtered = filtered.withWatermark("ts", watermark_delay)
     return _keyed_state_apply(
-        filtered,
+        _keyed_input(
+            events, key, flags, event_id, ts,
+            watermark_delay=None if ttl_us is None else watermark_delay,
+        ),
         make_branching_matcher(step_types, withins_us, opts, ttl_us=ttl_us),
         branching_output_schema(n),
-        BRANCHING_STATE_SCHEMA,
+        fused_state_schema(STATE_SCHEMA),
         GroupStateTimeout.EventTimeTimeout
         if ttl_us is not None
         else GroupStateTimeout.NoTimeout,
-    )
-
-
-# --------------------------------------------------------------------------
-# Bounded-Kleene 3-step compatibility surface (A → B.oneOrMore(gap, cap) → C)
-# — now thin wrappers over the general engine (round 5; the dedicated NFA
-# this replaced is superseded by make_pattern_matcher's kleenes support).
-# --------------------------------------------------------------------------
-
-KLEENE_OUTPUT_SCHEMA = pattern_output_schema(3, [None, (1, 1), None])
-
-
-def make_kleene_matcher(
-    step_types: list[str],
-    gap_us: int,
-    cap: int,
-    within1_us: int | None,
-    within3_us: int | None,
-):
-    """Per-key NFA for the 3-step bounded-Kleene chain — kept as the
-    historical test surface; delegates to the general matcher. ``within1``
-    classifies the anchor→entry transition, ``within3`` the run-last→C
-    transition (they may differ from ``gap``, unlike the batch compiler's
-    merged within)."""
-    if gap_us is None:
-        raise ValueError("streaming Kleene needs a finite gap (state closure evidence)")
-    return make_pattern_matcher(
-        step_types,
-        [None, within1_us, within3_us],
-        kleenes=[None, (gap_us, cap), None],
-    )
-
-
-def stream_kleene_detect(
-    events: DataFrame,
-    key: str,
-    anchor: str,
-    repeat: str,
-    final: str,
-    gap: str,
-    cap: int,
-    within1: str | None = None,
-    within3: str | None = None,
-    event_id: str = "event_id",
-    ts: str = "ts",
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Wire the bounded-Kleene NFA (A → B.oneOrMore(gap, cap) → C) over a
-    streaming events frame; event-time timers provide end-of-stream run
-    closure, so the watermark is always applied."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    kleenes = [None, (_interval_us(gap), cap), None]
-    filtered = (
-        events.filter(F.col("event_type").isin(anchor, repeat, final))
-        .select(
-            F.col(event_id).alias("event_id"),
-            F.col(ts).alias("ts"),
-            F.col(key).alias("user_id"),
-            "event_type",
-        )
-        .withWatermark("ts", watermark_delay)
-    )
-    return _keyed_state_apply(
-        filtered,
-        make_kleene_matcher(
-            [anchor, repeat, final],
-            _interval_us(gap),
-            cap,
-            None if within1 is None else _interval_us(within1),
-            None if within3 is None else _interval_us(within3),
-        ),
-        pattern_output_schema(3, kleenes),
-        STATE_SCHEMA,
-        GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -1998,6 +1814,36 @@ def _enumerate_any(ids, tss, masks, news, withins_us):
     return out
 
 
+def _ingest_new_events(pdfs: Iterator[pd.DataFrame], n_steps: int, known: set,
+                       n_pay: int = 0) -> tuple[list, list, list, list]:
+    """The rows of a micro-batch that join a horizon buffer: every row
+    matching some step whose event id is not in ``known`` (updated in
+    place, so a row delivered twice joins once). Returns their ids, µs
+    timestamps, step bitmasks (bit k-1 = ``__p{k}``) and, row-major,
+    ``n_pay`` payload longs each (``__v0..``)."""
+    ids, tss, masks, pays = [], [], [], []
+    for pdf in pdfs:
+        if not len(pdf):
+            continue
+        ts_us = pdf["ts"].astype("datetime64[us]").astype("int64").to_numpy()
+        eid = pdf["event_id"].to_numpy()
+        pay_cols = [pdf[f"__v{j}"].to_numpy() for j in range(n_pay)]
+        # step-membership bitmasks, vectorized over the batch (the
+        # per-row inner loop was a measured hot spot, round 10)
+        msk = np.zeros(len(pdf), dtype="int64")
+        for i in range(n_steps):
+            msk |= pdf[f"__p{i + 1}"].to_numpy().astype(bool).astype("int64") << i
+        for r in np.flatnonzero(msk):
+            e = int(eid[r])
+            if e not in known:
+                ids.append(e)
+                tss.append(int(ts_us[r]))
+                masks.append(int(msk[r]))
+                pays.extend(int(c[r]) for c in pay_cols)
+                known.add(e)
+    return ids, tss, masks, pays
+
+
 def make_any_matcher(n_steps: int, withins_us: list, after_match: str | None = None):
     """Per-key followedByAny matcher for ``applyInPandasWithState``.
 
@@ -2033,37 +1879,11 @@ def make_any_matcher(n_steps: int, withins_us: list, after_match: str | None = N
     skip_next = after_match == "skip_to_next"
 
     def fold(key, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
-        out_cols = (
-            ["user_id"]
-            + [f"i{k}" for k in range(1, n_steps + 1)]
-            + [f"t{k}" for k in range(1, n_steps + 1)]
-        )
         if state.exists:
             o_ids, o_tss, o_masks, o_emit = (list(v) for v in state.get)
         else:
             o_ids, o_tss, o_masks, o_emit = [], [], [], []
-        known = set(o_ids)
-        n_ids, n_tss, n_masks = [], [], []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ts_us = pdf["ts"].astype("datetime64[us]").astype("int64").to_numpy()
-            eid = pdf["event_id"].to_numpy()
-            # step-membership bitmasks, vectorized over the batch (the
-            # per-row inner loop was a measured hot spot, round 10)
-            msk = np.zeros(len(pdf), dtype="int64")
-            for i in range(n_steps):
-                msk |= (
-                    pdf[f"__p{i + 1}"].to_numpy().astype(bool).astype("int64")
-                    << i
-                )
-            for r in np.flatnonzero(msk):
-                e = int(eid[r])
-                if e not in known:
-                    n_ids.append(e)
-                    n_tss.append(int(ts_us[r]))
-                    n_masks.append(int(msk[r]))
-                    known.add(e)
+        n_ids, n_tss, n_masks, _ = _ingest_new_events(pdfs, n_steps, set(o_ids))
         ids = o_ids + n_ids
         tss = o_tss + n_tss
         masks = o_masks + n_masks
@@ -2160,30 +1980,9 @@ def stream_pattern_detect_any(
         raise ValueError("followedByAny needs a within interval on every "
                          "step after the first")
     withins_us = [0] + [_interval_us(s[1]) for s in steps[1:]]
-    preds = [
-        (F.col("event_type") == s[0]) if isinstance(s[0], str) else s[0].cast("boolean")
-        for s in steps
-    ]
-    flag_cols = {
-        f"__p{i}": F.coalesce(p, F.lit(False)).alias(f"__p{i}")
-        for i, p in enumerate(preds, 1)
-    }
-    any_step = preds[0]
-    for p in preds[1:]:
-        any_step = any_step | p
-    filtered = (
-        events.filter(any_step)
-        .withColumns(flag_cols)
-        .select(
-            F.col(event_id).alias("event_id"),
-            F.col(ts).alias("ts"),
-            F.col(key).alias("user_id"),
-            *flag_cols.keys(),
-        )
-        .withWatermark("ts", watermark_delay)
-    )
+    flags = {f"__p{i}": _pred(s[0]) for i, s in enumerate(steps, 1)}
     return _keyed_state_apply(
-        filtered,
+        _keyed_input(events, key, flags, event_id, ts, watermark_delay=watermark_delay),
         make_any_matcher(n, withins_us, after_match=after_match),
         any_output_schema(n),
         ANY_STATE_SCHEMA,
@@ -2255,29 +2054,11 @@ def make_iterative_matcher(n_steps: int, withins_us: list, n_pay: int, conds_py:
             o_ids, o_tss, o_masks, o_pays, o_emit = (list(v) for v in state.get)
         else:
             o_ids, o_tss, o_masks, o_pays, o_emit = [], [], [], [], []
-        known = set(o_ids)
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ts_us = pdf["ts"].astype("datetime64[us]").astype("int64").to_numpy()
-            eid = pdf["event_id"].to_numpy()
-            pays = [pdf[f"__v{j}"].to_numpy() for j in range(n_pay)]
-            # step-membership bitmasks, vectorized over the batch (the
-            # per-row inner loop was a measured hot spot, round 10)
-            msk = np.zeros(len(pdf), dtype="int64")
-            for i in range(n_steps):
-                msk |= (
-                    pdf[f"__p{i + 1}"].to_numpy().astype(bool).astype("int64")
-                    << i
-                )
-            for r in np.flatnonzero(msk):
-                e = int(eid[r])
-                if e not in known:
-                    o_ids.append(e)
-                    o_tss.append(int(ts_us[r]))
-                    o_masks.append(int(msk[r]))
-                    o_pays.extend(int(pays[j][r]) for j in range(n_pay))
-                    known.add(e)
+        for buf, new in zip(
+            (o_ids, o_tss, o_masks, o_pays),
+            _ingest_new_events(pdfs, n_steps, set(o_ids), n_pay),
+        ):
+            buf.extend(new)
         wm_us = state.getCurrentWatermarkMs() * 1000
         wm_ms = wm_us // 1000
         order = sorted(
@@ -2387,35 +2168,13 @@ def stream_pattern_detect_iterative(
         )
     pay = dict(payload or {})
     withins_us = [0] + [_interval_us(s[1]) for s in steps[1:]]
-    preds = [
-        (F.col("event_type") == s[0]) if isinstance(s[0], str) else s[0].cast("boolean")
-        for s in steps
-    ]
-    flag_cols = {
-        f"__p{i}": F.coalesce(p, F.lit(False)).alias(f"__p{i}")
-        for i, p in enumerate(preds, 1)
-    }
-    pay_cols = {
-        f"__v{j}": c.cast("long").alias(f"__v{j}")
-        for j, (nm, c) in enumerate(pay.items())
-    }
-    any_step = preds[0]
-    for p in preds[1:]:
-        any_step = any_step | p
-    filtered = (
-        events.filter(any_step)
-        .withColumns({**flag_cols, **pay_cols})
-        .select(
-            F.col(event_id).alias("event_id"),
-            F.col(ts).alias("ts"),
-            F.col(key).alias("user_id"),
-            *flag_cols.keys(),
-            *pay_cols.keys(),
-        )
-        .withWatermark("ts", watermark_delay)
-    )
+    flags = {f"__p{i}": _pred(s[0]) for i, s in enumerate(steps, 1)}
+    pay_cols = {f"__v{j}": c.cast("long") for j, c in enumerate(pay.values())}
     out = _keyed_state_apply(
-        filtered,
+        _keyed_input(
+            events, key, flags, event_id, ts,
+            watermark_delay=watermark_delay, extra=pay_cols,
+        ),
         make_iterative_matcher(n, withins_us, len(pay), dict(conds_py or {})),
         iterative_output_schema(n, [f"v{j}_" for j in range(len(pay))]),
         ITER_STATE_SCHEMA,
@@ -2433,11 +2192,12 @@ def stream_pattern_detect_iterative(
 # ONE applyInPandasWithState — the per-count reluctant / allowCombinations /
 # group-loop twins previously ran one independent streaming query (its own
 # source scan + stateful exchange) per admitted repetition count; Flink's
-# shared version tree does one pass. The _BranchStateSlot + seg_lens
-# packing stream_pattern_detect_branching proved is generalized here to
-# arbitrary branch step lists (heterogeneous widths included) over either
-# the chain engine (make_pattern_matcher) or the followedByAny engine
-# (make_any_matcher).
+# shared version tree does one pass. make_fused_matcher is the one code
+# that packs branch states: arbitrary branch step lists (heterogeneous
+# widths included) over either the chain engine (make_pattern_matcher) or
+# the followedByAny engine (make_any_matcher). The multi-match optional()
+# operator (make_branching_matcher), the per-count twins and the
+# preference fold all run through it.
 # --------------------------------------------------------------------------
 
 
@@ -2457,7 +2217,10 @@ def make_fused_matcher(branches: list[tuple], n_state_fields: int):
     the operator's COMMON output schema. Every state field holds the
     branch-major concatenation of the per-branch arrays; seg_lens
     ([branch][field], len = B * n_state_fields) restores the
-    segmentation — exactly the stream_pattern_detect_branching layout."""
+    segmentation, so ONE state row carries every branch NFA (Spark allows
+    a single applyInPandasWithState per streaming query). The operator's
+    timer is the minimum of the branches' requests, clamped above the
+    watermark."""
     B = len(branches)
 
     def detect(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
@@ -2468,6 +2231,8 @@ def make_fused_matcher(branches: list[tuple], n_state_fields: int):
         else:
             pdf = pd.concat(chunks, ignore_index=True) if chunks else None
         try:
+            # raises on a watermark-free stream (the no-ttl branching
+            # operator runs without withWatermark); 0 = "no watermark yet"
             wm_ms = state.getCurrentWatermarkMs()
         except Exception:  # noqa: BLE001
             wm_ms = 0
@@ -2593,27 +2358,10 @@ def stream_pattern_detect_fused(
             det = make_any_matcher(nb, list(b["withins_us"]))
         built.append((det, list(b["slots"]), b["project"]))
 
-    preds = {nm: c.cast("boolean") for nm, c in flags.items()}
-    any_step = None
-    for c in preds.values():
-        any_step = c if any_step is None else (any_step | c)
-    flag_cols = {
-        nm: F.coalesce(c, F.lit(False)).alias(nm) for nm, c in preds.items()
-    }
-    filtered = (
-        events.filter(any_step)
-        .withColumns(flag_cols)
-        .select(
-            F.col(event_id).alias("event_id"),
-            F.col(ts).alias("ts"),
-            F.col(key).alias("user_id"),
-            *flag_cols.keys(),
-        )
-        .withWatermark("ts", watermark_delay)
-    )
+    preds = {nm: _pred(c) for nm, c in flags.items()}
     base = STATE_SCHEMA if engine == "chain" else ANY_STATE_SCHEMA
     return _keyed_state_apply(
-        filtered,
+        _keyed_input(events, key, preds, event_id, ts, watermark_delay=watermark_delay),
         make_fused_matcher(built, len(base.fields)),
         output_schema,
         fused_state_schema(base),
@@ -2828,27 +2576,10 @@ def stream_pattern_detect_preferred(
 
         built.append((det, list(slots), project))
 
-    preds = {nm: c.cast("boolean") for nm, c in flags.items()}
-    any_step = None
-    for c in preds.values():
-        any_step = c if any_step is None else (any_step | c)
-    flag_cols = {
-        nm: F.coalesce(c, F.lit(False)).alias(nm) for nm, c in preds.items()
-    }
-    filtered = (
-        events.filter(any_step)
-        .withColumns(flag_cols)
-        .select(
-            F.col(event_id).alias("event_id"),
-            F.col(ts).alias("ts"),
-            F.col(key).alias("user_id"),
-            *flag_cols.keys(),
-        )
-        .withWatermark("ts", watermark_delay)
-    )
+    preds = {nm: _pred(c) for nm, c in flags.items()}
     wo_us = None if within_overall is None else _interval_us(within_overall)
     return _keyed_state_apply(
-        filtered,
+        _keyed_input(events, key, preds, event_id, ts, watermark_delay=watermark_delay),
         make_preference_fused(
             built, len(STATE_SCHEMA.fields), n, horizon,
             within_overall_us=wo_us,

@@ -57,7 +57,6 @@ from typing import Any
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _NULL = -(1 << 62)
@@ -697,7 +696,12 @@ def stream_quantified_chain_detect(
     bound rows — see ``make_quantified_chain_replayer``."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from flink_uba_spark.streaming.pattern import _interval_us, _keyed_state_apply
+    from flink_uba_spark.streaming.pattern import (
+        _interval_us,
+        _keyed_input,
+        _keyed_state_apply,
+        _pred,
+    )
 
     n = len(steps)
     if n < 2:
@@ -750,12 +754,12 @@ def stream_quantified_chain_detect(
             raise ValueError(f"agg references undeclared value {val_name!r}")
         raggs.append((k, val_ix[val_name], func, n_off, out_name, integral))
         agg_fields.append((out_name, integral))
-    flags = {f"f{k}": s[0].cast("boolean") for k, s in enumerate(steps, 1)}
+    flags = {f"f{k}": _pred(s[0]) for k, s in enumerate(steps, 1)}
     extra = {
         f"v{i}": c.cast("double") for i, c in enumerate(values.values())
     }
-    filtered = _wire(events, key, flags, event_id, ts, watermark_delay,
-                     extra=extra)
+    filtered = _keyed_input(events, key, flags, event_id, ts,
+                            watermark_delay=watermark_delay, extra=extra)
     wo_us = None if within_overall is None else _interval_us(within_overall)
     quant = {k for k in range(1, n + 1) if kleenes[k - 1] is not None}
     return _keyed_state_apply(
@@ -769,26 +773,6 @@ def stream_quantified_chain_detect(
         else quantified_chain_output_schema(n, quant, agg_fields),
         skip_state_schema(bool(values)),
         GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _wire(events, key, flag_cols, event_id, ts, watermark_delay, extra=None):
-    any_f = None
-    for c in flag_cols.values():
-        any_f = c if any_f is None else (any_f | c)
-    named = {nm: F.coalesce(c, F.lit(False)).alias(nm)
-             for nm, c in flag_cols.items()}
-    return (
-        events.filter(any_f)
-        .withColumns(named)
-        .select(
-            F.col(event_id).alias("event_id"),
-            F.col(ts).alias("ts"),
-            F.col(key).alias("user_id"),
-            *named.keys(),
-            *[c.alias(nm) for nm, c in (extra or {}).items()],
-        )
-        .withWatermark("ts", watermark_delay)
     )
 
 
@@ -814,7 +798,12 @@ def stream_reluctant_lazy_detect(
     preference + fold."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from flink_uba_spark.streaming.pattern import _interval_us, _keyed_state_apply
+    from flink_uba_spark.streaming.pattern import (
+        _interval_us,
+        _keyed_input,
+        _keyed_state_apply,
+        _pred,
+    )
 
     if mn < 1 or mx < mn:
         raise ValueError("need 1 <= mn <= mx")
@@ -822,12 +811,9 @@ def stream_reluctant_lazy_detect(
     sfx_us = _interval_us(suffix_within)
     h_us = mx * gap_us + sfx_us
     wo_us = None if within_overall is None else _interval_us(within_overall)
-    flags = {
-        "f1": anchor.cast("boolean"),
-        "f2": run.cast("boolean"),
-        "f3": suffix.cast("boolean"),
-    }
-    filtered = _wire(events, key, flags, event_id, ts, watermark_delay)
+    flags = {"f1": _pred(anchor), "f2": _pred(run), "f3": _pred(suffix)}
+    filtered = _keyed_input(events, key, flags, event_id, ts,
+                            watermark_delay=watermark_delay)
     return _keyed_state_apply(
         filtered,
         make_lazy_reluctant_replayer(

@@ -9,6 +9,11 @@ truncated at the decidability cut ``end + H < final_wm``.
   WITHIN;
 - ``trail-stream``: a capped greedy run as the last step under SKIP PAST
   LAST.
+
+The same harness drives the packed multi-branch matcher
+(``streaming/pattern.make_fused_matcher``) through the ``stream-branching``,
+``fused`` and ``pref`` modes, and the horizon-buffer matchers through
+``stream-any`` and ``iter``.
 """
 
 from __future__ import annotations
@@ -34,6 +39,24 @@ def test_plain_chain_skip_modes_match_brute():
 
 def test_trailing_run_matches_brute():
     assert nfa_soak.soak_trail_stream(300) == 0
+
+
+@pytest.mark.parametrize(
+    "soak",
+    [
+        nfa_soak.soak_stream_branching,
+        nfa_soak.soak_fused,
+        nfa_soak.soak_pref,
+        nfa_soak.soak_stream_any,
+        nfa_soak.soak_iter,
+    ],
+    ids=["stream-branching", "fused", "pref", "stream-any", "iter"],
+)
+def test_packed_and_horizon_matchers_match_brute(soak):
+    """The fused matcher (under the branching, per-count and preference
+    operators) and the followedByAny / iterative horizon buffers, over
+    random micro-batch splits with mid-stream timer fires."""
+    assert soak(300) == 0
 
 
 def test_single_quantified_variable_under_skip_past_last_raises(spark):

@@ -159,7 +159,7 @@ def test_kleene_nfa_recovers_from_checkpoint(spark, sf_dir):
     """The Kleene NFA's richer state (open runs + the gap-horizon candidate
     buffer) must round-trip the state store: a crash/recover execution over
     the same two-batch replay equals the uninterrupted execution exactly."""
-    from flink_uba_spark.streaming.pattern import stream_kleene_detect
+    from flink_uba_spark.streaming.pattern import stream_pattern_detect
 
     events = load_testdata(spark, sf_dir, ("events",))["events"].select(
         "event_id", "ts", "user_id", "event_type"
@@ -176,10 +176,13 @@ def test_kleene_nfa_recovers_from_checkpoint(spark, sf_dir):
             .parquet(replay)
         )
         q = (
-            stream_kleene_detect(
-                sdf, key="user_id", anchor="signup", repeat="error",
-                final="purchase", gap="INTERVAL 30 MINUTES", cap=5,
-                within1="INTERVAL 30 MINUTES", within3="INTERVAL 2 HOURS",
+            stream_pattern_detect(
+                sdf, key="user_id",
+                steps=[
+                    ("signup", None),
+                    ("error", "INTERVAL 30 MINUTES", 5),
+                    ("purchase", "INTERVAL 2 HOURS"),
+                ],
             )
             .writeStream.format("parquet")
             .outputMode("append")
@@ -305,6 +308,43 @@ def test_fused_matcher_recovers_from_checkpoint(spark, sf_dir):
         got[c].sort_values(c).reset_index(drop=True)
         .equals(want[c].sort_values(c).reset_index(drop=True))
     )
+
+
+def test_branching_matcher_recovers_from_checkpoint(spark, sf_dir):
+    """The multi-match optional() operator packs its branch NFAs into one
+    state row (per-branch segments + seg_lens + the min-merged timer);
+    under a state ttl the branches also arm timers. Crash/recover must
+    equal the uninterrupted run exactly."""
+    from flink_uba_spark.streaming.pattern import stream_pattern_detect_branching
+
+    events = load_testdata(spark, sf_dir, ("events",))["events"].select(
+        "event_id", "ts", "user_id", "event_type"
+    )
+    # a ttl past the first half of the replay: no chain can be idle past
+    # it at the cut, so the crashed run's watermark-only batch fires no
+    # timer the uninterrupted run would not (see _order_timeout)
+    lo, mid = events.agg(
+        F.min(F.unix_micros("ts")), F.expr("percentile_approx(unix_micros(ts), 0.5)")
+    ).collect()[0]
+    hours = (mid - lo) // 3_600_000_000 + 1
+
+    def build(sdf):
+        return stream_pattern_detect_branching(
+            sdf, key="user_id",
+            steps=[
+                ("signup", None),
+                ("view", "INTERVAL 6 HOURS"),
+                ("click", "INTERVAL 6 HOURS"),
+                ("purchase", "INTERVAL 1 DAY"),
+            ],
+            optional={2, 3},
+            state_ttl=f"INTERVAL {hours} HOURS",
+        )
+
+    got, want = _crash_recover_compare(spark, events, build, "branching")
+    assert len(want) > 0
+    assert set(want["skipped"]) == {"none", "2", "3", "2,3"}
+    _assert_same_rows(got, want)
 
 
 def test_over_agg_recovers_from_checkpoint(spark, sf_dir):

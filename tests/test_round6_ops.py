@@ -542,6 +542,15 @@ _BR_STEPS = ["view", "click", "purchase"]
 _BR_WITHINS = [None, 30 * 60 * US, 120 * 60 * US]
 
 
+def _br_rows(*evs):
+    """``_rows`` as the branching operator receives them: one ``__p{k}``
+    flag per step instead of the raw event type."""
+    rows = _rows(*evs)
+    for k, t in enumerate(_BR_STEPS, 1):
+        rows[f"__p{k}"] = rows["event_type"] == t
+    return rows.drop(columns="event_type")
+
+
 def test_branching_matcher_emits_both_branches_across_batches():
     from flink_uba_spark.streaming.pattern import make_branching_matcher
 
@@ -552,7 +561,7 @@ def test_branching_matcher_emits_both_branches_across_batches():
     out1 = _collect(
         detect(
             (1,),
-            iter([_rows((1, 0, "view"), (2, 10 * 60 * US, "click"))]),
+            iter([_br_rows((1, 0, "view"), (2, 10 * 60 * US, "click"))]),
             st,
         )
     )
@@ -565,7 +574,7 @@ def test_branching_matcher_emits_both_branches_across_batches():
     assert per_branch_nonempty == [True, True]
     # batch 2: one purchase completes BOTH branches
     out2 = _collect(
-        detect((1,), iter([_rows((3, 60 * 60 * US, "purchase"))]), st)
+        detect((1,), iter([_br_rows((3, 60 * 60 * US, "purchase"))]), st)
     )
     out2 = out2.sort_values("skipped").reset_index(drop=True)
     assert list(out2["skipped"]) == ["2", "none"]
@@ -589,7 +598,7 @@ def test_branching_matcher_skipped_branch_can_outlive_taken():
     out = _collect(
         detect(
             (1,),
-            iter([_rows((1, 0, "view"), (2, 60 * 60 * US, "purchase"))]),
+            iter([_br_rows((1, 0, "view"), (2, 60 * 60 * US, "purchase"))]),
             st,
         )
     )

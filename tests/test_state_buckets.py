@@ -143,6 +143,10 @@ BUCKETED_TWINS = [
     "stream_temporal_join_price_at_view",
     "stream_event_transitions",
     "stream_pattern_budget_error_run",
+    "stream_pattern_optional_branching",
+    "stream_pattern_reluctant_error_prefixes",
+    "stream_pattern_any_view_click_purchase",
+    "stream_pattern_iterative_price_escalation",
 ]
 
 

@@ -487,9 +487,11 @@ def _k_collect(gen):
 
 
 def _k_detector(gap_s=100, cap=3):
-    from flink_uba_spark.streaming.pattern import make_kleene_matcher
+    from flink_uba_spark.streaming.pattern import make_pattern_matcher
 
-    return make_kleene_matcher(["A", "B", "C"], gap_s * US, cap, None, None)
+    return make_pattern_matcher(
+        ["A", "B", "C"], [None, None, None], kleenes=[None, (gap_s * US, cap), None]
+    )
 
 
 def _k_rows(*evs):

@@ -15,7 +15,9 @@ import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the repository this tool belongs to, wherever it is checked out
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:
@@ -35,7 +37,7 @@ def main() -> None:
         prev_path = Path(sys.argv[1])
     else:
         cands = sorted(
-            Path("/root/repo").glob("CHECK_FULL_r*.txt"),
+            ROOT.glob("CHECK_FULL_r*.txt"),
             key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)),
         )
         if not cands:

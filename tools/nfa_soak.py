@@ -37,7 +37,9 @@ Modes:
                                          #   (Pattern.begin(sub).times) vs
                                          #   the tiled brute_any (r7)
   python tools/nfa_soak.py stream-branching [N]
-                                         # make_branching_matcher (packed
+                                         # make_branching_matcher (the
+                                         #   optional() branch list run by
+                                         #   make_fused_matcher: packed
                                          #   per-branch states, min-merged
                                          #   timer) over micro-batch splits
                                          #   + mid-stream merged-timer fires
@@ -843,12 +845,12 @@ def soak_branching(n_cases, cases_per_spec=100):
 
 def soak_stream_branching(n_cases):
     """STREAMING multi-match optional() branching soak (round 6, second
-    pass): ``make_branching_matcher`` — the single-operator NFA whose
-    per-branch states pack into one state row and whose per-branch timers
-    min-merge into one event-time timer — driven over random micro-batch
-    splits WITH mid-stream timer firings (the merged timer routes
-    hasTimedOut to every branch, so a fire for one branch must not
-    corrupt another's pending chains). Reference: the per-subset
+    pass): ``make_branching_matcher`` — the optional() branch list run by
+    ``make_fused_matcher``, whose per-branch states pack into one state
+    row and whose per-branch timers min-merge into one event-time timer —
+    driven over random micro-batch splits WITH mid-stream timer firings
+    (the merged timer routes hasTimedOut to every branch, so a fire for
+    one branch must not corrupt another's pending chains). Reference: the per-subset
     sub-chain brute remapped to full step numbering with the ``skipped``
     tag, at the driven final watermark."""
     from itertools import combinations

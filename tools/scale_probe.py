@@ -12,8 +12,11 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the repository this tool belongs to, wherever it is checked out
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 BASE = "/root/testdata/sf0.1"
 SCALE_DIR = "/tmp/spark_graft_scale10"

@@ -17,11 +17,14 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the repository this tool belongs to, wherever it is checked out
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 N1 = 200_000           # events at 1×; 10% on the hot key
 TYPES = ["signup", "view", "click", "error", "purchase"]

@@ -25,8 +25,11 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the repository this tool belongs to, wherever it is checked out
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 BASE = "/root/testdata/sf0.1"
 TYPES = ("signup", "error", "purchase")

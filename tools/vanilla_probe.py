@@ -17,15 +17,18 @@ from __future__ import annotations
 import glob
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the repository this tool belongs to, wherever it is checked out
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 
 def latest_check_full() -> str | None:
     """The newest CHECK_FULL_r{N}.txt by round number — BY CONSTRUCTION
     (round 8; a hardcoded round left r6's probe comparing against stale
     counts). Returns None when no artifact exists yet."""
-    paths = glob.glob("/root/repo/CHECK_FULL_r*.txt")
+    paths = glob.glob(str(ROOT / "CHECK_FULL_r*.txt"))
     if not paths:
         return None
     return max(
