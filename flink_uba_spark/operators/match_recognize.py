@@ -109,7 +109,10 @@ closed the last cell: mid-pattern quantifiers AND interior optional
 steps under streaming SKIP PAST LAST route to the GENERAL
 quantified-chain replayer (runs at any position, the optional greedy
 race per anchor; finite caps/withins bound the horizon), with or
-without the overall bound — previously unstreamable shapes.
+without the overall bound — previously unstreamable shapes. Every
+stream skip replay — SKIP TO, past-last plain and quantified chains,
+and the lazy reluctant fold (a reluctant step walked once per count)
+— runs on that one replayer.
 Exclusion ``{- X -}``
 (round 11) composes with EVERY route on BOTH engines — pure output
 shaping after each engine's fold: ONE row drops the excluded columns
@@ -342,9 +345,13 @@ def _steps_and_sets(parsed, define, withins, default_within, choice=None):
             steps.append((define[var], w))
             optional.add(k)
         else:
+            # a reluctant step carries its kind (the stream chain
+            # replayer's lazy count loop); the batch engines take the
+            # reluctant steps as a separate index set
             lo, hi = q[1], q[2]
             steps.append(
                 (define[var], w, (lo, float("inf") if hi is None else hi))
+                + (("reluctant",) if q[0] == "reluctant" else ())
             )
     return steps, optional
 
@@ -1676,43 +1683,6 @@ def _stream_skip_to(
     return _measures(out, partition_by, measures)
 
 
-def _stream_reluctant_lazy(
-    events, partition_by, order_by, parsed, define, wmap, default_within,
-    measures, event_id, within_overall=None, excluded=None,
-):
-    """Streaming lazy SKIP PAST LAST (round 9): per-count candidates +
-    the earliest-completion preference + the non-overlap horizon replay
-    (see streaming/skip_replay.py). ``within_overall`` (round 10) is an
-    in-replayer candidate prune — before the preference pick and the
-    horizon walk, the batch rule."""
-    from flink_uba_spark.streaming.skip_replay import (
-        stream_reluctant_lazy_detect,
-    )
-
-    v1, v2, v3 = (parsed[0][0], parsed[1][0], parsed[2][0])
-    q = parsed[1][1]
-    gap = wmap.get(v2, default_within)
-    sfx = wmap.get(v3, default_within)
-    if gap is None or sfx is None:
-        raise ValueError(
-            "the streaming lazy fold needs finite withins on the run "
-            "and suffix transitions (they bound the replay horizon)"
-        )
-    out = stream_reluctant_lazy_detect(
-        events, key=partition_by,
-        anchor=define[v1], run=define[v2], suffix=define[v3],
-        gap=gap, suffix_within=sfx, mn=int(q[1]), mx=int(q[2]),
-        event_id=event_id, ts=order_by, within_overall=within_overall,
-    )
-    if partition_by != "user_id":
-        out = out.withColumnRenamed("user_id", partition_by)
-    out = _rename(out, parsed)
-    # round 11: exclusion drops columns after the lazy fold (one row
-    # per fold here, so no duplicate-projection corner even exists)
-    out = _drop_excluded(out, excluded)
-    return _measures(out, partition_by, measures)
-
-
 def _stream_all_rows_project(
     out: DataFrame, vnames, partition_by: str, excluded=frozenset()
 ) -> DataFrame:
@@ -2055,9 +2025,10 @@ def stream_match_recognize(
     quantifier streams under ``no_skip`` (round 8: the per-count NFAs
     compile into ONE packed stateful operator,
     ``stream_pattern_detect_fused``) AND — round 9 — under the SQL
-    default ``SKIP PAST LAST ROW`` on the 3-variable shape: the lazy
-    preference + non-overlap horizon replay runs watermark-driven
-    (``stream_reluctant_lazy_detect``). ``SKIP TO FIRST/LAST <var>``
+    default ``SKIP PAST LAST ROW`` on the 3-variable shape: the chain
+    replayer walks the reluctant step once per count, keeps the lazy
+    preference and runs the non-overlap horizon replay watermark-driven
+    (``stream_quantified_chain_detect``). ``SKIP TO FIRST/LAST <var>``
     streams on plain chains (``stream_quantified_chain_detect``,
     ``mode="skip_to"``) with every within finite — the within sum is
     the replay horizon.
@@ -2359,8 +2330,9 @@ def stream_match_recognize(
     }
     if rel:
         if mode == "skip_past_last":
-            # round 9: the lazy fold streams on the 3-variable shape
-            # with a finite cap (stream_reluctant_lazy_detect)
+            # the lazy fold streams on the 3-variable shape with a
+            # finite cap: the chain replayer walks the reluctant step
+            # once per count and keeps the earliest completion
             q2 = parsed[1][1] if len(parsed) == 3 else None
             if (
                 len(parsed) != 3 or rel != {2}
@@ -2373,11 +2345,21 @@ def stream_match_recognize(
                     "3-variable shape anchor B{mn,mx}? suffix with a "
                     "finite cap (the cap bounds the replay horizon)"
                 )
-            return _stream_reluctant_lazy(
-                events, partition_by, order_by, parsed, define,
-                dict(withins or {}), default_within, measures, event_id,
-                within_overall=within_overall, excluded=excluded,
+            from flink_uba_spark.streaming.skip_replay import (
+                stream_quantified_chain_detect,
             )
+
+            steps, _ = _steps_and_sets(
+                parsed, define, dict(withins or {}), default_within
+            )
+            out = stream_quantified_chain_detect(
+                events, key=partition_by, steps=steps, event_id=event_id,
+                ts=order_by, within_overall=within_overall,
+            )
+            if partition_by != "user_id":
+                out = out.withColumnRenamed("user_id", partition_by)
+            out = _drop_excluded(_rename(out, parsed), excluded)
+            return _measures(out, partition_by, measures)
         if mode != "no_skip":
             raise ValueError(
                 "a reluctant quantifier streams under NO SKIP (per-count "

@@ -1,12 +1,12 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
 processed by Arrow-batched ``mapInPandas`` stages.
 
-North-star extension (BASELINE.json). The container has no image/audio
-codecs, so the DECODE step is stubbed (``decode_image_real`` raises
-NotImplementedError; ``decode_features`` uses a deterministic byte-level
-stand-in) — but everything Spark-side is real and tested: the binary
-schema, the Arrow batch transfer, the mapInPandas signature, partitioning
-behavior, and the explode shape for frame sampling.
+North-star extension (BASELINE.json). No image/audio codec is in the
+dependency set, so the DECODE step is ``decode_features``, a
+deterministic byte-level stand-in — but everything Spark-side is real
+and tested: the binary schema, the Arrow batch transfer, the
+mapInPandas signature, partitioning behavior, and the explode shape for
+frame sampling.
 
 Scale design: binary payloads never pass through Python row-at-a-time —
 mapInPandas streams Arrow record batches, so a 100 TB asset table is
@@ -61,16 +61,6 @@ def attach_payload(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     )
 
 
-def decode_image_real(payload: bytes):  # pragma: no cover - requires codecs
-    """REAL decoder entry point — intentionally stubbed.
-
-    A deployment with PIL/ffmpeg installs plugs in here; the container has
-    no codecs, so this raises. decode_features below is the deterministic
-    stand-in exercising the identical Spark plumbing.
-    """
-    raise NotImplementedError("image/audio codecs not available in this environment")
-
-
 def decode_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads (the decode /
     feature-extract stage shape). Deterministic stand-in features:
@@ -104,8 +94,8 @@ RESIZE_SCHEMA = T.StructType(
 
 
 def resize_assets(assets: DataFrame, stride: int = 4) -> DataFrame:
-    """Resize/downsample stage shape: a real deployment decodes and
-    rescales pixels here (via decode_image_real); the deterministic
+    """Resize/downsample stage shape: a codec-backed deployment decodes
+    and rescales pixels here (after ``decode_features``); the deterministic
     stand-in keeps every ``stride``-th payload byte — same Arrow-batched
     plumbing, same output contract (smaller binary + metadata)."""
 

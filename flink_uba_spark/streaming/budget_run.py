@@ -44,6 +44,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flink_uba_spark.streaming.pattern import _gap_session_last
+
 BUDGET_STATE_SCHEMA = T.StructType(
     [
         T.StructField("ts_us", T.ArrayType(T.LongType())),
@@ -81,37 +83,17 @@ def _matches(ts, ids, cls, pay, budget, cap, gap_us, sfx_us):
     s_ts, s_id = ts[s_m], ids[s_m]
     if not (len(r_ts) and len(a_ts) and len(s_ts)):
         return None
-    # sessions over run rows: gap split in the (ts, id) order
-    new_sess = np.empty(len(r_ts), dtype=bool)
-    new_sess[0] = True
-    new_sess[1:] = r_ts[1:] > r_ts[:-1] + gap_us
-    sid = np.cumsum(new_sess)
-    # per-session prefix sums; entry run length = count of session
-    # prefixes <= base + budget (prefix sums are non-decreasing)
+    # forward run length per entry i: the session rows j >= i whose
+    # running payload sum from i stays within the budget — the prefix
+    # sums are non-decreasing (payloads >= 0), so one searchsorted over
+    # the key's prefix, capped at the gap session's end, counts them
     order_pre = np.cumsum(r_pay)
-    sess_start = np.zeros(len(r_ts), dtype="int64")
-    starts = np.nonzero(new_sess)[0]
-    sess_start[starts] = starts
-    sess_start = np.maximum.accumulate(sess_start)
-    base_of_sess = np.where(sess_start > 0, order_pre[sess_start - 1], 0)
-    pre = order_pre - base_of_sess  # within-session prefix sums
-    rn = np.arange(len(r_ts)) - sess_start  # 0-based within session
-    # session end (exclusive) per row
-    sess_end = np.empty(len(r_ts), dtype="int64")
-    ends = np.append(starts[1:], len(r_ts))
-    for k in range(len(starts)):  # loop over SESSIONS, not rows
-        sess_end[starts[k]:ends[k]] = ends[k]
+    sess_end = _gap_session_last(r_ts, gap_us) + 1  # exclusive, per row
+    idx = np.arange(len(r_ts))
+    fit = np.searchsorted(order_pre, order_pre - r_pay + budget, side="right")
+    L = np.minimum(np.minimum(fit, sess_end) - idx, cap)
     valid = r_pay <= budget
-    # L = (# rows j in session with pre[j] <= pre[i] - pay[i] + budget)
-    #     - rn[i]; prefix non-decreasing -> searchsorted per session.
-    bound = pre - r_pay + budget
-    L = np.zeros(len(r_ts), dtype="int64")
-    for k in range(len(starts)):
-        lo, hi = starts[k], ends[k]
-        cnt = np.searchsorted(pre[lo:hi], bound[lo:hi], side="right")
-        L[lo:hi] = cnt - rn[lo:hi]
-    L = np.minimum(L, cap)
-    last_idx = np.minimum(np.arange(len(r_ts)) + L - 1, sess_end - 1)
+    last_idx = np.minimum(idx + L - 1, sess_end - 1)
     e_last_ts = r_ts[last_idx]
     e_last_id = r_id[last_idx]
     e_spent = order_pre[last_idx] - (order_pre - r_pay)
@@ -165,7 +147,11 @@ def make_budget_run_matcher(budget: int, cap: int, gap_us: int, sfx_us: int):
                 [ts, pdf["ts"].astype("datetime64[us]").astype("int64").to_numpy()]
             )
             ids = np.concatenate([ids, pdf["event_id"].to_numpy().astype("int64")])
-            cls = np.concatenate([cls, pdf["cls"].to_numpy().astype("int64")])
+            # class = the earliest set flag (anchor > run > suffix)
+            flags = np.stack(
+                [pdf[f"f{k}"].to_numpy(dtype=bool) for k in (1, 2, 3)], axis=1
+            )
+            cls = np.concatenate([cls, flags.argmax(axis=1) + 1])
             new_pay = pdf["pay"].to_numpy().astype("int64")
             if (new_pay < 0).any():
                 # the prefix-sum stop rule and the searchsorted probes
@@ -244,29 +230,22 @@ def stream_budget_run_detect(
     the state horizon."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from flink_uba_spark.streaming.pattern import _interval_us, _keyed_state_apply
+    from flink_uba_spark.streaming.pattern import (
+        _interval_us,
+        _keyed_input,
+        _keyed_state_apply,
+        _pred,
+    )
 
     if cap is None or cap < 1:
         raise ValueError(
             "the streaming budget run needs a finite cap >= 1 (the cap "
             "bounds the run's span and the per-key state horizon)"
         )
-    cls = (
-        F.when(anchor, F.lit(1))
-        .when(run, F.lit(2))
-        .when(suffix, F.lit(3))
-    )
-    filtered = (
-        events.withColumn("__cls", cls)
-        .filter(F.col("__cls").isNotNull())
-        .select(
-            F.col(event_id).alias("event_id"),
-            F.col(ts).alias("ts"),
-            F.col(key).alias("user_id"),
-            F.col("__cls").alias("cls"),
-            F.coalesce(payload.cast("long"), F.lit(0)).alias("pay"),
-        )
-        .withWatermark("ts", watermark_delay)
+    filtered = _keyed_input(
+        events, key, {"f1": _pred(anchor), "f2": _pred(run), "f3": _pred(suffix)},
+        event_id, ts, watermark_delay=watermark_delay,
+        extra={"pay": F.coalesce(payload.cast("long"), F.lit(0))},
     )
     return _keyed_state_apply(
         filtered,

@@ -201,6 +201,19 @@ def _suffix_argmin_ts_id(ts: np.ndarray, ids: np.ndarray) -> np.ndarray:
     return order[suf_min_ordinal]
 
 
+def _gap_session_last(ts: np.ndarray, gap_us: int, link=None) -> np.ndarray:
+    """For rows in (ts, id) order, the index of the last row of each
+    row's gap session: row i+1 continues row i's session when it sits
+    within ``gap_us`` of it and, if given, ``link[i]`` allows it
+    (consecutive/until cuts). Forward availability is ``last − i + 1``."""
+    lk = np.zeros(ts.size, dtype=bool)
+    lk[:-1] = ts[1:] <= ts[:-1] + gap_us
+    if link is not None:
+        lk[:-1] &= link
+    brk = np.flatnonzero(~lk)
+    return brk[np.searchsorted(brk, np.arange(ts.size))]
+
+
 def _insertion_pos(
     tl_ts: np.ndarray, tl_rk: np.ndarray, tl_id: np.ndarray,
     q_ts: np.ndarray, q_rk: np.ndarray, q_id: np.ndarray,
@@ -275,9 +288,11 @@ def make_pattern_matcher(
     ``ttl_us`` is the bounded-state policy knob: when set, a pending chain
     idle past its last bound event + ttl (by watermark) is FLUSHED as an
     ``incomplete`` row and evicted — state becomes O(chains inside the ttl
-    horizon), the property an unbounded deployment needs. The trade
-    (documented): a binder arriving after the flush no longer produces
-    ``matched_late``; exact batch equality holds only for ttl_us=None."""
+    horizon), the property an unbounded deployment needs. Due timers are
+    settled before a call's rows bind, as a watermark-only call would, so
+    the flush does not depend on where the stream is cut. The trade: a
+    binder arriving after the flush no longer produces ``matched_late``;
+    exact batch equality holds only for ttl_us=None."""
     n = len(step_types)
     # a Kleene spec is (gap_us, max_reps) or (gap_us, max_reps, min_reps)
     # — times(from, to): entries whose run holds fewer than min_reps rows
@@ -437,8 +452,25 @@ def make_pattern_matcher(
         # every buffer above is freshly allocated per call — zero-copy safe
         return pd.DataFrame(cols, copy=False)
 
+    def _timer_due(state) -> bool:
+        """A chain is idle past its ttl, or an open run's gap lapsed."""
+        _aid, cur, opn, fts = state.get[:4]
+        wm_us = state.getCurrentWatermarkMs() * 1000
+        return wm_us > 0 and any(
+            f + ttl_us <= wm_us or (o and f + kleenes[c - 1][0] <= wm_us)
+            for c, o, f in zip(cur, opn, fts)
+        )
+
     def detect(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
+        chunks = [] if getattr(state, "hasTimedOut", False) else list(pdfs)
+        if ttl_us is not None and chunks and state.exists and _timer_due(state):
+            # settle the due timers first, exactly as a watermark-only
+            # call would (ttl flush, lapsed runs), so the ttl flush does
+            # not depend on where the stream is cut into micro-batches
+            yield from _advance(key[0], [], state)
+        yield from _advance(key[0], chunks, state)
+
+    def _advance(user_id, chunks: list, state: Any) -> Iterator[pd.DataFrame]:
         if state.exists:
             (s_aid, s_cur, s_opn, s_fts, s_frk, s_fid,
              s_bnd, s_kl, s_kn, s_pts, s_prk, s_pid, s_pcur,
@@ -493,7 +525,6 @@ def make_pattern_matcher(
             bps = np.empty(0, dtype="int64")
             seq_next = 0
 
-        chunks = [] if getattr(state, "hasTimedOut", False) else list(pdfs)
         # hot path: the serializer almost always delivers ONE chunk per
         # group — skip the per-group concat (and share one empty frame;
         # the zero-row path never mutates it)
@@ -647,23 +678,21 @@ def make_pattern_matcher(
                 inv = np.empty(idxs.size, dtype="int64")
                 inv[perm] = np.arange(idxs.size)
                 sts = tl_ts[srt]
-                link = np.empty(idxs.size, dtype=bool)
-                link[:-1] = sts[1:] <= sts[:-1] + gap_us
-                link[-1] = False
+                link = None
                 if k in consec_set:
                     # strict internal contiguity: only a rep at the NEXT
                     # global position extends the run (positions are dense
                     # over all observed rows — witnesses included)
-                    link[:-1] &= tl_pos[srt[1:]] == tl_pos[srt[:-1]] + 1
+                    link = tl_pos[srt[1:]] == tl_pos[srt[:-1]] + 1
                 if k in ucuts:
                     # a stop row in [rep_i, rep_i+1) splits the run —
                     # strictly-between stops via the (ts, id) counts, the
                     # dual rep+stop case via the row's own stop flag
                     _cl = _u_lt(k, sts, tl_id[srt])
                     _dual = tl_match[srt, uslot[k]]
-                    link[:-1] &= ~((_cl[1:] > _cl[:-1]) | _dual[:-1])
-                brkpos = np.flatnonzero(~link)
-                gl = brkpos[np.searchsorted(brkpos, np.arange(idxs.size))]
+                    cut = ~((_cl[1:] > _cl[:-1]) | _dual[:-1])
+                    link = cut if link is None else link & cut
+                gl = _gap_session_last(sts, gap_us, link)
                 ksess[si] = (srt, inv, gl)
                 if mn > 1:
                     # times(from, to): restrict BINDING to entries that are

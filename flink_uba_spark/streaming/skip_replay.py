@@ -1,45 +1,41 @@
 """Watermark-driven AFTER MATCH skip replays as continuous queries — the
-batch-only MATCH_RECOGNIZE skip routes lifted onto a stream. Two
-replayers:
+batch-only MATCH_RECOGNIZE skip routes lifted onto a stream. One
+replayer, ``make_quantified_chain_replayer`` (wired by
+``stream_quantified_chain_detect``), serves every route: skip-till-next
+chains whose steps may be plain, capped greedy runs (any position past
+the anchor), at most one capped RELUCTANT run, or interior optionals,
+under one of three modes —
 
-- ``make_quantified_chain_replayer`` (wired by
-  ``stream_quantified_chain_detect``): skip-till-next chains whose steps
-  may be plain, capped greedy runs (any position past the anchor) or
-  interior optionals, under one of three modes —
+- ``past_last``: Flink's SKIP_PAST_LAST_EVENT — survivors start
+  STRICTLY past the emitted match's END, which becomes the horizon.
+  With a reluctant run this is the lazy fold of SQL's ``SKIP PAST LAST
+  ROW``: per anchor the candidate completing EARLIEST (ties to the
+  smaller repetition count) wins — the streaming twin of
+  ``match_recognize_reluctant_lazy``'s batch compile;
+- ``no_skip``: every anchor's candidate emits, the horizon never moves;
+- ``skip_to``: Flink's SKIP_TO_FIRST/SKIP_TO_LAST on plain chains (one
+  event binds per variable, so FIRST ≡ LAST) — survivors have their
+  anchor AT-or-past the horizon, which is the bound entry of step
+  ``skip_step``; the streaming twin of
+  ``operators/sequence.py:after_match_skip_to_first``.
 
-  - ``past_last``: Flink's SKIP_PAST_LAST_EVENT — survivors start
-    STRICTLY past the emitted match's END, which becomes the horizon;
-  - ``no_skip``: every anchor's candidate emits, the horizon never moves;
-  - ``skip_to``: Flink's SKIP_TO_FIRST/SKIP_TO_LAST on plain chains (one
-    event binds per variable, so FIRST ≡ LAST) — survivors have their
-    anchor AT-or-past the horizon, which is the bound entry of step
-    ``skip_step``; the streaming twin of
-    ``operators/sequence.py:after_match_skip_to_first``.
-
-- ``make_lazy_reluctant_replayer`` (``stream_reluctant_lazy_detect``):
-  the reluctant lazy fold under ``SKIP PAST LAST ROW`` — per anchor the
-  candidate completing EARLIEST (ties to the smaller repetition count)
-  wins, then the non-overlap horizon replay — the streaming twin of
-  ``match_recognize_reluctant_lazy``'s batch compile.
-
-Both use the recompute-over-buffer pattern (the budget-run twin's
+It uses the recompute-over-buffer pattern (the budget-run twin's
 construction): per key, buffer the classified rows inside the
 reachability horizon and re-derive the candidates VECTORIZED-ish on
 every invoke; the skip replay itself is then a SEQUENTIAL horizon walk
 that must observe candidates in completion order — the part that makes
 these folds non-trivial on a stream. Decidability: every MATCHED
 candidate satisfies ``end ≤ t1 + H`` (H = the spec's total within
-budget: Σ withins + Σ mx·gap over the chain's runs,
-``max_reps·gap + suffix_within`` for the lazy run), and any future
-anchor has ``t1 ≥ wm − H`` — so once ``end + H < wm`` STRICTLY, no
-yet-unknown candidate can precede ``end`` in completion order and the
-replay prefix is final. State beyond the row buffer is three scalars:
-the skip horizon pair and the last-processed completion key
-(exactly-once: re-derived candidates at or before it are skipped). Rows
-evict at ``ts < wm − 2H`` — processed candidates reach back at most H
-from their end, ends still pending are above ``wm − H``, and
-run/availability lookups are FORWARD-only from the entry, so truncation
-never changes a pending candidate.
+budget: Σ withins + Σ mx·gap over the chain's greedy runs; a reluctant
+run adds only its mx·gap), and any future anchor has ``t1 ≥ wm − H`` —
+so once ``end + H < wm`` STRICTLY, no yet-unknown candidate can precede
+``end`` in completion order and the replay prefix is final. State
+beyond the row buffer is three scalars: the skip horizon pair and the
+last-processed completion key (exactly-once: re-derived candidates at
+or before it are skipped). Rows evict at ``ts < wm − 2H`` — processed
+candidates reach back at most H from their end, ends still pending are
+above ``wm − H``, and run/availability lookups are FORWARD-only from
+the entry, so truncation never changes a pending candidate.
 
 Scale: one keyed exchange through ``pattern._keyed_state_apply`` (hash
 buckets; each member key replays against its own state), per-key state
@@ -58,6 +54,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
+
+from flink_uba_spark.streaming.pattern import _gap_session_last
 
 _NULL = -(1 << 62)
 
@@ -126,20 +124,6 @@ def _agg_val(func: str, n_off: int, sl) -> float | None:
     return float(good.max())
 
 
-LAZY_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("anchor_id", T.LongType()),
-        T.StructField("t1", T.TimestampType()),
-        T.StructField("t2", T.TimestampType()),
-        T.StructField("t2_last", T.TimestampType()),
-        T.StructField("n2", T.LongType()),
-        T.StructField("t3", T.TimestampType()),
-        T.StructField("end_id", T.LongType()),
-    ]
-)
-
-
 def _order_and_pos(ts, ids, mask, n_flags):
     """(ts, rank, id) total order (rank = earliest set flag's 2k−1 slot)
     → sorted arrays + positions + the sort permutation (round 12: the
@@ -161,148 +145,6 @@ def _bind_next(st_ts, st_id, st_pos, prev_ts, prev_pos):
             return j
         j += 1
     return j if j < len(st_ts) else -1
-
-
-def make_lazy_reluctant_replayer(gap_us: int, sfx_us: int | None,
-                                 mn: int, mx: int, h_us: int,
-                                 within_overall_us: int | None = None):
-    """Reluctant per-count candidates + the lazy preference + the SKIP
-    PAST LAST horizon replay (see module docstring). Flags: bit0 anchor,
-    bit1 run, bit2 suffix. ``within_overall_us`` (round 10) prunes a
-    count candidate whose end exceeds the anchor bound BEFORE the lazy
-    preference pick and the horizon walk — the bound depends only on
-    the end, so violating candidates are a suffix of the per-anchor
-    completion order and the preference among qualifying counts is
-    exactly the batch window pipeline's."""
-
-    def detect(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
-        timed_out = getattr(state, "hasTimedOut", False)
-        chunks = [] if timed_out else [c for c in pdfs if len(c)]
-        wm_us = state.getCurrentWatermarkMs() * 1000
-
-        if state.exists:
-            ts, ids, mask, ctrl = (
-                np.asarray(f, dtype="int64") for f in state.get
-            )
-            ctrl = list(ctrl)
-        else:
-            ts = ids = mask = np.empty(0, dtype="int64")
-            ctrl = [_NULL] * 6
-        if chunks:
-            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-            ts = np.concatenate(
-                [ts, pdf["ts"].astype("datetime64[us]").astype("int64").to_numpy()]
-            )
-            ids = np.concatenate([ids, pdf["event_id"].to_numpy().astype("int64")])
-            m = np.zeros(len(pdf), dtype="int64")
-            for k in range(1, 4):
-                m |= pdf[f"f{k}"].to_numpy().astype("int64") << (k - 1)
-            mask = np.concatenate([mask, m])
-
-        out = None
-        if len(ts):
-            s_ts, s_id, s_mask, _rank, _ord = _order_and_pos(ts, ids, mask, 3)
-            pos = np.arange(len(s_ts))
-            # run rows in (ts, id) order + forward availability
-            r_sel = np.nonzero((s_mask >> 1) & 1)[0]
-            r_sel = r_sel[np.lexsort((s_id[r_sel], s_ts[r_sel]))]
-            r_ts, r_id, r_pos = s_ts[r_sel], s_id[r_sel], pos[r_sel]
-            nR = len(r_sel)
-            if nR:
-                new_sess = np.empty(nR, dtype=bool)
-                new_sess[0] = True
-                new_sess[1:] = r_ts[1:] > r_ts[:-1] + gap_us
-                starts = np.nonzero(new_sess)[0]
-                ends = np.append(starts[1:], nR)
-                sess_end = np.empty(nR, dtype="int64")
-                for si in range(len(starts)):
-                    sess_end[starts[si]:ends[si]] = ends[si]
-                avail = sess_end - np.arange(nR)
-            else:
-                avail = np.empty(0, dtype="int64")
-            x_sel = np.nonzero((s_mask >> 2) & 1)[0]
-            x_sel = x_sel[np.lexsort((s_id[x_sel], s_ts[x_sel]))]
-            x_ts, x_id, x_pos = s_ts[x_sel], s_id[x_sel], pos[x_sel]
-            a_sel = np.nonzero(s_mask & 1)[0]
-
-            prefs = []
-            for ai in a_sel:
-                t1, i1, p1 = int(s_ts[ai]), int(s_id[ai]), int(pos[ai])
-                best = None
-                for m_ in range(mn, mx + 1):
-                    # earliest (ts, id) entry strictly after the anchor
-                    # with >= m_ forward repetitions
-                    j = int(np.searchsorted(r_ts, t1, side="left"))
-                    ent = -1
-                    while j < nR:
-                        if avail[j] >= m_ and r_pos[j] > p1:
-                            ent = j
-                            break
-                        j += 1
-                    if ent < 0:
-                        continue
-                    t2 = int(r_ts[ent])
-                    last = ent + m_ - 1
-                    t2l, lr_pos = int(r_ts[last]), int(r_pos[last])
-                    sj = _bind_next(x_ts, x_id, x_pos, t2l, lr_pos)
-                    if sj < 0:
-                        continue
-                    t3, i3 = int(x_ts[sj]), int(x_id[sj])
-                    if t2 > t1 + gap_us:
-                        continue  # matched_late never emits under skip
-                    if sfx_us is not None and t3 > t2l + sfx_us:
-                        continue
-                    if (
-                        within_overall_us is not None
-                        and t3 > t1 + within_overall_us
-                    ):
-                        continue  # overall WITHIN: not a match at all
-                    cand = (t3, i3, m_, t2, t2l)
-                    if best is None or cand < best:
-                        best = cand  # lazy: earliest completion, then m
-                if best is not None:
-                    prefs.append((t1, i1, best))
-            prefs.sort(key=lambda p: (p[2][0], p[2][1], p[0], p[1]))
-            rows = []
-            h_ts, h_id = ctrl[0], ctrl[1]
-            lp = tuple(ctrl[2:6])
-            for t1, i1, (t3, i3, m_, t2, t2l) in prefs:
-                if t3 + h_us >= wm_us:
-                    break
-                ckey = (t3, i3, t1, i1)
-                if lp[0] != _NULL and ckey <= lp:
-                    continue
-                lp = ckey
-                if h_ts == _NULL or (t1, i1) > (h_ts, h_id):
-                    rows.append(
-                        {
-                            "user_id": key[0], "anchor_id": i1,
-                            "t1": t1, "t2": t2, "t2_last": t2l,
-                            "n2": m_, "t3": t3, "end_id": i3,
-                        }
-                    )
-                    h_ts, h_id = t3, i3
-            ctrl = [h_ts, h_id, *lp] if lp[0] != _NULL else [h_ts, h_id] + [_NULL] * 4
-            if rows:
-                out = pd.DataFrame(rows)
-                for c in ("t1", "t2", "t2_last", "t3"):
-                    out[c] = pd.to_datetime(out[c], unit="us")
-            keep = s_ts >= wm_us - 2 * h_us
-            ts, ids, mask = s_ts[keep], s_id[keep], s_mask[keep]
-
-        if len(ts) or ctrl[0] != _NULL or ctrl[2] != _NULL:
-            state.update(
-                (ts.tolist(), ids.tolist(), mask.tolist(),
-                 [int(x) for x in ctrl])
-            )
-            if len(ts):
-                state.setTimeoutTimestamp(wm_us // 1000 + 1)
-        elif state.exists:
-            state.remove()
-        if out is not None:
-            yield out
-
-    return detect
 
 
 def quantified_chain_output_schema(
@@ -355,14 +197,23 @@ def make_quantified_chain_replayer(n: int, withins_us: list, kleenes: list,
     bound BEFORE the fold — pruned candidates never advance the
     horizon, the batch compile's rule.
 
-    Decidability is the family contract with run-specific arguments
-    applied PER quantified step: every candidate end sits ≤ t1 + H
-    (H = Σ entry withins + Σ mx·gap over quantified steps); once
-    ``end + H < wm`` strictly, every involved run is gap-closed (any
-    extending row would sit ≥ wm > run_last + gap, since each
-    run_last ≤ end) and each entry choice is final (an earlier
-    admissible entry's session would have closed strictly earlier), so
-    candidates below the cut form a final completion-order prefix.
+    A RELUCTANT step (``kleenes[k-1] = (gap_us, mn, mx, True)``, at most
+    one per chain) is walked once per count m in mn..mx: its entry is
+    the earliest admissible entry whose gap run holds ≥ m rows, it takes
+    exactly m repetitions, and the rest of the chain is walked from the
+    m-th. The anchor keeps the count whose candidate has the smallest
+    ``(end_ts, end_id, m)`` — the lazy preference (earliest completion,
+    then fewest repetitions); ``within_overall`` prunes each count
+    before that pick.
+
+    Decidability is the family contract applied PER quantified step:
+    every candidate end sits ≤ t1 + H (Σ withins + Σ mx·gap; a
+    reluctant step adds its mx·gap only); once ``end + H < wm`` strictly,
+    every involved run is gap-closed (any extending row would sit ≥ wm
+    > run_last + gap, since each run_last ≤ end) and each entry choice
+    is final (an earlier admissible entry's session would have closed
+    strictly earlier), so candidates below the cut form a final
+    completion-order prefix.
 
     ``optionals`` (round 11 second pass — the last in-NFA-fold cell):
     interior OPTIONAL steps take the engines' greedy race — the step
@@ -407,6 +258,11 @@ def make_quantified_chain_replayer(n: int, withins_us: list, kleenes: list,
     if all_rows and aggs:
         raise ValueError("ALL ROWS and aggregate MEASURES are exclusive")
     aggs = list(aggs or ())
+    rel = [k for k, q in enumerate(kleenes, 1) if q and q[3:4] == (True,)]
+    if len(rel) > 1:
+        raise ValueError("at most one reluctant step per chain")
+    # per-anchor count loop: the reluctant step's counts, else one walk
+    counts = range(kleenes[rel[0] - 1][1], kleenes[rel[0] - 1][2] + 1) if rel else (0,)
 
     def detect(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
         timed_out = getattr(state, "hasTimedOut", False)
@@ -464,92 +320,103 @@ def make_quantified_chain_replayer(n: int, withins_us: list, kleenes: list,
                 legs.append((s_ts[sel], s_id[sel], pos[sel]))
                 leg_vals.append(s_vals[sel] if n_vals else None)
                 if kleenes[k - 1] is not None:
-                    gap_us = kleenes[k - 1][0]
-                    bt = s_ts[sel]
-                    avail = np.ones(len(bt), dtype="int64")
-                    for i in range(len(bt) - 2, -1, -1):
-                        if bt[i + 1] <= bt[i] + gap_us:
-                            avail[i] += avail[i + 1]
-                    avails.append(avail)
+                    # forward availability: reps from each row to the end
+                    # of its gap session
+                    avails.append(
+                        _gap_session_last(s_ts[sel], kleenes[k - 1][0])
+                        - np.arange(len(sel)) + 1
+                    )
                 else:
                     avails.append(None)
-            def _cand(k, p_ts, p_pos):
+
+            def _cand(k, p_ts, p_pos, m):
                 """Earliest candidate of step k strictly after the
                 frontier — a plain step's next row, or a quantified
-                step's earliest admissible entry (avail >= mn). Returns
-                (leg index, ts, timeline position) or None."""
+                step's earliest admissible entry (avail >= mn; >= m for
+                the reluctant step). Returns (leg index, ts, timeline
+                position) or None."""
                 lt, li, lp = legs[k - 1]
                 if kleenes[k - 1] is None:
                     j = _bind_next(lt, li, lp, p_ts, p_pos)
                     return None if j < 0 else (j, int(lt[j]), int(lp[j]))
-                mn = kleenes[k - 1][1]
+                need = m if k in rel else kleenes[k - 1][1]
                 avail = avails[k - 1]
                 j = int(np.searchsorted(lt, p_ts, side="left"))
                 while j < len(lt) and (
-                    (lt[j] == p_ts and lp[j] <= p_pos) or avail[j] < mn
+                    (lt[j] == p_ts and lp[j] <= p_pos) or avail[j] < need
                 ):
                     j += 1
                 return None if j >= len(lt) else (j, int(lt[j]), int(lp[j]))
 
-            cands = []
-            a_ts, a_id, a_pos = legs[0]
-            for ai in range(len(a_ts)):
-                # per step: (entry_ts, entry_id, last_ts, last_id, cnt,
-                # leg_j) — plain steps carry cnt 0 and entry == last; a
-                # skipped optional carries None entries (null t{k});
-                # leg_j indexes the step's leg arrays (run slice
-                # j..j+cnt−1 — the ALL ROWS / value-aggregate member set)
+            def _walk(ai, m):
+                """The anchor's chain with the reluctant step (if any)
+                taking m reps; None if it does not complete in time.
+                Per step: (entry_ts, entry_id, last_ts, last_id, cnt,
+                leg_j) — plain steps carry cnt 0 and entry == last; a
+                skipped optional carries None entries (null t{k});
+                leg_j indexes the step's leg arrays (run slice
+                j..j+cnt−1 — the ALL ROWS / value-aggregate member set)."""
                 rec = [
                     (int(a_ts[ai]), int(a_id[ai]),
                      int(a_ts[ai]), int(a_id[ai]), 0, ai)
                 ]
                 p_ts, p_pos = int(a_ts[ai]), int(a_pos[ai])
-                ok = True
                 for k in range(2, n + 1):
-                    c = _cand(k, p_ts, p_pos)
+                    c = _cand(k, p_ts, p_pos, m)
                     if k in opts:
                         # the greedy race: skip iff the next step's
                         # earliest candidate STRICTLY precedes this
                         # step's (timeline positions are (ts, rank, id)
                         # total-order indexes; a tie — the same row
                         # serving both — takes)
-                        nxt = _cand(k + 1, p_ts, p_pos)
+                        nxt = _cand(k + 1, p_ts, p_pos, m)
                         if c is None or (
                             nxt is not None and nxt[2] < c[2]
                         ):
                             rec.append((None, None, None, None, 0, -1))
                             continue  # frontier unchanged — fall through
                     if c is None:
-                        ok = False
-                        break
+                        return None
                     j, c_ts, c_pos = c
                     if (
                         withins_us[k - 1] is not None
                         and c_ts > p_ts + withins_us[k - 1]
                     ):
-                        ok = False  # matched_late never emits under skip
-                        break
+                        return None  # matched_late never emits under skip
                     lt, li, lp = legs[k - 1]
                     if kleenes[k - 1] is None:
                         rec.append((c_ts, int(li[j]), c_ts, int(li[j]), 0, j))
                         p_ts, p_pos = c_ts, c_pos
                     else:
-                        cnt = int(min(avails[k - 1][j], kleenes[k - 1][2]))
+                        cnt = m if k in rel else int(
+                            min(avails[k - 1][j], kleenes[k - 1][2])
+                        )
                         last = j + cnt - 1
                         rec.append(
                             (c_ts, int(li[j]),
                              int(lt[last]), int(li[last]), cnt, j)
                         )
                         p_ts, p_pos = int(lt[last]), int(lp[last])
-                if not ok:
-                    continue
-                end_ts, end_id = rec[n - 1][2], rec[n - 1][3]
-                if (
-                    within_overall_us is not None
-                    and end_ts > rec[0][0] + within_overall_us
-                ):
-                    continue  # not a match — prunes BEFORE the fold
-                cands.append((rec, end_ts, end_id))
+                return rec
+
+            cands = []
+            a_ts, a_id, a_pos = legs[0]
+            for ai in range(len(a_ts)):
+                best = None
+                for m in counts:
+                    rec = _walk(ai, m)
+                    if rec is None:
+                        continue
+                    end_ts, end_id = rec[n - 1][2], rec[n - 1][3]
+                    if (
+                        within_overall_us is not None
+                        and end_ts > rec[0][0] + within_overall_us
+                    ):
+                        continue  # not a match — prunes BEFORE the fold
+                    if best is None or (end_ts, end_id, m) < best[0]:
+                        best = ((end_ts, end_id, m), rec)
+                if best is not None:
+                    cands.append((best[1], *best[0][:2]))
             cands.sort(key=lambda c: (c[1], c[2], c[0][0][0], c[0][0][1]))
             rows = []
             h_ts, h_id = ctrl[0], ctrl[1]
@@ -614,11 +481,7 @@ def make_quantified_chain_replayer(n: int, withins_us: list, kleenes: list,
                         )
                         if h_ts == _NULL or sp > (h_ts, h_id):
                             h_ts, h_id = sp
-            ctrl = (
-                [h_ts, h_id, *lp_key]
-                if lp_key[0] != _NULL
-                else [h_ts, h_id] + [_NULL] * 4
-            )
+            ctrl = [h_ts, h_id, *lp_key]
             if rows:
                 out = pd.DataFrame(rows)
                 if all_rows:
@@ -678,11 +541,14 @@ def stream_quantified_chain_detect(
     skip_step: int | None = None,
 ) -> DataFrame:
     """Wire the chain replay: ``steps`` entries are ``(pred, within)``
-    (plain) or ``(pred, within, (mn, mx))`` (capped greedy run, ANY
-    position past the first; finite cap and finite withins mandatory —
-    Σ within + Σ mx·gap is the replay horizon). ``optional`` marks
-    interior plain steps with the engines' greedy-race single-match
-    semantics.
+    (plain), ``(pred, within, (mn, mx))`` (capped greedy run, ANY
+    position past the first) or ``(pred, within, (mn, mx), "reluctant")``
+    (capped reluctant run, at most one — the lazy fold under
+    ``past_last``). Finite caps and finite withins are mandatory: the
+    replay horizon is Σ within + Σ mx·gap over plain and greedy steps,
+    and mx·gap for the reluctant step (its within is its gap).
+    ``optional`` marks interior plain steps with the engines'
+    greedy-race single-match semantics.
 
     ``mode`` picks the AFTER MATCH strategy: ``"past_last"`` (SKIP PAST
     LAST ROW), ``"skip_to"`` with ``skip_step`` (SKIP TO FIRST/LAST of
@@ -737,10 +603,14 @@ def stream_quantified_chain_detect(
         mn, mx = int(mn), int(mx)
         if mn < 1 or mx < mn:
             raise ValueError("need 1 <= mn <= mx")
-        kleenes.append((withins_us[k - 1], mn, mx))
-    h_us = sum(withins_us[1:]) + sum(
-        k[2] * k[0] for k in kleenes if k is not None
-    )
+        kleenes.append((withins_us[k - 1], mn, mx, s[3:4] == ("reluctant",)))
+    # H is pinned per route by its twins' oracles (they cut their tails
+    # at end + H < wm): plain steps add their within, a greedy run its
+    # entry within and mx·gap (one gap looser than the bound needs), a
+    # reluctant run only mx·gap (the lazy twin's mx·gap + suffix, 60 h).
+    h_us = sum(
+        w for w, q in zip(withins_us[1:], kleenes[1:]) if not (q and q[3])
+    ) + sum(q[2] * q[0] for q in kleenes if q is not None)
     if all_rows and (values or aggs):
         raise ValueError("ALL ROWS and aggregate MEASURES are exclusive")
     values = dict(values or {})
@@ -775,51 +645,3 @@ def stream_quantified_chain_detect(
         GroupStateTimeout.EventTimeTimeout,
     )
 
-
-def stream_reluctant_lazy_detect(
-    events: DataFrame,
-    key: str,
-    anchor: Column,
-    run: Column,
-    suffix: Column,
-    gap: str,
-    suffix_within: str,
-    mn: int,
-    mx: int,
-    event_id: str = "event_id",
-    ts: str = "ts",
-    watermark_delay: str = "0 seconds",
-    within_overall: str | None = None,
-) -> DataFrame:
-    """Wire the lazy-reluctant SKIP PAST LAST replay over a streaming
-    frame (anchor → run{mn,mx}? → suffix; finite cap mandatory — the
-    horizon is ``mx·gap + suffix_within``). ``within_overall``
-    (round 10) prunes count candidates in-replayer before the
-    preference + fold."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from flink_uba_spark.streaming.pattern import (
-        _interval_us,
-        _keyed_input,
-        _keyed_state_apply,
-        _pred,
-    )
-
-    if mn < 1 or mx < mn:
-        raise ValueError("need 1 <= mn <= mx")
-    gap_us = _interval_us(gap)
-    sfx_us = _interval_us(suffix_within)
-    h_us = mx * gap_us + sfx_us
-    wo_us = None if within_overall is None else _interval_us(within_overall)
-    flags = {"f1": _pred(anchor), "f2": _pred(run), "f3": _pred(suffix)}
-    filtered = _keyed_input(events, key, flags, event_id, ts,
-                            watermark_delay=watermark_delay)
-    return _keyed_state_apply(
-        filtered,
-        make_lazy_reluctant_replayer(
-            gap_us, sfx_us, mn, mx, h_us, within_overall_us=wo_us
-        ),
-        LAZY_OUTPUT_SCHEMA,
-        SKIP_STATE_SCHEMA,
-        GroupStateTimeout.EventTimeTimeout,
-    )

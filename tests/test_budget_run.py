@@ -263,7 +263,8 @@ def _drive_stream(events, cuts, budget, gap, sfx, cap):
         state._wm = wm
         pdf = pd.DataFrame(
             [{"event_id": eid, "ts": pd.Timestamp(ts, unit="us"),
-              "cls": cls_of(m), "pay": pay}
+              **{f"f{k}": bool(m >> (k - 1) & 1) for k in (1, 2, 3)},
+              "pay": pay}
              for eid, ts, m, pay in batch]
         )
         state.hasTimedOut = False

@@ -1,14 +1,16 @@
 """The chain replayer (``streaming/skip_replay.make_quantified_chain_replayer``)
-in its plain-chain and trailing-run shapes, against the independent brute
-references of ``tools/nfa_soak.py``: random micro-batch splits with
-mid-stream timer fires, every emitted row compared with the batch fold
-truncated at the decidability cut ``end + H < final_wm``.
+in its plain-chain, trailing-run and reluctant-step shapes, against the
+independent brute references of ``tools/nfa_soak.py``: random micro-batch
+splits with mid-stream timer fires, every emitted row compared with the
+batch fold truncated at the decidability cut ``end + H < final_wm``.
 
 - ``skip-to-stream``: plain chains under SKIP TO (``mode="skip_to"``) and
   SKIP PAST LAST (``mode="past_last"``), with and without an overall
   WITHIN;
 - ``trail-stream``: a capped greedy run as the last step under SKIP PAST
-  LAST.
+  LAST;
+- ``lazy-stream``: a capped reluctant middle step under SKIP PAST LAST
+  (the lazy fold: earliest completion, then fewest repetitions).
 
 The same harness drives the packed multi-branch matcher
 (``streaming/pattern.make_fused_matcher``) through the ``stream-branching``,
@@ -39,6 +41,10 @@ def test_plain_chain_skip_modes_match_brute():
 
 def test_trailing_run_matches_brute():
     assert nfa_soak.soak_trail_stream(300) == 0
+
+
+def test_lazy_reluctant_step_matches_brute():
+    assert nfa_soak.soak_lazy_stream(300) == 0
 
 
 @pytest.mark.parametrize(

@@ -4,12 +4,9 @@ from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from flink_uba_spark.operators.multimodal import (
     attach_payload,
     decode_features,
-    decode_image_real,
     frame_sample,
 )
 from flink_uba_spark.queries import datapipe
@@ -40,7 +37,3 @@ def test_frame_sample_shape(spark, sf_dir):
     assert f0.frame_md5 == hashlib.md5(bytes(payload[:16])).hexdigest()
     assert f0.frame_bytes == bytes(payload[:16])
 
-
-def test_real_decoder_is_explicit_stub():
-    with pytest.raises(NotImplementedError):
-        decode_image_real(b"\x89PNG")

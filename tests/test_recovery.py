@@ -347,6 +347,36 @@ def test_branching_matcher_recovers_from_checkpoint(spark, sf_dir):
     _assert_same_rows(got, want)
 
 
+def test_ttl_flush_does_not_depend_on_the_cut(spark, sf_dir):
+    """A state ttl short enough that chains anchored before the cut are
+    idle past it when the next file arrives. The crashed run's
+    watermark-only batch at the cut flushes them as ``incomplete``; the
+    uninterrupted run must decide the same before the next batch's rows
+    bind, so both runs emit the same rows."""
+    from flink_uba_spark.streaming.pattern import stream_pattern_detect_branching
+
+    events = load_testdata(spark, sf_dir, ("events",))["events"].select(
+        "event_id", "ts", "user_id", "event_type"
+    )
+
+    def build(sdf):
+        return stream_pattern_detect_branching(
+            sdf, key="user_id",
+            steps=[
+                ("signup", None),
+                ("view", "INTERVAL 6 HOURS"),
+                ("click", "INTERVAL 6 HOURS"),
+                ("purchase", "INTERVAL 1 DAY"),
+            ],
+            optional={2, 3},
+            state_ttl="INTERVAL 12 HOURS",
+        )
+
+    got, want = _crash_recover_compare(spark, events, build, "ttl_cut")
+    assert (want["state"] == "incomplete").any()
+    _assert_same_rows(got, want)
+
+
 def test_over_agg_recovers_from_checkpoint(spark, sf_dir):
     """The OVER aggregator's buffer state (rows + emitted flags) must
     round-trip the state store: crash/recover equals uninterrupted, with
@@ -591,10 +621,10 @@ def test_skip_to_replayer_recovers_from_checkpoint(spark, sf_dir):
 
 
 def test_lazy_replayer_recovers_from_checkpoint(spark, sf_dir):
-    """The lazy-reluctant replay's state must round-trip the state
-    store (round 9), exactly-once per anchor."""
+    """The lazy-reluctant replay (the chain replayer with a reluctant
+    step) must round-trip the state store, exactly-once per anchor."""
     from flink_uba_spark.streaming.skip_replay import (
-        stream_reluctant_lazy_detect,
+        stream_quantified_chain_detect,
     )
 
     events = load_testdata(spark, sf_dir, ("events",))["events"].select(
@@ -602,13 +632,14 @@ def test_lazy_replayer_recovers_from_checkpoint(spark, sf_dir):
     )
 
     def build(sdf):
-        return stream_reluctant_lazy_detect(
+        return stream_quantified_chain_detect(
             sdf, key="user_id",
-            anchor=F.col("event_type") == "signup",
-            run=F.col("event_type") == "error",
-            suffix=F.col("event_type") == "purchase",
-            gap="INTERVAL 12 HOURS", suffix_within="INTERVAL 24 HOURS",
-            mn=1, mx=3,
+            steps=[
+                (F.col("event_type") == "signup", None),
+                (F.col("event_type") == "error", "INTERVAL 12 HOURS",
+                 (1, 3), "reluctant"),
+                (F.col("event_type") == "purchase", "INTERVAL 24 HOURS"),
+            ],
         )
 
     got, want = _crash_recover_compare(spark, events, build, "lazy")

@@ -193,7 +193,7 @@ def test_stream_budget_run_negative_payload_raises():
         {
             "event_id": np.array([1], dtype="int64"),
             "ts": pd.Series([EPOCH]).astype("datetime64[us]"),
-            "cls": np.array([2], dtype="int64"),
+            "f1": [False], "f2": [True], "f3": [False],
             "pay": np.array([-1], dtype="int64"),
         }
     )

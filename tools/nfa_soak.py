@@ -2068,14 +2068,15 @@ def soak_skip_to_stream(n_cases):
 
 def soak_lazy_stream(n_cases):
     """Streaming lazy SKIP PAST LAST replay soak (round 9):
-    ``make_lazy_reluctant_replayer`` vs an independent brute — per-count
-    skip-till-next candidates, earliest-completion preference, the
-    strictly-past horizon replay, final once ``t3 + H < final_wm``."""
+    ``make_quantified_chain_replayer`` with a reluctant middle step vs an
+    independent brute — per-count skip-till-next candidates,
+    earliest-completion preference, the strictly-past horizon replay,
+    final once ``t3 + H < final_wm``."""
     import pandas as pd
 
     from test_properties_round5 import _FakeState
     from flink_uba_spark.streaming.skip_replay import (
-        make_lazy_reluctant_replayer,
+        make_quantified_chain_replayer,
     )
 
     t0, fails = time.time(), 0
@@ -2096,8 +2097,9 @@ def soak_lazy_stream(n_cases):
         ]
         cuts = sorted({rnd.randint(1, 200) * 1000
                        for _ in range(rnd.randint(0, 4))})
-        detect = make_lazy_reluctant_replayer(
-            gap_us, sfx_us, mn, mx, h_us, within_overall_us=wo_us
+        detect = make_quantified_chain_replayer(
+            3, [None, gap_us, sfx_us], [None, (gap_us, mn, mx, True), None],
+            h_us, within_overall_us=wo_us,
         )
         state = _FakeState()
         got = []
