@@ -3765,8 +3765,8 @@ def stream_match_recognize_all_rows(spark: SparkSession, sf_dir: str) -> DataFra
     """``ALL ROWS PER MATCH`` as a CONTINUOUS query (round 11): the
     onboarding fold's matches (``PATTERN (S C P)`` under SKIP PAST LAST)
     emitted as one row PER BOUND EVENT — the streaming NFA now carries
-    per-step bound ids in state (streaming/pattern.py STATE_SCHEMA field
-    22), so the per-event explode is the same stateless projection as
+    per-step bound ids in state (streaming/pattern.py, ``s_bndid`` in
+    ``make_pattern_matcher``'s state), so the per-event explode is the same stateless projection as
     batch (``_explode_plain_rows``). Completion is data-driven (the
     in-NFA skip fold emits when the chain completes), so the oracle is
     the batch fold itself, exploded — no watermark cut, exactly the

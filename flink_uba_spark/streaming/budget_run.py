@@ -46,16 +46,6 @@ from pyspark.sql import types as T
 
 from flink_uba_spark.streaming.pattern import _gap_session_last
 
-BUDGET_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ts_us", T.ArrayType(T.LongType())),
-        T.StructField("ids", T.ArrayType(T.LongType())),
-        T.StructField("cls", T.ArrayType(T.LongType())),
-        T.StructField("pay", T.ArrayType(T.LongType())),
-        T.StructField("emitted", T.ArrayType(T.LongType())),
-    ]
-)
-
 BUDGET_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -136,6 +126,7 @@ def make_budget_run_matcher(budget: int, cap: int, gap_us: int, sfx_us: int):
         wm_us = state.getCurrentWatermarkMs() * 1000
 
         if state.exists:
+            # the row buffer: ts µs, event id, class, payload, emitted flag
             ts, ids, cls, pay, em = (
                 np.asarray(f, dtype="int64") for f in state.get
             )
@@ -253,6 +244,5 @@ def stream_budget_run_detect(
             budget, cap, _interval_us(gap), _interval_us(suffix_within)
         ),
         BUDGET_OUTPUT_SCHEMA,
-        BUDGET_STATE_SCHEMA,
         GroupStateTimeout.EventTimeTimeout,
     )

@@ -37,12 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_UNITS_S = {"second": 1, "seconds": 1, "minute": 60, "minutes": 60, "hour": 3600, "hours": 3600}
-
-
-def _dur_s(text: str) -> int:
-    qty, unit = text.split()
-    return int(qty) * _UNITS_S[unit]
+from flink_uba_spark.streaming.pattern import _interval_us
 
 
 class WatermarkReplica:
@@ -51,7 +46,7 @@ class WatermarkReplica:
     time observed through batch N-1 (floored to ms), minus the delay."""
 
     def __init__(self, delay: str):
-        self.delay_ms = _dur_s(delay) * 1000
+        self.delay_ms = _interval_us(delay) // 1000
         self._max_ms: int | None = None
 
     def current_wm_ms(self) -> int:
@@ -80,8 +75,8 @@ def dead_letter_tap(
     in ``sink_dir`` as parquet (the side-output stream); read them back with
     ``spark.read.parquet(sink_dir)``.
     """
-    size_us = _dur_s(size) * 1_000_000
-    slide_us = _dur_s(slide or size) * 1_000_000
+    size_us = _interval_us(size)
+    slide_us = _interval_us(slide or size)
     replica = WatermarkReplica(delay)
 
     def _fb(bdf: DataFrame, _bid: int) -> None:

@@ -16,8 +16,8 @@ Semantics reproduced (keyed by the order/user key):
 State is kept per hash bucket, under the same scale contract as
 streaming/pattern.py: the operator groups on pmod(hash(key), B) through
 pattern.py's ``_keyed_state_apply`` (B = SPARK_GRAFT_STATE_BUCKETS, else
-the session's defaultParallelism; 0 groups on the raw key), and one
-micro-batch of a bucket resolves every member key in one vectorized pass.
+the session's defaultParallelism), and one micro-batch of a bucket
+resolves every member key in one vectorized pass.
 The bucket's state is one blob of columnar arrays, behind pattern.py's
 versioned header that pins B: per member key the ``seen`` flag, the
 pending anchors and the key's own timer as it was set. Per key that is
@@ -25,8 +25,8 @@ O(pending anchors) plus one bool and one timer — the same footprint as the
 reference's ValueState flags; a production deployment would TTL ``seen``
 (kept forever here for exact orphan semantics).
 
-Each member key behaves exactly as under per-key grouping with Spark's
-timer rule. A key with rows in the batch fires its pending anchors with
+Each member key behaves exactly as it would in a group of its own under
+Spark's timer rule (the per-key reference in the tests). A key with rows in the batch fires its pending anchors with
 ``anchor_us + deadline ≤ watermark_ms·1000``; a key without rows is
 visited only when its stored timer is ``< watermark_ms`` (Spark evicts on
 a strict comparison). The bucket's own timer is the earliest member timer.
@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_uba_spark.streaming.pattern import (
+    _interval_us,
     _keyed_state_apply,
     pack_bucket_blob,
     unpack_bucket_blob,
@@ -66,7 +67,6 @@ OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-_US = 1_000_000
 CODEC = (b"otmo", 1)
 NO_TIMER = np.iinfo(np.int64).min
 _END = np.iinfo(np.int64).max
@@ -264,8 +264,7 @@ def advance(
 def make_bucket_detector(
     deadline_us: int, anchor_type: str, follow_type: str, n_buckets: int
 ):
-    """The state function of one bucket (B = ``n_buckets``; under B = 0
-    each group is one key)."""
+    """The state function of one bucket (B = ``n_buckets``)."""
 
     def detect(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
         chunks = [] if state.hasTimedOut else [c for c in pdfs if len(c)]
@@ -300,9 +299,7 @@ def stream_order_timeout(
     """Wire the detector over a streaming events frame."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    qty, unit = deadline.split()
-    unit_us = {"seconds": _US, "minutes": 60 * _US, "hours": 3600 * _US}[unit]
-    deadline_us = int(qty) * unit_us
+    deadline_us = _interval_us(deadline)
 
     filtered = (
         events.filter(F.col("event_type").isin(anchor_type, follow_type))
@@ -310,6 +307,6 @@ def stream_order_timeout(
         .withWatermark("ts", watermark_delay)
     )
     return _keyed_state_apply(
-        filtered, None, OUTPUT_SCHEMA, None, GroupStateTimeout.EventTimeTimeout,
+        filtered, None, OUTPUT_SCHEMA, GroupStateTimeout.EventTimeTimeout,
         bucket_det=lambda nb: make_bucket_detector(deadline_us, anchor_type, follow_type, nb),
     )

@@ -42,15 +42,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-OVER_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ts_us", T.ArrayType(T.LongType())),
-        T.StructField("ids", T.ArrayType(T.LongType())),
-        T.StructField("vals", T.ArrayType(T.LongType())),
-        T.StructField("emitted", T.ArrayType(T.LongType())),
-    ]
-)
-
 OVER_FUNCS = ("sum", "count", "min", "max")
 
 
@@ -127,6 +118,7 @@ def make_over_aggregator(
         wm_us = wm_ms * 1000
 
         if state.exists:
+            # the row buffer: ts µs, event id, value, emitted flag
             s_ts, s_id, s_val, s_em = (
                 np.asarray(f, dtype="int64") for f in state.get
             )
@@ -277,6 +269,5 @@ def stream_over_aggregate(
             funcs=aggs,
         ),
         over_output_schema(aggs),
-        OVER_STATE_SCHEMA,
         GroupStateTimeout.EventTimeTimeout,
     )

@@ -58,25 +58,16 @@ Cross-batch ordering contract: replays split micro-batches by event time
 current-batch event in the global sort — buffer rows always precede batch
 rows and the concatenated timeline is sorted.
 
-CHECKPOINT COMPATIBILITY: round 5 widened ``STATE_SCHEMA`` from 3 to 17
-fields (the general-chain state replaced the dedicated 3-step layouts,
-the bounded-Kleene chain's 11-field ``KLEENE_STATE_SCHEMA`` among them);
-round 6 appended the 18th field
-(``nn_flags``, the latched notNext decisions) and then the 19th
-(``ams_horizon``, the SKIP_PAST_LAST_EVENT after-match horizon).
-Round 7 appended fields 20-21
-(``buf_pos``/``seq``, the consecutive() global-position plumbing).
-Round 11 appended the 22nd (``bound_ids_flat``, per-chain bound-row
-event ids backing the ``with_end_id``/``with_step_ids`` opt-ins).
-``applyInPandasWithState``
-cannot migrate a checkpointed state layout: a streaming job resuming from
-a checkpoint written by an earlier build will fail to restore — restart
-such jobs with a NEW checkpoint directory (replays are deterministic, so
-a fresh ``availableNow`` replay reproduces the stream). Any future field
-change to ``STATE_SCHEMA`` carries the same break; note it here. Hash-bucket
-blobs (see ``make_bucketed_matcher``) carry a header naming their codec,
-its version and the bucket count B; a blob without it, from another codec
-or written under another B is refused with ``StateLayoutError``.
+CHECKPOINT COMPATIBILITY: every keyed operator keeps its state in hash
+buckets (``_keyed_state_apply``): Spark sees one ``BUCKET_STATE_SCHEMA``
+binary column per bucket, and the blob behind it carries a header naming
+its codec, the codec's version and the bucket count B. A blob without the
+header, from another codec or version, or written under another B is
+refused with ``StateLayoutError`` — restart such a query with a NEW
+checkpoint directory (replays are deterministic, so a fresh
+``availableNow`` replay reproduces the stream). A per-key detect function
+wrapped by ``make_bucketed_matcher`` stores a plain tuple; the rule for
+changing it sits next to ``KMAP_CODEC``.
 """
 
 from __future__ import annotations
@@ -132,63 +123,9 @@ def pattern_output_schema(
 # of one per group per flush batch; the empty path only reads it)
 _EMPTY_ROWS = pd.DataFrame(columns=["event_id", "ts", "event_type"])
 
-# per-chain fixed-width integers + the gap-horizon row buffer (step
-# membership packed as an int64 bitmask over SLOTS = positive steps +
-# notFollowedBy guard slots — at most 63 slots total; make_pattern_matcher
-# rejects wider patterns rather than silently overflowing the mask)
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("anchor_ids", T.ArrayType(T.LongType())),
-        T.StructField("cur_step", T.ArrayType(T.LongType())),
-        T.StructField("open_flag", T.ArrayType(T.LongType())),
-        T.StructField("f_ts", T.ArrayType(T.LongType())),
-        T.StructField("f_rank", T.ArrayType(T.LongType())),
-        T.StructField("f_id", T.ArrayType(T.LongType())),
-        T.StructField("bounds_flat", T.ArrayType(T.LongType())),
-        T.StructField("kl_last_flat", T.ArrayType(T.LongType())),
-        T.StructField("kl_n_flat", T.ArrayType(T.LongType())),
-        # pre-bind frontier + step of a TENTATIVE times() run (kln < min
-        # so the bind may prove invalid): on invalid closure the chain is
-        # RESTORED to this point and binding replays against the buffer,
-        # which protects rows back to the earliest such frontier — so
-        # provisional notFollowedBy/optional decisions re-run with full
-        # information instead of being remembered wrong. -1 = not set.
-        T.StructField("pv_ts", T.ArrayType(T.LongType())),
-        T.StructField("pv_rank", T.ArrayType(T.LongType())),
-        T.StructField("pv_id", T.ArrayType(T.LongType())),
-        T.StructField("pv_cur", T.ArrayType(T.LongType())),
-        T.StructField("buf_ts", T.ArrayType(T.LongType())),
-        T.StructField("buf_rank", T.ArrayType(T.LongType())),
-        T.StructField("buf_id", T.ArrayType(T.LongType())),
-        T.StructField("buf_mask", T.ArrayType(T.LongType())),
-        # round 6 (another documented checkpoint break, 17 -> 18 fields):
-        # per-chain bitmask, bit k = the notNext() probe after step k was
-        # witnessed CLEAR — a cross-batch decision that must not be
-        # re-evaluated against a later batch's first row
-        T.StructField("nn_flags", T.ArrayType(T.LongType())),
-        # round 6 (checkpoint break, 18 -> 19 fields): the after-match
-        # skip horizon [last_emitted_end_ts_us, last_emitted_end_id] of
-        # AfterMatchSkipStrategy.SKIP_PAST_LAST_EVENT — anchors at or
-        # before it (in (ts, id) order) never start a run. [-1, -1] =
-        # no match emitted yet / skip strategy off
-        T.StructField("ams_horizon", T.ArrayType(T.LongType())),
-        # round 7 (checkpoint break, 19 -> 21 fields): consecutive()
-        # support — per-buffered-row global sequence positions in the
-        # key's total (ts, rank, id) order, plus the one-element running
-        # row counter [seq_next] that makes positions stable across
-        # micro-batches (adjacency = pos difference 1; closure = any
-        # observed successor position)
-        T.StructField("buf_pos", T.ArrayType(T.LongType())),
-        T.StructField("seq", T.ArrayType(T.LongType())),
-        # round 11 (checkpoint break, 21 -> 22 fields): per-chain bound-row
-        # EVENT IDS, the row-major twin of bounds_flat (-1 = unbound; a
-        # Kleene step stores its ENTRY row's id). Carried so the emit can
-        # surface end_id (batch parity under SKIP PAST LAST) and i{k}
-        # step ids (ALL ROWS PER MATCH on plain chains).
-        T.StructField("bound_ids_flat", T.ArrayType(T.LongType())),
-    ]
-)
-
+# the length of make_pattern_matcher's per-key state tuple (its fields are
+# named and explained where _advance unpacks it)
+CHAIN_STATE_FIELDS = 22
 
 def _suffix_argmin_ts_id(ts: np.ndarray, ids: np.ndarray) -> np.ndarray:
     """For an occurrence list in timeline-sort order, return for each start
@@ -472,10 +409,45 @@ def make_pattern_matcher(
 
     def _advance(user_id, chunks: list, state: Any) -> Iterator[pd.DataFrame]:
         if state.exists:
-            (s_aid, s_cur, s_opn, s_fts, s_frk, s_fid,
-             s_bnd, s_kl, s_kn, s_pts, s_prk, s_pid, s_pcur,
-             s_bts, s_brk, s_bid, s_bmk, s_nnf, s_ams,
-             s_bps, s_seq, s_bndid) = state.get
+            # the per-key state: CHAIN_STATE_FIELDS lists of int64, per-chain fixed-width
+            # integers + the gap-horizon row buffer (step membership packed
+            # as an int64 bitmask over SLOTS = positive steps +
+            # notFollowedBy guard slots — at most 63 slots total; wider
+            # patterns are rejected rather than overflowing the mask)
+            (
+                s_aid, s_cur, s_opn,  # anchor id, frontier step, open-run flag
+                s_fts, s_frk, s_fid,  # frontier row's (ts, rank, id)
+                # row-major [chain][step]: bound ts, Kleene last rep, Kleene count
+                s_bnd, s_kl, s_kn,
+                # pre-bind frontier + step of a TENTATIVE times() run (kln <
+                # min so the bind may prove invalid): on invalid closure the
+                # chain is RESTORED to this point and binding replays against
+                # the buffer, which protects rows back to the earliest such
+                # frontier — so provisional notFollowedBy/optional decisions
+                # re-run with full information instead of being remembered
+                # wrong. -1 = not set.
+                s_pts, s_prk, s_pid, s_pcur,
+                s_bts, s_brk, s_bid, s_bmk,  # buffered rows: ts, rank, id, slot mask
+                # per-chain bitmask, bit k = the notNext() probe after step k
+                # was witnessed CLEAR — a cross-batch decision that must not
+                # be re-evaluated against a later batch's first row
+                s_nnf,
+                # the after-match skip horizon [last_emitted_end_ts_us,
+                # last_emitted_end_id] of SKIP_PAST_LAST_EVENT — anchors at
+                # or before it (in (ts, id) order) never start a run.
+                # [-1, -1] = no match emitted yet / skip strategy off
+                s_ams,
+                # consecutive(): per-buffered-row global sequence positions
+                # in the key's total (ts, rank, id) order, plus the
+                # one-element running row counter [seq_next] that makes
+                # positions stable across micro-batches (adjacency = pos
+                # difference 1; closure = any observed successor position)
+                s_bps, s_seq,
+                # per-chain bound-row EVENT IDS, the row-major twin of s_bnd
+                # (-1 = unbound; a Kleene step stores its ENTRY row's id),
+                # for end_id (SKIP PAST LAST) and the i{k} step ids
+                s_bndid,
+            ) = state.get
             aid = np.asarray(s_aid, dtype="int64")
             cur = np.asarray(s_cur, dtype="int64")
             opn = np.asarray(s_opn, dtype="int64").astype(bool)
@@ -1320,7 +1292,7 @@ def stream_pattern_detect(
     positions close runs without waiting for the gap timer. Like
     strict/notNext, every key row rides the exchange as a contiguity
     witness (the scan filter is off), and buffered rows carry their
-    global positions in state (fields 20-21)."""
+    global positions in state (``s_bps``/``s_seq``)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     specs = [s[0] for s in steps]
@@ -1381,7 +1353,6 @@ def stream_pattern_detect(
         pattern_output_schema(
             n, kleenes, with_end_id=with_end_id, with_step_ids=with_step_ids
         ),
-        STATE_SCHEMA,
         GroupStateTimeout.EventTimeTimeout if timers else GroupStateTimeout.NoTimeout,
     )
 
@@ -1434,42 +1405,42 @@ class _BranchStateSlot:
 
 
 # ---------------------------------------------------------------------------
-# state-bucket coarsening (round 13, VERDICT r12 item 5)
+# keyed state in hash buckets
 # ---------------------------------------------------------------------------
+# Every keyed stateful operator groups on pmod(hash(key), B), not on the key.
 # The applyInPandasWithState protocol pays a fixed cost PER GROUP PER
-# MICRO-BATCH (one Arrow frame + one state row (de)serialization + one state
-# -store lookup each), and the r12 micro-batch profile measured that per-key
-# floor — ~1,500 keys/batch — as the dominant cost of every pattern/MR twin
-# (~3.5 s addBatch). Grouping on pmod(hash(key), B) instead runs B bucket
-# groups per batch; inside a bucket the UNCHANGED per-key matcher replays
-# each member key against its own private state (the _BranchStateSlot
-# facade, exactly the branching matcher's precedent), with per-key timers
-# emulated on Spark's own eviction rule (a data-less key fires when its
-# stored timeout < the watermark, strict; the bucket's real timer is the
-# min over members, clamped > wm as Spark requires). Member states ride in
-# ONE pickled state blob per bucket.
+# MICRO-BATCH (one Arrow frame, one state row (de)serialization and one
+# state-store lookup each), so a per-key plan pays it once per active key —
+# ~1,500 keys per batch on the bench replays. With B buckets it is paid B
+# times. Inside a bucket the UNCHANGED per-key matcher replays each member
+# key against its own private state (the _BranchStateSlot facade), with
+# per-key timers emulated on Spark's own eviction rule (a data-less key
+# fires when its stored timeout < the watermark, strict; the bucket's real
+# timer is the min over members, clamped to >= wm as Spark requires).
+# Member states ride in ONE pickled state blob per bucket; a bucket-native
+# operator (order_timeout) keeps its own columnar payload instead.
 #
-# Scale contract: the default B = the session's defaultParallelism (total
-# cores — scale-adaptive, not a local constant; measured locally the knee
-# sits exactly there: 8/16/64 buckets were all slower than 32 on local[32]).
-# A deployment whose key cardinality makes keys-per-bucket — and so the
-# bucket's one state row — too large must raise SPARK_GRAFT_STATE_BUCKETS
-# toward keys/target_keys_per_bucket; 0 restores per-key grouping (the
-# exact pre-round-13 plan). The bench's 1,500-key replays put ~47 keys in
-# a bucket at the local default of 32.
+# B is the session's defaultParallelism (total cores: measured on local[32],
+# 8/16/64 buckets were all slower than 32), or SPARK_GRAFT_STATE_BUCKETS (an
+# integer >= 1) for a deployment whose key cardinality makes a bucket's one
+# state row too large (raise it toward keys / target keys per bucket).
 #
 # B is part of the checkpoint: a key's state lives in bucket
 # pmod(hash(key), B), so a restart under another B would look every key up
 # in the wrong bucket and silently lose its state. Every bucket blob
 # therefore starts with a fixed header (magic, codec name and version, B);
 # decoding refuses a blob written under another B or by another codec
-# instead of guessing. A bucket-native operator (order_timeout) keeps the
-# same header around its own columnar payload.
+# instead of guessing.
 BUCKET_STATE_SCHEMA = T.StructType([T.StructField("pkl", T.BinaryType())])
 
 _BLOB_HEADER = struct.Struct("<4s4sHi")  # magic, codec name, codec version, B
 _BLOB_MAGIC = b"FUBS"
-# make_bucketed_matcher's payload: a pickled {key: (per-key state, timer)}
+# make_bucketed_matcher's payload: a pickled {key: (per-key state, timer)}.
+# The per-key state is whatever tuple the wrapped detect function stores,
+# and nothing checks its layout on read: ANY change to the state tuple of a
+# wrapped per-key detect function (a field added, dropped, reordered or
+# re-typed) must bump this version, or an old checkpoint would unpickle
+# silently into the wrong fields.
 KMAP_CODEC = (b"kmap", 1)
 
 
@@ -1509,12 +1480,22 @@ def unpack_bucket_blob(blob: bytes, codec: tuple[bytes, int], n_buckets: int) ->
 
 
 def _state_buckets(df: DataFrame) -> int:
+    """B: SPARK_GRAFT_STATE_BUCKETS when set, else defaultParallelism."""
     import os
 
     env = os.environ.get("SPARK_GRAFT_STATE_BUCKETS")
-    if env is not None:
-        return int(env)
-    return int(df.sparkSession.sparkContext.defaultParallelism)
+    if env is None:
+        return int(df.sparkSession.sparkContext.defaultParallelism)
+    try:
+        nb = int(env)
+    except ValueError:
+        nb = 0
+    if nb < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_STATE_BUCKETS={env!r}: the state bucket count must "
+            "be an integer >= 1"
+        )
+    return nb
 
 
 def make_bucketed_matcher(inner_det, timers: bool, n_buckets: int):
@@ -1589,39 +1570,36 @@ def make_bucketed_matcher(inner_det, timers: bool, n_buckets: int):
     return detect
 
 
-def _keyed_state_apply(filtered, det, out_schema, state_schema, timeout, bucket_det=None):
+def _keyed_state_apply(filtered, det, out_schema, timeout, bucket_det=None):
     """The one ``applyInPandasWithState`` call: every keyed stateful
     operator in ``streaming/`` (pattern matchers, skip replayers, budget
     run, OVER aggregate, temporal join, transitions, order timeout) goes
-    through it. Per-key grouping when SPARK_GRAFT_STATE_BUCKETS=0,
-    hash-bucketed grouping (the default, see the block comment above)
-    otherwise. Results are identical by construction — only the
-    Spark-visible grouping key changes; the per-key state, emissions and
-    timers are ``det``'s own. ``det`` may touch its state only through
-    the ``_BranchStateSlot`` surface (exists/get/update/remove,
-    getCurrentWatermarkMs, setTimeoutTimestamp, hasTimedOut) and must
-    group on a ``user_id`` column.
+    through it. ``filtered`` must carry the key as a ``user_id`` column;
+    rows group on ``__bucket`` = pmod(hash(user_id), B) and each bucket
+    stores one ``BUCKET_STATE_SCHEMA`` blob (see the block comment above).
 
-    A bucket-native operator passes ``bucket_det(B)`` instead of ``det``:
-    a state function over the whole bucket and BUCKET_STATE_SCHEMA, used
-    for every B (under B=0 each group holds one key)."""
+    ``det`` is a per-key state function, run for each member key of a
+    bucket by ``make_bucketed_matcher``: its emissions, state and timers
+    are exactly its own, as if Spark grouped on the key. It may touch its
+    state only through the ``_BranchStateSlot`` surface (exists/get/
+    update/remove, getCurrentWatermarkMs, setTimeoutTimestamp,
+    hasTimedOut), and its state is any picklable tuple. A bucket-native
+    operator passes ``bucket_det(B)`` instead: a state function over the
+    whole bucket that writes its own blob."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     nb = _state_buckets(filtered)
     if bucket_det is not None:
-        fn, state_schema = bucket_det(nb), BUCKET_STATE_SCHEMA
-    elif nb > 0:
+        fn = bucket_det(nb)
+    else:
         timers = timeout == GroupStateTimeout.EventTimeTimeout
-        fn, state_schema = make_bucketed_matcher(det, timers, nb), BUCKET_STATE_SCHEMA
-    else:
-        fn = det
-    if nb <= 0:
-        grouped = filtered.groupBy("user_id")
-    else:
-        grouped = filtered.withColumn(
-            "__bucket", F.pmod(F.hash(F.col("user_id")), F.lit(nb))
-        ).groupBy("__bucket")
-    return grouped.applyInPandasWithState(fn, out_schema, state_schema, "append", timeout)
+        fn = make_bucketed_matcher(det, timers, nb)
+    grouped = filtered.withColumn(
+        "__bucket", F.pmod(F.hash(F.col("user_id")), F.lit(nb))
+    ).groupBy("__bucket")
+    return grouped.applyInPandasWithState(
+        fn, out_schema, BUCKET_STATE_SCHEMA, "append", timeout
+    )
 
 
 def _keyed_input(events, key, flags, event_id, ts, watermark_delay=None,
@@ -1714,7 +1692,7 @@ def make_branching_matcher(
                 return pd.DataFrame(cols, copy=False)
 
             branches.append((det, [f"__p{k}" for k in kept], project))
-    return make_fused_matcher(branches, len(STATE_SCHEMA.fields))
+    return make_fused_matcher(branches)
 
 
 def stream_pattern_detect_branching(
@@ -1773,7 +1751,6 @@ def stream_pattern_detect_branching(
         ),
         make_branching_matcher(step_types, withins_us, opts, ttl_us=ttl_us),
         branching_output_schema(n),
-        fused_state_schema(STATE_SCHEMA),
         GroupStateTimeout.EventTimeTimeout
         if ttl_us is not None
         else GroupStateTimeout.NoTimeout,
@@ -1784,19 +1761,6 @@ def stream_pattern_detect_branching(
 # followedByAny — relaxed NON-DETERMINISTIC contiguity, streaming twin
 # (round 7; batch form: operators/sequence.py:pattern_detect_any)
 # --------------------------------------------------------------------------
-
-ANY_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ev_ids", T.ArrayType(T.LongType())),
-        T.StructField("ev_tss", T.ArrayType(T.LongType())),
-        T.StructField("ev_masks", T.ArrayType(T.LongType())),
-        # anchors already emitted under after_match='skip_to_next' (empty
-        # in plain mode); pruned with the event buffer — an evicted anchor
-        # can never re-enumerate, so the set needs only live anchors
-        T.StructField("emitted_ids", T.ArrayType(T.LongType())),
-    ]
-)
-
 
 def any_output_schema(n_steps: int) -> T.StructType:
     fields = [T.StructField("user_id", T.LongType())]
@@ -1909,6 +1873,10 @@ def make_any_matcher(n_steps: int, withins_us: list, after_match: str | None = N
 
     def fold(key, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
         if state.exists:
+            # the event buffer (id, ts, step bitmask), then the anchors
+            # already emitted under after_match='skip_to_next' (empty in
+            # plain mode); pruned with the event buffer — an evicted anchor
+            # can never re-enumerate, so the set needs only live anchors
             o_ids, o_tss, o_masks, o_emit = (list(v) for v in state.get)
         else:
             o_ids, o_tss, o_masks, o_emit = [], [], [], []
@@ -2014,7 +1982,6 @@ def stream_pattern_detect_any(
         _keyed_input(events, key, flags, event_id, ts, watermark_delay=watermark_delay),
         make_any_matcher(n, withins_us, after_match=after_match),
         any_output_schema(n),
-        ANY_STATE_SCHEMA,
         GroupStateTimeout.EventTimeTimeout,
     )
 
@@ -2029,20 +1996,6 @@ def iterative_output_schema(n_steps: int, pay_names: list[str]) -> T.StructType:
         for k in range(1, n_steps + 1)
     ]
     return T.StructType(fields)
-
-
-ITER_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ev_ids", T.ArrayType(T.LongType())),
-        T.StructField("ev_tss", T.ArrayType(T.LongType())),
-        T.StructField("ev_masks", T.ArrayType(T.LongType())),
-        # payload values row-major: n_pay longs per buffered event
-        T.StructField("ev_pays", T.ArrayType(T.LongType())),
-        # anchors whose chain already emitted (complete + final); pruned
-        # with the buffer — an evicted anchor is never re-walked
-        T.StructField("emitted_ids", T.ArrayType(T.LongType())),
-    ]
-)
 
 
 def make_iterative_matcher(n_steps: int, withins_us: list, n_pay: int, conds_py: dict):
@@ -2080,6 +2033,10 @@ def make_iterative_matcher(n_steps: int, withins_us: list, n_pay: int, conds_py:
             + [f"v{j}_{k}" for j in range(n_pay) for k in range(1, n_steps + 1)]
         )
         if state.exists:
+            # the event buffer (id, ts, step bitmask, payload values
+            # row-major: n_pay longs per event), then the anchors whose
+            # chain already emitted (complete + final); pruned with the
+            # buffer — an evicted anchor is never re-walked
             o_ids, o_tss, o_masks, o_pays, o_emit = (list(v) for v in state.get)
         else:
             o_ids, o_tss, o_masks, o_pays, o_emit = [], [], [], [], []
@@ -2206,7 +2163,6 @@ def stream_pattern_detect_iterative(
         ),
         make_iterative_matcher(n, withins_us, len(pay), dict(conds_py or {})),
         iterative_output_schema(n, [f"v{j}_" for j in range(len(pay))]),
-        ITER_STATE_SCHEMA,
         GroupStateTimeout.EventTimeTimeout,
     )
     # rename the positional payload columns back to the caller's names
@@ -2230,26 +2186,21 @@ def stream_pattern_detect_iterative(
 # --------------------------------------------------------------------------
 
 
-def fused_state_schema(base: T.StructType) -> T.StructType:
-    return T.StructType(
-        list(base.fields) + [T.StructField("seg_lens", T.ArrayType(T.LongType()))]
-    )
-
-
-def make_fused_matcher(branches: list[tuple], n_state_fields: int):
+def make_fused_matcher(branches: list[tuple]):
     """Build the packed state function. ``branches`` is a list of
     ``(det, slot_cols, project)``: ``det`` a per-branch detect function
     (one engine family per operator — the seg_lens packing assumes every
     branch shares the same state field count), ``slot_cols`` the packed
     input column names feeding the branch's ``__p1..__pn`` slots, and
     ``project`` a pandas-level remap of the branch's output frame onto
-    the operator's COMMON output schema. Every state field holds the
-    branch-major concatenation of the per-branch arrays; seg_lens
-    ([branch][field], len = B * n_state_fields) restores the
-    segmentation, so ONE state row carries every branch NFA (Spark allows
-    a single applyInPandasWithState per streaming query). The operator's
-    timer is the minimum of the branches' requests, clamped above the
-    watermark."""
+    the operator's COMMON output schema. The state is
+    ``(*fields, seg_lens)``: every field holds the branch-major
+    concatenation of that field's per-branch arrays, and seg_lens
+    ([branch][field], len = B * fields) restores the segmentation, so ONE
+    state carries every branch NFA. The field count is read back from the
+    stored tuple and taken from the branch values being packed. The
+    operator's timer is the minimum of the branches' requests, clamped
+    above the watermark."""
     B = len(branches)
 
     def detect(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
@@ -2269,12 +2220,13 @@ def make_fused_matcher(branches: list[tuple], n_state_fields: int):
         if state.exists:
             *flat, seg = state.get
             seg = [int(x) for x in seg]
+            nf = len(flat)
             bvals: list[tuple | None] = []
-            pos = [0] * n_state_fields
+            pos = [0] * nf
             for b in range(B):
                 tup, empty = [], True
-                for f in range(n_state_fields):
-                    ln = seg[b * n_state_fields + f]
+                for f in range(nf):
+                    ln = seg[b * nf + f]
                     tup.append(list(flat[f][pos[f]:pos[f] + ln]))
                     pos[f] += ln
                     empty = empty and ln == 0
@@ -2305,11 +2257,13 @@ def make_fused_matcher(branches: list[tuple], n_state_fields: int):
                 out_frames.append(project(frame))
             new_vals[bi] = slot.value
 
-        if any(v is not None for v in new_vals):
-            flat_out: list[list] = [[] for _ in range(n_state_fields)]
+        live = [v for v in new_vals if v is not None]
+        if live:
+            nf = len(live[0])
+            flat_out: list[list] = [[] for _ in range(nf)]
             seg_out: list[int] = []
             for v in new_vals:
-                for f in range(n_state_fields):
+                for f in range(nf):
                     arr = [] if v is None else list(v[f])
                     flat_out[f].extend(arr)
                     seg_out.append(len(arr))
@@ -2388,34 +2342,15 @@ def stream_pattern_detect_fused(
         built.append((det, list(b["slots"]), b["project"]))
 
     preds = {nm: _pred(c) for nm, c in flags.items()}
-    base = STATE_SCHEMA if engine == "chain" else ANY_STATE_SCHEMA
     return _keyed_state_apply(
         _keyed_input(events, key, preds, event_id, ts, watermark_delay=watermark_delay),
-        make_fused_matcher(built, len(base.fields)),
+        make_fused_matcher(built),
         output_schema,
-        fused_state_schema(base),
         GroupStateTimeout.EventTimeTimeout,
     )
 
 
 PREF_NULL = -(1 << 62)
-
-
-def preference_state_schema(base: T.StructType, n_steps: int) -> T.StructType:
-    """Fused layout + the pending-candidate buffer of the preference
-    fold (one array per chain position, µs with PREF_NULL for null)."""
-    return T.StructType(
-        list(base.fields)
-        + [T.StructField("seg_lens", T.ArrayType(T.LongType()))]
-        + [
-            T.StructField("pend_branch", T.ArrayType(T.LongType())),
-            T.StructField("pend_anchor", T.ArrayType(T.LongType())),
-            *[
-                T.StructField(f"pend_t{k}", T.ArrayType(T.LongType()))
-                for k in range(1, n_steps + 1)
-            ],
-        ]
-    )
 
 
 def preferred_output_schema(n_steps: int) -> T.StructType:
@@ -2432,8 +2367,7 @@ def preferred_output_schema(n_steps: int) -> T.StructType:
     )
 
 
-def make_preference_fused(branches: list[tuple], n_state_fields: int,
-                          n_steps: int, horizon_us: int,
+def make_preference_fused(branches: list[tuple], n_steps: int, horizon_us: int,
                           within_overall_us: int | None = None):
     """Wrap ``make_fused_matcher`` with ISO 9075-2's lexicographic
     (leftmost-alternative) preference fold — the streaming twin of the
@@ -2448,10 +2382,13 @@ def make_preference_fused(branches: list[tuple], n_state_fields: int,
     strictly is finality — then the LOWEST branch index that completed
     wins and the anchor's other candidates drop (exactly-once by
     construction: the buffer is cleared on emission, and no branch can
-    re-complete a final anchor). State = the packed branch states + the
-    pending buffer (bounded by anchors inside the horizon window)."""
-    fused = make_fused_matcher(branches, n_state_fields)
-    n_sub = n_state_fields + 1  # flats + seg_lens
+    re-complete a final anchor). State = the fused matcher's packed
+    ``(*fields, seg_lens)`` followed by the pending buffer
+    ``(branch, anchor, t1..tn)`` (one array per chain position, µs with
+    PREF_NULL for null; bounded by anchors inside the horizon window).
+    With no branch state left, the fused part is written as
+    ``CHAIN_STATE_FIELDS + 1`` empty arrays; an empty seg_lens marks it."""
+    fused = make_fused_matcher(branches)
     n_pend = 2 + n_steps
     t_cols = [f"t{k}" for k in range(1, n_steps + 1)]
 
@@ -2460,10 +2397,10 @@ def make_preference_fused(branches: list[tuple], n_state_fields: int,
         wm_us = wm_ms * 1000
         if state.exists:
             all_v = state.get
-            sub_v = tuple(all_v[:n_sub])
+            sub_v = tuple(all_v[:-n_pend])
             if not len(sub_v[-1]):   # seg empty = fused part removed
                 sub_v = None
-            pend = [np.asarray(x, dtype="int64") for x in all_v[n_sub:]]
+            pend = [np.asarray(x, dtype="int64") for x in all_v[-n_pend:]]
         else:
             sub_v = None
             pend = [np.empty(0, dtype="int64") for _ in range(n_pend)]
@@ -2528,7 +2465,7 @@ def make_preference_fused(branches: list[tuple], n_state_fields: int,
             sub_out = (
                 slot.value
                 if slot.value is not None
-                else tuple([[] for _ in range(n_state_fields)] + [[]])
+                else tuple([] for _ in range(CHAIN_STATE_FIELDS + 1))
             )
             state.update(tuple([*sub_out, *[p.tolist() for p in pend]]))
             cands = list(timers)
@@ -2609,11 +2546,7 @@ def stream_pattern_detect_preferred(
     wo_us = None if within_overall is None else _interval_us(within_overall)
     return _keyed_state_apply(
         _keyed_input(events, key, preds, event_id, ts, watermark_delay=watermark_delay),
-        make_preference_fused(
-            built, len(STATE_SCHEMA.fields), n, horizon,
-            within_overall_us=wo_us,
-        ),
+        make_preference_fused(built, n, horizon, within_overall_us=wo_us),
         preferred_output_schema(n),
-        preference_state_schema(STATE_SCHEMA, n),
         GroupStateTimeout.EventTimeTimeout,
     )

@@ -59,29 +59,6 @@ from flink_uba_spark.streaming.pattern import _gap_session_last
 
 _NULL = -(1 << 62)
 
-SKIP_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ts_us", T.ArrayType(T.LongType())),
-        T.StructField("ids", T.ArrayType(T.LongType())),
-        T.StructField("mask", T.ArrayType(T.LongType())),
-        # [h_ts, h_id, lp_end_ts, lp_end_id, lp_t1, lp_anchor]
-        T.StructField("ctrl", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def skip_state_schema(with_vals: bool = False) -> T.StructType:
-    """``SKIP_STATE_SCHEMA`` plus the optional row-major VALUE matrix
-    (round 12 — value-aggregate MEASURES on the replay family). The
-    extra field only exists for specs that declare value columns — a
-    NEW query shape — so checkpoints of existing value-free queries
-    keep their layout."""
-    fields = list(SKIP_STATE_SCHEMA.fields)
-    if with_vals:
-        fields.append(T.StructField("vals", T.ArrayType(T.DoubleType())))
-    return T.StructType(fields)
-
-
 # ALL ROWS PER MATCH on the replay family (round 12 — VERDICT r11 item
 # 3): one row per BOUND EVENT; ``var`` (CLASSIFIER) is attached by the
 # front-end from ``seq`` — a compile-time constant per step
@@ -243,8 +220,8 @@ def make_quantified_chain_replayer(n: int, withins_us: list, kleenes: list,
       the run's member rows (leg slice ``j..j+cnt−1``), so no band
       join is needed, unlike batch.
     - ``n_vals``/``aggs`` — value-aggregate MEASURES: ``n_vals`` value
-      columns (``v0..``, float64, NaN = null) ride the buffer (state
-      field 5, ``skip_state_schema``); each ``aggs`` entry
+      columns (``v0..``, float64, NaN = null) ride the buffer (a fifth
+      state field, row-major); each ``aggs`` entry
       ``(k, vi, func, n_off, name, integral)`` emits one extra output
       column = ``func`` over step k's bound rows' ``vi``-th value —
       exact run membership, the batch band join's stream twin."""
@@ -270,6 +247,10 @@ def make_quantified_chain_replayer(n: int, withins_us: list, kleenes: list,
         wm_us = state.getCurrentWatermarkMs() * 1000
 
         if state.exists:
+            # the row buffer (ts µs, event id, step bitmask), ctrl =
+            # [h_ts, h_id, lp_end_ts, lp_end_id, lp_t1, lp_anchor], and
+            # only when value columns are declared the row-major float64
+            # value matrix (n_vals per buffered row, NaN = null)
             got = state.get
             ts, ids, mask, ctrl = (
                 np.asarray(f, dtype="int64") for f in got[:4]
@@ -556,8 +537,8 @@ def stream_quantified_chain_detect(
     emits). ``within_overall`` prunes candidates whose end exceeds the
     anchor bound BEFORE the fold. ``all_rows=True`` emits per-BOUND-EVENT rows
     (``ALL_ROWS_SCHEMA``); ``values`` declares named value Columns that
-    ride the buffer (cast to double; state schema gains the ``vals``
-    field) and ``aggs`` entries ``(k, value_name, func, n_offset,
+    ride the buffer (cast to double; the state gains a value field) and
+    ``aggs`` entries ``(k, value_name, func, n_offset,
     out_name, integral)`` emit one aggregate column each over step k's
     bound rows — see ``make_quantified_chain_replayer``."""
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -641,7 +622,6 @@ def stream_quantified_chain_detect(
         ),
         ALL_ROWS_SCHEMA if all_rows
         else quantified_chain_output_schema(n, quant, agg_fields),
-        skip_state_schema(bool(values)),
         GroupStateTimeout.EventTimeTimeout,
     )
 

@@ -34,19 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TEMPORAL_STATE_SCHEMA = T.StructType(
-    [
-        # versions: id, ts_us, payload (one long)
-        T.StructField("v_ids", T.ArrayType(T.LongType())),
-        T.StructField("v_tss", T.ArrayType(T.LongType())),
-        T.StructField("v_pay", T.ArrayType(T.LongType())),
-        # pending facts: id, ts_us
-        T.StructField("f_ids", T.ArrayType(T.LongType())),
-        T.StructField("f_tss", T.ArrayType(T.LongType())),
-    ]
-)
-
-
 def temporal_output_schema() -> T.StructType:
     return T.StructType(
         [
@@ -63,6 +50,7 @@ def temporal_output_schema() -> T.StructType:
 def make_temporal_join_matcher():
     def fold(key, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
         if state.exists:
+            # versions (id, ts µs, payload), then pending facts (id, ts µs)
             v_ids, v_tss, v_pay, f_ids, f_tss = (list(v) for v in state.get)
         else:
             v_ids, v_tss, v_pay, f_ids, f_tss = [], [], [], [], []
@@ -175,6 +163,5 @@ def stream_temporal_table_join(
         tagged,
         make_temporal_join_matcher(),
         temporal_output_schema(),
-        TEMPORAL_STATE_SCHEMA,
         GroupStateTimeout.EventTimeTimeout,
     )

@@ -33,13 +33,6 @@ PAIR_SCHEMA = T.StructType(
     ]
 )
 
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_ts_us", T.LongType()),
-        T.StructField("last_type", T.StringType()),
-    ]
-)
-
 _US = 1_000_000
 
 
@@ -66,6 +59,7 @@ def make_transition_extractor(gap_us: int):
         prev_us = rows["ts_us"].shift(1)
         prev_type = rows["event_type"].shift(1)
         if state.exists:
+            # the key's last event: (ts µs, event type)
             seam_us, seam_type = state.get
             prev_us.iloc[0] = seam_us
             prev_type.iloc[0] = seam_type
@@ -95,6 +89,5 @@ def stream_transition_pairs(events: DataFrame, gap_us: int = 30 * 60 * _US) -> D
         ev,
         make_transition_extractor(gap_us),
         PAIR_SCHEMA,
-        STATE_SCHEMA,
         GroupStateTimeout.NoTimeout,
     )

@@ -14,8 +14,9 @@ batch fold truncated at the decidability cut ``end + H < final_wm``.
 
 The same harness drives the packed multi-branch matcher
 (``streaming/pattern.make_fused_matcher``) through the ``stream-branching``,
-``fused`` and ``pref`` modes, and the horizon-buffer matchers through
-``stream-any`` and ``iter``.
+``fused`` and ``pref`` modes, the horizon-buffer matchers through
+``stream-any`` and ``iter``, and the chain NFA under a moving watermark
+through ``timers`` and ``stream-consec``.
 """
 
 from __future__ import annotations
@@ -63,6 +64,14 @@ def test_packed_and_horizon_matchers_match_brute(soak):
     operators) and the followedByAny / iterative horizon buffers, over
     random micro-batch splits with mid-stream timer fires."""
     assert soak(300) == 0
+
+
+@pytest.mark.parametrize("with_consecs", [False, True], ids=["timers", "stream-consec"])
+def test_chain_matcher_under_a_moving_watermark_matches_brute(with_consecs):
+    """The chain NFA over ms-scale cases, so the lagged watermark moves
+    and closes runs mid-stream; the soak fails when no call read a
+    watermark above 0."""
+    assert nfa_soak.soak_stream(300, timers=True, with_consecs=with_consecs) == 0
 
 
 def test_single_quantified_variable_under_skip_past_last_raises(spark):

@@ -20,8 +20,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from flink_uba_spark.streaming.pattern import (
-    ANY_STATE_SCHEMA,
-    STATE_SCHEMA,
     make_any_matcher,
     make_fused_matcher,
     make_pattern_matcher,
@@ -155,7 +153,6 @@ def test_fused_chain_equals_independent_branches(case):
 
     fused = make_fused_matcher(
         [(mk(m), ["__p1", "__p2", "__p3"], lambda f: f) for m in (1, 2, 3)],
-        len(STATE_SCHEMA.fields),
     )
     got = _drive(fused, batches, wm, True)
     assert sorted(got, key=repr) == sorted(want, key=repr)
@@ -216,7 +213,6 @@ def test_fused_any_equals_independent_branches(case):
           ["__p1", "__p2", "__p3"], proj(3)),
          (make_any_matcher(4, [0, gap, gap, 100]),
           ["__p1", "__p2", "__p2", "__p3"], proj(4))],
-        len(ANY_STATE_SCHEMA.fields),
     )
     got = _drive(fused, batches, 0, False)
     assert sorted(got) == sorted(want)

@@ -3,7 +3,7 @@
 per-step-id plumbing behind it.
 
 - ``rows_per_match="all"`` streams on the single-plan plain/optional
-  routes (the NFA's new per-step bound ids, STATE_SCHEMA field 22) and
+  routes (the NFA's per-step bound ids, ``s_bndid`` in its state) and
   equals the batch explode on a flushed replay.
 - RunAgg ``COUNT`` MEASURES (incl. SUBSET unions) rewrite to stateless
   reads of the NFA's count columns and equal the batch band join.

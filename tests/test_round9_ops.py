@@ -721,7 +721,6 @@ def test_preference_fused_fold_hand_case():
     import pandas as pd
 
     from flink_uba_spark.streaming.pattern import (
-        STATE_SCHEMA,
         make_pattern_matcher,
         make_preference_fused,
     )
@@ -764,8 +763,7 @@ def test_preference_fused_fold_hand_case():
             return f
 
         built.append((det, [f"c{bi}a", f"c{bi}b"], project))
-    det = make_preference_fused(built, len(STATE_SCHEMA.fields), n,
-                                60_000_000)
+    det = make_preference_fused(built, n, 60_000_000)
     # anchor 1 at 0s: branch1 completes FIRST (10s) but branch0 also
     # completes (20s) — preference must still pick branch 0.
     # anchor 10 at 30s: no c0b ever follows, only branch1 completes.

@@ -103,20 +103,17 @@ def _reference_run(sdf, mode: str, checkpoint: str):
 
 
 FAMILIES = {
-    "windowed_append": (_windowed_counts, "append", None),
-    "windowed_update": (_windowed_counts, "update", None),
-    "windowed_complete": (_windowed_counts, "complete", None),
-    "order_timeout": (_order_timeout, "append", None),
-    "pattern_bucketed": (_pattern_chain, "append", None),
-    "pattern_per_key": (_pattern_chain, "append", "0"),
+    "windowed_append": (_windowed_counts, "append"),
+    "windowed_update": (_windowed_counts, "update"),
+    "windowed_complete": (_windowed_counts, "complete"),
+    "order_timeout": (_order_timeout, "append"),
+    "pattern_bucketed": (_pattern_chain, "append"),
 }
 
 
 @pytest.mark.parametrize("family", list(FAMILIES))
-def test_same_rows_as_replaced_path(spark, replay, tmp_path, monkeypatch, family):
-    build, mode, buckets = FAMILIES[family]
-    if buckets is not None:
-        monkeypatch.setenv("SPARK_GRAFT_STATE_BUCKETS", buckets)
+def test_same_rows_as_replaced_path(spark, replay, tmp_path, family):
+    build, mode = FAMILIES[family]
     got = run_to_table(build(_source(spark, replay)), output_mode=mode).toPandas()
     assert spark.conf.get(MANAGER, None) is None
     want = _reference_run(build(_source(spark, replay)), mode, str(tmp_path / "ckpt"))

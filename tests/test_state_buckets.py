@@ -6,8 +6,8 @@ under the same emulation of Spark's group-state protocol
 the raw key, the bucket detector grouped on ``key % B``. Every micro-batch
 must emit the same rows; the end-to-end check runs one catalog twin per
 keyed stateful operator under several bucket counts. The bucket blob
-header and the bucket timer of the pattern operators' per-key replay are
-pinned here too.
+header, the refusal of a bucket count below one and the bucket timer of
+the pattern operators' per-key replay are pinned here too.
 """
 
 from __future__ import annotations
@@ -16,14 +16,20 @@ import random
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from flink_uba_spark.queries import streaming as SQ
 from flink_uba_spark.streaming.order_timeout import make_bucket_detector
 from flink_uba_spark.streaming.pattern import (
+    CHAIN_STATE_FIELDS,
     KMAP_CODEC,
     StateLayoutError,
+    _BranchStateSlot,
     make_bucketed_matcher,
+    make_pattern_matcher,
+    make_preference_fused,
     pack_bucket_blob,
+    stream_pattern_detect,
     unpack_bucket_blob,
 )
 from tests.conftest import assert_matches_oracle
@@ -41,10 +47,7 @@ def _frame(rows) -> pd.DataFrame:
 
 def _runners(b: int) -> tuple[GroupRunner, GroupRunner]:
     ref = GroupRunner(make_detector(DL), lambda u: u)
-    bucket = GroupRunner(
-        make_bucket_detector(DL, "signup", "purchase", b),
-        (lambda u: u) if b == 0 else (lambda u: u % b),
-    )
+    bucket = GroupRunner(make_bucket_detector(DL, "signup", "purchase", b), lambda u: u % b)
     return ref, bucket
 
 
@@ -91,7 +94,8 @@ def test_bucket_detector_matches_per_key_reference(seed):
     rng = random.Random(seed)
     emitted = 0
     for _ in range(40):
-        emitted += _assert_same(_random_case(rng), rng.choice([0, 1, 2, 3]))
+        # 7 buckets outnumber the at most 6 keys: each group holds one key
+        emitted += _assert_same(_random_case(rng), rng.choice([1, 2, 3, 7]))
     assert emitted > 0
 
 
@@ -111,7 +115,7 @@ def test_bucket_detector_watermark_edges(anchor_us, wm_delta_ms, with_rows):
         ([], wm_ms + 1),
         ([(4, 3 * DL, 1, "purchase")], wm_ms + 1),
     ]
-    for b in (0, 1, 3):
+    for b in (1, 2, 3):  # 3 buckets outnumber the 2 keys
         assert _assert_same(batches, b) > 0
 
 
@@ -123,10 +127,10 @@ def _twin_matches_oracle(spark, duck, sf_dir, monkeypatch, name, buckets):
     assert_matches_oracle(SQ.QUERIES[name](spark, sf_dir), duck, SQ.ORACLES[name])
 
 
-@pytest.mark.parametrize("buckets", ["0", "1", "3", None])
+@pytest.mark.parametrize("buckets", ["1", "3", None])
 def test_order_timeout_twin_same_for_every_bucket_count(spark, duck, sf_dir, monkeypatch, buckets):
-    """The catalog twin hash-matches its oracle under per-key grouping
-    (B=0), one bucket, a prime B and the session default."""
+    """The catalog twin hash-matches its oracle under one bucket, a
+    prime B and the session default."""
     _twin_matches_oracle(
         spark, duck, sf_dir, monkeypatch, "stream_order_timeout_states", buckets
     )
@@ -150,16 +154,27 @@ BUCKETED_TWINS = [
 ]
 
 
-@pytest.mark.parametrize(
-    "buckets",
-    ["0", "3", pytest.param("1", marks=pytest.mark.slow), pytest.param(None, marks=pytest.mark.slow)],
-)
+@pytest.mark.parametrize("buckets", [None, "3", pytest.param("1", marks=pytest.mark.slow)])
 @pytest.mark.parametrize("name", BUCKETED_TWINS)
 def test_twin_same_for_every_bucket_count(spark, duck, sf_dir, monkeypatch, name, buckets):
-    """Each operator's twin hash-matches its oracle under per-key
-    grouping (B=0) and a prime B; one bucket and the session default run
-    in the slow tier."""
+    """Each operator's twin hash-matches its oracle under the session
+    default B and a prime B; one bucket runs in the slow tier."""
     _twin_matches_oracle(spark, duck, sf_dir, monkeypatch, name, buckets)
+
+
+@pytest.mark.parametrize("bad", ["0", "-1", "x"])
+def test_bucket_count_must_be_a_positive_integer(spark, monkeypatch, bad):
+    """Keyed state has one layout, B >= 1 hash buckets: a stream built
+    under another SPARK_GRAFT_STATE_BUCKETS is refused, naming it."""
+    src = spark.readStream.format("rate").load().select(
+        F.col("value").alias("event_id"),
+        F.col("timestamp").alias("ts"),
+        (F.col("value") % 5).alias("user_id"),
+        F.lit("view").alias("event_type"),
+    )
+    monkeypatch.setenv("SPARK_GRAFT_STATE_BUCKETS", bad)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STATE_BUCKETS"):
+        stream_pattern_detect(src, "user_id", [("view", None), ("purchase", None)])
 
 
 def test_bucketed_matcher_fires_member_timer_at_next_watermark():
@@ -197,3 +212,42 @@ def test_bucket_blob_refuses_other_layouts():
         unpack_bucket_blob(blob, (b"otmo", 1), 4)
     with pytest.raises(StateLayoutError, match="older build"):
         unpack_bucket_blob(b"\x80\x04}\x94.", KMAP_CODEC, 4)  # a bare pickle
+
+
+def test_preference_fold_writes_the_chain_state_width():
+    """With no branch state left, the preference fold writes its fused part
+    as CHAIN_STATE_FIELDS + 1 empty arrays ahead of the pending buffer, so
+    the width must be the chain matcher's: a KMAP_CODEC v1 payload from
+    any build splits at the same place."""
+    rows = pd.DataFrame(
+        {
+            "event_id": [1, 2],
+            "ts": pd.to_datetime([0, 1_000_000], unit="us"),
+            "a": [True, False],
+            "b": [False, True],
+        }
+    )
+    chain = _BranchStateSlot(None, 0, False, [])
+    det = make_pattern_matcher(["s1", "s2"], [None, 60_000_000])
+    list(det((1,), iter([rows.iloc[:1].rename(columns={"a": "__p1", "b": "__p2"})]), chain))
+    assert len(chain.value) == CHAIN_STATE_FIELDS
+
+    def project(frame, bi):
+        f = frame[["user_id", "anchor_id", "t1", "t2"]].copy()
+        f["__branch"] = bi
+        return f
+
+    fold = make_preference_fused(
+        [
+            (make_pattern_matcher(["s1", "s2"], [None, 60_000_000]), ["a", "b"],
+             lambda f, bi=bi: project(f, bi))
+            for bi in range(2)
+        ],
+        2,
+        60_000_000,
+    )
+    state = _BranchStateSlot(None, 0, False, [])
+    assert list(fold((1,), iter([rows]), state)) == []  # not final before the horizon
+    fused_part, pending = state.value[: CHAIN_STATE_FIELDS + 1], state.value[CHAIN_STATE_FIELDS + 1:]
+    assert all(len(f) == 0 for f in fused_part)
+    assert [list(p) for p in pending[:2]] == [[0, 1], [1, 1]]  # branch, anchor

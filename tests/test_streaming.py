@@ -148,6 +148,43 @@ def test_detector_unfired_timer_stays_pending(detector):
     assert _pending(st2) == [1]  # anchor still pending
 
 
+@pytest.mark.parametrize(
+    "text, us",
+    [
+        ("6 hours", H6),
+        ("1 hour", 3600 * US),
+        ("INTERVAL 15 MINUTES", 15 * 60 * US),
+        ("0 seconds", 0),
+        ("1 day", 24 * 3600 * US),
+    ],
+)
+def test_interval_spellings(spark, monkeypatch, text, us):
+    """The order-timeout deadline and the dead-letter tap's delay read
+    every interval spelling the batch operators take."""
+    from pyspark.sql import functions as F
+
+    from flink_uba_spark.streaming import order_timeout
+    from flink_uba_spark.streaming.late_rows import WatermarkReplica
+
+    seen = []
+    real = order_timeout.make_bucket_detector
+
+    def spy(deadline_us, *rest):
+        seen.append(deadline_us)
+        return real(deadline_us, *rest)
+
+    monkeypatch.setattr(order_timeout, "make_bucket_detector", spy)
+    events = spark.readStream.format("rate").load().select(
+        F.col("value").alias("event_id"),
+        F.col("timestamp").alias("ts"),
+        (F.col("value") % 5).alias("user_id"),
+        F.lit("signup").alias("event_type"),
+    )
+    order_timeout.stream_order_timeout(events, deadline=text)
+    assert seen == [us]
+    assert WatermarkReplica(text).delay_ms == us // 1000
+
+
 def test_stream_queries_match_oracle(spark, duck, sf_dir):
     for name in ("stream_hot_items", "stream_attribution_join", "stream_order_timeout_states"):
         assert_matches_oracle(SQ.QUERIES[name](spark, sf_dir), duck, SQ.ORACLES[name])

@@ -117,3 +117,26 @@ def test_check_full_artifact_names_match_catalog():
     catalog = set(entrymod.queries())
     dropped = sorted(recorded - catalog)
     assert not dropped, f"CHECK_FULL records queries no longer in the catalog: {dropped}"
+
+
+def test_keyed_state_has_one_applyInPandasWithState_call():
+    """Keyed streaming state runs one way: the engine calls
+    ``applyInPandasWithState`` exactly once, inside
+    ``streaming/pattern._keyed_state_apply``, so every keyed operator gets
+    the hash-bucket layout and its checkpoint header."""
+    calls = []
+    for path in sorted((ROOT / "flink_uba_spark").rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "applyInPandasWithState"
+            ):
+                inside = [
+                    f.name for f in funcs
+                    if f.lineno <= node.lineno <= f.end_lineno
+                ]
+                calls.append((path.relative_to(ROOT).as_posix(), inside))
+    assert calls == [("flink_uba_spark/streaming/pattern.py", ["_keyed_state_apply"])]

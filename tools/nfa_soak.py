@@ -7,7 +7,9 @@ Modes:
   python tools/nfa_soak.py stream [N]    # fake-state NFA, final-timer drive
   python tools/nfa_soak.py timers [N]    # + mid-stream timer firings and
                                          #   lagged watermarks (Spark's real
-                                         #   mechanics)
+                                         #   mechanics) over ms-scale cases;
+                                         #   fails if the watermark never
+                                         #   moves (also stream-consec)
   python tools/nfa_soak.py batch [N]     # the batch compiler on Spark —
                                          #   VECTORIZED (round 6): 100 cases
                                          #   ride one compiled plan as
@@ -158,7 +160,26 @@ def soak_stream(n_cases, timers=False, with_consecs=False):
     from test_properties_round5 import _FakeState, brute_chain, _drive, slot_layout
     from flink_uba_spark.streaming.pattern import make_pattern_matcher
 
+    wm_reads = [0, 0]  # watermark reads by detect calls: all, above 0
+
+    class _WatermarkCountingState(_FakeState):
+        def getCurrentWatermarkMs(self):
+            wm_reads[0] += 1
+            wm_reads[1] += self._wm > 0
+            return self._wm
+
     def drive_timers(events, steps, cuts, guards, opts, stricts, untils=frozenset(), consecs=frozenset()):
+        # event times, cuts, withins and gaps in ms (x1,000 µs): the
+        # watermark is max ts // 1000 ms, so µs-scale cases would leave it
+        # at 0 and never reach a watermark-driven path (run closure by
+        # timer, the restore of a lapsed times() run)
+        events = [(eid, ts * 1000, m) for eid, ts, m in events]
+        cuts = {c * 1000 for c in cuts}
+        steps = [
+            (None if w is None else w * 1000,
+             None if k is None else (k[0] * 1000, *k[1:]))
+            for w, k in steps
+        ]
         n = len(steps)
         if untils:
             slots, pslot, gslot, uslot = slot_layout(n, guards, untils)
@@ -174,7 +195,7 @@ def soak_stream(n_cases, timers=False, with_consecs=False):
             untils={k: f"u{k}" for k in untils},
             consecutives=set(consecs),
         )
-        state = _FakeState()
+        state = _WatermarkCountingState()
         got = []
 
         def _us(v):
@@ -229,7 +250,7 @@ def soak_stream(n_cases, timers=False, with_consecs=False):
         wm_final = (
             max((ts for _, ts, _ in events), default=0) // 1000 if events else None
         )
-        return got, wm_final
+        return got, wm_final, events, steps
 
     t0, fails = time.time(), 0
     for seed in range(n_cases):
@@ -246,7 +267,7 @@ def soak_stream(n_cases, timers=False, with_consecs=False):
                     rnd, with_untils=True
                 )
                 consecs = frozenset()
-            got, wm = drive_timers(
+            got, wm, events, steps = drive_timers(
                 events, steps, cuts, guards, opts, stricts, untils, consecs
             )
         else:
@@ -268,6 +289,11 @@ def soak_stream(n_cases, timers=False, with_consecs=False):
                 break
     print(f"{n_cases} cases ({'timers' if timers else 'final-wm'}), "
           f"{fails} failures, {time.time() - t0:.0f}s")
+    if timers:
+        print(f"watermark reads: {wm_reads[0]}, above 0: {wm_reads[1]}")
+        if not wm_reads[1]:
+            print("FAIL: no detect call read a watermark above 0")
+            return fails + 1
     return fails
 
 
@@ -1446,7 +1472,6 @@ def soak_fused(n_cases):
 
     from test_properties_round5 import _FakeState, brute_chain
     from flink_uba_spark.streaming.pattern import (
-        STATE_SCHEMA,
         make_fused_matcher,
         make_pattern_matcher,
     )
@@ -1479,7 +1504,6 @@ def soak_fused(n_cases):
                 )
                 for m in counts
             ],
-            len(STATE_SCHEMA.fields),
         )
         state = _FakeState()
         got = []
@@ -1779,7 +1803,6 @@ def soak_pref(n_cases):
 
     from test_properties_round5 import _FakeState, brute_chain
     from flink_uba_spark.streaming.pattern import (
-        STATE_SCHEMA,
         make_pattern_matcher,
         make_preference_fused,
     )
@@ -1827,9 +1850,7 @@ def soak_pref(n_cases):
             built.append(
                 (det, [f"c{s}" for s in branch_slots[bi]], project)
             )
-        detect = make_preference_fused(
-            built, len(STATE_SCHEMA.fields), n, horizon
-        )
+        detect = make_preference_fused(built, n, horizon)
         state = _FakeState()
         got = []
 
