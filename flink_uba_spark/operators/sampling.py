@@ -41,13 +41,6 @@ def hash_split(
     )
 
 
-def hash_sample(
-    df: DataFrame, id_col: str = "doc_id", keep_permille: int = 100, salt: str = ""
-) -> DataFrame:
-    """Keep a deterministic ~keep_permille/1000 fraction of rows."""
-    return df.filter(_hash_bucket(F.col(id_col), salt) < keep_permille)
-
-
 def _stratified_topk_by_hash(
     df: DataFrame,
     strata_col: str,

@@ -30,10 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from flink_uba_spark.operators.order_lifecycle import (
-    PAYED,
-    classify_order_states_single_pass,
-)
+from flink_uba_spark.operators.order_lifecycle import classify_order_states_single_pass
 
 
 def sequence_detect(
@@ -60,13 +57,6 @@ def sequence_detect(
     # with the join form is pinned by tests/test_joins.py
     return classify_order_states_single_pass(
         anchors, follows, key=key, deadline=within, anchor_id=event_id, follow_id=event_id, ts=ts
-    )
-
-
-def sequence_matches(events: DataFrame, key: str, first_pred: Column, then_pred: Column, within: str = "INTERVAL 15 MINUTES") -> DataFrame:
-    """Only the matched pairs (the CEP ``select`` main output)."""
-    return sequence_detect(events, key, first_pred, then_pred, within).filter(
-        F.col("state") == PAYED
     )
 
 

@@ -336,8 +336,7 @@ def pq_codebook(
 ) -> DataFrame:
     """Deterministic PQ codebook: ONE row holding the ``n_codes``
     lowest-id corpus vectors (quantized), ordered by id — each subspace
-    slices its sub-centroids out of these. Cross-engine replayable (the
-    trained variant would come from per-subspace k-means, same shape)."""
+    slices its sub-centroids out of these. Cross-engine replayable."""
     q = with_quantized_norms(
         corpus.select(id_col, emb_col).filter(F.col(id_col) < n_codes), emb_col
     )
@@ -345,54 +344,6 @@ def pq_codebook(
         F.array_sort(F.collect_list(F.struct(F.col(id_col).alias("i"), F.col("qemb")))).alias(
             "__cbs"
         )
-    ).select(F.transform(F.col("__cbs"), lambda s: s["qemb"]).alias("cb"))
-
-
-def pq_trained_codebook(
-    corpus: DataFrame,
-    n_codes: int = 16,
-    n_sub: int = 8,
-    dim: int = 64,
-    emb_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 10,
-) -> DataFrame:
-    """Trained PQ codebook: an independent k-means per subspace over the
-    quantized subvectors (the standard PQ training), returned in the same
-    one-row ``cb`` shape ``pq_encode`` expects — entry i concatenates
-    center i of every subspace, which is sound because encoding slices
-    subspaces independently. Each fit is a distributed pyspark.ml run;
-    seeded-reproducible but NOT cross-engine, so the oracle-checked
-    catalog query uses the deterministic ``pq_codebook`` (identical
-    plumbing). On the synthetic near-isotropic Gaussian embeddings the
-    trained book measures the same recall@5 as the sampled one (~0.3 —
-    distance concentration leaves k-means no structure to exploit);
-    on real clustered embeddings training is what makes PQ usable."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    sub_dim = dim // n_sub
-    base = corpus.select(quantized(F.col(emb_col)).alias("q")).cache()
-    centers_by_sub = []
-    for m in range(n_sub):
-        vecs = base.select(
-            array_to_vector(
-                F.slice(F.col("q"), m * sub_dim + 1, sub_dim).cast("array<double>")
-            ).alias("features")
-        )
-        model = KMeans(
-            k=n_codes, seed=seed + m, maxIter=max_iter, initMode="k-means||"
-        ).fit(vecs)
-        centers_by_sub.append([[int(x) for x in c] for c in model.clusterCenters()])
-    base.unpersist()
-    rows = [
-        (i, [x for m in range(n_sub) for x in centers_by_sub[m][i]])
-        for i in range(n_codes)
-    ]
-    sess = corpus.sparkSession
-    cb = sess.createDataFrame(rows, "i long, qemb array<bigint>")
-    return cb.agg(
-        F.array_sort(F.collect_list(F.struct("i", "qemb"))).alias("__cbs")
     ).select(F.transform(F.col("__cbs"), lambda s: s["qemb"]).alias("cb"))
 
 

@@ -24,6 +24,32 @@ path when it starts; every other importer, ``addPyFile`` archives and the
 SparkFiles directory included, is still invalidated on every task. The
 engine root goes on ``spark.executorEnv.PYTHONPATH`` so the daemon (and
 every pickled engine function) imports from any working directory.
+
+The driver JVM runs one JIT policy, ``JIT_POLICY``: HotSpot's tier-4 (C2)
+thresholds raised 10x. In local mode the driver is also the executor, so
+the policy covers every query. A short-lived engine JVM runs most of its
+code a handful of times (each plan's generated classes, each operator's
+setup), yet by default C2 optimizes it anyway. CPU seconds per JVM thread
+group over one ``perfbench/run.py`` run (seed 3, 4 cores), JDK default
+thresholds vs the policy:
+
+    thread group     batch_reports    stream_replay
+                     default  10x     default  10x
+    C2 compiler      56.7     19.4    27.0     7.3
+    C1 compiler      10.4      9.0     6.0     5.4
+    GC                3.0      5.7     1.4     0.9
+    task threads     10.5     11.1     4.5     5.5
+    other JVM        25.3     27.6    15.8    14.9
+    JVM total       106.0     72.7    54.7    34.0
+
+Over 10 alternating pairs (seeds 11-20, 4 cores) the policy raised
+batch_reports events per CPU-s by 50% and stream_replay's by 21%, cut
+both setup_s by about 30%, and left both wall rates unchanged. C1 alone
+(``-XX:TieredStopAtLevel=1``) saves more CPU on these short runs, and is
+rejected: no method ever reaches C2, so repeated queries keep running
+slower C1 code. On bench.py's 20 ``HEADLINE_R01`` queries
+(``tools/time_queries.py``, sf0.1, 4 cores) it took the warm-median total
+from 12.2 s to 18.0 s; the 10x policy measured 12.3 s.
 """
 
 from __future__ import annotations
@@ -36,6 +62,27 @@ from pyspark.sql import SparkSession
 # the directory holding the flink_uba_spark package
 ENGINE_ROOT = str(Path(__file__).resolve().parent.parent)
 
+# HotSpot's tier-4 (C2) thresholds at 10x the JDK 17 defaults (5000,
+# 600, 15000, 40000): a method reaches C2 only after 50,000 calls, or 6,000
+# calls plus enough loop iterations, and code run a few times stays in C1.
+# Sweep of the multiple, perfbench/run.py --trace 0 at 4 cores, medians of
+# seeds 3-6 (3x and 30x: seeds 4-6):
+#
+#   tier-4   batch_reports               stream_replay
+#   scale    ev/CPU-s  setup_s  wall ev/s  ev/CPU-s  setup_s  wall ev/s
+#   1x       5,900     106      14,425     1,162     49.2     3,650
+#   3x       6,206     93.4     13,740     1,326     40.2     3,535
+#   10x      8,005     78.6     13,595     1,383     36.3     3,277
+#   30x      8,265     65.3     12,890     1,466     35.3     3,109
+#
+# 10x is the smallest multiple that gives batch_reports its CPU gain (3x
+# stays inside the seed range of the JDK defaults); 30x gains little more
+# CPU while both wall rates keep falling.
+JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
+
 
 def get_spark(
     app_name: str = "flink-uba-spark",
@@ -43,7 +90,15 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the configured SparkSession."""
+    """Build (or fetch) the configured SparkSession.
+
+    The driver JVM starts with ``JIT_POLICY`` as its
+    ``spark.driver.extraJavaOptions``. A caller's own
+    ``spark.driver.extraJavaOptions`` in ``extra_conf`` replaces the
+    default, so a caller that sets it and still wants the policy appends
+    ``JIT_POLICY`` itself. The options only apply when this call starts the
+    JVM; a session that already exists keeps the flags it started with.
+    """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -78,6 +133,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.python.daemon.module", "flink_uba_spark._pydaemon")
         .config("spark.executorEnv.PYTHONPATH", ENGINE_ROOT)
+        .config("spark.driver.extraJavaOptions", JIT_POLICY)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

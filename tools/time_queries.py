@@ -10,6 +10,15 @@ tree (this process, the JVM and its Python workers; perfbench's
 process; a large value means the JVM is forking, e.g. Hadoop shell-outs
 for file renames and permissions.
 
+The JIT is a layer of its own. Each query also reports the JVM's
+compile-time delta (``CompilationMXBean``, ms of compiler-thread wall
+time), the number of Janino compiles (Spark's generated code; 0 once the
+codegen cache is warm) and the CPU seconds of HotSpot's C1 and C2
+compiler threads, read from ``/proc/<jvm>/task/*/stat``. Compiler threads
+come and go with the JIT's queue, so a sampler keeps each thread's last
+reading; a thread that exits between two samples loses at most one
+interval of CPU.
+
 Usage: python tools/time_queries.py <query> [...]   (env: SPARK_GRAFT_SF_DIR,
 SPARK_GRAFT_CPUS, SPARK_GRAFT_TIME_REPS default 3)
 """
@@ -19,6 +28,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
 
 root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -33,6 +43,46 @@ def reaped_cpu_s(pid: int) -> float:
     with open(f"/proc/{pid}/stat") as f:
         fields = f.read().rsplit(")", 1)[1].split()
     return (int(fields[13]) + int(fields[14])) / os.sysconf("SC_CLK_TCK")
+
+
+class CompilerThreads:
+    """CPU seconds of the JVM's C1 and C2 compiler threads, live or exited."""
+
+    def __init__(self, pid: int, interval: float = 0.2) -> None:
+        self.pid = pid
+        self.interval = interval
+        self._ticks: dict[int, tuple[str, int]] = {}  # tid -> (tier, ticks)
+        self._lock = threading.Lock()
+        threading.Thread(target=self._run, name="jit-sampler", daemon=True).start()
+
+    def _sample(self) -> None:
+        try:
+            tids = os.listdir(f"/proc/{self.pid}/task")
+        except OSError:  # the JVM has exited
+            return
+        for tid in tids:
+            try:
+                with open(f"/proc/{self.pid}/task/{tid}/stat") as f:
+                    comm, rest = f.read().split("(", 1)[1].rsplit(")", 1)
+            except OSError:
+                continue
+            if comm.startswith(("C1 CompilerThre", "C2 CompilerThre")):
+                fields = rest.split()
+                with self._lock:
+                    self._ticks[int(tid)] = (comm[:2], int(fields[11]) + int(fields[12]))
+
+    def _run(self) -> None:
+        while True:
+            time.sleep(self.interval)
+            self._sample()
+
+    def cpu_s(self) -> dict[str, float]:
+        self._sample()
+        out = {"C1": 0.0, "C2": 0.0}
+        with self._lock:
+            for tier, ticks in self._ticks.values():
+                out[tier] += ticks / os.sysconf("SC_CLK_TCK")
+        return out
 
 
 def main() -> None:
@@ -60,36 +110,48 @@ def main() -> None:
         ).mode("overwrite").save()
 
     tree = ProcessTree()
-    jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    jvm = spark._jvm
+    jvm_pid = jvm.java.lang.ProcessHandle.current().pid()
+    compilation = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    janino = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    jit = CompilerThreads(jvm_pid)
 
-    def run(name: str) -> tuple[float, float, float]:
-        """(wall s, process-tree CPU s, JVM reaped-children CPU s)"""
-        t0, cpu0, reaped0 = time.time(), tree.cpu_s(), reaped_cpu_s(jvm_pid)
+    def counters() -> dict[str, float]:
+        threads = jit.cpu_s()
+        return {
+            "wall": time.time(),
+            "cpu_s": tree.cpu_s(),
+            "jvm_reaped_cpu_s": reaped_cpu_s(jvm_pid),
+            "jit_compile_ms": compilation.getTotalCompilationTime(),
+            "janino_compiles": janino.getCount(),
+            "c1_cpu_s": threads["C1"],
+            "c2_cpu_s": threads["C2"],
+        }
+
+    def run(name: str) -> dict[str, float]:
+        """Each counter's delta over one build-and-run of ``name``."""
+        before = counters()
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return (
-            round(time.time() - t0, 3),
-            round(tree.cpu_s() - cpu0, 2),
-            round(reaped_cpu_s(jvm_pid) - reaped0, 2),
-        )
+        after = counters()
+        return {k: round(after[k] - before[k], 3) for k in before}
 
     out = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"time: {name}")
-        cold, cold_cpu, cold_reaped = run(name)
+        cold = run(name)
         warm = [run(name) for _ in range(reps)]
-        walls = sorted(w for w, _, _ in warm)
-        out[name] = {
-            "cold": cold,
-            "warm_median": median(walls),
-            "warm_all": walls,
-            "cold_cpu_s": cold_cpu,
-            "warm_cpu_s": median([c for _, c, _ in warm]),
-            "cold_jvm_reaped_cpu_s": cold_reaped,
-            "warm_jvm_reaped_cpu_s": median([r for _, _, r in warm]),
-        }
+        walls = sorted(w["wall"] for w in warm)
+        out[name] = {"cold": cold["wall"], "warm_median": median(walls), "warm_all": walls}
+        for k in (k for k in cold if k != "wall"):
+            out[name][f"cold_{k}"] = cold[k]
+            out[name][f"warm_{k}"] = round(median([w[k] for w in warm]), 3)
+        r = out[name]
         print(
-            f"# {name}: cold {cold}s warm {walls} cpu {cold_cpu}/{out[name]['warm_cpu_s']}s "
-            f"jvm-reaped {cold_reaped}/{out[name]['warm_jvm_reaped_cpu_s']}s",
+            f"# {name}: cold {r['cold']}s warm {walls} cpu {r['cold_cpu_s']}/{r['warm_cpu_s']}s "
+            f"jvm-reaped {r['cold_jvm_reaped_cpu_s']}/{r['warm_jvm_reaped_cpu_s']}s "
+            f"jit {r['cold_jit_compile_ms']}/{r['warm_jit_compile_ms']}ms "
+            f"c1 {r['cold_c1_cpu_s']}/{r['warm_c1_cpu_s']}s c2 {r['cold_c2_cpu_s']}/{r['warm_c2_cpu_s']}s "
+            f"janino {r['cold_janino_compiles']}/{r['warm_janino_compiles']}",
             file=sys.stderr,
         )
     print(json.dumps(out))
