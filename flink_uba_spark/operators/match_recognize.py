@@ -541,21 +541,28 @@ def _attach_run_aggregates(
     withins_map: dict | None = None,
     default_within_val: str | None = None,
 ) -> DataFrame:
-    """Join each RunAgg's value onto the ONE-row matches as
-    ``__ra_<name>``. The run's member rows are recovered by the same
-    band join the ALL-ROWS route uses — membership is exactly
-    ``(ts, id) >= entry``, ``ts <= run_last``, ``row_number <= n{k}``
-    (run-length fan-out, no cross-key work) — then ONE hash aggregate
-    per variable computes every aggregate over it and an anchor-keyed
-    join carries them back (match-sized, not event-sized). ``subset``
-    maps a UNION variable name (ISO's SUBSET clause) to its member
-    pattern variables: aggregates over it run on the union of the
-    members' bound rows (plain members one row each, quantified members
-    their run, skipped optionals nothing)."""
+    """Attach each RunAgg's value to the ONE-row matches as
+    ``__ra_<name>``, reading the match set ``out`` once.
+
+    A variable's rows are its steps' member rows: a quantified step k (a
+    greedy variable, or a quantified GROUP admitted by the OR of its
+    members' DEFINEs) contributes the ``n{k}``-prefix of its admitted
+    rows from the bound entry — ``(ts, id) >= (t{k}, i{k})``,
+    ``ts <= t{k}_last``, ``row_number <= n{k}`` — and a plain/optional
+    step its bound row (a skipped optional nothing, ISO's unbound
+    variable rule). ``subset`` maps a UNION variable (ISO's SUBSET
+    clause) to member pattern variables; its rows are the union of the
+    members' rows.
+
+    Plan: ONE key-equi left band join of the matches to the input rows
+    that satisfy some step's DEFINE, a per-row step tag (a row in two
+    steps' bands counts once per step), ONE ``row_number`` window over
+    ``(key, anchor_id, step)`` that caps each run at ``n{k}``, then
+    conditional aggregates grouped on the match's own columns — no join
+    back. Every other reference to ``out`` would re-run the whole
+    ``pattern_detect`` window chain and the skip fold under it. A
+    COUNT over a variable with no member rows in the match is NULL."""
     subset = subset or {}
-    by_var: dict[str, dict[str, RunAgg]] = {}
-    for nm, spec in run_aggs.items():
-        by_var.setdefault(spec.var, {})[nm] = spec
     step_of = {var: k for k, (var, _q) in enumerate(parsed, start=1)
                if not isinstance(var, tuple)}
     group_of = {
@@ -563,143 +570,111 @@ def _attach_run_aggregates(
         for k, (var, q) in enumerate(parsed, start=1)
         if isinstance(var, tuple) and q is not None and q[0] == "kleene"
     }
-
-    def _quantified_rows(k: int, pred: Column, val_cols: dict) -> DataFrame:
-        """Per-match run-member rows of quantified step k — the ALL-ROWS
-        band join: (ts, id) >= entry, ts <= run_last, row_number <= n.
-        ``pred`` is the step's admission predicate (a plain variable's
-        DEFINE, or the OR of a quantified GROUP's members)."""
-        m = out.filter(F.col(f"t{k}").isNotNull()).select(
-            F.col(partition_by).alias("__mk"),
-            F.col("anchor_id"),
-            F.col(f"t{k}").alias("__t0"),
-            F.col(f"i{k}").alias("__i0"),
-            F.col(f"t{k}_last").alias("__tl"),
-            F.col(f"n{k}").alias("__n"),
-        )
-        leg = events.filter(pred).select(
-            F.col(partition_by).alias("__ek"),
-            F.col(event_id).alias("__eid"),
-            F.col(order_by).alias("__ets"),
-            *[c.alias(nm) for nm, c in val_cols.items()],
-        )
-        j = m.join(
-            leg,
-            (F.col("__mk") == F.col("__ek"))
-            & (
-                (F.col("__ets") > F.col("__t0"))
-                | (
-                    (F.col("__ets") == F.col("__t0"))
-                    & (F.col("__eid") >= F.col("__i0"))
-                )
-            )
-            & (F.col("__ets") <= F.col("__tl")),
-        )
-        wr = Window.partitionBy("__mk", "anchor_id").orderBy("__ets", "__eid")
-        return (
-            j.withColumn("__rn", F.row_number().over(wr))
-            .filter(F.col("__rn") <= F.col("__n"))
-            .select("__mk", "anchor_id", "__ets", "__eid",
-                    *list(val_cols))
-        )
-
-    def _plain_rows(k: int, val_cols: dict) -> DataFrame:
-        """Per-match bound row of plain/optional step k (skipped optional
-        steps contribute nothing, per ISO's unbound-variable rule) —
-        an id-equi join back to the input carries the value columns."""
-        m = out.filter(F.col(f"t{k}").isNotNull()).select(
-            F.col(partition_by).alias("__mk"),
-            F.col("anchor_id"),
-            F.col(f"i{k}").alias("__bid"),
-        )
-        leg = events.select(
-            F.col(partition_by).alias("__ek"),
-            F.col(event_id).alias("__eid"),
-            F.col(order_by).alias("__ets"),
-            *[c.alias(nm) for nm, c in val_cols.items()],
-        )
-        return m.join(
-            leg,
-            (F.col("__mk") == F.col("__ek"))
-            & (F.col("__bid") == F.col("__eid")),
-        ).select("__mk", "anchor_id", "__ets", "__eid", *list(val_cols))
-
-    for var, specs in by_var.items():
-        val_cols = {}
-        for nm, spec in specs.items():
-            if spec.col is not None:
-                c = F.col(spec.col) if isinstance(spec.col, str) else spec.col
-                val_cols[f"__v_{nm}"] = c
+    is_run = {k: q is not None and q[0] == "kleene"
+              for k, (_v, q) in enumerate(parsed, start=1)}
+    steps_of: dict[str, list[int]] = {}  # RunAgg variable -> member steps
+    pred_of: dict[int, Column] = {}      # step -> admission predicate
+    for spec in run_aggs.values():
+        var = spec.var
         if var in subset:
-            # SUBSET union variable (round 9 second pass, ISO 9075-2
-            # <row pattern subset clause>): its rows are the UNION of the
-            # members' bound rows in (ts, id) row order — quantified
-            # members contribute their whole run, plain members their
-            # bound row, skipped optionals nothing
-            run_rows = None
-            for member in subset[var]:
-                mk = step_of[member]
-                mq = parsed[mk - 1][1]
-                part = (
-                    _quantified_rows(mk, define[member], val_cols)
-                    if mq is not None and mq[0] == "kleene"
-                    else _plain_rows(mk, val_cols)
-                )
-                run_rows = part if run_rows is None else run_rows.unionByName(part)
+            members = [(step_of[m], define[m]) for m in subset[var]]
         elif var in group_of:
-            # quantified GROUP run (round 9 second pass): the run's
-            # admission predicate is the OR of the members' DEFINEs —
-            # the same OR-Kleene step the single-plan compile built
-            k, members = group_of[var]
+            k, group = group_of[var]
             pred, _w = _group_pred_within(
-                members, define, withins_map, default_within_val
+                group, define, withins_map, default_within_val
             )
-            run_rows = _quantified_rows(k, pred, val_cols)
+            members = [(k, pred)]
+        elif var in step_of and is_run[step_of[var]]:
+            members = [(step_of[var], define[var])]
         else:
-            k = step_of.get(var)
-            q = parsed[k - 1][1] if k else None
-            if k is None or q is None or q[0] != "kleene":
-                raise ValueError(
-                    f"RunAgg navigates a GREEDY-quantified variable's run, "
-                    f"a quantified GROUP's run, or a SUBSET union "
-                    f"variable; {var!r} is none of these (plain variables "
-                    "project their bound row's columns directly; "
-                    "reluctant runs multi-match and keep per-count rows)"
-                )
-            run_rows = _quantified_rows(k, define[var], val_cols)
-        agg_exprs = []
-        for nm, spec in specs.items():
-            v = F.col(f"__v_{nm}") if spec.col is not None else None
-            if spec.func == "sum":
-                e = F.sum(v)
-            elif spec.func == "count":
-                e = F.count(v if v is not None else F.lit(1))
-            elif spec.func == "avg":
-                e = F.avg(v)
-            elif spec.func == "min":
-                e = F.min(v)
-            elif spec.func == "max":
-                e = F.max(v)
-            else:  # first / last — ISO logical navigation with offset
-                arr = F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            F.col("__ets").alias("t"),
-                            F.col("__eid").alias("i"),
-                            v.alias("v"),
-                        )
-                    ),
-                    asc=(spec.func == "first"),
-                )
-                e = F.get(arr, spec.n)["v"]
-            agg_exprs.append(e.alias(f"__ra_{nm}"))
-        aggs = (
-            run_rows.groupBy("__mk", "anchor_id")
-            .agg(*agg_exprs)
-            .withColumnRenamed("__mk", partition_by)
+            raise ValueError(
+                f"RunAgg navigates a GREEDY-quantified variable's run, "
+                f"a quantified GROUP's run, or a SUBSET union "
+                f"variable; {var!r} is none of these (plain variables "
+                "project their bound row's columns directly; "
+                "reluctant runs multi-match and keep per-count rows)"
+            )
+        steps_of[var] = [k for k, _p in members]
+        pred_of.update(members)
+    steps = sorted(pred_of)
+    val_cols = {
+        f"__v_{nm}": F.col(spec.col) if isinstance(spec.col, str) else spec.col
+        for nm, spec in run_aggs.items()
+        if spec.col is not None
+    }
+    any_pred = None
+    for k in steps:
+        any_pred = pred_of[k] if any_pred is None else (any_pred | pred_of[k])
+    leg = events.filter(any_pred).select(
+        F.col(partition_by).alias("__ek"),
+        F.col(event_id).alias("__eid"),
+        F.col(order_by).alias("__ets"),
+        *[pred_of[k].alias(f"__p{k}") for k in steps],
+        *[c.alias(nm) for nm, c in val_cols.items()],
+    )
+    ets, eid = F.col("__ets"), F.col("__eid")
+
+    def member(k: int) -> Column:
+        if not is_run[k]:
+            return eid == F.col(f"i{k}")
+        t0, i0 = F.col(f"t{k}"), F.col(f"i{k}")
+        return (
+            F.col(f"__p{k}")
+            & ((ets > t0) | ((ets == t0) & (eid >= i0)))
+            & (ets <= F.col(f"t{k}_last"))
         )
-        out = out.join(aggs, on=[partition_by, "anchor_id"], how="left")
-    return out
+
+    in_any = None
+    for k in steps:
+        in_any = member(k) if in_any is None else (in_any | member(k))
+    tag = F.filter(
+        F.array(*[F.when(member(k), F.lit(k)) for k in steps]),
+        lambda x: x.isNotNull(),
+    )
+    rows = out.join(
+        leg, (F.col(partition_by) == F.col("__ek")) & in_any, "left"
+    ).withColumn("__step", F.explode_outer(tag))
+    runs = [k for k in steps if is_run[k]]
+    if runs:
+        cap = F.coalesce(
+            *[F.when(F.col("__step") == k, F.col(f"n{k}")) for k in runs]
+        )
+        w = Window.partitionBy(partition_by, "anchor_id", "__step").orderBy(
+            "__ets", "__eid"
+        )
+        rows = rows.withColumn("__rn", F.row_number().over(w)).filter(
+            cap.isNull() | (F.col("__rn") <= cap)
+        )
+    agg_exprs = []
+    for nm, spec in run_aggs.items():
+        inv = F.col("__step").isin(*steps_of[spec.var])
+        v = F.when(inv, F.col(f"__v_{nm}")) if spec.col is not None else None
+        if spec.func == "sum":
+            e = F.sum(v)
+        elif spec.func == "count":
+            e = F.when(
+                F.count(F.when(inv, F.lit(1))) > 0,
+                F.count(v if v is not None else F.when(inv, F.lit(1))),
+            )
+        elif spec.func == "avg":
+            e = F.avg(v)
+        elif spec.func == "min":
+            e = F.min(v)
+        elif spec.func == "max":
+            e = F.max(v)
+        else:  # first / last — ISO logical navigation with offset
+            arr = F.sort_array(
+                F.collect_list(
+                    F.when(inv, F.struct(
+                        ets.alias("t"), eid.alias("i"),
+                        F.col(f"__v_{nm}").alias("v"),
+                    ))
+                ),
+                asc=(spec.func == "first"),
+            )
+            e = F.get(arr, spec.n)["v"]
+        agg_exprs.append(e.alias(f"__ra_{nm}"))
+    return rows.groupBy(*out.columns).agg(*agg_exprs)
 
 
 def match_recognize(

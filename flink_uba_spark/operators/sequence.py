@@ -829,14 +829,9 @@ def after_match_skip_past_last(
     (skip-till-next runs bind independently, and every binding is
     strictly after its own anchor, hence past the horizon).
 
-    Scale: the greedy horizon scan is inherently sequential per key, but
-    it runs over the MATCH set, not the event set — one extra exchange
-    on the key of match-sized data, then a linear pass per key inside
-    ``applyInPandas``. At 100 TB the match set is output-sized (bounded
-    by the rarest step's frequency), orders of magnitude below the scan.
+    Runs on ``_horizon_fold`` (strict ``>``), the kernel shared with
+    ``after_match_skip_to_first``.
     """
-    import pandas as pd
-
     if end_ts is None:
         tcols = sorted(
             (c for c in matches.columns if c.startswith("t") and c[1:].isdigit()),
@@ -845,42 +840,74 @@ def after_match_skip_past_last(
         if not tcols:
             raise ValueError("no t{k} columns to infer end_ts from")
         end_ts = tcols[-1]
-    cols = list(matches.columns)
-    schema = matches.schema
+    return _horizon_fold(
+        matches, key,
+        order=[end_ts, end_id, anchor_ts, anchor_id],
+        anchor=(anchor_ts, anchor_id),
+        bound=(end_ts, end_id),
+        strict=True,
+    )
 
-    # exchange on pmod(hash(key), 64) rather than the raw key: per-key
-    # pandas groups cost ~3 ms each in Arrow overhead, so thousands of
-    # tiny key groups dominate at test SF; the per-key replay runs
-    # unchanged inside the bucket (horizon resets on key change), and 64
-    # buckets bound parallelism — raise for a bigger cluster (round 7,
-    # same change as after_match_skip_to_first)
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pdf[cols]
-        pdf = pdf.sort_values(
-            [key, end_ts, end_id, anchor_ts, anchor_id], kind="mergesort"
-        ).reset_index(drop=True)
-        kv = pdf[key].to_numpy()
-        a_ts = pdf[anchor_ts].astype("datetime64[ns]").astype("int64").to_numpy()
-        a_id = pdf[anchor_id].to_numpy().astype("int64")
-        e_ts = pdf[end_ts].astype("datetime64[ns]").astype("int64").to_numpy()
-        e_id = pdf[end_id].to_numpy().astype("int64")
-        keep = [False] * len(pdf)
-        cur = None
-        le_ts = le_id = None
-        for i in range(len(pdf)):
-            if kv[i] != cur:
-                cur, le_ts, le_id = kv[i], None, None
-            if le_ts is None or (a_ts[i], a_id[i]) > (le_ts, le_id):
-                keep[i] = True
-                le_ts, le_id = e_ts[i], e_id[i]
-        return pdf.loc[keep, cols]
 
-    bucket = F.pmod(F.hash(F.col(key)), F.lit(64))
+def _horizon_fold(
+    matches: DataFrame,
+    key: str,
+    order: list[str],
+    anchor: tuple[str, str],
+    bound: tuple[str, str],
+    strict: bool,
+) -> DataFrame:
+    """The after-match horizon walk both skip folds share: per key, in
+    ``order``, a candidate survives iff its ``anchor`` (ts, id) is past
+    the horizon — strictly (``strict``, SKIP PAST LAST) or at-or-past
+    (SKIP TO) — and a survivor raises the horizon to the max of itself
+    and its ``bound`` (ts, id).
+
+    Plan: ``repartition(key)`` → ``sortWithinPartitions(key, order)`` →
+    one ``mapInArrow`` kernel per partition. A key's candidates are
+    contiguous in the sorted partition and may straddle Arrow record
+    batches, so the kernel carries the current key and its horizon
+    across batches: one linear pass, no per-group pandas frames. The
+    walk is sequential only WITHIN a key and runs over the MATCH set
+    (output-sized, bounded by the rarest step's frequency), so the fold
+    scales with the key space like every other keyed stage.
+    """
+    import operator
+
+    import pyarrow as pa
+
+    past = operator.gt if strict else operator.ge
+    no_key = object()
+
+    def _ints(batch, name: str) -> list:
+        col = batch.column(name)
+        if pa.types.is_timestamp(col.type):
+            col = col.cast(pa.int64())
+        return col.to_numpy(zero_copy_only=False).tolist()
+
+    def kernel(batches):
+        cur, h = no_key, None
+        for batch in batches:
+            keep = []
+            for kv, a, b in zip(
+                batch.column(key).to_pylist(),
+                zip(_ints(batch, anchor[0]), _ints(batch, anchor[1])),
+                zip(_ints(batch, bound[0]), _ints(batch, bound[1])),
+            ):
+                if kv != cur:
+                    cur, h = kv, None
+                if h is None or past(a, h):
+                    keep.append(True)
+                    if h is None or b > h:
+                        h = b
+                else:
+                    keep.append(False)
+            yield batch.filter(pa.array(keep, type=pa.bool_()))
+
     return (
-        matches.withColumn("__b", bucket)
-        .groupBy("__b")
-        .applyInPandas(lambda pdf: fold(pdf.drop(columns="__b")), schema)
+        matches.repartition(key)
+        .sortWithinPartitions(key, *order)
+        .mapInArrow(kernel, matches.schema)
     )
 
 
@@ -999,16 +1026,9 @@ def after_match_skip_to_first(
     (not the strictly-past of SKIP_PAST_LAST) is Flink's "started
     before" clause verbatim.
 
-    Scale: same class as the skip_past_last fold — one match-sized
-    exchange, then a linear per-key pass in ``applyInPandas``. The
-    exchange key is ``pmod(hash(key), n_buckets)`` rather than the raw
-    key: per-key pandas groups cost ~3 ms each in Arrow/conversion
-    overhead, so thousands of tiny key groups dominate wall time at test
-    SF (measured 6.1 s → 0.9 s on 1948 matches / 1500 keys); bucketing
-    amortizes that while the per-key replay runs unchanged inside the
-    bucket. n_buckets bounds parallelism — set it to the cluster's
-    task budget at 100 TB (the greedy replay stays sequential only
-    WITHIN a key, as it must).
+    Runs on ``_horizon_fold`` (``>=``, the horizon the max over
+    emitted matches), the kernel shared with
+    ``after_match_skip_past_last``.
 
     The replay order must be TOTAL over candidates — two followedByAny
     branches can share end AND anchor, differing only in middle
@@ -1017,8 +1037,6 @@ def after_match_skip_to_first(
     sort key ascending (earliest-binding branch first, the family's
     canonicalization; found by the 3-SF gate on first wiring).
     """
-    import pandas as pd
-
     tcols = sorted(
         (c for c in matches.columns if c[0] == "t" and c[1:].isdigit()),
         key=lambda c: int(c[1:]),
@@ -1026,38 +1044,13 @@ def after_match_skip_to_first(
     n = len(tcols)
     if not 2 <= step <= n:
         raise ValueError(f"step must be in [2, {n}]")
-    cols = list(matches.columns)
-    schema = matches.schema
-    sort_cols = [key, f"t{n}", f"i{n}", "t1", "i1"] + [
-        c for k in range(2, n) for c in (f"t{k}", f"i{k}")
-    ]
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pdf[cols]
-        pdf = pdf.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
-        kv = pdf[key].to_numpy()
-        a_ts = pdf["t1"].astype("datetime64[ns]").astype("int64").to_numpy()
-        a_id = pdf["i1"].to_numpy().astype("int64")
-        p_ts = pdf[f"t{step}"].astype("datetime64[ns]").astype("int64").to_numpy()
-        p_id = pdf[f"i{step}"].to_numpy().astype("int64")
-        keep = [False] * len(pdf)
-        cur = None
-        h_ts = h_id = None
-        for i in range(len(pdf)):
-            if kv[i] != cur:
-                cur, h_ts, h_id = kv[i], None, None
-            if h_ts is None or (a_ts[i], a_id[i]) >= (h_ts, h_id):
-                keep[i] = True
-                if h_ts is None or (p_ts[i], p_id[i]) > (h_ts, h_id):
-                    h_ts, h_id = p_ts[i], p_id[i]
-        return pdf.loc[keep, cols]
-
-    bucket = F.pmod(F.hash(F.col(key)), F.lit(64))
-    return (
-        matches.withColumn("__b", bucket)
-        .groupBy("__b")
-        .applyInPandas(lambda pdf: fold(pdf.drop(columns="__b")), schema)
+    return _horizon_fold(
+        matches, key,
+        order=[f"t{n}", f"i{n}", "t1", "i1"]
+        + [c for k in range(2, n) for c in (f"t{k}", f"i{k}")],
+        anchor=("t1", "i1"),
+        bound=(f"t{step}", f"i{step}"),
+        strict=False,
     )
 
 

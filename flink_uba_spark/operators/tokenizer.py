@@ -125,103 +125,6 @@ def bpe_train(
     return spark.createDataFrame(merges, schema)
 
 
-def bpe_train_batched(
-    docs: DataFrame,
-    n_merges: int,
-    k_per_round: int = 16,
-    text_col: str = "text",
-    checkpoint_every: int = 8,
-) -> DataFrame:
-    """BATCHED BPE merge learning (round 10 — VERDICT r9 item 8, the
-    production path past ``bpe_train``'s sequential envelope): per round,
-    ONE pair-count aggregate selects up to ``k_per_round`` COMPATIBLE
-    merges (greedy by the same (count DESC, lhs, rhs) order, a pair is
-    admitted only if its symbols are DISJOINT from every pair already
-    chosen this round), applied together. Disjoint-symbol replaces touch
-    disjoint text positions, so the batch application equals applying
-    them sequentially in any order — the semantics stay exact
-    left-to-right greedy merges.
-
-    DOCUMENTED DIVERGENCE from exact sequential BPE (Sennrich et al.):
-    the 2nd..k-th pair of a round is chosen by its count at the ROUND
-    START — sequential BPE would re-count after each merge, and a merge
-    can change a DIFFERENT pair's count only through shared symbols
-    (exactly what the compatibility filter forbids) or through the NEW
-    merged symbol's pairs (which sequential BPE could rank above the
-    round's remaining picks). In practice the drift is tail-order only;
-    test_bpe_batched_quality pins the fixture-corpus agreement, and
-    ``k_per_round=1`` is bit-identical to ``bpe_train`` (pinned).
-
-    Why this survives a production 32k-merge vocabulary where the
-    sequential trainer does not (SCALE.md "BPE merge-count envelope"):
-    the driver loop shrinks from n_merges jobs to n_merges/k rounds —
-    at k=64, a 32k-merge train is ~500 aggregate+collect rounds
-    (minutes) instead of ~32k (hours); each round still collects ≤ ~4k
-    tiny rows, never data-sized."""
-    if k_per_round < 1:
-        raise ValueError("k_per_round must be >= 1")
-    vocab = word_frequencies(docs, text_col).cache()
-    merges: list[tuple[int, str, str, int]] = []
-    rounds = 0
-    while len(merges) < n_merges:
-        budget = n_merges - len(merges)
-        want = min(k_per_round, budget)
-        syms = F.split(F.btrim(F.col("syms")), "  ")
-        pairs = (
-            vocab.select(
-                "cnt",
-                F.explode(
-                    F.arrays_zip(
-                        F.slice(syms, 1, F.size(syms) - 1).alias("lhs"),
-                        F.slice(syms, 2, F.size(syms) - 1).alias("rhs"),
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.lhs").alias("lhs"), F.col("p.rhs").alias("rhs"))
-            .agg(F.sum("cnt").cast("long").alias("pair_count"))
-        )
-        # over-fetch so the compatibility filter can skip conflicting
-        # pairs and still usually fill the round
-        top = pairs.orderBy(
-            F.desc("pair_count"), F.asc("lhs"), F.asc("rhs")
-        ).limit(4 * want).collect()
-        if not top:
-            break
-        chosen, used = [], set()
-        for r in top:
-            if len(chosen) >= want:
-                break
-            if r.lhs in used or r.rhs in used:
-                continue
-            chosen.append(r)
-            used.update((r.lhs, r.rhs))
-        if not chosen:
-            chosen = [top[0]]  # all conflict → sequential fallback step
-        for r in chosen:
-            merges.append((len(merges) + 1, r.lhs, r.rhs, int(r.pair_count)))
-            vocab = vocab.withColumn(
-                "syms",
-                F.replace(
-                    "syms",
-                    F.lit(f" {r.lhs}  {r.rhs} "),
-                    F.lit(f" {r.lhs}{r.rhs} "),
-                ),
-            )
-        rounds += 1
-        if checkpoint_every and rounds % checkpoint_every == 0:
-            vocab = vocab.localCheckpoint(eager=True)
-    spark = docs.sparkSession
-    schema = T.StructType(
-        [
-            T.StructField("step", T.LongType()),
-            T.StructField("lhs", T.StringType()),
-            T.StructField("rhs", T.StringType()),
-            T.StructField("pair_count", T.LongType()),
-        ]
-    )
-    return spark.createDataFrame(merges, schema)
-
-
 def bpe_segment(
     docs: DataFrame,
     merge_rules: list[tuple[str, str]],

@@ -1154,9 +1154,10 @@ def match_recognize_measures_run_agg(spark: SparkSession, sf_dir: str) -> DataFr
     / ``FIRST(E.cents)`` / ``LAST(E.cents)`` on ``PATTERN (S E{1,3} P)
     AFTER MATCH SKIP PAST LAST ROW`` — the SQL twin of Flink's
     ``ctx.getEventsForPattern("E")`` folds. The run members are
-    recovered by the ALL-ROWS band join (membership = the n-prefix of
-    the step's rows from the bound entry) and ONE hash aggregate per
-    variable computes every measure; the join back is match-sized."""
+    recovered by one band join of the matches to the input (membership =
+    the n-prefix of the step's rows from the bound entry), and one
+    aggregate over the matches computes every measure, with no join
+    back."""
     from flink_uba_spark.operators.match_recognize import (
         match_recognize,
         run_agg,

@@ -95,6 +95,48 @@ def stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_table(joined)
 
 
+def _hot_pages_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The HotPages page stream as a three-file replay (one micro-batch
+    each under ``maxFilesPerTrigger=1``): the on-time bulk A, the pusher
+    rows P of the final hour (``ts > Tmax - 1h``) and the very-late rows L
+    (``ts <= Tmax - 12h AND event_id % 19 = 0``). See
+    ``stream_hot_pages`` for what each batch does to the watermark."""
+    from pyspark.sql import types as T
+
+    from flink_uba_spark.sources.readers import load_testdata
+
+    pages = (
+        load_testdata(spark, sf_dir, ("events",))["events"]
+        .filter(~F.col("event_type").rlike(HOT_PAGES_EXCLUDE))
+        .select("event_id", F.col("event_type").alias("page"), "ts")
+    )
+
+    def _batches():
+        # event-time max as a broadcast one-row join, not a driver collect —
+        # the cutoff predicates stay fully declarative, and the builder only
+        # runs on per-process replay-memo miss (once per invocation)
+        p = pages.crossJoin(F.broadcast(pages.agg(F.max("ts").alias("__tmax"))))
+        is_late = (F.col("ts") <= F.col("__tmax") - F.expr("INTERVAL 12 HOURS")) & (
+            F.col("event_id") % 19 == 0
+        )
+        is_pusher = F.col("ts") > F.col("__tmax") - F.expr("INTERVAL 1 HOUR")
+        return [
+            p.filter(~is_late & ~is_pusher).select("page", "ts"),
+            p.filter(is_pusher).select("page", "ts"),
+            p.filter(is_late).select("page", "ts"),
+        ]
+
+    replay_dir = write_replay(_batches, tag="hot_pages", cache_key=sf_dir)
+    schema = T.StructType(
+        [T.StructField("page", T.StringType()), T.StructField("ts", T.TimestampType())]
+    )
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(replay_dir)
+    )
+
+
 def stream_hot_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HotPages in its native streaming form with the reference's NON-ZERO
     bounded out-of-orderness (5 s watermark delay, HotPages.java:57-62) and
@@ -118,40 +160,7 @@ def stream_hot_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     window_end ≤ floor_ms(Tmax) - 5 s. Ranking (top-3) is applied to the
     finalized windows, as in stream_hot_items.
     """
-    from pyspark.sql import types as T
-
-    from flink_uba_spark.sources.readers import load_testdata
-
-    pages = (
-        load_testdata(spark, sf_dir, ("events",))["events"]
-        .filter(~F.col("event_type").rlike(HOT_PAGES_EXCLUDE))
-        .select("event_id", F.col("event_type").alias("page"), "ts")
-    )
-    def _batches():
-        # event-time max as a broadcast one-row join, not a driver collect —
-        # the cutoff predicates stay fully declarative, and the builder only
-        # runs on per-process replay-memo miss (once per invocation)
-        p = pages.crossJoin(F.broadcast(pages.agg(F.max("ts").alias("__tmax"))))
-        is_late = (F.col("ts") <= F.col("__tmax") - F.expr("INTERVAL 12 HOURS")) & (
-            F.col("event_id") % 19 == 0
-        )
-        is_pusher = F.col("ts") > F.col("__tmax") - F.expr("INTERVAL 1 HOUR")
-        return [
-            p.filter(~is_late & ~is_pusher).select("page", "ts"),
-            p.filter(is_pusher).select("page", "ts"),
-            p.filter(is_late).select("page", "ts"),
-        ]
-
-    replay_dir = write_replay(_batches, tag="hot_pages", cache_key=sf_dir)
-
-    schema = T.StructType(
-        [T.StructField("page", T.StringType()), T.StructField("ts", T.TimestampType())]
-    )
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
+    sdf = _hot_pages_stream(spark, sf_dir)
     counts = run_to_table(
         stream_windowed_counts(
             sdf, F.col("page"), "page",
@@ -199,6 +208,45 @@ SELECT window_start, window_end, page, cnt, rnk FROM ranked WHERE rnk <= 3
 """
 
 
+def stream_hot_pages_late_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """W9 — HotPages.java:78-79's ``sideOutputLateData``: the rows of the
+    ``stream_hot_pages`` replay that are late for EVERY window they belong
+    to (6 h windows sliding by 30 min, 5 s delay), side-output by the
+    dead-letter tap (``streaming/late_rows.dead_letter_tap``) into a
+    parquet sink and read back.
+
+    Batch 0 runs at no watermark and batch 1's watermark (max(A) - 5 s)
+    is older than every window end of the final hour's rows, so neither
+    side-outputs a row; batch 2 runs at ``Tmax - 5 s`` and every window of
+    its very-late rows ended by ``Tmax - 6 h``. The side output is
+    exactly L, the rows ``stream_hot_pages``'s aggregation drops."""
+    import tempfile
+    import uuid
+    from pathlib import Path
+
+    from flink_uba_spark.streaming.late_rows import dead_letter_tap
+
+    sink = (
+        Path(tempfile.gettempdir()) / "spark_graft_stream"
+        / f"late_rows_{uuid.uuid4().hex[:12]}"
+    )
+    dead_letter_tap(
+        _hot_pages_stream(spark, sf_dir), str(sink),
+        size="6 hours", slide="30 minutes", delay="5 seconds",
+    ).awaitTermination()
+    return spark.read.parquet(str(sink)).select("page", "ts")
+
+
+STREAM_HOT_PAGES_LATE_ROWS_ORACLE = """
+WITH pages AS (
+    SELECT event_id, event_type AS page, ts FROM events
+    WHERE NOT regexp_matches(event_type, '^(error|signup)$')
+)
+SELECT page, ts FROM pages
+WHERE ts <= (SELECT max(ts) FROM pages) - INTERVAL 12 HOUR AND event_id % 19 = 0
+"""
+
+
 def stream_hot_pages_allowed_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W8 — Flink allowedLateness, reproduced with Spark-native semantics
     (HotPages.java:67 ``allowedLateness(Time.minutes(1))`` generalized).
@@ -221,38 +269,7 @@ def stream_hot_pages_allowed_lateness(spark: SparkSession, sf_dir: str) -> DataF
     ``n_emissions`` = 2 are the re-fired (late-updated) windows — the
     observable allowedLateness behavior.
     """
-    from pyspark.sql import types as T
-
-    from flink_uba_spark.sources.readers import load_testdata
-
-    pages = (
-        load_testdata(spark, sf_dir, ("events",))["events"]
-        .filter(~F.col("event_type").rlike(HOT_PAGES_EXCLUDE))
-        .select("event_id", F.col("event_type").alias("page"), "ts")
-    )
-    def _batches():
-        # same declarative cutoff construction as stream_hot_pages
-        p = pages.crossJoin(F.broadcast(pages.agg(F.max("ts").alias("__tmax"))))
-        is_late = (F.col("ts") <= F.col("__tmax") - F.expr("INTERVAL 12 HOURS")) & (
-            F.col("event_id") % 19 == 0
-        )
-        is_pusher = F.col("ts") > F.col("__tmax") - F.expr("INTERVAL 1 HOUR")
-        return [
-            p.filter(~is_late & ~is_pusher).select("page", "ts"),
-            p.filter(is_pusher).select("page", "ts"),
-            p.filter(is_late).select("page", "ts"),
-        ]
-
-    replay_dir = write_replay(_batches, tag="hot_pages_al", cache_key=sf_dir)
-
-    schema = T.StructType(
-        [T.StructField("page", T.StringType()), T.StructField("ts", T.TimestampType())]
-    )
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
+    sdf = _hot_pages_stream(spark, sf_dir)
     emissions = run_to_table(
         stream_windowed_counts(
             sdf, F.col("page"), "page",
@@ -4413,6 +4430,7 @@ QUERIES = {
     "stream_tx_reconcile": stream_tx_reconcile,
     "stream_hot_pages": stream_hot_pages,
     "stream_hot_pages_allowed_lateness": stream_hot_pages_allowed_lateness,
+    "stream_hot_pages_late_rows": stream_hot_pages_late_rows,
     "stream_dedup_events": stream_dedup_events,
     "stream_dedup_incremental": stream_dedup_incremental,
     "stream_daily_anomaly": stream_daily_anomaly,
@@ -4506,5 +4524,6 @@ ORACLES = {
     "stream_tx_reconcile": STREAM_TX_RECONCILE_ORACLE,
     "stream_hot_pages": STREAM_HOT_PAGES_ORACLE,
     "stream_hot_pages_allowed_lateness": STREAM_HOT_PAGES_ALLOWED_LATENESS_ORACLE,
+    "stream_hot_pages_late_rows": STREAM_HOT_PAGES_LATE_ROWS_ORACLE,
     "stream_dedup_events": STREAM_DEDUP_EVENTS_ORACLE,
 }

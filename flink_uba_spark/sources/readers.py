@@ -120,39 +120,6 @@ def stream_kafka(spark: SparkSession, topic: str = "hotitems", servers: str = "l
     )
 
 
-def parse_user_behavior_values(values: DataFrame) -> DataFrame:
-    """Decode a ``value: string`` frame — the shape every Kafka source
-    yields after the cast in ``stream_kafka`` — into the typed UserBehavior
-    frame, identically to the batch CSV reader.
-
-    This is the glue the reference's commented Kafka wiring implies
-    (HotItem.java:34-41 feeds the same CSV lines through
-    FlinkKafkaConsumer): downstream topologies are source-agnostic, so
-    swapping file → Kafka is ONLY a ``format("kafka")`` change. Verified
-    broker-free in tests/test_sources.py by driving the hot-items topology
-    through a file stream of value-lines and matching the batch answer —
-    the strongest S3 evidence this container permits (no Kafka jar/broker).
-
-    ``from_csv`` (codegen'd, permissive: malformed lines yield nulls, same
-    contract as the try_to_timestamp path in read_apache_log) rather than
-    per-field split/getItem so the line is tokenized once.
-    """
-    parsed = values.select(
-        F.from_csv(
-            F.col("value"),
-            schemas.USER_BEHAVIOR_RAW.simpleString(),
-            {"mode": "PERMISSIVE"},
-        ).alias("r")
-    )
-    return parsed.select(
-        "r.userId",
-        "r.itemId",
-        "r.categoryId",
-        "r.behavior",
-        F.timestamp_seconds("r.timestamp").alias("ts"),
-    )
-
-
 def stream_rate(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
     """Rate source for load tests (no reference twin; used by bench/dev)."""
     return (

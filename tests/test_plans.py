@@ -179,3 +179,40 @@ def test_iterative_compile_legs_push_predicates_to_scan(spark, sf_dir):
     assert "InMemoryTableScan" not in p
     # band joins collapse immediately: partial min_by before each shuffle
     assert "min_by" in p
+
+
+def test_subset_agg_reads_the_match_set_once(spark, sf_dir):
+    """Run aggregates attach through ONE band join of the matches to the
+    member rows and aggregate with no join back: every extra reference to
+    the match set would re-run the pattern_detect window chain and the
+    skip fold (AQE reuses identical Exchanges, not the Python stage above
+    them)."""
+    from flink_uba_spark.queries import rowpattern
+
+    p = plan_of(spark, sf_dir, rowpattern.match_recognize_subset_agg)
+    assert count_nodes(p, "Exchange") <= 4
+    assert count_nodes(p, "(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)") == 1
+    assert count_nodes(p, "MapInArrow") == 1  # the skip fold, once
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "match_recognize_subset_agg",
+        "match_recognize_alternation",
+        "match_recognize_permute",
+        "match_recognize_skip_to_first",
+        "match_recognize_iterative",
+        "match_recognize_trailing_run",
+        "match_recognize_within_overall",
+        "match_recognize_mid_run_within_skip",
+    ],
+)
+def test_after_match_folds_are_arrow_kernels(spark, sf_dir, name):
+    """The SKIP PAST LAST and SKIP TO folds run as one mapInArrow kernel
+    over the key-partitioned, sorted match set — no grouped pandas stage."""
+    from flink_uba_spark.queries import rowpattern
+
+    p = plan_of(spark, sf_dir, getattr(rowpattern, name))
+    assert count_nodes(p, "MapInArrow") == 1
+    assert "FlatMapGroupsInPandas" not in p

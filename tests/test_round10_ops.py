@@ -417,68 +417,3 @@ def _mk_stream_like(spark):
             F.lit("s").alias("event_type"),
         )
     )
-
-
-# ---- batched BPE merge selection (VERDICT r9 item 8) -----------------------
-
-
-def test_bpe_batched_k1_is_sequential(spark, sf_dir):
-    """k_per_round=1 degenerates to exact sequential BPE — bit-identical
-    merge table (same pairs, same order, same counts)."""
-    from flink_uba_spark.operators.tokenizer import bpe_train, bpe_train_batched
-    from flink_uba_spark.sources.readers import load_testdata
-
-    docs = load_testdata(spark, sf_dir, ("documents",))["documents"]
-    seq = [tuple(r) for r in bpe_train(docs, n_merges=10).collect()]
-    bat = [
-        tuple(r)
-        for r in bpe_train_batched(docs, n_merges=10, k_per_round=1).collect()
-    ]
-    assert seq == bat and len(seq) == 10
-
-
-def test_bpe_batched_quality(spark, sf_dir):
-    """The documented divergence is bounded: batched rules compress the
-    fixture corpus to within 1% of the sequential trainer's token count
-    (the metric BPE optimizes), and rounds never pick conflicting pairs
-    (every round's chosen pairs have pairwise-disjoint symbols, so the
-    batch application is order-independent and exact)."""
-    from flink_uba_spark.operators.tokenizer import (
-        bpe_segment,
-        bpe_train,
-        bpe_train_batched,
-    )
-    from flink_uba_spark.sources.readers import load_testdata
-
-    docs = load_testdata(spark, sf_dir, ("documents",))["documents"]
-    seq = bpe_train(docs, n_merges=16).collect()
-    bat = bpe_train_batched(docs, n_merges=16, k_per_round=8).collect()
-    assert len(bat) == 16
-    assert [r.step for r in bat] == list(range(1, 17))
-    s_tot = sum(
-        r.bpe_tokens
-        for r in bpe_segment(docs, [(r.lhs, r.rhs) for r in seq]).collect()
-    )
-    b_tot = sum(
-        r.bpe_tokens
-        for r in bpe_segment(docs, [(r.lhs, r.rhs) for r in bat]).collect()
-    )
-    assert s_tot > 0
-    assert abs(b_tot - s_tot) / s_tot < 0.01
-
-
-def test_bpe_batched_conflict_fallback(spark):
-    """A corpus whose every top pair shares symbols (single letter runs)
-    still makes progress — conflicting rounds fall back to one
-    sequential merge and the trainer terminates."""
-    from flink_uba_spark.operators.tokenizer import bpe_train, bpe_train_batched
-
-    docs = spark.createDataFrame(
-        [(1, "aaaa aaaa aa"), (2, "aaaa aa")], "doc_id long, text string"
-    )
-    bat = [
-        (r.lhs, r.rhs)
-        for r in bpe_train_batched(docs, n_merges=3, k_per_round=4).collect()
-    ]
-    seq = [(r.lhs, r.rhs) for r in bpe_train(docs, n_merges=3).collect()]
-    assert bat == seq  # every round conflicts → sequential order exactly

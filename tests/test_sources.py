@@ -130,43 +130,6 @@ def test_kafka_reader_plan(spark):
         assert "kafka" in str(e).lower()
 
 
-def test_kafka_shaped_topology_end_to_end(spark, fixtures):
-    """S3 (strongest broker-free evidence): the reference's Kafka plan is
-    the SAME CSV lines arriving as Kafka values instead of file lines
-    (HotItem.java:34-41). Drive the full hot-items topology from a
-    ``value: string`` stream — the exact post-decode shape stream_kafka
-    yields — through parse_user_behavior_values, and require the streamed
-    answer to equal the batch pipeline on the same lines. With this green,
-    a real deployment differs only by format('kafka') on the source."""
-    from flink_uba_spark.operators.topn import topn_per_window, windowed_topn
-    from flink_uba_spark.sources.readers import parse_user_behavior_values
-    from flink_uba_spark.streaming.runner import run_to_table
-    from flink_uba_spark.streaming.windows import stream_windowed_counts
-
-    topic_dir = fixtures / "kafka_topic_hotitems"
-    if not topic_dir.exists():  # one "partition file" of value-lines
-        topic_dir.mkdir()
-        (topic_dir / "00000.txt").write_text((fixtures / "UserBehavior.csv").read_text())
-    values = spark.readStream.format("text").load(str(topic_dir))
-    typed = parse_user_behavior_values(values).filter(F.col("behavior") == "pv")
-    counts = stream_windowed_counts(
-        typed, F.col("itemId"), "itemId", size="1 hour", slide="5 minutes"
-    )
-    streamed = topn_per_window(run_to_table(counts, output_mode="update"), "itemId")
-
-    batch = read_user_behavior(spark, str(fixtures / "UserBehavior.csv")).filter(
-        F.col("behavior") == "pv"
-    )
-    want = windowed_topn(batch, "itemId").toPandas()
-    got = streamed.toPandas()
-    assert len(want) > 0, "batch top-n empty — vacuous equivalence"
-    cols = sorted(want.columns)
-    assert sorted(got.columns) == cols
-    g = got[cols].sort_values(cols).reset_index(drop=True)
-    w = want[cols].sort_values(cols).reset_index(drop=True)
-    assert g.equals(w)
-
-
 def test_malformed_lines_do_not_crash_readers(spark, tmp_path):
     """The reference's naive line.split() parser throws on malformed rows
     (HotPages.java:44-49 has no error handling); the schema'd CSV readers

@@ -1,7 +1,7 @@
 """Isolated per-query timing: cold (first build+run in this JVM) plus N
 warm repeats (median reported), noop sink, same session defaults as
 bench.py. For before/after evidence on a handful of queries without the
-full 242-query protocol.
+full catalog protocol.
 
 Next to the wall times, each query reports the CPU seconds of the process
 tree (this process, the JVM and its Python workers; perfbench's
@@ -9,6 +9,13 @@ tree (this process, the JVM and its Python workers; perfbench's
 (``cutime+cstime`` of the JVM). The latter is 0 for a query that starts no
 process; a large value means the JVM is forking, e.g. Hadoop shell-outs
 for file renames and permissions.
+
+The process tree's CPU also splits by process: ``driver_py_cpu_s`` is
+this Python process alone (plan building, py4j calls), ``jvm_cpu_s`` the
+JVM's own threads (tasks, codegen, JIT, GC) and ``worker_cpu_s`` the
+JVM's descendants: the Python daemon and its workers, reaped ones
+included. A query whose worker CPU is high runs Python stages (pandas or
+Arrow UDFs, folds); one that runs a Python stage twice shows it here.
 
 The JIT is a layer of its own. Each query also reports the JVM's
 compile-time delta (``CompilationMXBean``, ms of compiler-thread wall
@@ -35,7 +42,34 @@ root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, root)
 sys.path.insert(0, os.path.join(root, "perfbench"))
 
-from probes import ProcessTree, median  # noqa: E402
+from probes import ProcessTree, _children, median  # noqa: E402
+
+
+def _ticks(pid: int, reaped: bool) -> int:
+    """utime+stime of ``pid`` (plus cutime+cstime if ``reaped``)."""
+    with open(f"/proc/{pid}/stat") as f:
+        fields = f.read().rsplit(")", 1)[1].split()
+    return sum(int(x) for x in fields[11:15 if reaped else 13])
+
+
+def split_cpu_s(jvm_pid: int) -> dict[str, float]:
+    """CPU seconds of this process, of the JVM's own threads and of the
+    JVM's descendants (Python workers)."""
+    tick = os.sysconf("SC_CLK_TCK")
+    kids = _children()
+    workers, todo = 0, list(kids.get(jvm_pid, []))
+    while todo:
+        pid = todo.pop()
+        try:
+            workers += _ticks(pid, reaped=True)
+        except (OSError, IndexError, ValueError):
+            continue
+        todo.extend(kids.get(pid, []))
+    return {
+        "driver_py_cpu_s": _ticks(os.getpid(), reaped=False) / tick,
+        "jvm_cpu_s": _ticks(jvm_pid, reaped=False) / tick,
+        "worker_cpu_s": workers / tick,
+    }
 
 
 def reaped_cpu_s(pid: int) -> float:
@@ -121,6 +155,7 @@ def main() -> None:
         return {
             "wall": time.time(),
             "cpu_s": tree.cpu_s(),
+            **split_cpu_s(jvm_pid),
             "jvm_reaped_cpu_s": reaped_cpu_s(jvm_pid),
             "jit_compile_ms": compilation.getTotalCompilationTime(),
             "janino_compiles": janino.getCount(),
@@ -148,6 +183,9 @@ def main() -> None:
         r = out[name]
         print(
             f"# {name}: cold {r['cold']}s warm {walls} cpu {r['cold_cpu_s']}/{r['warm_cpu_s']}s "
+            f"(driver-py {r['cold_driver_py_cpu_s']}/{r['warm_driver_py_cpu_s']}s "
+            f"jvm {r['cold_jvm_cpu_s']}/{r['warm_jvm_cpu_s']}s "
+            f"workers {r['cold_worker_cpu_s']}/{r['warm_worker_cpu_s']}s) "
             f"jvm-reaped {r['cold_jvm_reaped_cpu_s']}/{r['warm_jvm_reaped_cpu_s']}s "
             f"jit {r['cold_jit_compile_ms']}/{r['warm_jit_compile_ms']}ms "
             f"c1 {r['cold_c1_cpu_s']}/{r['warm_c1_cpu_s']}s c2 {r['cold_c2_cpu_s']}/{r['warm_c2_cpu_s']}s "
