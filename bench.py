@@ -2,6 +2,10 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
+
+The codegen layer is reported too: the Janino compiles (Spark's generated
+classes) of the cold pass and of each warm pass, per pass and per query,
+and the JVM's metaspace after the cold pass.
 """
 
 from __future__ import annotations
@@ -213,35 +217,52 @@ def main() -> None:
             "noop"
         ).mode("overwrite").save()
 
+    jvm = spark._jvm
+    janino = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def metaspace_mb() -> float:
+        for pool in jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans():
+            if pool.getName() == "Metaspace":
+                return round(pool.getUsage().getUsed() / 2**20, 1)
+        return -1.0
+
     timings: dict[str, float] = {}
+    compiles_cold: dict[str, int] = {}
     for name in names:
-        t0 = time.time()
+        t0, c0 = time.time(), janino.getCount()
         df = qs[name](spark, sf_dir)
         # noop sink: materializes EVERY output column (count() would let
         # Catalyst prune projection work and under-measure)
         df.write.format("noop").mode("overwrite").save()
         timings[name] = round(time.time() - t0, 3)
-        print(f"# {name}: {timings[name]}s", file=sys.stderr)
+        compiles_cold[name] = janino.getCount() - c0
+        print(f"# {name}: {timings[name]}s janino {compiles_cold[name]}", file=sys.stderr)
+    metaspace_cold = metaspace_mb()
 
-    # Warm passes with compiled plans: the cold pass above charges each
-    # query its one-time Janino/JIT compile (codegen-heavy plans like
-    # dedup_simhash's 32-sum aggregate pay ~3-5s); that cost is constant
-    # and amortized to zero in any long-lived deployment, so the warm
-    # number is the one that predicts 100 TB throughput. Cold can only be
-    # measured once per JVM, so variance is pinned on the warm side:
-    # THREE warm passes, per-query MEDIAN reported (the GC/JIT-noise-free
-    # signal) plus the min-max spread so a reader can see which queries
-    # are noisy rather than regressed. "queries"/"value" stay cold for
-    # comparability with BENCH_r01-r03 history.
+    # Warm passes re-run every query in the same JVM: the cold pass above
+    # charges each query its one-time Janino compile of the plan's
+    # generated classes (codegen-heavy plans like dedup_simhash's 32-sum
+    # aggregate pay ~3-5s) and the JIT of the fresh classes. A warm run
+    # reuses those classes only while Spark's generated-class cache still
+    # holds them: the session sizes that cache to the catalog's working
+    # set, and janino_compiles_warm shows how many classes each warm pass
+    # compiled again (with Spark's default 100 entries, thousands). Cold
+    # can only be measured once per JVM, so variance is pinned on the warm
+    # side: THREE warm passes, per-query MEDIAN reported plus the min-max
+    # spread so a reader can see which queries are noisy rather than
+    # regressed. "queries"/"value" stay cold for comparability with
+    # BENCH_r01-r03 history.
     n_warm_passes = int(os.environ.get("SPARK_GRAFT_WARM_PASSES", "3"))
     warm_runs: dict[str, list[float]] = {name: [] for name in names}
+    warm_compiles: dict[str, list[int]] = {name: [] for name in names}
     for p in range(n_warm_passes):
         for name in names:
-            t0 = time.time()
+            t0, c0 = time.time(), janino.getCount()
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = round(time.time() - t0, 3)
             warm_runs[name].append(dt)
-            print(f"# warm[{p}] {name}: {dt}s", file=sys.stderr)
+            warm_compiles[name].append(janino.getCount() - c0)
+            print(f"# warm[{p}] {name}: {dt}s janino {warm_compiles[name][-1]}", file=sys.stderr)
 
     def median(xs: list[float]) -> float:
         s = sorted(xs)
@@ -314,6 +335,15 @@ def main() -> None:
                 "queries_warm_spread": warm_spread,
                 "warm_passes": n_warm_passes,
                 "warm_total_wall": round(sum(warm.values()), 3),
+                # the codegen layer: Janino compiles per pass (cold, then
+                # each warm pass) and per query, and metaspace after cold
+                "janino_compiles_cold": sum(compiles_cold.values()),
+                "janino_compiles_warm": [
+                    sum(c[p] for c in warm_compiles.values()) for p in range(n_warm_passes)
+                ],
+                "queries_janino_cold": compiles_cold,
+                "queries_janino_warm": warm_compiles,
+                "metaspace_mb_after_cold": metaspace_cold,
                 # acceptance band: >1.5x warm-median moves (and >0.5s
                 # absolute — sub-second queries jitter multiplicatively)
                 # vs the previous recorded round; empty = no regression
@@ -325,11 +355,14 @@ def main() -> None:
                     f"BENCH_r01's 23.1s covered only 20 — compare it against "
                     f"r01_subset_wall, which re-times exactly those 20 with "
                     f"the same cold-plan methodology. queries_warm re-times "
-                    f"every query with its plan already compiled: the delta "
-                    f"is one-time Janino/JIT codegen compile (constant, "
+                    f"every query in the same JVM after the cold pass: the "
+                    f"delta is one-time Janino/JIT codegen compile (constant, "
                     f"amortized at scale — e.g. dedup_simhash is ~4s cold vs "
                     f"~1s warm because its 32-sum hash aggregate is "
-                    f"expensive to COMPILE, not to run). queries_warm is the "
+                    f"expensive to COMPILE, not to run), as far as Spark's "
+                    f"generated-class cache kept the cold pass's classes; "
+                    f"janino_compiles_warm counts the classes each warm pass "
+                    f"compiled again. queries_warm is the "
                     f"per-query MEDIAN of warm_passes runs; "
                     f"queries_warm_spread is each query's max-min across "
                     f"those runs (round-3 VERDICT item 4: cold varies ~1.5x "

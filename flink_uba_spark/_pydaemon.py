@@ -13,6 +13,17 @@ the forked workers to leave their importers alone. Every other importer is
 still invalidated on every task: directories, ``addPyFile`` archives and
 the SparkFiles directory.
 
+A reused worker also runs ``gc.collect()`` after every task (in
+``pyspark.daemon``), and the engine's tasks import numpy, pandas and
+pyarrow. Imported in each worker after the fork, their objects sit in the
+worker's own heap and every one of those collections walks them, about
+25 ms each. The daemon imports them once before it forks, then moves
+everything it holds into the collector's permanent generation
+(``gc.freeze()``), so a worker's collection walks only what its tasks
+made, and the frozen objects' pages stay shared with the daemon. Over
+one pass of the catalog at sf0.001 (4 cores) the Python workers' CPU
+fell from 35.5 to 9.8 s.
+
 ``session.get_spark`` selects this module with ``spark.python.daemon.module``.
 Spark runs it as ``python -m flink_uba_spark._pydaemon <worker module>``.
 """
@@ -20,6 +31,7 @@ Spark runs it as ``python -m flink_uba_spark._pydaemon <worker module>``.
 from __future__ import annotations
 
 import functools
+import gc
 import importlib
 import os
 import sys
@@ -60,6 +72,15 @@ def main() -> None:
     importlib.invalidate_caches = skipping_archives(
         importlib.invalidate_caches, installation_archives(sys.path)
     )
+    # the task-side libraries, imported once here and frozen out of every
+    # worker's collections
+    import numpy  # noqa: F401
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+    import pyspark.sql.pandas.serializers  # noqa: F401
+
+    gc.collect()
+    gc.freeze()
     daemon.manager()
 
 

@@ -47,6 +47,25 @@ def test_task_invalidation_rereads_no_installation_archive(spark):
     assert by_task == []
 
 
+def test_task_finds_its_libraries_imported_and_frozen(spark):
+    """Workers fork with numpy, pandas and pyarrow already imported and
+    frozen out of the collector, so the ``gc.collect()`` a reused worker
+    runs after each task does not walk them."""
+
+    def probe(_rows):
+        import gc
+        import sys
+
+        loaded = [m for m in ("numpy", "pandas", "pyarrow") if m in sys.modules]
+        yield loaded, gc.get_freeze_count()
+
+    sc = spark.sparkContext
+    sc.parallelize([0], 1).count()
+    ((loaded, frozen),) = sc.parallelize([0], 1).mapPartitions(probe).collect()
+    assert loaded == ["numpy", "pandas", "pyarrow"]
+    assert frozen > 0
+
+
 def test_py_file_added_mid_session_imports_in_later_task(spark, tmp_path):
     sc = spark.sparkContext
     sc.parallelize([0], 1).count()  # the daemon already runs

@@ -19,12 +19,21 @@ Arrow UDFs, folds); one that runs a Python stage twice shows it here.
 
 The JIT is a layer of its own. Each query also reports the JVM's
 compile-time delta (``CompilationMXBean``, ms of compiler-thread wall
-time), the number of Janino compiles (Spark's generated code; 0 once the
-codegen cache is warm) and the CPU seconds of HotSpot's C1 and C2
+time), the number of Janino compiles (Spark's generated classes) and the
+CPU seconds of HotSpot's C1 and C2
 compiler threads, read from ``/proc/<jvm>/task/*/stat``. Compiler threads
 come and go with the JIT's queue, so a sampler keeps each thread's last
 reading; a thread that exits between two samples loses at most one
 interval of CPU.
+
+Warm Janino compiles are 0 here because each query repeats back to back,
+so its classes are still in Spark's generated-class LRU. That does not
+carry over to a workload that interleaves many queries: with Spark's
+default 100-entry cache, a pass over perfbench's batch reports (about 200
+classes) or over the catalog (thousands) evicts every class before its
+query runs again, and each warm run compiles again. ``session.get_spark``
+sizes the cache to the catalog (``CODEGEN_CACHE_ENTRIES``); ``bench.py``
+reports the compiles of every pass.
 
 Usage: python tools/time_queries.py <query> [...]   (env: SPARK_GRAFT_SF_DIR,
 SPARK_GRAFT_CPUS, SPARK_GRAFT_TIME_REPS default 3)
