@@ -1948,7 +1948,6 @@ def pattern_detect_reluctant_enum(
     event_id: str = "event_id",
     ts: str = "ts",
     with_end_id: bool = False,
-    n_buckets: int = 64,
     lazy_fold: bool = False,
 ) -> DataFrame:
     """RELUCTANT multi-match by PER-ENTRY COUNT ENUMERATION (round 9) —
@@ -1983,14 +1982,15 @@ def pattern_detect_reluctant_enum(
       ``within`` — the session gap is what keeps per-anchor emission
       finite, the same rule the greedy uncapped run enforces.
 
-    Construction: per key (bucketed ``applyInPandas``, the after-match
-    folds' exchange shape) the classified rows sort once by the total
-    order; run rows sessionize by the gap ((ts, id) order); each
-    anchor's admissible counts come from walking the RECORD entries
-    after it (entries whose availability exceeds every entry between) —
-    a sparse-table range-max descent, O(log n) per record, and records
-    per anchor are bounded by the count range actually emitted. Suffix
-    bindings are searchsorted probes on global positions.
+    Construction: per key (``repartition`` on the key, a sort and one
+    ``mapInArrow`` kernel, the after-match folds' plan shape) the
+    classified rows sort once by the total order; run rows sessionize
+    by the gap ((ts, id) order); each anchor's admissible counts come
+    from walking the RECORD entries after it (entries whose
+    availability exceeds every entry between) — a sparse-table
+    range-max descent, O(log n) per record, and records per anchor are
+    bounded by the count range actually emitted. Suffix bindings are
+    searchsorted probes on global positions.
 
     Scale: ONE exchange of the three classified row sets (the union
     engine shuffles the same rows once per count plan), per-key work
@@ -2009,6 +2009,8 @@ def pattern_detect_reluctant_enum(
     """
     import numpy as np
     import pandas as pd
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     if lazy_fold:
         with_end_id = True
@@ -2050,18 +2052,25 @@ def pattern_detect_reluctant_enum(
         pa.cast("boolean").alias("__pa"),
         pr.cast("boolean").alias("__pr"),
         ps.cast("boolean").alias("__ps"),
-    ).filter(F.col("__pa") | F.col("__pr") | F.col("__ps"))
+    ).filter(
+        (F.col("__pa") | F.col("__pr") | F.col("__ps")) & F.col("__k").isNotNull()
+    )
 
     out_cols = [key, "anchor_id", "t1", "t2", "t2_last", "n2", "t3"]
     if with_end_id:
         out_cols.append("end_id")
     out_cols += ["max_step", "state"]
-    key_dtype = dict(events.dtypes)[key]
-    schema_sql = (
-        f"{key} {key_dtype}, anchor_id long, t1 timestamp, t2 timestamp, "
-        "t2_last timestamp, n2 long, t3 timestamp, "
-        + ("end_id long, " if with_end_id else "")
-        + "max_step long, state string"
+    out_schema = T.StructType(
+        [T.StructField(key, events.schema[key].dataType)]
+        + [
+            T.StructField(
+                c,
+                T.StringType() if c == "state"
+                else T.TimestampType() if c.startswith("t")
+                else T.LongType(),
+            )
+            for c in out_cols[1:]
+        ]
     )
 
     def _key_matches(g: pd.DataFrame, out: list):
@@ -2251,11 +2260,7 @@ def pattern_detect_reluctant_enum(
                     )
                     le = (t3_, e3_)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows: list = []
-        if len(pdf):
-            for _kv, g in pdf.groupby("__k", sort=False):
-                _key_matches(g, rows)
+    def _frame(rows: list) -> pd.DataFrame:
         res = pd.DataFrame(rows, columns=out_cols)
         for c in ("t1", "t2", "t2_last", "t3"):
             res[c] = pd.to_datetime(res[c], unit="us") if len(res) else pd.Series(
@@ -2266,9 +2271,41 @@ def pattern_detect_reluctant_enum(
                 [], dtype="Int64")
         return res
 
-    bucket = F.pmod(F.hash(F.col("__k")), F.lit(n_buckets))
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        def emit(pdf: pd.DataFrame):
+            rows: list = []
+            for _kv, g in pdf.groupby("__k", sort=False):
+                _key_matches(g, rows)
+            if rows:
+                yield pa.RecordBatch.from_pandas(_frame(rows), schema=arrow_schema, preserve_index=False)
+
+        tail = None  # the rows of the last key seen, which may go on
+        for batch in batches:
+            pdf = batch.to_pandas()
+            pdf["__ts"] = pdf["__ts"].dt.tz_localize(None)  # UTC µs, as Arrow carries them
+            if tail is not None:
+                pdf = pd.concat([tail, pdf], ignore_index=True)
+            if not len(pdf):
+                continue
+            # a key's rows are contiguous in the sorted partition and may
+            # straddle record batches: every key but the last is complete
+            keys = pdf["__k"].to_numpy()
+            other = np.flatnonzero(keys != keys[-1])
+            cut = int(other[-1]) + 1 if len(other) else 0
+            tail = pdf.iloc[cut:]
+            yield from emit(pdf.iloc[:cut])
+        if tail is not None and len(tail):
+            yield from emit(tail)
+
+    # the after-match folds' plan shape (_horizon_fold): one exchange on
+    # the key, a sort, one Arrow kernel carrying the current key across
+    # record batches
     return (
-        base.withColumn("__b", bucket)
-        .groupBy("__b")
-        .applyInPandas(lambda pdf: kernel(pdf.drop(columns="__b")), schema_sql)
+        base.repartition("__k")
+        .sortWithinPartitions("__k")
+        .mapInArrow(kernel, out_schema)
     )

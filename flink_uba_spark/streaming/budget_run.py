@@ -44,7 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from flink_uba_spark.streaming.pattern import _gap_session_last
+from flink_uba_spark.streaming.pattern import _gap_session_last, _next_watermark_ms
 
 BUDGET_OUTPUT_SCHEMA = T.StructType(
     [
@@ -192,7 +192,7 @@ def make_budget_run_matcher(budget: int, cap: int, gap_us: int, sfx_us: int):
                 (ts.tolist(), ids.tolist(), cls.tolist(), pay.tolist(),
                  em.tolist())
             )
-            state.setTimeoutTimestamp(wm_us // 1000 + 1)
+            state.setTimeoutTimestamp(_next_watermark_ms(wm_us // 1000))
         elif state.exists:
             state.remove()
         if out is not None:

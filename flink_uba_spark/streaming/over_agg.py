@@ -42,6 +42,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flink_uba_spark.streaming.pattern import _next_watermark_ms
+
 OVER_FUNCS = ("sum", "count", "min", "max")
 
 
@@ -214,7 +216,7 @@ def make_over_aggregator(
             )
             # re-fire when the watermark moves (wm_ms lags one batch):
             # pending rows emit, aged emitted rows evict
-            state.setTimeoutTimestamp(wm_ms + 1)
+            state.setTimeoutTimestamp(_next_watermark_ms(wm_ms))
         elif state.exists:
             state.remove()
 

@@ -1168,7 +1168,8 @@ def make_pattern_matcher(
                 # fire as soon as floor_ms(wm)*1000 >= due (Spark fires on
                 # wm > timeout, so ceil-1; the closure/flush predicates are
                 # re-checked on firing, so an early fire is harmless and
-                # the timer re-arms)
+                # the timer re-arms); a due at most one ms away fires on
+                # the next advance
                 cands = []
                 oi = np.flatnonzero(opn)
                 if oi.size:
@@ -1178,7 +1179,7 @@ def make_pattern_matcher(
                     cands.append(-(-(int(fts.min()) + ttl_us) // 1000) - 1)
                 if cands:
                     state.setTimeoutTimestamp(
-                        max(min(cands), state.getCurrentWatermarkMs() + 1)
+                        max(min(cands), _next_watermark_ms(state.getCurrentWatermarkMs()))
                     )
         elif state.exists:
             state.remove()
@@ -1402,6 +1403,15 @@ class _BranchStateSlot:
 
     def setTimeoutTimestamp(self, ms):
         self._timers.append(ms)
+
+
+def _next_watermark_ms(wm_ms: int) -> int:
+    """The timeout that fires on the next watermark advance, however
+    small: Spark fires a timeout strictly below the watermark and refuses
+    one below it or not positive, so the watermark itself (at least 1).
+    A timer clamped to ``wm + 1`` instead misses an advance of exactly
+    1 ms, e.g. the final no-data batch of an availableNow run."""
+    return max(wm_ms, 1)
 
 
 # ---------------------------------------------------------------------------
@@ -1929,9 +1939,9 @@ def make_any_matcher(n_steps: int, withins_us: list, after_match: str | None = N
             evict_ms = max(max(tss[i] for i in keep) + horizon_us, wm_us) // 1000 + 1
             # timers fire on wm > timeout, so a winner pending until
             # end_ms needs timeout end_ms - 1 (the ceil-1 rule the other
-            # NFA twins use); clamp above the current wm
+            # NFA twins use); at the earliest the next watermark advance
             state.setTimeoutTimestamp(
-                min(evict_ms, max(pending_end_ms - 1, wm_us // 1000 + 1))
+                min(evict_ms, max(pending_end_ms - 1, _next_watermark_ms(wm_us // 1000)))
                 if pending_end_ms is not None
                 else evict_ms
             )
@@ -2110,7 +2120,7 @@ def make_iterative_matcher(n_steps: int, withins_us: list, n_pay: int, conds_py:
             ))
             evict_ms = max(max(o_tss[i] for i in keep) + horizon_us, wm_us) // 1000 + 1
             state.setTimeoutTimestamp(
-                min(evict_ms, max(pending_end // 1000, wm_ms + 1))
+                min(evict_ms, max(pending_end // 1000, _next_watermark_ms(wm_ms)))
                 if pending_end is not None
                 else evict_ms
             )
@@ -2269,8 +2279,8 @@ def make_fused_matcher(branches: list[tuple]):
                     seg_out.append(len(arr))
             state.update(tuple([*flat_out, seg_out]))
             if timer_cands:
-                # each branch already clamped its request to wm+1
-                state.setTimeoutTimestamp(max(min(timer_cands), wm_ms + 1))
+                # each branch already clamped its request
+                state.setTimeoutTimestamp(max(min(timer_cands), _next_watermark_ms(wm_ms)))
         elif state.exists:
             state.remove()
 
@@ -2470,9 +2480,9 @@ def make_preference_fused(branches: list[tuple], n_steps: int, horizon_us: int,
             state.update(tuple([*sub_out, *[p.tolist() for p in pend]]))
             cands = list(timers)
             if has_pend:
-                cands.append(wm_ms + 1)
+                cands.append(_next_watermark_ms(wm_ms))
             if cands:
-                state.setTimeoutTimestamp(max(min(cands), wm_ms + 1))
+                state.setTimeoutTimestamp(max(min(cands), _next_watermark_ms(wm_ms)))
         elif state.exists:
             state.remove()
 

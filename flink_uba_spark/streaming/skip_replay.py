@@ -55,7 +55,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
 
-from flink_uba_spark.streaming.pattern import _gap_session_last
+from flink_uba_spark.streaming.pattern import _gap_session_last, _next_watermark_ms
 
 _NULL = -(1 << 62)
 
@@ -497,7 +497,7 @@ def make_quantified_chain_replayer(n: int, withins_us: list, kleenes: list,
                 + ((vals.reshape(-1).tolist(),) if n_vals else ())
             )
             if len(ts):
-                state.setTimeoutTimestamp(wm_us // 1000 + 1)
+                state.setTimeoutTimestamp(_next_watermark_ms(wm_us // 1000))
         elif state.exists:
             state.remove()
         if out is not None:

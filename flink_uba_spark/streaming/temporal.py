@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flink_uba_spark.streaming.pattern import _next_watermark_ms
+
 def temporal_output_schema() -> T.StructType:
     return T.StructType(
         [
@@ -112,7 +114,7 @@ def make_temporal_join_matcher():
             ))
             if keep_f_tss:
                 nxt = min(keep_f_tss) // 1000
-                state.setTimeoutTimestamp(max(nxt, wm_us // 1000 + 1))
+                state.setTimeoutTimestamp(max(nxt, _next_watermark_ms(wm_us // 1000)))
         elif state.exists:
             state.remove()
         if rows:

@@ -2,15 +2,13 @@
 bucket-native one in ``flink_uba_spark/streaming/order_timeout.py``.
 
 ``make_detector`` is the state function the operator ran per key before
-state moved into hash buckets. ``GroupRunner`` drives any state function
-the way Spark's ``applyInPandasWithState`` does over in-memory batches, so
-the per-key reference and the bucket detector run under the same timer
-rule.
+state moved into hash buckets; ``tests/test_state_buckets.py`` runs it and
+the bucket detector through the same state harness.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from typing import Any
 
 import numpy as np
@@ -18,8 +16,7 @@ import pandas as pd
 
 
 def make_detector(deadline_us: int, anchor_type: str = "signup", follow_type: str = "purchase"):
-    """Build the per-key state function (returned separately so unit tests
-    can drive it with a fake GroupState).
+    """Build the per-key state function.
 
     The whole micro-batch resolves in O(n log n) numpy ops — sort once, then
     each anchor's resolver is the first follow after it in sort order
@@ -159,82 +156,3 @@ def make_detector(deadline_us: int, anchor_type: str = "signup", follow_type: st
             yield pd.concat(out, ignore_index=True)
 
     return detect
-
-
-class SimState:
-    """Spark's GroupState for one group: value, timeout and watermark."""
-
-    def __init__(self) -> None:
-        self.value = None
-        self.timeout_ms: int | None = None
-        self.hasTimedOut = False
-        self._wm = 0
-
-    @property
-    def exists(self) -> bool:
-        return self.value is not None
-
-    @property
-    def get(self):
-        return self.value
-
-    def getCurrentWatermarkMs(self) -> int:
-        return self._wm
-
-    def update(self, v) -> None:
-        self.value = v
-
-    def remove(self) -> None:
-        self.value = None
-
-    def setTimeoutTimestamp(self, ms: int) -> None:
-        # the checks Spark's GroupState makes
-        if ms <= 0 or ms < self._wm:
-            raise ValueError(f"timeout {ms} with watermark {self._wm}")
-        self.timeout_ms = ms
-
-
-class GroupRunner:
-    """One micro-batch at a time, as Spark runs a stateful function: every
-    group with rows is called with them; a group without rows is called
-    timed out when its timeout is before the watermark (strict); every call
-    clears the group's timeout, and a removed state drops the group."""
-
-    def __init__(self, fn: Callable, group_of: Callable[[int], int]) -> None:
-        self.fn = fn
-        self.group_of = group_of
-        self.states: dict[int, SimState] = {}
-
-    def batch(self, rows: pd.DataFrame, wm_ms: int) -> list[tuple]:
-        frames: list[pd.DataFrame] = []
-
-        def call(g: int, pdfs: Iterator[pd.DataFrame], timed_out: bool) -> None:
-            st = self.states.setdefault(g, SimState())
-            st._wm, st.hasTimedOut, st.timeout_ms = wm_ms, timed_out, None
-            frames.extend(f for f in self.fn((g,), pdfs, st) if len(f))
-            if not st.exists:
-                del self.states[g]
-
-        groups = rows["user_id"].map(self.group_of) if len(rows) else pd.Series([], dtype="int64")
-        seen = set()
-        for g, part in rows.groupby(groups, sort=False):
-            seen.add(int(g))
-            call(int(g), iter([part.reset_index(drop=True)]), False)
-        for g, st in list(self.states.items()):
-            if g not in seen and st.timeout_ms is not None and st.timeout_ms < wm_ms:
-                call(g, iter([]), True)
-        return rows_of(frames)
-
-
-def _plain(v):
-    if pd.isna(v):
-        return None
-    if isinstance(v, pd.Timestamp):
-        return v.value // 1000  # µs
-    return v if isinstance(v, str) else int(v)
-
-
-def rows_of(frames: list[pd.DataFrame]) -> list[tuple]:
-    """Emitted rows as sorted plain tuples (None for an absent side)."""
-    rows = [tuple(map(_plain, r)) for f in frames for r in f.itertuples(index=False)]
-    return sorted(rows, key=repr)

@@ -23,6 +23,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from flink_uba_spark.operators.sequence import pattern_detect_budget_run
+from tests.state_harness import case_us, replay
 
 EPOCH = datetime.datetime(2020, 1, 1)
 
@@ -189,34 +190,6 @@ def test_budget_run_pins(spark):
 # ---- streaming twin --------------------------------------------------------
 
 
-class _FakeState:
-    def __init__(self):
-        self._v = None
-        self.hasTimedOut = False
-        self._wm = 0
-        self.timeout_set = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def getCurrentWatermarkMs(self):
-        return self._wm
-
-    def update(self, v):
-        self._v = v
-
-    def setTimeoutTimestamp(self, ms):
-        self.timeout_set = ms
-
-    def remove(self):
-        self._v = None
-
-
 def brute_budget_run_stream(events, budget, gap_us, sfx_us, cap, wm_final_ms):
     """The batch brute under the streaming finality cut: the run closed
     (cap, or gap lapsed past its last rep) and the suffix strictly below
@@ -231,59 +204,21 @@ def brute_budget_run_stream(events, budget, gap_us, sfx_us, cap, wm_final_ms):
 
 
 def _drive_stream(events, cuts, budget, gap, sfx, cap):
-    import pandas as pd
-
+    """The matcher through the state harness over ``events`` split at
+    ``cuts``; returns the emitted rows and the final watermark in ms."""
     from flink_uba_spark.streaming.budget_run import make_budget_run_matcher
 
-    # classify to the earliest matching class (the twin's rule)
-    def cls_of(m):
-        return 1 if m & 1 else (2 if m >> 1 & 1 else (3 if m >> 2 & 1 else 0))
-
-    det = make_budget_run_matcher(budget, cap, gap, sfx)
-    state = _FakeState()
-    got = []
-
-    def us(v):
-        return pd.Timestamp(v).value // 1000
-
-    def drain(gen):
-        for f in gen:
-            for r in f.itertuples(index=False):
-                got.append(
-                    (int(r.anchor_id), us(r.t1), us(r.t2), us(r.t2_last),
-                     int(r.n2), int(r.spent), us(r.t3), int(r.end_id))
-                )
-
-    lo, wm = -1, 0
-    for hi in sorted(cuts) + [10 ** 9]:
-        batch = [e for e in events if lo < e[1] <= hi and cls_of(e[2])]
-        lo = hi
-        if not batch:
-            continue
-        state._wm = wm
-        pdf = pd.DataFrame(
-            [{"event_id": eid, "ts": pd.Timestamp(ts, unit="us"),
-              **{f"f{k}": bool(m >> (k - 1) & 1) for k in (1, 2, 3)},
-              "pay": pay}
-             for eid, ts, m, pay in batch]
-        )
-        state.hasTimedOut = False
-        drain(det((1,), iter([pdf]), state))
-        wm = max(wm, max(ts for _, ts, _, _ in batch) // 1000)
-        for _ in range(6):
-            if state._v is None or state.timeout_set is None or state.timeout_set >= wm:
-                break
-            state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-            drain(det((1,), iter([]), state))
-        state.hasTimedOut = False
-    if state._v is not None:
-        rel = [e for e in events if cls_of(e[2])]
-        if rel:
-            state._wm = max(ts for _, ts, _, _ in rel) // 1000
-            state.hasTimedOut = True
-            drain(det((1,), iter([]), state))
-    rel = [e for e in events if cls_of(e[2])]
-    wm_final = max((ts for _, ts, _, _ in rel), default=0) // 1000
+    frames, wm_final = replay(
+        make_budget_run_matcher(budget, cap, gap, sfx),
+        [e for e in events if e[2] & 7],  # the scan filter: rows of some class
+        sorted(cuts),
+        lambda e: {**{f"f{k}": bool(e[2] >> (k - 1) & 1) for k in (1, 2, 3)}, "pay": e[3]},
+    )
+    got = [
+        (int(r.anchor_id), case_us(r.t1), case_us(r.t2), case_us(r.t2_last),
+         int(r.n2), int(r.spent), case_us(r.t3), int(r.end_id))
+        for f in frames for r in f.itertuples(index=False)
+    ]
     return got, wm_final
 
 
@@ -299,10 +234,13 @@ def test_budget_run_stream_matches_brute(case, raw_cuts):
     def remask(m):
         return 1 if m & 1 else (2 if m >> 1 & 1 else (4 if m >> 2 & 1 else 0))
 
-    ev1 = [(eid, ts, remask(m), pay) for eid, ts, m, pay in events]
-    got, wm_final = _drive_stream(ev1, {c * 1 for c in raw_cuts}, budget,
-                                  gap, sfx, cap)
-    want = brute_budget_run_stream(ev1, budget, gap, sfx, cap, wm_final)
+    # times, cuts, gap and suffix bound in ms (x1,000 µs): the watermark
+    # is in ms, so µs-scale cases would never pass case time 0 and every
+    # match would stay pending
+    ev1 = [(eid, ts * 1000, remask(m), pay) for eid, ts, m, pay in events]
+    got, wm_final = _drive_stream(ev1, {c * 1000 for c in raw_cuts}, budget,
+                                  gap * 1000, sfx * 1000, cap)
+    want = brute_budget_run_stream(ev1, budget, gap * 1000, sfx * 1000, cap, wm_final)
     assert sorted(got) == want
     ids = [g[0] for g in got]
     assert len(ids) == len(set(ids))        # exactly-once per anchor

@@ -24,61 +24,13 @@ from flink_uba_spark.streaming.pattern import (
     make_fused_matcher,
     make_pattern_matcher,
 )
+from tests.state_harness import replay
 
 
-class _FakeState:
-    def __init__(self):
-        self._v = None
-        self.hasTimedOut = False
-        self._wm = 0
-        self.timeout_set = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def getCurrentWatermarkMs(self):
-        return self._wm
-
-    def update(self, v):
-        self._v = v
-
-    def setTimeoutTimestamp(self, ms):
-        self.timeout_set = ms
-
-    def remove(self):
-        self._v = None
-
-
-def _batches(events, cuts, nbits):
-    """Split (eid, ts_us, mask) events into event-time batches carrying
-    __p1..__p{nbits} flag columns (the fused wire format)."""
-    bounds = sorted(cuts) + [10 ** 9]
-    out, lo = [], -1
-    for hi in bounds:
-        batch = [e for e in events if lo < e[1] <= hi]
-        lo = hi
-        if batch:
-            out.append(
-                pd.DataFrame(
-                    [
-                        {
-                            "event_id": eid,
-                            "ts": pd.Timestamp(ts, unit="us"),
-                            **{
-                                f"__p{j + 1}": bool(m >> j & 1)
-                                for j in range(nbits)
-                            },
-                        }
-                        for eid, ts, m in batch
-                    ]
-                )
-            )
-    return out
+def _flags(nbits):
+    """An (eid, ts_us, mask) event's __p1..__p{nbits} flag columns (the
+    fused wire format)."""
+    return lambda e: {f"__p{j + 1}": bool(e[2] >> j & 1) for j in range(nbits)}
 
 
 def _rows(frame):
@@ -96,26 +48,11 @@ def _rows(frame):
     return out
 
 
-def _frames(det, batches, wm_final_ms, with_timeout):
-    state = _FakeState()
-    frames = []
-    for b in batches:
-        for f in det((1,), iter([b]), state):
-            frames.append(f)
-    if with_timeout and state.exists:
-        state.hasTimedOut = True
-        state._wm = wm_final_ms
-        for f in det((1,), iter([]), state):
-            frames.append(f)
-    return frames
-
-
-def _drive(det, batches, wm_final_ms, with_timeout):
-    return [
-        t
-        for f in _frames(det, batches, wm_final_ms, with_timeout)
-        for t in _rows(f)
-    ]
+def _drive(det, events, cuts, cols, project=lambda f: f):
+    """The rows ``det`` emits through the state harness over ``events``
+    split at ``cuts``, projected by ``project``."""
+    frames, _ = replay(det, events, sorted(cuts), cols)
+    return [t for f in frames for t in _rows(project(f))]
 
 
 @st.composite
@@ -138,8 +75,6 @@ def test_fused_chain_equals_independent_branches(case):
     detectors emit when driven independently — state segmentation never
     leaks across branches or batches."""
     events, cuts, gap = case
-    batches = _batches(events, cuts, 3)
-    wm = (max(ts for _, ts, _ in events) // 1000) if events else 0
 
     def mk(m):
         return make_pattern_matcher(
@@ -149,12 +84,12 @@ def test_fused_chain_equals_independent_branches(case):
 
     want = []
     for m in (1, 2, 3):
-        want += _drive(mk(m), batches, wm, True)
+        want += _drive(mk(m), events, cuts, _flags(3))
 
     fused = make_fused_matcher(
         [(mk(m), ["__p1", "__p2", "__p3"], lambda f: f) for m in (1, 2, 3)],
     )
-    got = _drive(fused, batches, wm, True)
+    got = _drive(fused, events, cuts, _flags(3))
     assert sorted(got, key=repr) == sorted(want, key=repr)
 
 
@@ -165,7 +100,6 @@ def test_fused_any_equals_independent_branches(case):
     """Same packing guarantee for the followedByAny engine — including
     heterogeneous branch widths (n=3 vs n=4) over a shared flag set."""
     events, cuts, gap = case
-    batches = _batches(events, cuts, 3)
 
     # branch 1: v -> c -> p (n=3); branch 2: v -> c -> c -> p (n=4,
     # both middle slots drawing the same packed flag). Branch outputs
@@ -186,27 +120,13 @@ def test_fused_any_equals_independent_branches(case):
 
         return _p
 
-    def remap2(b):
-        return pd.DataFrame(
-            {
-                "event_id": b["event_id"], "ts": b["ts"],
-                "__p1": b["__p1"], "__p2": b["__p2"],
-                "__p3": b["__p2"], "__p4": b["__p3"],
-            }
-        )
+    def remap2(e):
+        p1, p2, p3 = (bool(e[2] >> j & 1) for j in range(3))
+        return {"__p1": p1, "__p2": p2, "__p3": p2, "__p4": p3}
 
-    want = [
-        t
-        for f in _frames(make_any_matcher(3, [0, gap, 100]), batches, 0, False)
-        for t in _rows(proj(3)(f))
-    ] + [
-        t
-        for f in _frames(
-            make_any_matcher(4, [0, gap, gap, 100]),
-            [remap2(b) for b in batches], 0, False,
-        )
-        for t in _rows(proj(4)(f))
-    ]
+    want = _drive(make_any_matcher(3, [0, gap, 100]), events, cuts, _flags(3), proj(3)) + _drive(
+        make_any_matcher(4, [0, gap, gap, 100]), events, cuts, remap2, proj(4)
+    )
 
     fused = make_fused_matcher(
         [(make_any_matcher(3, [0, gap, 100]),
@@ -214,7 +134,7 @@ def test_fused_any_equals_independent_branches(case):
          (make_any_matcher(4, [0, gap, gap, 100]),
           ["__p1", "__p2", "__p2", "__p3"], proj(4))],
     )
-    got = _drive(fused, batches, 0, False)
+    got = _drive(fused, events, cuts, _flags(3))
     assert sorted(got) == sorted(want)
 
 

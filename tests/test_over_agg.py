@@ -2,8 +2,9 @@
 8) — Flink SQL's ``SUM OVER (PARTITION BY k ORDER BY ts RANGE BETWEEN
 <range> PRECEDING AND CURRENT ROW)`` twin.
 
-The state function is driven directly over randomized events and batch
-splits WITH mid-stream timer firings, against a brute pandas/numpy
+The state function is driven through the state harness
+(``tests/state_harness.py``) over randomized events and batch splits,
+its timers firing mid-stream, against a brute pandas/numpy
 reference of the RANGE-frame semantics + the strict watermark-final
 emission contract: a row emits exactly once, when the watermark passes
 its event time STRICTLY, with the frame sum over [ts − range, ts]
@@ -13,40 +14,12 @@ pending (the frontier cut the catalog oracle applies identically).
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from flink_uba_spark.streaming.over_agg import make_over_aggregator
-
-
-class _FakeState:
-    def __init__(self):
-        self._v = None
-        self.hasTimedOut = False
-        self._wm = 0
-        self.timeout_set = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def getCurrentWatermarkMs(self):
-        return self._wm
-
-    def update(self, v):
-        self._v = v
-
-    def setTimeoutTimestamp(self, ms):
-        self.timeout_set = ms
-
-    def remove(self):
-        self._v = None
+from tests.state_harness import T0, StateHarness, case_us, replay
 
 
 def brute_over(events, range_us, final_wm_ms):
@@ -61,47 +34,16 @@ def brute_over(events, range_us, final_wm_ms):
     return sorted(out)
 
 
-def _drive(events, cuts, range_us):
-    det = make_over_aggregator(range_us)
-    state = _FakeState()
-    got = []
-
-    def drain(gen):
-        for f in gen:
-            for r in f.itertuples(index=False):
-                got.append(
-                    (int(r.event_id), pd.Timestamp(r.ts).value // 1000,
-                     int(r.val), int(r.agg))
-                )
-
-    lo, wm = -1, 0
-    for hi in sorted(cuts) + [10 ** 9]:
-        batch = [e for e in events if lo < e[1] <= hi]
-        lo = hi
-        if not batch:
-            continue
-        state._wm = wm  # lags one batch, as in Spark
-        pdf = pd.DataFrame(
-            [
-                {"event_id": eid, "ts": pd.Timestamp(ts, unit="us"),
-                 "val": val}
-                for eid, ts, val in batch
-            ]
-        )
-        state.hasTimedOut = False
-        drain(det((1,), iter([pdf]), state))
-        wm = max(wm, max(ts for _, ts, _ in batch) // 1000)
-        for _ in range(6):  # mid-stream timer firings
-            if state._v is None or state.timeout_set is None or state.timeout_set >= wm:
-                break
-            state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-            drain(det((1,), iter([]), state))
-        state.hasTimedOut = False
-    if events and state._v is not None:
-        state._wm = max(ts for _, ts, _ in events) // 1000
-        state.hasTimedOut = True
-        drain(det((1,), iter([]), state))
-    wm_final = max((ts for _, ts, _ in events), default=0) // 1000
+def _drive(events, cuts, range_us=None, n_prec=None):
+    """The aggregator (RANGE frame ``range_us`` or ROWS frame ``n_prec``)
+    through the state harness over ``events`` split at ``cuts``; returns
+    the emitted rows and the final watermark in ms."""
+    det = make_over_aggregator(range_us, rows_preceding=n_prec)
+    frames, wm_final = replay(det, events, sorted(cuts), lambda e: {"val": e[2]})
+    got = [
+        (int(r.event_id), case_us(r.ts), int(r.val), int(r.agg))
+        for f in frames for r in f.itertuples(index=False)
+    ]
     return got, wm_final
 
 
@@ -135,23 +77,20 @@ def test_over_agg_state_evicts_aged_rows():
     """Rows aged past wm − range leave state once emitted; pending rows
     never evict."""
     range_us = 5_000
-    events = [(i, i * 10_000, 1) for i in range(10)]
-    det = make_over_aggregator(range_us)
-    state = _FakeState()
+    harness = StateHarness(make_over_aggregator(range_us))
     pdf = pd.DataFrame(
-        [{"event_id": eid, "ts": pd.Timestamp(ts, unit="us"), "val": v}
-         for eid, ts, v in events]
+        [{"event_id": i, "ts": pd.Timestamp(T0 + i * 10_000, unit="us"), "user_id": 1, "val": 1}
+         for i in range(10)]
     )
-    list(det((1,), iter([pdf]), state))          # wm=0: nothing emits
-    assert len(state.get[0]) == 10               # all pending
-    state._wm, state.hasTimedOut = 90, True      # terminal watermark
-    out = list(det((1,), iter([]), state))
+    assert harness.batch(pdf) == []              # wm=0: nothing emits
+    assert len(harness.states[1][0][0]) == 10    # all pending
+    out = harness.flush()                        # terminal watermark: 90 ms in
     assert len(out[0]) == 9                      # strict cut: row@90ms pends
     # emitted rows older than 90ms − 5ms evicted; the pending tail stays
-    kept = state.get[0]
-    assert all(t >= 90_000 - range_us or e == 0
-               for t, e in zip(kept, state.get[3]))
-    assert any(e == 0 for e in state.get[3])
+    kept = harness.states[1][0]
+    assert all(t >= T0 + 90_000 - range_us or e == 0
+               for t, e in zip(kept[0], kept[3]))
+    assert any(e == 0 for e in kept[3])
 
 
 def test_over_agg_equal_ts_peers_included(spark):
@@ -208,48 +147,6 @@ def brute_over_rows(events, n_prec, final_wm_ms):
     return sorted(out)
 
 
-def _drive_rows(events, cuts, n_prec):
-    from flink_uba_spark.streaming.over_agg import make_over_aggregator
-
-    det = make_over_aggregator(None, rows_preceding=n_prec)
-    state = _FakeState()
-    got = []
-
-    def drain(gen):
-        for f in gen:
-            for r in f.itertuples(index=False):
-                got.append(
-                    (int(r.event_id), pd.Timestamp(r.ts).value // 1000,
-                     int(r.val), int(r.agg))
-                )
-
-    lo, wm = -1, 0
-    for hi in sorted(cuts) + [10 ** 9]:
-        batch = [e for e in events if lo < e[1] <= hi]
-        lo = hi
-        if not batch:
-            continue
-        state._wm = wm
-        pdf = pd.DataFrame(
-            [{"event_id": eid, "ts": pd.Timestamp(ts, unit="us"), "val": v}
-             for eid, ts, v in batch]
-        )
-        state.hasTimedOut = False
-        drain(det((1,), iter([pdf]), state))
-        wm = max(wm, max(ts for _, ts, _ in batch) // 1000)
-        for _ in range(6):
-            if state._v is None or state.timeout_set is None or state.timeout_set >= wm:
-                break
-            state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-            drain(det((1,), iter([]), state))
-        state.hasTimedOut = False
-    if events and state._v is not None:
-        state._wm = max(ts for _, ts, _ in events) // 1000
-        state.hasTimedOut = True
-        drain(det((1,), iter([]), state))
-    return got, max((ts for _, ts, _ in events), default=0) // 1000
-
-
 @st.composite
 def _rows_case(draw):
     n_ev = draw(st.integers(0, 24))
@@ -270,7 +167,7 @@ def test_over_agg_rows_frame_matches_brute(case):
     """ROWS BETWEEN n PRECEDING AND CURRENT ROW — mid-stream eviction
     (keep the last n emitted rows) must never starve a later frame."""
     events, cuts, n_prec = case
-    got, wm_final = _drive_rows(events, cuts, n_prec)
+    got, wm_final = _drive(events, cuts, n_prec=n_prec)
     assert sorted(got) == brute_over_rows(events, n_prec, wm_final)
     ids = [g[0] for g in got]
     assert len(ids) == len(set(ids))

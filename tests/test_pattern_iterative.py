@@ -4,8 +4,8 @@
 prefix's values.
 
 Brute reference here; hypothesis properties drive BOTH engines against it
-(the stream via _FakeState micro-batch splits + mid-stream timers + final
-drive); the distinguishing pin is condition-skip — a candidate failing its
+(the stream through the state harness: micro-batch splits, mid-stream
+timers and the final no-data batch); the distinguishing pin is condition-skip — a candidate failing its
 iterative condition is SKIPPED and the search continues, which no
 post-filter on the earliest match can reproduce. tools/nfa_soak.py gains an
 ``iter`` mode over the same brute. Catalog pair:
@@ -17,11 +17,12 @@ from __future__ import annotations
 
 import datetime
 
-import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
+
+from tests.state_harness import case_us, replay
 
 EPOCH = datetime.datetime(2020, 1, 1)
 
@@ -139,71 +140,29 @@ def run_iter_batch(spark, events, withins_us, conds, n):
 
 
 def run_iter_stream(events, withins_us, conds, n, cuts):
-    """Drive make_iterative_matcher over micro-batch splits with
-    mid-stream timers + the final availableNow drive (_FakeState, the
-    stream-soak harness)."""
-    from test_properties_round5 import _FakeState
-
+    """Drive make_iterative_matcher through the state harness over
+    micro-batch splits (timers fire mid-stream and in the final no-data
+    batch); returns the sorted emitted rows and the final watermark in
+    µs."""
     from flink_uba_spark.streaming.pattern import make_iterative_matcher
 
     detect = make_iterative_matcher(
         n, [0] + list(withins_us[1:]), 1,
         {k: make_cond_py(spec) for k, spec in conds.items()},
     )
-    state = _FakeState()
-    got = []
-
-    def drain(gen):
-        for f in gen:
-            for r in f.itertuples(index=False):
-                got.append(
-                    tuple(int(getattr(r, f"i{k}")) for k in range(1, n + 1))
-                    + tuple(
-                        pd.Timestamp(getattr(r, f"t{k}")).value // 1000
-                        for k in range(1, n + 1)
-                    )
-                    + tuple(int(getattr(r, f"v0_{k}")) for k in range(1, n + 1))
-                )
-
-    lo, wm = -1, 0
-    for hi in cuts + [10 ** 12]:
-        batch = [e for e in events if lo < e[1] <= hi]
-        lo = hi
-        if not batch:
-            continue
-        state._wm = wm  # lags one batch, as in Spark
-        pdf = pd.DataFrame(
-            [
-                {
-                    "event_id": eid,
-                    "ts": pd.Timestamp(ts, unit="us"),
-                    "__v0": val,
-                    **{f"__p{k}": bool(m >> (k - 1) & 1) for k in range(1, n + 1)},
-                }
-                for eid, ts, m, val in batch
-                if m
-            ]
-        )
-        if not len(pdf):
-            continue
-        state.hasTimedOut = False
-        drain(detect((1,), iter([pdf]), state))
-        wm = max(wm, max(ts for _, ts, _, _ in batch) // 1000)
-        for _ in range(8):
-            if (
-                state._v is None
-                or state.timeout_set is None
-                or state.timeout_set >= wm
-            ):
-                break
-            state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-            drain(detect((1,), iter([]), state))
-            state.hasTimedOut = False
-    if state._v is not None and events:
-        state._wm = max(ts for _, ts, _, _ in events) // 1000
-        state.hasTimedOut = True
-        drain(detect((1,), iter([]), state))
-    return sorted(got)
+    frames, wm_ms = replay(
+        detect,
+        [e for e in events if e[2]],  # the scan filter
+        cuts,
+        lambda e: {"__v0": e[3], **{f"__p{k}": bool(e[2] >> (k - 1) & 1) for k in range(1, n + 1)}},
+    )
+    got = sorted(
+        tuple(int(getattr(r, f"i{k}")) for k in range(1, n + 1))
+        + tuple(case_us(getattr(r, f"t{k}")) for k in range(1, n + 1))
+        + tuple(int(getattr(r, f"v0_{k}")) for k in range(1, n + 1))
+        for f in frames for r in f.itertuples(index=False)
+    )
+    return got, wm_ms * 1000
 
 
 def test_condition_skip_not_post_filter(spark):
@@ -247,13 +206,30 @@ def test_stream_final_wm_restriction():
     comparison) — the oracle's ms-floored restriction, pinned."""
     events = [(1, 1000, 0b01, 5), (2, 2000, 0b10, 9)]
     # final wm_ms = 2 → wm_us = 2000; end == 2000 → held back
-    assert run_iter_stream(events, [0, 5000], {}, 2, []) == []
+    assert run_iter_stream(events, [0, 5000], {}, 2, []) == ([], 2000)
     assert brute_iter(events, [0, 5000], {}, final_wm_us=2000) == []
     # a later unrelated row pushes the wm past the end → emits
     events2 = events + [(3, 9000, 0b10, 1)]
-    got = run_iter_stream(events2, [0, 5000], {}, 2, [])
+    got, wm_us = run_iter_stream(events2, [0, 5000], {}, 2, [])
+    assert wm_us == 9000
     assert got == brute_iter(events2, [0, 5000], {}, final_wm_us=9000)
     assert got == [(1, 2, 1000, 2000, 5, 9)]
+
+
+def test_stream_final_watermark_one_ms_past_the_last_batch():
+    """The iter soak's seed 1751: chain 0 → 2 ends at 42 ms, the last
+    data batch runs at watermark 42 and the final no-data batch at 43.
+    The chain is final there, so its timer must fire on that 1 ms
+    advance (a timer re-armed to watermark + 1 never did)."""
+    events = [
+        (0, 40000, 3, 24), (1, 34000, 1, 21), (2, 42000, 2, 25), (3, 17000, 3, 22),
+        (4, 15000, 1, 27), (5, 43000, 3, 4), (6, 39000, 2, 5), (7, 4000, 0, 3),
+        (8, 5000, 1, 18), (9, 22000, 2, 7), (10, 10000, 0, 12), (11, 49000, 0, 4),
+    ]
+    got, wm_us = run_iter_stream(events, [0, 21000], {}, 2, [10000, 14000, 34000, 42000])
+    assert wm_us == 43000
+    assert (0, 2, 40000, 42000, 24, 25) in got
+    assert got == brute_iter(events, [0, 21000], {}, final_wm_us=wm_us)
 
 
 @st.composite
@@ -291,9 +267,5 @@ def test_property_batch_matches_brute(spark, case):
 def test_property_stream_matches_brute(case, raw_cuts):
     events, n, withins, conds = case
     cuts = sorted({c * 1000 for c in raw_cuts})
-    final_wm = (
-        (max(ts for _, ts, _, _ in events) // 1000) * 1000 if events else None
-    )
-    assert run_iter_stream(events, withins, conds, n, cuts) == brute_iter(
-        events, withins, conds, final_wm_us=final_wm
-    )
+    got, final_wm = run_iter_stream(events, withins, conds, n, cuts)
+    assert got == brute_iter(events, withins, conds, final_wm_us=final_wm)

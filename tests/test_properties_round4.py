@@ -5,10 +5,11 @@ splits (state seams are where stateful streaming bugs live)."""
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+
+from tests.state_harness import case_us, replay
 
 US = 1
 STEPS = ["v", "c", "p"]
@@ -54,26 +55,6 @@ def brute_pattern(events):
     return sorted(out)
 
 
-class _FakeState:
-    def __init__(self):
-        self._v = None
-        self.hasTimedOut = False
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def remove(self):
-        self._v = None
-
-
 events_strategy = st.lists(
     st.tuples(st.integers(0, 20), st.sampled_from(["v", "c", "p", "x"])),
     min_size=0,
@@ -91,27 +72,13 @@ def test_stream_pattern_nfa_matches_bruteforce_across_any_batch_split(raw, cuts)
     want = brute_pattern(events)
 
     # split by event-time value (equal-ts rows stay together — the replay
-    # contract); drive ONE FakeState through the batches in order
-    bounds = sorted(cuts) + [10**9]
-    detect = make_pattern_matcher(STEPS, WITHINS)
-    state = _FakeState()
-    got = []
-    lo = -1
-    for hi in bounds:
-        batch = [e for e in events if lo < e[1] <= hi]
-        lo = hi
-        if not batch:
-            continue
-        pdf = pd.DataFrame(
-            [
-                {"event_id": i, "ts": pd.Timestamp(ts, unit="us"), "event_type": t}
-                for i, ts, t in batch
-            ]
-        )
-        for frame in detect((1,), iter([pdf]), state):
-            for r in frame.itertuples(index=False):
-                ts_us = tuple(
-                    pd.Timestamp(getattr(r, f"t{k}")).value // 1000 for k in (1, 2, 3)
-                )
-                got.append((r.anchor_id, ts_us, r.state))
+    # contract); plain steps, no ttl: the engine runs it without timers
+    frames, _ = replay(
+        make_pattern_matcher(STEPS, WITHINS), events, sorted(cuts),
+        lambda e: {"event_type": e[2]}, timers=False,
+    )
+    got = [
+        (r.anchor_id, tuple(case_us(getattr(r, f"t{k}")) for k in (1, 2, 3)), r.state)
+        for f in frames for r in f.itertuples(index=False)
+    ]
     assert sorted(got) == want

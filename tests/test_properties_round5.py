@@ -10,39 +10,11 @@ from __future__ import annotations
 
 import random
 
-import numpy as np
-import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-
-class _FakeState:
-    def __init__(self):
-        self._v = None
-        self.hasTimedOut = False
-        self._wm = 0
-        self.timeout_set = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def getCurrentWatermarkMs(self):
-        return self._wm
-
-    def update(self, v):
-        self._v = v
-
-    def setTimeoutTimestamp(self, ms):
-        self.timeout_set = ms
-
-    def remove(self):
-        self._v = None
+from tests.state_harness import case_us, replay
 
 
 def slot_layout(n, guards, untils=frozenset()):
@@ -326,8 +298,9 @@ def brute_reluctant(events, steps, rel, final_wm_ms=None, guards=frozenset(),
 
 
 def _drive(events, steps, cuts, guards=frozenset(), opts=frozenset(), stricts=frozenset()):
-    """Run the NFA over event-time-split batches + a final timer firing at
-    the ms-floored max event time; return (emitted rows, final_wm_ms).
+    """Run the streaming matcher through the state harness over ``events``
+    split at ``cuts``, with timers when a step is Kleene (the engine's
+    wiring); return (emitted rows, final watermark in ms or None).
     Events carry SLOT masks (per slot_layout); batches send __p/__g
     columns, exercising the general-predicate wire format."""
     from flink_uba_spark.streaming.pattern import make_pattern_matcher
@@ -342,51 +315,21 @@ def _drive(events, steps, cuts, guards=frozenset(), opts=frozenset(), stricts=fr
         optionals=set(opts),
         stricts=set(stricts),
     )
-    state = _FakeState()
+    frames, wm_ms = replay(
+        detect, events, sorted(cuts),
+        lambda e: {f"__{kind}{k}": bool(e[2] >> j & 1) for j, (kind, k) in enumerate(slots)},
+        timers=any(k is not None for _, k in steps),
+    )
     got = []
-
-    def _us_or_none(v):
-        t = pd.Timestamp(v)
-        return None if pd.isna(t) else t.value // 1000
-
-    def drain(gen):
-        for f in gen:
-            for r in f.itertuples(index=False):
-                key = []
-                for s in range(1, n + 1):
-                    key.append(_us_or_none(getattr(r, f"t{s}")))
-                    if steps[s - 1][1] is not None:
-                        key.append(_us_or_none(getattr(r, f"t{s}_last")))
-                        key.append(int(getattr(r, f"n{s}")))
-                got.append((r.anchor_id, tuple(key), r.state))
-
-    bounds = sorted(cuts) + [10 ** 9]
-    lo = -1
-    for hi in bounds:
-        batch = [e for e in events if lo < e[1] <= hi]
-        lo = hi
-        if not batch:
-            continue
-        pdf = pd.DataFrame(
-            [
-                {
-                    "event_id": eid,
-                    "ts": pd.Timestamp(ts, unit="us"),
-                    **{
-                        f"__{kind}{k}": bool(m >> j & 1)
-                        for j, (kind, k) in enumerate(slots)
-                    },
-                }
-                for eid, ts, m in batch
-            ]
-        )
-        drain(detect((1,), iter([pdf]), state))
-    wm_ms = None
-    if events and any(k is not None for _, k in steps):
-        wm_ms = max(ts for _, ts, _ in events) // 1000
-        state.hasTimedOut = True
-        state._wm = wm_ms
-        drain(detect((1,), iter([]), state))
+    for f in frames:
+        for r in f.itertuples(index=False):
+            key = []
+            for s in range(1, n + 1):
+                key.append(case_us(getattr(r, f"t{s}")))
+                if steps[s - 1][1] is not None:
+                    key.append(case_us(getattr(r, f"t{s}_last")))
+                    key.append(int(getattr(r, f"n{s}")))
+            got.append((r.anchor_id, tuple(key), r.state))
     return got, wm_ms
 
 

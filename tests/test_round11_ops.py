@@ -565,39 +565,13 @@ def test_quantified_chain_replayer_randomized_equals_batch(spark):
     decidable) — the replayer's match set must equal batch exactly."""
     import random
 
-    import numpy as np
     import pandas as pd
 
     from flink_uba_spark.streaming.pattern import _interval_us
     from flink_uba_spark.streaming.skip_replay import (
         make_quantified_chain_replayer,
     )
-
-    class _FakeState:
-        def __init__(self):
-            self.value = None
-            self.wm_ms = 0
-            self.hasTimedOut = False
-
-        @property
-        def exists(self):
-            return self.value is not None
-
-        @property
-        def get(self):
-            return self.value
-
-        def getCurrentWatermarkMs(self):
-            return self.wm_ms
-
-        def update(self, v):
-            self.value = v
-
-        def remove(self):
-            self.value = None
-
-        def setTimeoutTimestamp(self, ms):
-            pass
+    from tests.state_harness import StateHarness
 
     SHAPES = [
         ("S C? P", {2}, [None, None, None]),
@@ -645,36 +619,33 @@ def test_quantified_chain_replayer_randomized_equals_batch(spark):
         cut_pool = secs[1:]
         cuts = sorted(rng.sample(cut_pool, min(len(cut_pool), rng.randint(0, 2))))
         bounds = [-1] + cuts + [10 ** 9]
-        state = _FakeState()
-        frames = []
-        for bi in range(len(bounds) - 1):
-            chunk = [
-                r for r in rows if bounds[bi] < r[0] <= bounds[bi + 1]
-            ]
-            if not chunk:
-                continue
-            epoch_us = int(
-                (EPOCH - datetime.datetime(1970, 1, 1)).total_seconds()
-            ) * 1_000_000
-            pdf = pd.DataFrame(
+        epoch_us = int((EPOCH - datetime.datetime(1970, 1, 1)).total_seconds()) * 1_000_000
+
+        def batch(chunk, key=1):
+            return pd.DataFrame(
                 {
                     "event_id": [i for _s, i, _t in chunk],
                     "ts": pd.to_datetime(
                         [epoch_us + s * 1_000_000 for s, _i, _t in chunk],
                         unit="us",
                     ),
+                    "user_id": key,
                     "f1": [t == "s" for _s, _i, t in chunk],
                     "f2": [t == "c" for _s, _i, t in chunk],
                     "f3": [t == "p" for _s, _i, t in chunk],
                 }
             )
-            frames.extend(det((1,), iter([pdf]), state))
-            state.wm_ms = (
-                epoch_us // 1000 + max(s for s, _i, _t in chunk) * 1000
-            )
-        state.hasTimedOut = True
-        state.wm_ms = 10 ** 15
-        frames.extend(det((1,), iter([]), state))
+
+        chunks = [
+            [r for r in rows if bounds[bi] < r[0] <= bounds[bi + 1]]
+            for bi in range(len(bounds) - 1)
+        ]
+        # a far-future row of key 2, matching nothing, makes the final
+        # watermark decide everything
+        frames = StateHarness(det).run(
+            [batch(c) for c in chunks if c] + [batch([(10 ** 6, 0, "x")], key=2)]
+        )
+        frames = [f[f["user_id"] == 1] for f in frames]
         got = []
         for f in frames:
             for _, r in f.iterrows():

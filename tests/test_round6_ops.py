@@ -11,41 +11,29 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from tests.state_harness import NO_TIMEOUT, T0, StateHarness, case_us, replay
+
 US = 1_000_000
 
 
-class FakeState:
-    def __init__(self, watermark_ms=0, value=None, timed_out=False):
-        self._v = value
-        self.hasTimedOut = timed_out
-        self._wm = watermark_ms
-        self.timeout_set = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def getCurrentWatermarkMs(self):
-        return self._wm
-
-    def update(self, v):
-        self._v = v
-
-    def setTimeoutTimestamp(self, ms):
-        self.timeout_set = ms
-
-    def remove(self):
-        self._v = None
+def _key1(detect, timers=False):
+    """A state harness for key 1, with event-time timers when the
+    pattern has a Kleene step, as the engine wires it."""
+    if timers:
+        return StateHarness(detect)
+    return StateHarness(detect, timeout=NO_TIMEOUT, delay_ms=None)
 
 
-def _rows(*evs):
+def _state(harness):
+    """Key 1's stored state, None when there is none."""
+    return harness.states.get(1, (None, None))[0]
+
+
+def _rows(*evs, t0=0):
+    """Key 1's events ``(id, ts µs, type)``, times shifted by ``t0``."""
     return pd.DataFrame(
         [
-            {"event_id": i, "ts": pd.Timestamp(ts_us, unit="us"), "event_type": t}
+            {"event_id": i, "ts": pd.Timestamp(t0 + ts_us, unit="us"), "user_id": 1, "event_type": t}
             for i, ts_us, t in evs
         ]
     )
@@ -155,21 +143,21 @@ def test_uncapped_stream_run_crosses_batches_then_closes():
     detect = make_pattern_matcher(
         _UNCAPPED_STEPS, _UNCAPPED_WITHINS, kleenes=_UNCAPPED_KLEENES
     )
-    st = FakeState()
+    st = _key1(detect, timers=True)
     # batch 1: anchor + 40 reps (10 s apart — far beyond any small cap)
     b1 = [(1, 0, "A")] + [(i + 2, (10 + 10 * i) * US, "B") for i in range(40)]
-    out1 = _collect(detect((1,), iter([_rows(*b1)]), st))
-    assert len(out1) == 0 and st.exists
+    out1 = _collect(st.batch(_rows(*b1, t0=T0)))
+    assert len(out1) == 0 and _state(st) is not None
     # batch 2: 10 more reps continuing the run, then the gap lapses and C
     last = 10 + 10 * 39
     b2 = [(100 + i, (last + 10 + 10 * i) * US, "B") for i in range(10)]
     b2 += [(200, (last + 100 + 31) * US, "C")]
-    out2 = _collect(detect((1,), iter([_rows(*b2)]), st))
+    out2 = _collect(st.batch(_rows(*b2, t0=T0)))
     assert len(out2) == 1
     r = out2.iloc[0]
     assert int(r["n2"]) == 50  # the whole 50-rep run, uncapped
     assert r["state"] == "matched"
-    assert st._v is None
+    assert _state(st) is None
 
 
 def test_uncapped_stream_state_stays_bounded_under_endless_hot_run():
@@ -182,17 +170,17 @@ def test_uncapped_stream_state_stays_bounded_under_endless_hot_run():
     detect = make_pattern_matcher(
         _UNCAPPED_STEPS, _UNCAPPED_WITHINS, kleenes=_UNCAPPED_KLEENES
     )
-    st = FakeState()
-    _collect(detect((1,), iter([_rows((1, 0, "A"))]), st))
+    st = _key1(detect, timers=True)
+    _collect(st.batch(_rows((1, 0, "A"), t0=T0)))
     eid, t, max_buf, max_chains = 2, 10, 0, 0
     for _ in range(50):  # 50 batches x 20 reps = a 1000-rep open run
         batch = []
         for _ in range(20):
             batch.append((eid, t * US, "B"))
             eid, t = eid + 1, t + 10
-        _collect(detect((1,), iter([_rows(*batch)]), st))
-        assert st.exists
-        aid, buf_ts = st.get[0], st.get[13]
+        _collect(st.batch(_rows(*batch, t0=T0)))
+        assert _state(st) is not None
+        aid, buf_ts = _state(st)[0], _state(st)[13]
         max_chains = max(max_chains, len(aid))
         max_buf = max(max_buf, len(buf_ts))
     # 1000 reps observed; state stayed O(1): one pending chain, and a
@@ -200,7 +188,7 @@ def test_uncapped_stream_state_stays_bounded_under_endless_hot_run():
     assert max_chains == 1
     assert max_buf <= 25
     # the counter did see every rep
-    assert int(np.asarray(st.get[8]).reshape(-1, 3)[0, 1]) == 1000
+    assert int(np.asarray(_state(st)[8]).reshape(-1, 3)[0, 1]) == 1000
 
 
 def test_strict_entry_composes_with_downstream_kleene():
@@ -218,38 +206,26 @@ def test_strict_entry_composes_with_downstream_kleene():
         stricts={2},
     )
     # key 1: A, B immediately, C-run of 3 (cross-batch), gap lapse, D
-    st = FakeState()
+    st = _key1(detect, timers=True)
     out1 = _collect(
-        detect(
-            (1,),
-            iter([_rows((1, 0, "A"), (2, 5 * US, "B"), (3, 10 * US, "C"))]),
-            st,
-        )
+        st.batch(_rows((1, 0, "A"), (2, 5 * US, "B"), (3, 10 * US, "C"), t0=T0))
     )
-    assert len(out1) == 0 and st.exists
+    assert len(out1) == 0 and _state(st) is not None
     out2 = _collect(
-        detect(
-            (1,),
-            iter([_rows((4, 20 * US, "C"), (5, 30 * US, "C"),
-                        (6, 100 * US, "D"))]),
-            st,
-        )
+        st.batch(_rows((4, 20 * US, "C"), (5, 30 * US, "C"),
+                        (6, 100 * US, "D"), t0=T0))
     )
     assert len(out2) == 1
     r = out2.iloc[0]
     assert int(r["n3"]) == 3 and r["state"] == "matched"
-    assert pd.Timestamp(r["t2"]).value // 1000 == 5 * US
+    assert case_us(r["t2"]) == 5 * US
 
     # key 2: an irrelevant witness row between A and B breaks the chain
     # even though B would be the earliest followedBy binder
-    st2 = FakeState()
+    st2 = _key1(detect, timers=True)
     out3 = _collect(
-        detect(
-            (2,),
-            iter([_rows((1, 0, "A"), (2, 3 * US, "Z"), (3, 5 * US, "B"),
-                        (4, 10 * US, "C"), (5, 100 * US, "D"))]),
-            st2,
-        )
+        st2.batch(_rows((1, 0, "A"), (2, 3 * US, "Z"), (3, 5 * US, "B"),
+                        (4, 10 * US, "C"), (5, 100 * US, "D"), t0=T0))
     )
     assert len(out3) == 0
 
@@ -443,7 +419,7 @@ def test_strict_and_not_next_match_bruteforce_property():
         detect = make_pattern_matcher(
             types, withins, stricts=stricts, not_nexts=nnx
         )
-        st = FakeState()
+        st = _key1(detect)
         got = []
         bounds = cuts + [10 ** 12]
         lo = -1
@@ -452,7 +428,7 @@ def test_strict_and_not_next_match_bruteforce_property():
             lo = hi
             if not batch:
                 continue
-            for f in detect((1,), iter([_rows(*batch)]), st):
+            for f in st.batch(_rows(*batch)):
                 for r in f.itertuples(index=False):
                     got.append(
                         (
@@ -555,26 +531,22 @@ def test_branching_matcher_emits_both_branches_across_batches():
     from flink_uba_spark.streaming.pattern import make_branching_matcher
 
     detect = make_branching_matcher(_BR_STEPS, _BR_WITHINS, [2])
-    st = FakeState()
+    st = _key1(detect)
     # batch 1: anchor + click; neither branch completes, BOTH persist in
     # the one packed state row
     out1 = _collect(
-        detect(
-            (1,),
-            iter([_br_rows((1, 0, "view"), (2, 10 * 60 * US, "click"))]),
-            st,
-        )
+        st.batch(_br_rows((1, 0, "view"), (2, 10 * 60 * US, "click")))
     )
-    assert len(out1) == 0 and st.exists
-    seg = [int(x) for x in st.get[-1]]
-    n_fields = len(st.get) - 1
+    assert len(out1) == 0 and _state(st) is not None
+    seg = [int(x) for x in _state(st)[-1]]
+    n_fields = len(_state(st)) - 1
     per_branch_nonempty = [
         any(seg[b * n_fields + f] for f in range(n_fields)) for b in range(2)
     ]
     assert per_branch_nonempty == [True, True]
     # batch 2: one purchase completes BOTH branches
     out2 = _collect(
-        detect((1,), iter([_br_rows((3, 60 * 60 * US, "purchase"))]), st)
+        st.batch(_br_rows((3, 60 * 60 * US, "purchase")))
     )
     out2 = out2.sort_values("skipped").reset_index(drop=True)
     assert list(out2["skipped"]) == ["2", "none"]
@@ -584,7 +556,7 @@ def test_branching_matcher_emits_both_branches_across_batches():
     assert pd.Timestamp(taken["t2"]).value // 1000 == 10 * 60 * US
     assert pd.isna(skipped["t2"])
     assert int(taken["max_step"]) == 3 and int(skipped["max_step"]) == 2
-    assert st._v is None  # all branches resolved -> packed state removed
+    assert _state(st) is None  # all branches resolved -> packed state removed
 
 
 def test_branching_matcher_skipped_branch_can_outlive_taken():
@@ -594,18 +566,14 @@ def test_branching_matcher_skipped_branch_can_outlive_taken():
     from flink_uba_spark.streaming.pattern import make_branching_matcher
 
     detect = make_branching_matcher(_BR_STEPS, _BR_WITHINS, [2])
-    st = FakeState()
+    st = _key1(detect)
     out = _collect(
-        detect(
-            (1,),
-            iter([_br_rows((1, 0, "view"), (2, 60 * 60 * US, "purchase"))]),
-            st,
-        )
+        st.batch(_br_rows((1, 0, "view"), (2, 60 * 60 * US, "purchase")))
     )
     assert len(out) == 1 and out.iloc[0]["skipped"] == "2"
     assert out.iloc[0]["state"] == "matched"
     # the taken branch is still pending (waiting on a click)
-    assert st.exists
+    assert _state(st) is not None
 
 
 # ---------------------------------------------------------------------------
@@ -673,38 +641,26 @@ def test_skip_past_last_stream_horizon_outlives_chains():
         ["view", "click", "purchase"], [None, None, None],
         after_match="skip_past_last",
     )
-    st = FakeState()
+    st = _key1(detect)
     out1 = _collect(
-        detect(
-            (1,),
-            iter([_rows((1, 0, "view"), (2, 10, "click"), (5, 20, "purchase"))]),
-            st,
-        )
+        st.batch(_rows((1, 0, "view"), (2, 10, "click"), (5, 20, "purchase")))
     )
     assert list(out1["anchor_id"]) == [1]
     # no chains pending, but the horizon (20, 5) lives on as state
     # field 18 = ams_horizon (round 7 appended buf_pos/seq after it)
-    assert st.exists and list(st.get[18]) == [20, 5]
-    assert len(st.get[0]) == 0
+    assert _state(st) is not None and list(_state(st)[18]) == [20, 5]
+    assert len(_state(st)[0]) == 0
     # a view at the SAME ts as the emitted end, smaller id: blocked
     out2 = _collect(
-        detect(
-            (1,),
-            iter([_rows((3, 20, "view"), (6, 30, "click"), (7, 40, "purchase"))]),
-            st,
-        )
+        st.batch(_rows((3, 20, "view"), (6, 30, "click"), (7, 40, "purchase")))
     )
     assert len(out2) == 0
     # a view at the same ts with a LARGER id anchors normally
     out3 = _collect(
-        detect(
-            (1,),
-            iter([_rows((8, 40, "view"), (9, 50, "click"), (10, 60, "purchase"))]),
-            st,
-        )
+        st.batch(_rows((8, 40, "view"), (9, 50, "click"), (10, 60, "purchase")))
     )
     assert list(out3["anchor_id"]) == [8]
-    assert list(st.get[18]) == [60, 10]
+    assert list(_state(st)[18]) == [60, 10]
 
 
 def test_skip_past_last_prunes_pending_runs():
@@ -716,22 +672,18 @@ def test_skip_past_last_prunes_pending_runs():
         ["view", "click", "purchase"], [None, None, None],
         after_match="skip_past_last",
     )
-    st = FakeState()
+    st = _key1(detect)
     out1 = _collect(
-        detect(
-            (1,),
-            iter([_rows(
+        st.batch(_rows(
                 (1, 0, "view"), (2, 5, "click"),
                 (3, 10, "view"), (4, 20, "purchase"),
-            )]),
-            st,
-        )
+            ))
     )
     # anchor 1 completes (end @20); anchor 3 (@10 <= 20) is pruned
     assert list(out1["anchor_id"]) == [1]
-    assert len(st.get[0]) == 0  # no pending chains survive
+    assert len(_state(st)[0]) == 0  # no pending chains survive
     out2 = _collect(
-        detect((1,), iter([_rows((5, 30, "click"), (6, 40, "purchase"))]), st)
+        st.batch(_rows((5, 30, "click"), (6, 40, "purchase")))
     )
     assert len(out2) == 0
 
@@ -745,16 +697,12 @@ def test_skip_past_last_late_chain_is_discarded_silently():
     detect = make_pattern_matcher(
         ["view", "purchase"], [None, 10], after_match="skip_past_last"
     )
-    st = FakeState()
+    st = _key1(detect)
     out = _collect(
-        detect(
-            (1,),
-            iter([_rows(
+        st.batch(_rows(
                 (1, 0, "view"), (2, 50, "purchase"),   # late (gap 50 > 10)
                 (3, 60, "view"), (4, 65, "purchase"),  # in bound
-            )]),
-            st,
-        )
+            ))
     )
     assert list(out["anchor_id"]) == [3]
     assert list(out["state"]) == ["matched"]
@@ -801,9 +749,7 @@ def test_skip_past_last_matches_bruteforce_property():
     skip mode at regression size)."""
     import random
 
-    from test_properties_round5 import (
-        _FakeState, brute_skip_past_last, slot_layout,
-    )
+    from test_properties_round5 import brute_skip_past_last, slot_layout
     from flink_uba_spark.streaming.pattern import make_pattern_matcher
 
     for seed in range(150):
@@ -827,34 +773,16 @@ def test_skip_past_last_matches_bruteforce_property():
             negations={k: f"x{k}" for k in gslot},
             after_match="skip_past_last",
         )
-        state = _FakeState()
-        got = []
-        lo = -1
-        for hi in cuts + [10 ** 9]:
-            batch = [e for e in events if lo < e[1] <= hi]
-            lo = hi
-            if not batch:
-                continue
-            pdf = pd.DataFrame(
-                [
-                    {
-                        "event_id": eid, "ts": pd.Timestamp(ts, unit="us"),
-                        **{
-                            f"__{kind}{k}": bool(m >> si & 1)
-                            for si, (kind, k) in enumerate(slots)
-                        },
-                    }
-                    for eid, ts, m in batch
-                ]
-            )
-            for f in detect((1,), iter([pdf]), state):
-                for r in f.itertuples(index=False):
-                    key = tuple(
-                        None if pd.isna(getattr(r, f"t{s}"))
-                        else pd.Timestamp(getattr(r, f"t{s}")).value // 1000
-                        for s in range(1, n + 1)
-                    )
-                    got.append((r.anchor_id, key, r.state))
+        # plain steps, no ttl: the engine runs it without timers
+        frames, _ = replay(
+            detect, events, cuts,
+            lambda e: {f"__{kind}{k}": bool(e[2] >> si & 1) for si, (kind, k) in enumerate(slots)},
+            timers=False,
+        )
+        got = [
+            (r.anchor_id, tuple(case_us(getattr(r, f"t{s}")) for s in range(1, n + 1)), r.state)
+            for f in frames for r in f.itertuples(index=False)
+        ]
         want = brute_skip_past_last(
             events, [(w, None) for w in withins], guards=guards
         )

@@ -16,14 +16,14 @@ non-deterministic contiguity, the family of OrderPayTimeout.java:52-64.
 from __future__ import annotations
 
 import datetime
-from pathlib import Path
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-TESTS_DIR = str(Path(__file__).resolve().parent)
+from tests.state_harness import T0, StateHarness, case_us, replay
+
 
 
 def brute_any(events, withins_us):
@@ -188,52 +188,39 @@ def test_bpe_checkpoint_equivalence(spark):
 
 
 def _drive_any(events, withins_us, n, cuts):
-    """Replay events through make_any_matcher over the given ts cuts with
-    Spark's lagging-watermark mechanics; returns sorted brute_any-shaped
-    tuples."""
-    import pandas as pd
-
-    import sys
-    sys.path.insert(0, TESTS_DIR)
-    from test_properties_round5 import _FakeState
+    """Replay events through make_any_matcher over the given ts cuts in
+    the state harness; returns sorted brute_any-shaped tuples."""
     from flink_uba_spark.streaming.pattern import make_any_matcher
 
-    detect = make_any_matcher(n, withins_us)
-    state = _FakeState()
-    got = []
+    frames, _ = replay(
+        make_any_matcher(n, withins_us), [e for e in events if e[2]], cuts, _any_flags(n)
+    )
+    return sorted(
+        tuple(int(getattr(r, f"i{k}")) for k in range(1, n + 1))
+        + tuple(case_us(getattr(r, f"t{k}")) for k in range(1, n + 1))
+        for f in frames for r in f.itertuples(index=False)
+    )
 
-    def drain(gen):
-        for f in gen:
-            for r in f.itertuples(index=False):
-                got.append(
-                    tuple(int(getattr(r, f"i{k}")) for k in range(1, n + 1))
-                    + tuple(
-                        pd.Timestamp(getattr(r, f"t{k}")).value // 1000
-                        for k in range(1, n + 1)
-                    )
-                )
 
-    lo, wm = -1, 0
-    for hi in cuts + [10 ** 9]:
-        batch = [e for e in events if lo < e[1] <= hi and e[2]]
-        lo = hi
-        if not batch:
-            continue
-        state._wm = wm
-        pdf = pd.DataFrame(
-            [
-                {
-                    "event_id": eid,
-                    "ts": pd.Timestamp(ts, unit="us"),
-                    **{f"__p{k}": bool(m >> (k - 1) & 1) for k in range(1, n + 1)},
-                }
-                for eid, ts, m in batch
-            ]
-        )
-        state.hasTimedOut = False
-        drain(detect((1,), iter([pdf]), state))
-        wm = max(wm, max(ts for _, ts, _ in batch) // 1000)
-    return sorted(got)
+def _any_flags(n):
+    return lambda e: {f"__p{k}": bool(e[2] >> (k - 1) & 1) for k in range(1, n + 1)}
+
+
+def _any_batch(batch, n, clock_ms=None):
+    """Key 1's events ``(id, ts µs, mask)`` as one micro-batch; a key-2
+    row at ``clock_ms`` (matching nothing) sets the next batch's
+    watermark."""
+    import pandas as pd
+
+    rows = [(1, e) for e in batch]
+    if clock_ms is not None:
+        rows.append((2, (0, clock_ms * 1000, 0)))
+    return pd.DataFrame(
+        [
+            {"event_id": e[0], "ts": pd.Timestamp(T0 + e[1], unit="us"), "user_id": key, **_any_flags(n)(e)}
+            for key, e in rows
+        ]
+    )
 
 
 def test_stream_any_exactly_once_across_batches():
@@ -258,78 +245,40 @@ def test_stream_any_out_of_order_within_watermark():
     """A middle event arriving in a LATER batch (inside the watermark
     band: the lagging wm has not passed it) still completes the combo —
     the any-new rule, not last-event-arrival, drives emission."""
-    import pandas as pd
-
-    import sys
-    sys.path.insert(0, TESTS_DIR)
-    from test_properties_round5 import _FakeState
     from flink_uba_spark.streaming.pattern import make_any_matcher
 
     n, withins = 3, [0, 15, 15]
-    detect = make_any_matcher(n, withins)
-    state = _FakeState()
-    got = []
-
-    def drain(gen):
-        for f in gen:
-            for r in f.itertuples(index=False):
-                got.append((int(r.i1), int(r.i2), int(r.i3)))
+    harness = StateHarness(make_any_matcher(n, withins))
 
     def push(batch):
-        pdf = pd.DataFrame(
-            [
-                {
-                    "event_id": eid,
-                    "ts": pd.Timestamp(ts, unit="us"),
-                    **{f"__p{k}": bool(m >> (k - 1) & 1) for k in range(1, n + 1)},
-                }
-                for eid, ts, m in batch
-            ]
-        )
-        state.hasTimedOut = False
-        drain(detect((1,), iter([pdf]), state))
+        return [
+            (int(r.i1), int(r.i2), int(r.i3))
+            for f in harness.batch(_any_batch(batch, n)) for r in f.itertuples(index=False)
+        ]
 
-    push([(1, 0, 0b001), (3, 20, 0b100)])  # anchor + final, hole at step 2
-    assert got == []
-    push([(2, 10, 0b010)])  # the middle event arrives late (wm still 0)
-    assert got == [(1, 2, 3)]
+    assert push([(1, 0, 0b001), (3, 20, 0b100)]) == []  # anchor + final, hole at step 2
+    # the middle event arrives late (the watermark is still at case ms 0)
+    assert push([(2, 10, 0b010)]) == [(1, 2, 3)]
 
 
 def test_stream_any_eviction_respects_horizon():
     """State keeps only the H-horizon: after the watermark passes
     ts + H, an event is evicted and the buffer shrinks (deployability
     bound), without losing in-horizon combinations."""
-    import pandas as pd
-
-    import sys
-    sys.path.insert(0, TESTS_DIR)
-    from test_properties_round5 import _FakeState
     from flink_uba_spark.streaming.pattern import make_any_matcher
 
     n, withins = 2, [0, 10]
-    detect = make_any_matcher(n, withins)
-    state = _FakeState()
+    harness = StateHarness(make_any_matcher(n, withins))
 
-    def push(batch, wm):
-        state._wm = wm
-        pdf = pd.DataFrame(
-            [
-                {
-                    "event_id": eid,
-                    "ts": pd.Timestamp(ts, unit="us"),
-                    **{f"__p{k}": bool(m >> (k - 1) & 1) for k in range(1, n + 1)},
-                }
-                for eid, ts, m in batch
-            ]
-        )
-        state.hasTimedOut = False
-        return sum(len(f) for f in detect((1,), iter([pdf]), state))
+    def push(batch, clock_ms=None):
+        return sum(len(f) for f in harness.batch(_any_batch(batch, n, clock_ms)))
 
-    assert push([(1, 0, 0b01)], wm=0) == 0
-    assert len(state._v[0]) == 1
+    # the next batch runs at case ms 40
+    assert push([(1, 0, 0b01)], clock_ms=40) == 0
+    assert len(harness.states[1][0][0]) == 1
     # wm (ms) far past 0+H: anchor 1 evicted; a new in-horizon pair works
-    assert push([(2, 50_000_000, 0b01), (3, 50_000_005, 0b10)], wm=40) == 1
-    assert sorted(state._v[0]) == [2, 3]
+    assert push([(2, 50_000_000, 0b01), (3, 50_000_005, 0b10)]) == 1
+    assert sorted(harness.states[1][0][0]) == [2, 3]
 
 
 # --------------------------------------------------------- SKIP_TO_NEXT
@@ -717,42 +666,41 @@ def test_until_validation(spark):
         )
 
 
+def _key1_rows(batch, cols):
+    """Key 1's events ``(id, ts µs, x)`` as one micro-batch; ``cols(x)``
+    gives an event's input columns."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        [
+            {"event_id": e[0], "ts": pd.Timestamp(T0 + e[1], unit="us"), "user_id": 1, **cols(e[2])}
+            for e in batch
+        ]
+    )
+
+
+def _typed(t):
+    return {"event_type": t}
+
+
 def test_stream_until_truncates_run_cross_batch():
     """Streaming until(): a stop row arriving in a LATER micro-batch
     closes the open run at its carried frontier — the run never extends
     past the stop even though later reps are within gap."""
-    import pandas as pd
-
-    import sys
-    sys.path.insert(0, TESTS_DIR)
-    from test_properties_round5 import _FakeState
     from flink_uba_spark.streaming.pattern import make_pattern_matcher
 
-    detect = make_pattern_matcher(
+    harness = StateHarness(make_pattern_matcher(
         ["a", "b", "c"],
         [None, 50, 100],
         kleenes=[None, (50, None), None],
         untils={2: "u"},
-    )
-    state = _FakeState()
-    got = []
-
-    def push(rows, wm):
-        state._wm = wm
-        state.hasTimedOut = False
-        pdf = pd.DataFrame(
-            [
-                {"event_id": eid, "ts": pd.Timestamp(ts, unit="us"),
-                 "event_type": et}
-                for eid, ts, et in rows
-            ]
-        )
-        for f in detect((1,), iter([pdf]), state):
-            for r in f.itertuples(index=False):
-                got.append((r.anchor_id, r.state, int(r.n2)))
-
-    push([(1, 0, "a"), (2, 10, "b"), (3, 20, "b")], wm=0)
-    push([(4, 25, "u"), (5, 30, "b"), (6, 40, "c")], wm=0)
+    ))
+    got = [
+        (r.anchor_id, r.state, int(r.n2))
+        for batch in ([(1, 0, "a"), (2, 10, "b"), (3, 20, "b")],
+                      [(4, 25, "u"), (5, 30, "b"), (6, 40, "c")])
+        for f in harness.batch(_key1_rows(batch, _typed)) for r in f.itertuples(index=False)
+    ]
     # run truncated at ts 20 (2 reps); c at 40 binds within 100us of 20
     assert got == [(1, "matched", 2)]
 
@@ -760,33 +708,16 @@ def test_stream_until_truncates_run_cross_batch():
 def test_stream_until_dual_row_ends_run():
     """A dual rep+stop row is the run's final repetition in the NFA,
     exactly as in the batch compiler."""
-    import pandas as pd
-
-    import sys
-    sys.path.insert(0, TESTS_DIR)
-    from test_properties_round5 import _FakeState
     from flink_uba_spark.streaming.pattern import make_pattern_matcher
 
-    detect = make_pattern_matcher(
+    harness = StateHarness(make_pattern_matcher(
         ["a", "b", "c"],
         [None, 50, 100],
         kleenes=[None, (50, None), None],
         untils={2: "b"},  # every rep is ALSO a stop: runs are length-1
-    )
-    state = _FakeState()
-    got = []
-    pdf = pd.DataFrame(
-        [
-            {"event_id": 1, "ts": pd.Timestamp(0, unit="us"), "event_type": "a"},
-            {"event_id": 2, "ts": pd.Timestamp(10, unit="us"), "event_type": "b"},
-            {"event_id": 3, "ts": pd.Timestamp(15, unit="us"), "event_type": "b"},
-            {"event_id": 4, "ts": pd.Timestamp(30, unit="us"), "event_type": "c"},
-        ]
-    )
-    state.hasTimedOut = False
-    for f in detect((1,), iter([pdf]), state):
-        for r in f.itertuples(index=False):
-            got.append((r.anchor_id, r.state, int(r.n2)))
+    ))
+    rows = _key1_rows([(1, 0, "a"), (2, 10, "b"), (3, 15, "b"), (4, 30, "c")], _typed)
+    got = [(r.anchor_id, r.state, int(r.n2)) for f in harness.batch(rows) for r in f.itertuples(index=False)]
     assert got == [(1, "matched", 1)]
 
 
@@ -1026,49 +957,27 @@ def test_consecutive_matches_brute(spark, case):
     assert sorted(got) == want
 
 
-def _drive_consec_stream(batches, steps, kleenes, consecs, final_wm_ms=0):
+def _drive_consec_stream(batches, steps, kleenes, consecs):
     """Minimal NFA driver for consecutive() pins: feed explicit
-    micro-batches of (eid, ts_us, mask-over-__p-slots), fire the final
-    timer, return (anchor_id, state, n2, t2_us, t2_last_us) rows."""
-    import pandas as pd
-
-    import sys
-    sys.path.insert(0, TESTS_DIR)
-    from test_properties_round5 import _FakeState
+    micro-batches of (eid, ts_us, mask-over-__p-slots) through the state
+    harness, then its final no-data batch; return (anchor_id, state, n2,
+    t2_us, t2_last_us) rows."""
     from flink_uba_spark.streaming.pattern import make_pattern_matcher
 
     n = len(steps)
-    detect = make_pattern_matcher(
+    harness = StateHarness(make_pattern_matcher(
         [f"s{k}" for k in range(1, n + 1)], steps,
         kleenes=kleenes, consecutives=consecs,
-    )
-    state = _FakeState()
-    got = []
+    ))
 
-    def drain(gen):
-        for f in gen:
-            for r in f.itertuples(index=False):
-                got.append((
-                    int(r.anchor_id), r.state, int(r.n2),
-                    pd.Timestamp(r.t2).value // 1000,
-                    pd.Timestamp(r.t2_last).value // 1000,
-                ))
+    def flags(m):
+        return {f"__p{k}": bool(m >> (k - 1) & 1) for k in range(1, n + 1)}
 
-    for batch in batches:
-        state.hasTimedOut = False
-        pdf = pd.DataFrame(
-            [
-                {"event_id": eid, "ts": pd.Timestamp(ts, unit="us"),
-                 **{f"__p{k}": bool(m >> (k - 1) & 1) for k in range(1, n + 1)}}
-                for eid, ts, m in batch
-            ]
-        )
-        drain(detect((1,), iter([pdf]), state))
-    if state._v is not None:
-        state._wm = final_wm_ms
-        state.hasTimedOut = True
-        drain(detect((1,), iter([]), state))
-    return got
+    frames = harness.run([_key1_rows(b, flags) for b in batches])
+    return [
+        (int(r.anchor_id), r.state, int(r.n2), case_us(r.t2), case_us(r.t2_last))
+        for f in frames for r in f.itertuples(index=False)
+    ]
 
 
 def test_stream_consecutive_cross_batch_continuation():
@@ -1121,7 +1030,7 @@ def test_stream_consecutive_nonadjacent_same_ts_closes_without_timer():
     """Soak seed 10816's shape: the run's (ts, id)-next session row is
     observed at a NON-adjacent (earlier) position — definitive closure
     even though the run's last rep holds the globally newest position
-    and the watermark never advances (final_wm_ms=0)."""
+    and the watermark never passes case time 0."""
     # positions: (26@199 p1)=0, (17@200 p1+p2)=1, (3@200 p2)=2.
     # anchor 26: entry = (ts,id)-min p2 after (199,1,26) = (3@200);
     # session (ts,id) order of p2 rows: (3@200) then (17@200)... no:

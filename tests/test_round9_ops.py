@@ -19,6 +19,7 @@ from flink_uba_spark.operators.match_recognize import (
     match_recognize,
     stream_match_recognize,
 )
+from tests.state_harness import T0, StateHarness, case_us, replay
 
 EPOCH = datetime.datetime(2020, 1, 1)
 
@@ -172,111 +173,32 @@ def test_stream_budget_run_negative_payload_raises():
 
     from flink_uba_spark.streaming.budget_run import make_budget_run_matcher
 
-    class FakeState:
-        exists = False
-        hasTimedOut = False
-
-        def getCurrentWatermarkMs(self):
-            return 0
-
-        def update(self, v):
-            pass
-
-        def setTimeoutTimestamp(self, v):
-            pass
-
-        def remove(self):
-            pass
-
     det = make_budget_run_matcher(10, 3, 600_000_000, 600_000_000)
     pdf = pd.DataFrame(
         {
             "event_id": np.array([1], dtype="int64"),
             "ts": pd.Series([EPOCH]).astype("datetime64[us]"),
+            "user_id": [1],
             "f1": [False], "f2": [True], "f3": [False],
             "pay": np.array([-1], dtype="int64"),
         }
     )
     with pytest.raises(ValueError, match="non-negative"):
-        list(det((1,), iter([pdf]), FakeState()))
+        StateHarness(det).batch(pdf)
 
 
 # ---- OVER aggregation breadth: COUNT/MIN/MAX share the frame pass ----
 
-class _OverFakeState:
-    def __init__(self):
-        self._v = None
-        self.hasTimedOut = False
-        self._wm = 0
-        self.timeout_set = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def getCurrentWatermarkMs(self):
-        return self._wm
-
-    def update(self, v):
-        self._v = v
-
-    def setTimeoutTimestamp(self, ms):
-        self.timeout_set = ms
-
-    def remove(self):
-        self._v = None
-
-
 def _drive_multi(events, cuts, range_us, funcs):
-    import pandas as pd
-
     from flink_uba_spark.streaming.over_agg import make_over_aggregator
 
     det = make_over_aggregator(range_us, funcs=funcs)
-    state = _OverFakeState()
-    got = []
-
-    def drain(gen):
-        for f in gen:
-            for r in f.itertuples(index=False):
-                got.append(
-                    (int(r.event_id), pd.Timestamp(r.ts).value // 1000,
-                     int(r.val))
-                    + tuple(int(getattr(r, f"agg_{fn}")) for fn in funcs)
-                )
-
-    lo, wm = -1, 0
-    for hi in sorted(cuts) + [10 ** 9]:
-        batch = [e for e in events if lo < e[1] <= hi]
-        lo = hi
-        if not batch:
-            continue
-        state._wm = wm
-        pdf = pd.DataFrame(
-            [
-                {"event_id": eid, "ts": pd.Timestamp(ts, unit="us"),
-                 "val": val}
-                for eid, ts, val in batch
-            ]
-        )
-        state.hasTimedOut = False
-        drain(det((1,), iter([pdf]), state))
-        wm = max(wm, max(ts for _, ts, _ in batch) // 1000)
-        for _ in range(6):
-            if state._v is None or state.timeout_set is None or state.timeout_set >= wm:
-                break
-            state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-            drain(det((1,), iter([]), state))
-        state.hasTimedOut = False
-    if events and state._v is not None:
-        state._wm = max(ts for _, ts, _ in events) // 1000
-        state.hasTimedOut = True
-        drain(det((1,), iter([]), state))
-    wm_final = max((ts for _, ts, _ in events), default=0) // 1000
+    frames, wm_final = replay(det, events, sorted(cuts), lambda e: {"val": e[2]})
+    got = [
+        (int(r.event_id), case_us(r.ts), int(r.val))
+        + tuple(int(getattr(r, f"agg_{fn}")) for fn in funcs)
+        for f in frames for r in f.itertuples(index=False)
+    ]
     return got, wm_final
 
 
@@ -725,31 +647,6 @@ def test_preference_fused_fold_hand_case():
         make_preference_fused,
     )
 
-    class St:
-        def __init__(self):
-            self._v, self.hasTimedOut, self._wm, self.timeout_set = (
-                None, False, 0, None)
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def getCurrentWatermarkMs(self):
-            return self._wm
-
-        def update(self, v):
-            self._v = v
-
-        def setTimeoutTimestamp(self, ms):
-            self.timeout_set = ms
-
-        def remove(self):
-            self._v = None
-
     n = 2
     built = []
     for bi in range(2):
@@ -776,37 +673,34 @@ def test_preference_fused_fold_hand_case():
         (4, 31_000, False, False, False, True),
     ]
 
-    def mk(batch):
+    def mk(batch, clock_ms):
+        """Key 1's rows, and a key-2 row at ``clock_ms`` that matches
+        nothing: the next batch runs at that watermark."""
         return pd.DataFrame([
-            {"event_id": e, "ts": pd.Timestamp(ms, unit="ms"),
+            {"event_id": e, "ts": pd.Timestamp(T0 + ms * 1000, unit="us"), "user_id": u,
              "c0a": a, "c0b": b, "c1a": c, "c1b": d_}
-            for e, ms, a, b, c, d_ in batch
+            for u, (e, ms, a, b, c, d_) in [(1, r) for r in batch]
+            + [(2, (0, clock_ms, False, False, False, False))]
         ])
 
-    st = St()
-    got = []
+    def fold(frames):
+        return sorted(
+            (int(r.anchor_id), int(r._1))
+            for f in frames for r in f.itertuples(index=False) if r.user_id == 1
+        )
 
-    def drain(gen):
-        for f in gen:
-            for r in f.itertuples(index=False):
-                got.append((int(r.anchor_id), int(r._1)))
-
-    drain(det((1,), iter([mk(rows)]), st))
+    harness = StateHarness(det)
     # wm still 0: nothing final
-    assert got == []
+    assert fold(harness.batch(mk(rows, 62_000))) == []
     # wm past anchor 1's horizon only: branch 0 wins despite branch 1
     # completing first
-    st._wm = 62_000
-    drain(det((1,), iter([mk([(99, 62_000, False, False, False, False)])]), st))
-    assert sorted(got) == [(1, 0)]
+    got = fold(harness.batch(mk([(99, 62_000, False, False, False, False)], 95_000)))
+    assert got == [(1, 0)]
     # wm past anchor 10's horizon: only branch 1 completed there
-    st._wm = 95_000
-    st.hasTimedOut = True
-    drain(det((1,), iter([]), st))
+    got += fold(harness.batch(mk([], 200_000)))
     assert sorted(got) == [(1, 0), (10, 1)]
-    # exactly-once: another timer fire emits nothing new
-    drain(det((1,), iter([]), st))
-    assert sorted(got) == [(1, 0), (10, 1)]
+    # exactly-once: the last timer fire emits nothing new
+    assert fold(harness.flush()) == []
 
 
 def test_reluctant_enum_lazy_fold_matches_pipeline(spark):

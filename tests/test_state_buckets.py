@@ -1,13 +1,13 @@
 """Hash-bucketed keyed state against per-key state.
 
 The bucket-native order-timeout detector and the per-key reference run
-under the same emulation of Spark's group-state protocol
-(``tests/order_timeout_reference.GroupRunner``): the reference grouped on
-the raw key, the bucket detector grouped on ``key % B``. Every micro-batch
-must emit the same rows; the end-to-end check runs one catalog twin per
-keyed stateful operator under several bucket counts. The bucket blob
-header, the refusal of a bucket count below one and the bucket timer of
-the pattern operators' per-key replay are pinned here too.
+through the same state harness (``tests/state_harness.py``, Spark's own
+GroupState): the reference grouped on the raw key, the bucket detector
+grouped on ``key % B``. Every micro-batch must emit the same rows; the
+end-to-end check runs one catalog twin per keyed stateful operator under
+several bucket counts. The bucket blob header, the refusal of a bucket
+count below one and the bucket timer of the pattern operators' per-key
+replay are pinned here too.
 """
 
 from __future__ import annotations
@@ -24,8 +24,6 @@ from flink_uba_spark.streaming.pattern import (
     CHAIN_STATE_FIELDS,
     KMAP_CODEC,
     StateLayoutError,
-    _BranchStateSlot,
-    make_bucketed_matcher,
     make_pattern_matcher,
     make_preference_fused,
     pack_bucket_blob,
@@ -33,10 +31,15 @@ from flink_uba_spark.streaming.pattern import (
     unpack_bucket_blob,
 )
 from tests.conftest import assert_matches_oracle
-from tests.order_timeout_reference import GroupRunner, make_detector
+from tests.order_timeout_reference import make_detector
+from tests.state_harness import StateHarness, per_bucket, rows_of
 
 DL = 1_000_000  # deadline, µs
+T0 = 1_000_000  # first event time, µs: rows at or below watermark 0 are late
 COLS = ["event_id", "ts", "user_id", "event_type"]
+# the clock key's `view` rows only move the watermark: at DELAY_MS behind
+# them, a case's batch runs at exactly the watermark it names
+CLOCK, DELAY_MS = 10 ** 6, 10 ** 6
 
 
 def _frame(rows) -> pd.DataFrame:
@@ -45,21 +48,31 @@ def _frame(rows) -> pd.DataFrame:
     )
 
 
-def _runners(b: int) -> tuple[GroupRunner, GroupRunner]:
-    ref = GroupRunner(make_detector(DL), lambda u: u)
-    bucket = GroupRunner(make_bucket_detector(DL, "signup", "purchase", b), lambda u: u % b)
-    return ref, bucket
+def _clocked(batches) -> list[pd.DataFrame]:
+    """``(rows, watermark_ms)`` batches as harness input: each batch
+    carries a clock row that sets the next batch's watermark."""
+    frames = []
+    for k, (rows, _wm) in enumerate(batches):
+        if k + 1 < len(batches):
+            rows = [*rows, (10 ** 9 + k, (batches[k + 1][1] + DELAY_MS) * 1000, CLOCK, "view")]
+        frames.append(_frame(rows))
+    return frames
 
 
 def _assert_same(batches, b: int) -> int:
     """Replay ``batches`` of (rows, watermark_ms) through both detectors;
     returns the number of rows emitted."""
-    ref, bucket = _runners(b)
+    ref = StateHarness(make_detector(DL), delay_ms=DELAY_MS)
+    bucket = StateHarness(
+        make_bucket_detector(DL, "signup", "purchase", b), delay_ms=DELAY_MS, group_of=lambda u: u % b
+    )
     n = 0
-    for k, (rows, wm_ms) in enumerate(batches):
-        want = ref.batch(_frame(rows), wm_ms)
-        assert bucket.batch(_frame(rows), wm_ms) == want, f"B={b} batch {k}"
+    for k, rows in enumerate(_clocked(batches)):
+        want = rows_of(ref.batch(rows))
+        assert ref.last_wm == batches[k][1]
+        assert rows_of(bucket.batch(rows)) == want, f"B={b} batch {k}"
         n += len(want)
+    assert rows_of(bucket.flush()) == rows_of(ref.flush()) == []
     return n
 
 
@@ -68,7 +81,7 @@ def _random_case(rng: random.Random) -> list:
     drawn near the anchors' deadlines (exact ms, ±1 ms) and a final
     data-less batch that fires timers."""
     n_users = rng.randint(1, 6)
-    t = eid = wm = 0
+    t, eid, wm = T0, 0, 0
     batches = []
     for _ in range(rng.randint(1, 5)):
         rows = []
@@ -107,13 +120,14 @@ def test_bucket_detector_watermark_edges(anchor_us, wm_delta_ms, with_rows):
     side: a key with rows fires on ``a_us + deadline <= wm_ms * 1000``; a
     key without rows fires only after the watermark passes its stored
     timer. Key 2 only pays, an orphan, and so keeps no state."""
-    wm_ms = (anchor_us + DL) // 1000 + wm_delta_ms
-    later = [(3, DL // 2, 1, "signup")] if with_rows else []
+    a_us = T0 + anchor_us
+    wm_ms = (a_us + DL) // 1000 + wm_delta_ms
+    later = [(3, a_us + DL // 2, 1, "signup")] if with_rows else []
     batches = [
-        ([(1, anchor_us, 1, "signup"), (2, anchor_us, 2, "purchase")], 0),
+        ([(1, a_us, 1, "signup"), (2, a_us, 2, "purchase")], 0),
         (later, wm_ms),
         ([], wm_ms + 1),
-        ([(4, 3 * DL, 1, "purchase")], wm_ms + 1),
+        ([(4, a_us + 3 * DL, 1, "purchase")], wm_ms + 1),
     ]
     for b in (1, 2, 3):  # 3 buckets outnumber the 2 keys
         assert _assert_same(batches, b) > 0
@@ -183,23 +197,22 @@ def test_bucketed_matcher_fires_member_timer_at_next_watermark():
     let it fire at the next watermark, as per-key grouping would."""
 
     def member(key, pdfs, state):
-        rows = [] if state.hasTimedOut else list(pdfs)
         if state.hasTimedOut:
             yield pd.DataFrame({"user_id": [key[0]], "state": ["fired"]})
-        elif rows:
+        elif key[0] != CLOCK and any(len(p) for p in pdfs):
             state.update((1,))
             state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 5)
 
     def row(u):
-        return _frame([(u, 0, u, "signup")])
+        return [(u, T0, u, "signup")]
 
-    per_key = GroupRunner(member, lambda u: u)
-    bucket = GroupRunner(make_bucketed_matcher(member, timers=True, n_buckets=1), lambda u: 0)
+    per_key = StateHarness(member, delay_ms=DELAY_MS)
+    bucket = per_bucket(member, 1, delay_ms=DELAY_MS)
     emitted = []
     # key 1's timer is 5: not due in the batch at watermark 5, due at 6
-    for rows, wm_ms in [(row(1), 0), (row(2), 5), (_frame([]), 6)]:
-        emitted = per_key.batch(rows, wm_ms)
-        assert bucket.batch(rows, wm_ms) == emitted
+    for rows in _clocked([(row(1), 0), (row(2), 5), ([], 6)]):
+        emitted = rows_of(per_key.batch(rows))
+        assert rows_of(bucket.batch(rows)) == emitted
     assert emitted == [(1, "fired")]
 
 
@@ -222,22 +235,22 @@ def test_preference_fold_writes_the_chain_state_width():
     rows = pd.DataFrame(
         {
             "event_id": [1, 2],
-            "ts": pd.to_datetime([0, 1_000_000], unit="us"),
+            "ts": pd.to_datetime([T0, T0 + 1_000_000], unit="us"),
+            "user_id": [1, 1],
             "a": [True, False],
             "b": [False, True],
         }
     )
-    chain = _BranchStateSlot(None, 0, False, [])
-    det = make_pattern_matcher(["s1", "s2"], [None, 60_000_000])
-    list(det((1,), iter([rows.iloc[:1].rename(columns={"a": "__p1", "b": "__p2"})]), chain))
-    assert len(chain.value) == CHAIN_STATE_FIELDS
+    chain = StateHarness(make_pattern_matcher(["s1", "s2"], [None, 60_000_000]))
+    chain.batch(rows.iloc[:1].rename(columns={"a": "__p1", "b": "__p2"}))
+    assert len(chain.states[1][0]) == CHAIN_STATE_FIELDS
 
     def project(frame, bi):
         f = frame[["user_id", "anchor_id", "t1", "t2"]].copy()
         f["__branch"] = bi
         return f
 
-    fold = make_preference_fused(
+    fold = StateHarness(make_preference_fused(
         [
             (make_pattern_matcher(["s1", "s2"], [None, 60_000_000]), ["a", "b"],
              lambda f, bi=bi: project(f, bi))
@@ -245,9 +258,9 @@ def test_preference_fold_writes_the_chain_state_width():
         ],
         2,
         60_000_000,
-    )
-    state = _BranchStateSlot(None, 0, False, [])
-    assert list(fold((1,), iter([rows]), state)) == []  # not final before the horizon
-    fused_part, pending = state.value[: CHAIN_STATE_FIELDS + 1], state.value[CHAIN_STATE_FIELDS + 1:]
+    ))
+    assert fold.batch(rows) == []  # not final before the horizon
+    value = fold.states[1][0]
+    fused_part, pending = value[: CHAIN_STATE_FIELDS + 1], value[CHAIN_STATE_FIELDS + 1:]
     assert all(len(f) == 0 for f in fused_part)
     assert [list(p) for p in pending[:2]] == [[0, 1], [1, 1]]  # branch, anchor

@@ -10,142 +10,122 @@ from flink_uba_spark.queries import streaming as SQ
 from flink_uba_spark.queries import uba
 from flink_uba_spark.streaming.order_timeout import decode_state, make_bucket_detector
 from tests.conftest import assert_matches_oracle
+from tests.state_harness import NO_TIMEOUT, T0, StateHarness, case_us, replay
 
 US = 1_000_000
 H6 = 6 * 3600 * US
 
 
-class FakeState:
-    def __init__(self, watermark_ms=0, value=None, timed_out=False):
-        self._v = value
-        self.hasTimedOut = timed_out
-        self._wm = watermark_ms
-        self.timeout_set = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def getCurrentWatermarkMs(self):
-        return self._wm
-
-    def update(self, v):
-        self._v = v
-
-    def setTimeoutTimestamp(self, ms):
-        self.timeout_set = ms
-
-    def remove(self):
-        self._v = None
+# a key whose rows match nothing: they only move the watermark
+CLOCK = 10 ** 6
 
 
-def _rows(*evs):
+def _rows(*evs, clock_ms=None, unit=1):
+    """Key 7's events ``(id, ts, type)``, ts in ``unit`` µs from case
+    time 0 (``T0`` on the harness clock); a CLOCK row at ``clock_ms``
+    sets the next batch's watermark."""
+    rows = [(i, ts * unit, t, 7) for i, ts, t in evs]
+    if clock_ms is not None:
+        rows.append((0, clock_ms * 1000, "tick", CLOCK))
     return pd.DataFrame(
         [
-            {"event_id": i, "ts": pd.Timestamp(ts_us, unit="us"), "user_id": 7, "event_type": t}
-            for i, ts_us, t in evs
+            {"event_id": i, "ts": pd.Timestamp(T0 + us, unit="us"), "user_id": u, "event_type": t}
+            for i, us, t, u in rows
         ]
     )
+
+
+def _collect(frames, cols):
+    """Key 7's emitted rows as one frame."""
+    frames = [f[f["user_id"] == 7] for f in frames]
+    frames = [f for f in frames if len(f)]
+    if not frames:
+        return pd.DataFrame(columns=cols)
+    return pd.concat(frames, ignore_index=True)
 
 
 _OUT_COLS = ["anchor_id", "follow_id", "user_id", "anchor_ts", "follow_ts", "state"]
 
 
-def _collect(gen):
-    frames = list(gen)
-    if not frames:
-        return pd.DataFrame(columns=_OUT_COLS)
-    return pd.concat(frames, ignore_index=True)
+def _run(harness, pdf):
+    return _collect(harness.batch(pdf), _OUT_COLS)
 
 
-# the bucket detector runs key 7 in bucket 0 of B=4
-def _run(detector, pdf, state):
-    return _collect(detector((0,), iter([pdf]), state))
+def _fire(harness):
+    return _collect(harness.flush(), _OUT_COLS)
 
 
-def _fire(detector, state):
-    return _collect(detector((0,), iter([]), state))
+# the bucket detector runs key 7 in bucket 3 of B=4
+def _pending(harness):
+    return decode_state(harness.states[3][0][0], 4).p_ids.tolist()
 
 
-def _pending(state):
-    return decode_state(state._v[0], 4).p_ids.tolist()
-
-
-@pytest.fixture(scope="module")
+@pytest.fixture()
 def detector():
-    return make_bucket_detector(H6, "signup", "purchase", 4)
+    return StateHarness(make_bucket_detector(H6, "signup", "purchase", 4), group_of=lambda u: u % 4)
 
 
 def test_detector_payed_within_deadline(detector):
-    st = FakeState()
-    out = _run(detector, _rows((1, 0, "signup"), (2, US, "purchase")), st)
+    out = _run(detector, _rows((1, 0, "signup"), (2, US, "purchase")))
     assert list(out["state"]) == ["payed"]
     assert out.loc[0, "anchor_id"] == 1 and out.loc[0, "follow_id"] == 2
 
 
 def test_detector_payed_late(detector):
-    st = FakeState()
-    out = _run(detector, _rows((1, 0, "signup"), (2, H6 + US, "purchase")), st)
+    out = _run(detector, _rows((1, 0, "signup"), (2, H6 + US, "purchase")))
     assert list(out["state"]) == ["payed_late"]
 
 
 def test_detector_orphan_pay(detector):
-    st = FakeState()
-    out = _run(detector, _rows((2, US, "purchase")), st)
+    out = _run(detector, _rows((2, US, "purchase")))
     assert list(out["state"]) == ["pay_no_create"]
     # a later pay after an anchor existed is NOT an orphan
-    out2 = _run(detector, _rows((3, 2 * US, "signup"), (4, 3 * US, "purchase")), st)
+    out2 = _run(detector, _rows((3, 2 * US, "signup"), (4, 3 * US, "purchase")))
     assert list(out2["state"]) == ["payed"]
 
 
 def test_detector_timer_fires_timeout(detector):
-    st = FakeState()
-    out = _run(detector, _rows((1, 0, "signup")), st)
-    assert len(out) == 0 and st.timeout_set is not None
+    out = _run(detector, _rows((1, 0, "signup"), clock_ms=(H6 + US) // 1000))
+    assert len(out) == 0 and detector.states[3][1] != -1
     # watermark passes the deadline → timeout emitted on the timer call
-    st2 = FakeState(watermark_ms=(H6 + US) // 1000, value=st._v, timed_out=True)
-    out2 = _fire(detector, st2)
+    out2 = _fire(detector)
     assert list(out2["state"]) == ["timeout"]
     assert out2.loc[0, "anchor_id"] == 1 and out2.loc[0, "user_id"] == 7
 
 
-def test_detector_timer_boundary_is_ms_floored(detector):
+def test_detector_timer_boundary_is_ms_floored():
     """ADVICE r1 boundary pin: a key with rows in the batch fires on
     deadline_us <= wm_ms*1000. An anchor whose deadline exceeds the
     ms-floored watermark by even 0.4 ms does NOT fire; exact ms equality
     DOES (non-strict <=). The streaming oracle replicates this with
     (epoch_us(w) // 1000) * 1000. A key without rows fires only once the
     watermark passes its stored timer (Spark's strict rule)."""
+
+    def harness():
+        return StateHarness(make_bucket_detector(H6, "signup", "purchase", 4), group_of=lambda u: u % 4)
+
     # anchor at 400us: deadline = H6 + 400us; wm_ms floor(H6/1000) → no fire
-    st = FakeState()
-    _run(detector, _rows((1, 400, "signup")), st)
-    st2 = FakeState(watermark_ms=H6 // 1000, value=st._v)
-    out = _run(detector, _rows((2, H6 // 2, "signup")), st2)
-    assert len(out) == 0 and _pending(st2) == [1, 2]
+    h = harness()
+    _run(h, _rows((1, 400, "signup"), clock_ms=H6 // 1000))
+    out = _run(h, _rows((2, H6 // 2, "signup")))
+    assert len(out) == 0 and _pending(h) == [1, 2]
     # anchor at 0: deadline == wm_ms*1000 exactly → fires (<= is non-strict)
-    st3 = FakeState()
-    _run(detector, _rows((1, 0, "signup")), st3)
-    st4 = FakeState(watermark_ms=H6 // 1000, value=st3._v)
-    out2 = _run(detector, _rows((2, H6 // 2, "signup")), st4)
+    h = harness()
+    _run(h, _rows((1, 0, "signup"), clock_ms=H6 // 1000))
+    out2 = _run(h, _rows((2, H6 // 2, "signup")))
     assert list(out2["anchor_id"]) == [1] and list(out2["state"]) == ["timeout"]
     # without rows the same key waits until the watermark passes its timer
-    st5 = FakeState(watermark_ms=H6 // 1000, value=st3._v, timed_out=True)
-    assert len(_fire(detector, st5)) == 0 and _pending(st5) == [1]
-    st6 = FakeState(watermark_ms=H6 // 1000 + 1, value=st3._v, timed_out=True)
-    assert list(_fire(detector, st6)["state"]) == ["timeout"]
+    h = harness()
+    _run(h, _rows((1, 0, "signup"), clock_ms=H6 // 1000))
+    assert len(_run(h, _rows(clock_ms=H6 // 1000 + 1))) == 0 and _pending(h) == [1]
+    assert list(_run(h, _rows())["state"]) == ["timeout"]
 
 
 def test_detector_unfired_timer_stays_pending(detector):
-    st = FakeState()
-    _run(detector, _rows((1, 0, "signup")), st)
-    st2 = FakeState(watermark_ms=US // 1000, value=st._v, timed_out=True)  # before deadline
-    out = _fire(detector, st2)
+    _run(detector, _rows((1, 0, "signup"), clock_ms=US // 1000))
+    out = _fire(detector)  # the watermark stays before the deadline
     assert len(out) == 0
-    assert _pending(st2) == [1]  # anchor still pending
+    assert _pending(detector) == [1]  # anchor still pending
 
 
 @pytest.mark.parametrize(
@@ -274,103 +254,76 @@ _P_STEPS = ["view", "click", "purchase"]
 _P_WITHINS = [None, 30 * 60 * US, 2 * 3600 * US]
 
 
-def _p_collect(gen):
-    frames = list(gen)
-    if not frames:
-        return pd.DataFrame(
-            columns=["user_id", "anchor_id", "t1", "t2", "t3", "max_step", "state"]
-        )
-    return pd.concat(frames, ignore_index=True)
+_P_OUT = ["user_id", "anchor_id", "t1", "t2", "t3", "max_step", "state"]
 
 
-def _p_rows(*evs):
-    return pd.DataFrame(
-        [
-            {"event_id": i, "ts": pd.Timestamp(ts_us, unit="us"), "user_id": 7, "event_type": t}
-            for i, ts_us, t in evs
-        ]
-    )
+def _p_harness(ttl_us=None):
+    """The plain chain matcher on key 7, wired as the engine wires it:
+    event-time timers only with a ttl."""
+    from flink_uba_spark.streaming.pattern import make_pattern_matcher
+
+    detect = make_pattern_matcher(_P_STEPS, _P_WITHINS, ttl_us=ttl_us)
+    if ttl_us is None:
+        return StateHarness(detect, timeout=NO_TIMEOUT, delay_ms=None)
+    return StateHarness(detect)
+
+
+def _p_run(harness, pdf):
+    return _collect(harness.batch(pdf), _P_OUT)
+
+
+def _state(harness):
+    """Key 7's stored state, None when there is none."""
+    return harness.states.get(7, (None, None))[0]
 
 
 def test_pattern_matcher_single_batch_match_and_late():
-    from flink_uba_spark.streaming.pattern import make_pattern_matcher
-
-    detect = make_pattern_matcher(_P_STEPS, _P_WITHINS)
-    st = FakeState()
-    out = _p_collect(
-        detect(
-            (7,),
-            iter(
-                [
-                    _p_rows(
-                        (1, 0, "view"),
-                        (2, 10 * 60 * US, "click"),          # within 30m
-                        (3, 60 * 60 * US, "purchase"),       # within 2h of click
-                        (4, 61 * 60 * US, "view"),
-                        (5, 100 * 60 * US, "click"),         # 39m after view 4 -> late
-                        (6, 110 * 60 * US, "purchase"),
-                    )
-                ]
-            ),
-            st,
-        )
+    st = _p_harness()
+    out = _p_run(
+        st,
+        _rows(
+            (1, 0, "view"),
+            (2, 10 * 60 * US, "click"),          # within 30m
+            (3, 60 * 60 * US, "purchase"),       # within 2h of click
+            (4, 61 * 60 * US, "view"),
+            (5, 100 * 60 * US, "click"),         # 39m after view 4 -> late
+            (6, 110 * 60 * US, "purchase"),
+        ),
     )
     out = out.sort_values("anchor_id").reset_index(drop=True)
     assert list(out["anchor_id"]) == [1, 4]
     assert list(out["state"]) == ["matched", "matched_late"]
-    assert st._v is None  # all chains resolved -> state removed
+    assert _state(st) is None  # all chains resolved -> state removed
 
 
 def test_pattern_matcher_chains_across_batches_and_shares_successors():
-    from flink_uba_spark.streaming.pattern import make_pattern_matcher
-
-    detect = make_pattern_matcher(_P_STEPS, _P_WITHINS)
-    st = FakeState()
+    st = _p_harness()
     # batch 1: two anchors + one click; nothing completes
-    out1 = _p_collect(
-        detect(
-            (7,),
-            iter([_p_rows((1, 0, "view"), (2, 5 * 60 * US, "view"), (3, 6 * 60 * US, "click"))]),
-            st,
-        )
-    )
-    assert len(out1) == 0 and st.exists
+    out1 = _p_run(st, _rows((1, 0, "view"), (2, 5 * 60 * US, "view"), (3, 6 * 60 * US, "click")))
+    assert len(out1) == 0 and _state(st) is not None
     # anchor 1 and 2 both bound click 3; both wait for purchase
-    a_ids, steps = st.get[0], st.get[1]
+    a_ids, steps = _state(st)[0], _state(st)[1]
     assert sorted(a_ids) == [1, 2] and list(steps) == [2, 2]
     # batch 2: one purchase completes BOTH chains off the shared click
-    out2 = _p_collect(
-        detect((7,), iter([_p_rows((9, 20 * 60 * US, "purchase"))]), st)
-    )
+    out2 = _p_run(st, _rows((9, 20 * 60 * US, "purchase")))
     out2 = out2.sort_values("anchor_id").reset_index(drop=True)
     assert list(out2["anchor_id"]) == [1, 2]
     assert list(out2["state"]) == ["matched", "matched"]
-    assert list(out2["t2"].astype("datetime64[ns]").astype("int64") // 1000) == [6 * 60 * US] * 2
-    assert st._v is None
+    assert [case_us(t) for t in out2["t2"]] == [6 * 60 * US] * 2
+    assert _state(st) is None
 
 
 def test_pattern_matcher_same_ts_successor_counts():
     """A same-timestamp successor binds (the batch compiler's
     earlier-steps-first tie rule) and the (ts, id)-minimal candidate wins."""
-    from flink_uba_spark.streaming.pattern import make_pattern_matcher
-
-    detect = make_pattern_matcher(_P_STEPS, _P_WITHINS)
-    st = FakeState()
-    out = _p_collect(
-        detect(
-            (7,),
-            iter(
-                [
-                    _p_rows(
-                        (5, 0, "view"),
-                        (4, 0, "click"),       # same ts as the view -> still binds
-                        (9, 60, "purchase"),
-                        (2, 60, "purchase"),   # equal ts: min id wins
-                    )
-                ]
-            ),
-            st,
-        )
+    out = _p_run(
+        _p_harness(),
+        _rows(
+            (5, 0, "view"),
+            (4, 0, "click"),       # same ts as the view -> still binds
+            (9, 60, "purchase"),
+            (2, 60, "purchase"),   # equal ts: min id wins
+        ),
     )
     assert len(out) == 1 and out.loc[0, "anchor_id"] == 5
     assert out.loc[0, "state"] == "matched"
@@ -420,43 +373,28 @@ def test_pattern_matcher_ttl_flushes_stale_chains_as_incomplete():
     """With state_ttl set, a chain idle past last-bound-ts + ttl (by
     watermark) flushes as an incomplete row and leaves state; fresh chains
     survive the same timer pass."""
-    from flink_uba_spark.streaming.pattern import make_pattern_matcher
-
     ttl = 3600 * US
-    detect = make_pattern_matcher(_P_STEPS, _P_WITHINS, ttl_us=ttl)
-    st = FakeState()
-    # two anchors: one stale (t=0), one fresh (t = ttl - 1s); wm still 0
-    out1 = _p_collect(
-        detect((7,), iter([_p_rows((1, 0, "view"), (2, ttl - US, "view"))]), st)
-    )
-    assert len(out1) == 0 and st.exists and st.timeout_set is not None
+    st = _p_harness(ttl)
+    # two anchors: one stale (t=0), one fresh (t = ttl - 1s); wm still 0;
+    # the next batch runs just past t1=0 + ttl
+    out1 = _p_run(st, _rows((1, 0, "view"), (2, ttl - US, "view"), clock_ms=(ttl + 1000) // 1000))
+    assert len(out1) == 0 and _state(st) is not None and st.states[7][1] != -1
     # timer fires: watermark passes anchor-1's deadline only
-    st.hasTimedOut = True
-    st._wm = (ttl + 1000) // 1000  # ms, just past t1=0 + ttl
-    out2 = _p_collect(detect((7,), iter([]), st))
+    out2 = _p_run(st, _rows())
     assert list(out2["anchor_id"]) == [1]
     assert list(out2["state"]) == ["incomplete"]
     assert list(out2["max_step"]) == [1]
     assert pd.isna(out2.loc[0, "t2"]) and pd.isna(out2.loc[0, "t3"])
-    a_ids, steps = st.get[0], st.get[1]
+    a_ids, steps = _state(st)[0], _state(st)[1]
     assert list(a_ids) == [2]  # fresh chain survives
 
 
 def test_pattern_matcher_ttl_zero_none_is_exact():
     """ttl_us=None (the default) never flushes — state persists across an
     arbitrarily late binder, producing matched_late exactly as batch."""
-    from flink_uba_spark.streaming.pattern import make_pattern_matcher
-
-    detect = make_pattern_matcher(_P_STEPS, _P_WITHINS)
-    st = FakeState()
-    _p_collect(detect((7,), iter([_p_rows((1, 0, "view"))]), st))
-    out = _p_collect(
-        detect(
-            (7,),
-            iter([_p_rows((2, 10**10, "click"), (3, 10**10 + 1, "purchase"))]),
-            st,
-        )
-    )
+    st = _p_harness()
+    _p_run(st, _rows((1, 0, "view")))
+    out = _p_run(st, _rows((2, 10**10, "click"), (3, 10**10 + 1, "purchase")))
     assert list(out["state"]) == ["matched_late"]
 
 
@@ -516,13 +454,6 @@ def test_stream_pattern_arbitrary_predicates_match_batch(spark, sf_dir):
 _K_OUT = ["user_id", "anchor_id", "t1", "t2", "t2_last", "n2", "t3", "max_step", "state"]
 
 
-def _k_collect(gen):
-    frames = list(gen)
-    if not frames:
-        return pd.DataFrame(columns=_K_OUT)
-    return pd.concat(frames, ignore_index=True)
-
-
 def _k_detector(gap_s=100, cap=3):
     from flink_uba_spark.streaming.pattern import make_pattern_matcher
 
@@ -531,71 +462,58 @@ def _k_detector(gap_s=100, cap=3):
     )
 
 
-def _k_rows(*evs):
-    return pd.DataFrame(
-        [
-            {"event_id": i, "ts": pd.Timestamp(ts_s * US, unit="us"), "event_type": t}
-            for i, ts_s, t in evs
-        ]
-    )
+def _k_harness(gap_s=100, cap=3):
+    """The Kleene chain matcher on key 7, on event-time timers."""
+    return StateHarness(_k_detector(gap_s, cap))
+
+
+def _k_run(harness, pdf):
+    return _collect(harness.batch(pdf), _K_OUT)
 
 
 def test_kleene_run_extends_across_batches_then_gap_closes():
-    det = _k_detector()
-    st = FakeState()
-    out1 = _k_collect(det((7,), iter([_k_rows((1, 0, "A"), (2, 10, "B"))]), st))
-    assert len(out1) == 0 and st.exists
-    out2 = _k_collect(
-        det((7,), iter([_k_rows((3, 50, "B"), (4, 400, "B"), (5, 500, "C"))]), st)
-    )
+    st = _k_harness()
+    out1 = _k_run(st, _rows((1, 0, "A"), (2, 10, "B"), unit=US))
+    assert len(out1) == 0 and _state(st) is not None
+    out2 = _k_run(st, _rows((3, 50, "B"), (4, 400, "B"), (5, 500, "C"), unit=US))
     assert len(out2) == 1
     r = out2.iloc[0]
     assert (r["anchor_id"], r["n2"], r["state"]) == (1, 2, "matched")
-    assert pd.Timestamp(r["t2_last"]).value // 1000 == 50 * US
-    assert pd.Timestamp(r["t3"]).value // 1000 == 500 * US
+    assert case_us(r["t2_last"]) == 50 * US
+    assert case_us(r["t3"]) == 500 * US
 
 
 def test_kleene_watermark_closure_binds_buffered_candidate():
-    det = _k_detector(gap_s=100, cap=5)
-    st = FakeState()
-    # C arrives while the run is still open -> buffered, not bound
-    out1 = _k_collect(
-        det((7,), iter([_k_rows((1, 0, "A"), (2, 10, "B"), (3, 50, "C"))]), st)
-    )
-    assert len(out1) == 0 and st.exists and st.timeout_set is not None
-    st.hasTimedOut = True
-    st._wm = ((10 + 100) * US) // 1000 + 1  # ms, past last_rep + gap
-    out2 = _k_collect(det((7,), iter([]), st))
+    st = _k_harness(gap_s=100, cap=5)
+    # C arrives while the run is still open -> buffered, not bound; the
+    # next batch runs past last_rep + gap
+    out1 = _k_run(st, _rows(
+        (1, 0, "A"), (2, 10, "B"), (3, 50, "C"), unit=US, clock_ms=((10 + 100) * US) // 1000 + 1,
+    ))
+    assert len(out1) == 0 and _state(st) is not None and st.states[7][1] != -1
+    out2 = _k_run(st, _rows())
     assert len(out2) == 1
     r = out2.iloc[0]
     assert (r["anchor_id"], r["n2"]) == (1, 1)
-    assert pd.Timestamp(r["t3"]).value // 1000 == 50 * US
-    assert st._v is None
+    assert case_us(r["t3"]) == 50 * US
+    assert _state(st) is None
 
 
 def test_kleene_cap_closure_ignores_overflow_reps():
-    det = _k_detector(gap_s=100, cap=3)
-    st = FakeState()
-    out = _k_collect(
-        det(
-            (7,),
-            iter(
-                [
-                    _k_rows(
-                        (1, 0, "A"), (2, 1, "B"), (3, 2, "B"), (4, 3, "B"),
-                        (5, 4, "B"),               # beyond cap: not in the run
-                        (6, 3, "C"), (7, 5, "C"),  # C@3 ties run-last ts; C@5 binds
-                    )
-                ]
-            ),
-            st,
-        )
+    out = _k_run(
+        _k_harness(gap_s=100, cap=3),
+        _rows(
+            (1, 0, "A"), (2, 1, "B"), (3, 2, "B"), (4, 3, "B"),
+            (5, 4, "B"),               # beyond cap: not in the run
+            (6, 3, "C"), (7, 5, "C"),  # C@3 ties run-last ts; C@5 binds
+            unit=US,
+        ),
     )
     assert len(out) == 1
     r = out.iloc[0]
-    assert (r["n2"], pd.Timestamp(r["t2_last"]).value // 1000 // US) == (3, 3)
+    assert (r["n2"], case_us(r["t2_last"]) // US) == (3, 3)
     # run-last row (B@3, rank 2) precedes C@3 (rank 3) at equal ts -> C@3 binds
-    assert pd.Timestamp(r["t3"]).value // 1000 == 3 * US
+    assert case_us(r["t3"]) == 3 * US
 
 
 def _k_brute(events, gap_s=100, cap=3, final_wm_ms=None):
@@ -652,37 +570,18 @@ def test_kleene_nfa_matches_bruteforce_across_random_splits(seed):
         (i, rnd.randint(0, 1500), rnd.choice("ABBCX"))
         for i in range(rnd.randint(0, 28))
     ]
-    cuts = sorted(rnd.sample(range(1, 1500), rnd.randint(0, 3))) + [10**7]
-    det = _k_detector(gap_s=100, cap=3)
-    st = FakeState()
-    got = []
-
-    def drain(gen):
-        for f in gen:
-            for r in f.itertuples(index=False):
-                got.append(
-                    (
-                        r.anchor_id,
-                        pd.Timestamp(r.t2).value // 1000,
-                        pd.Timestamp(r.t2_last).value // 1000,
-                        r.n2,
-                        pd.Timestamp(r.t3).value // 1000,
-                    )
-                )
-
-    lo = -1
-    for hi in cuts:
-        batch = [e for e in events if lo < e[1] <= hi]
-        lo = hi
-        if batch:
-            drain(det((7,), iter([_k_rows(*batch)]), st))
-    # final watermark = max event time (ms floor), timers fire
-    if events:
-        wm_ms = (max(s for _, s, _ in events) * US) // 1000
-        st.hasTimedOut = True
-        st._wm = wm_ms
-        drain(det((7,), iter([]), st))
-        want = _k_brute(events, final_wm_ms=wm_ms)
-    else:
-        want = []
+    cuts = sorted(rnd.sample(range(1, 1500), rnd.randint(0, 3)))
+    # the final watermark is the max event time (ms floor); timers fire
+    # mid-stream and in the final no-data batch
+    frames, wm_ms = replay(
+        _k_detector(gap_s=100, cap=3),
+        [(i, s * US, t) for i, s, t in events],
+        [c * US for c in cuts],
+        lambda e: {"event_type": e[2] if isinstance(e[2], str) else "tick"},
+    )
+    got = [
+        (r.anchor_id, case_us(r.t2), case_us(r.t2_last), r.n2, case_us(r.t3))
+        for f in frames for r in f.itertuples(index=False)
+    ]
+    want = _k_brute(events, final_wm_ms=wm_ms) if events else []
     assert sorted(got) == want

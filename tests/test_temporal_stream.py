@@ -1,13 +1,16 @@
 """Streaming event-time temporal table join
 (streaming/temporal.py:make_temporal_join_matcher) — brute property over
 micro-batch splits + timers; values 3-SF oracle-gated via
-stream_temporal_join_price_at_view."""
+stream_temporal_join_price_at_view. The matcher runs through the state
+harness (tests/state_harness.py)."""
 
 from __future__ import annotations
 
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
+
+from tests.state_harness import case_us, replay
 
 
 def brute_temporal(events, final_wm_us):
@@ -31,54 +34,26 @@ def brute_temporal(events, final_wm_us):
 
 
 def run_temporal_stream(events, cuts):
-    from test_properties_round5 import _FakeState
-
+    """The matcher through the state harness over ``events`` split at
+    ``cuts``; returns the sorted emitted rows and the final watermark
+    in µs."""
     from flink_uba_spark.streaming.temporal import make_temporal_join_matcher
 
-    detect = make_temporal_join_matcher()
-    state = _FakeState()
-    got = []
-
-    def drain(gen):
-        for f in gen:
-            for r in f.itertuples(index=False):
-                got.append((
-                    int(r.fact_id),
-                    pd.Timestamp(r.fact_ts).value // 1000,
-                    None if pd.isna(r.version_id) else int(r.version_id),
-                    None if pd.isna(r.version_ts)
-                    else pd.Timestamp(r.version_ts).value // 1000,
-                    None if pd.isna(r.payload) else int(r.payload),
-                ))
-
-    lo, wm = -1, 0
-    for hi in cuts + [10 ** 12]:
-        batch = [e for e in events if lo < e[1] <= hi]
-        lo = hi
-        if not batch:
-            continue
-        state._wm = wm
-        pdf = pd.DataFrame(
-            [
-                {"row_id": rid, "ts": pd.Timestamp(ts, unit="us"),
-                 "is_fact": isf, "payload": pay}
-                for rid, ts, isf, pay in batch
-            ]
+    frames, wm_ms = replay(
+        make_temporal_join_matcher(), events, cuts,
+        lambda e: {"row_id": e[0], "is_fact": bool(e[2]), "payload": e[3]},
+    )
+    got = sorted(
+        (
+            int(r.fact_id),
+            case_us(r.fact_ts),
+            None if pd.isna(r.version_id) else int(r.version_id),
+            case_us(r.version_ts),
+            None if pd.isna(r.payload) else int(r.payload),
         )
-        state.hasTimedOut = False
-        drain(detect((1,), iter([pdf]), state))
-        wm = max(wm, max(ts for _, ts, _, _ in batch) // 1000)
-        for _ in range(8):
-            if (state._v is None or state.timeout_set is None
-                    or state.timeout_set >= wm):
-                break
-            state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-            drain(detect((1,), iter([]), state))
-    if state._v is not None and events:
-        state._wm = max(ts for _, ts, _, _ in events) // 1000
-        state.hasTimedOut = True
-        drain(detect((1,), iter([]), state))
-    return sorted(got)
+        for f in frames for r in f.itertuples(index=False)
+    )
+    return got, wm_ms * 1000
 
 
 def test_version_switch_and_null_before_first():
@@ -90,7 +65,8 @@ def test_version_switch_and_null_before_first():
         (3, 5000, True, 0),    # fact reads v=9
         (99, 9000, False, 1),  # tail row advances the wm past fact 3
     ]
-    got = run_temporal_stream(events, [])
+    got, wm_us = run_temporal_stream(events, [])
+    assert wm_us == 9000
     assert got == brute_temporal(events, 9000)
     assert got == [
         (1, 1000, None, None, None),
@@ -106,7 +82,8 @@ def test_same_ts_last_writer_wins():
         (1, 2000, True, 0),
         (99, 9000, False, 1),
     ]
-    got = run_temporal_stream(events, [])
+    got, wm_us = run_temporal_stream(events, [])
+    assert wm_us == 9000
     assert got == [(1, 2000, 12, 1000, 9)]
     assert got == brute_temporal(events, 9000)
 
@@ -128,5 +105,5 @@ def temporal_case(draw):
 @given(temporal_case())
 def test_property_matches_brute(case):
     events, cuts = case
-    final_wm = (max(ts for _, ts, _, _ in events) // 1000) * 1000 if events else 0
-    assert run_temporal_stream(events, cuts) == brute_temporal(events, final_wm)
+    got, final_wm = run_temporal_stream(events, cuts)
+    assert got == brute_temporal(events, final_wm)

@@ -1,15 +1,18 @@
 """Adversarial soak for the CEP engines (round 5): randomized pattern
 specs — plain/Kleene-times steps, notFollowedBy guards, optional steps,
 overlapping slot masks — checked against the brute-force reference in
-tests/test_properties_round5.py.
+tests/test_properties_round5.py. Every streaming mode drives its state
+function through the state harness (tests/state_harness.py): PySpark's
+own GroupState, a watermark that lags one micro-batch, and Spark's final
+no-data batch.
 
 Modes:
-  python tools/nfa_soak.py stream [N]    # fake-state NFA, final-timer drive
+  python tools/nfa_soak.py stream [N]    # the NFA over µs-scale cases
   python tools/nfa_soak.py timers [N]    # + mid-stream timer firings and
-                                         #   lagged watermarks (Spark's real
-                                         #   mechanics) over ms-scale cases;
-                                         #   fails if the watermark never
-                                         #   moves (also stream-consec)
+                                         #   lagged watermarks over ms-scale
+                                         #   cases; fails if the watermark
+                                         #   never passes case time 0 (also
+                                         #   stream-consec)
   python tools/nfa_soak.py batch [N]     # the batch compiler on Spark —
                                          #   VECTORIZED (round 6): 100 cases
                                          #   ride one compiled plan as
@@ -85,6 +88,8 @@ _ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(_ROOT))
 sys.path.insert(0, str(_ROOT / "tests"))
 
+from state_harness import T0, case_us, replay  # noqa: E402
+
 
 def random_case(rnd, max_steps=6, ts_range=200, with_untils=False, with_consecs=False):
     from test_properties_round5 import slot_layout
@@ -155,29 +160,21 @@ def random_case(rnd, max_steps=6, ts_range=200, with_untils=False, with_consecs=
 
 
 def soak_stream(n_cases, timers=False, with_consecs=False):
-    import pandas as pd
-
-    from test_properties_round5 import _FakeState, brute_chain, _drive, slot_layout
+    from test_properties_round5 import brute_chain, slot_layout
     from flink_uba_spark.streaming.pattern import make_pattern_matcher
 
-    wm_reads = [0, 0]  # watermark reads by detect calls: all, above 0
+    wm_reads = [0, 0]  # watermark reads by detect calls: all, past case time 0
 
-    class _WatermarkCountingState(_FakeState):
-        def getCurrentWatermarkMs(self):
-            wm_reads[0] += 1
-            wm_reads[1] += self._wm > 0
-            return self._wm
-
-    def drive_timers(events, steps, cuts, guards, opts, stricts, untils=frozenset(), consecs=frozenset()):
-        # event times, cuts, withins and gaps in ms (x1,000 µs): the
-        # watermark is max ts // 1000 ms, so µs-scale cases would leave it
-        # at 0 and never reach a watermark-driven path (run closure by
-        # timer, the restore of a lapsed times() run)
-        events = [(eid, ts * 1000, m) for eid, ts, m in events]
-        cuts = {c * 1000 for c in cuts}
+    def drive(events, steps, cuts, guards, opts, stricts, untils=frozenset(), consecs=frozenset(), scale=1):
+        # timers mode: event times, cuts, withins and gaps in ms (x1,000
+        # µs): the watermark is the max ts in ms, so µs-scale cases would
+        # leave it at case time 0 and never reach a watermark-driven path
+        # (run closure by timer, the restore of a lapsed times() run)
+        events = [(eid, ts * scale, m) for eid, ts, m in events]
+        cuts = sorted(c * scale for c in cuts)
         steps = [
-            (None if w is None else w * 1000,
-             None if k is None else (k[0] * 1000, *k[1:]))
+            (None if w is None else w * scale,
+             None if k is None else (k[0] * scale, *k[1:]))
             for w, k in steps
         ]
         n = len(steps)
@@ -185,7 +182,7 @@ def soak_stream(n_cases, timers=False, with_consecs=False):
             slots, pslot, gslot, uslot = slot_layout(n, guards, untils)
         else:
             slots, pslot, gslot = slot_layout(n, guards)
-        detect = make_pattern_matcher(
+        matcher = make_pattern_matcher(
             [f"s{k}" for k in range(1, n + 1)],
             [w for w, _ in steps],
             kleenes=[k for _, k in steps],
@@ -195,61 +192,30 @@ def soak_stream(n_cases, timers=False, with_consecs=False):
             untils={k: f"u{k}" for k in untils},
             consecutives=set(consecs),
         )
-        state = _WatermarkCountingState()
-        got = []
+        # the engine runs timers for Kleene steps only
+        has_timers = any(k is not None for _, k in steps)
 
-        def _us(v):
-            t = pd.Timestamp(v)
-            return None if pd.isna(t) else t.value // 1000
+        def detect(key, pdfs, state):
+            if has_timers:
+                wm_reads[0] += 1
+                wm_reads[1] += state.getCurrentWatermarkMs() > T0 // 1000
+            return matcher(key, pdfs, state)
 
-        def drain(gen):
-            for f in gen:
-                for r in f.itertuples(index=False):
-                    key = []
-                    for s in range(1, n + 1):
-                        key.append(_us(getattr(r, f"t{s}")))
-                        if steps[s - 1][1] is not None:
-                            key.append(_us(getattr(r, f"t{s}_last")))
-                            key.append(int(getattr(r, f"n{s}")))
-                    got.append((r.anchor_id, tuple(key), r.state))
-
-        bounds = sorted(cuts) + [10 ** 9]
-        lo, wm = -1, 0
-        for hi in bounds:
-            batch = [e for e in events if lo < e[1] <= hi]
-            lo = hi
-            if not batch:
-                continue
-            state._wm = wm  # lags one batch, as in Spark
-            pdf = pd.DataFrame(
-                [
-                    {
-                        "event_id": eid,
-                        "ts": pd.Timestamp(ts, unit="us"),
-                        **{
-                            f"__{kind}{k}": bool(m >> j & 1)
-                            for j, (kind, k) in enumerate(slots)
-                        },
-                    }
-                    for eid, ts, m in batch
-                ]
-            )
-            state.hasTimedOut = False
-            drain(detect((1,), iter([pdf]), state))
-            wm = max(wm, max(ts for _, ts, _ in batch) // 1000)
-            for _ in range(8):  # mid-stream timer firings
-                if state._v is None or state.timeout_set is None or state.timeout_set >= wm:
-                    break
-                state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-                drain(detect((1,), iter([]), state))
-            state.hasTimedOut = False
-        if events and state._v is not None:
-            state._wm = max(ts for _, ts, _ in events) // 1000
-            state.hasTimedOut = True
-            drain(detect((1,), iter([]), state))
-        wm_final = (
-            max((ts for _, ts, _ in events), default=0) // 1000 if events else None
+        frames, wm_final = replay(
+            detect, events, cuts,
+            lambda e: {f"__{kind}{k}": bool(e[2] >> j & 1) for j, (kind, k) in enumerate(slots)},
+            timers=has_timers,
         )
+        got = []
+        for f in frames:
+            for r in f.itertuples(index=False):
+                key = []
+                for s in range(1, n + 1):
+                    key.append(case_us(getattr(r, f"t{s}")))
+                    if steps[s - 1][1] is not None:
+                        key.append(case_us(getattr(r, f"t{s}_last")))
+                        key.append(int(getattr(r, f"n{s}")))
+                got.append((r.anchor_id, tuple(key), r.state))
         return got, wm_final, events, steps
 
     t0, fails = time.time(), 0
@@ -267,15 +233,13 @@ def soak_stream(n_cases, timers=False, with_consecs=False):
                     rnd, with_untils=True
                 )
                 consecs = frozenset()
-            got, wm, events, steps = drive_timers(
-                events, steps, cuts, guards, opts, stricts, untils, consecs
+            got, wm, events, steps = drive(
+                events, steps, cuts, guards, opts, stricts, untils, consecs, scale=1000
             )
         else:
             steps, guards, opts, stricts, events, cuts = random_case(rnd)
             untils = consecs = frozenset()
-            got, wm = _drive(
-                events, steps, cuts, guards=guards, opts=opts, stricts=stricts
-            )
+            got, wm, events, steps = drive(events, steps, cuts, guards, opts, stricts)
         want = brute_chain(
             events, steps, final_wm_ms=wm, guards=guards, opts=opts,
             stricts=stricts, untils=untils, consecs=consecs,
@@ -290,9 +254,9 @@ def soak_stream(n_cases, timers=False, with_consecs=False):
     print(f"{n_cases} cases ({'timers' if timers else 'final-wm'}), "
           f"{fails} failures, {time.time() - t0:.0f}s")
     if timers:
-        print(f"watermark reads: {wm_reads[0]}, above 0: {wm_reads[1]}")
+        print(f"watermark reads: {wm_reads[0]}, past case time 0: {wm_reads[1]}")
         if not wm_reads[1]:
-            print("FAIL: no detect call read a watermark above 0")
+            print("FAIL: no detect call read a watermark past case time 0")
             return fails + 1
     return fails
 
@@ -881,9 +845,7 @@ def soak_stream_branching(n_cases):
     tag, at the driven final watermark."""
     from itertools import combinations
 
-    import pandas as pd
-
-    from test_properties_round5 import _FakeState, brute_chain
+    from test_properties_round5 import brute_chain
     from flink_uba_spark.streaming.pattern import make_branching_matcher
 
     t0, fails = time.time(), 0
@@ -909,52 +871,16 @@ def soak_stream_branching(n_cases):
             [None if w is None else w for w in withins],
             optionals=sorted(opts),
         )
-        state = _FakeState()
-        got = []
-
-        def drain(gen):
-            for f in gen:
-                for r in f.itertuples(index=False):
-                    key = tuple(
-                        None if pd.isna(getattr(r, f"t{s}"))
-                        else pd.Timestamp(getattr(r, f"t{s}")).value // 1000
-                        for s in range(1, n + 1)
-                    )
-                    got.append((r.anchor_id, key, r.state, r.skipped))
-
-        lo, wm = -1, 0
-        for hi in cuts + [10 ** 9]:
-            batch = [e for e in events if lo < e[1] <= hi]
-            lo = hi
-            if not batch:
-                continue
-            state._wm = wm  # lags one batch, as in Spark
-            pdf = pd.DataFrame(
-                [
-                    {
-                        "event_id": eid,
-                        "ts": pd.Timestamp(ts, unit="us"),
-                        **{f"__p{k}": bool(m >> (k - 1) & 1) for k in range(1, n + 1)},
-                    }
-                    for eid, ts, m in batch
-                ]
-            )
-            state.hasTimedOut = False
-            drain(detect((1,), iter([pdf]), state))
-            wm = max(wm, max(ts for _, ts, _ in batch) // 1000)
-            for _ in range(8):  # mid-stream merged-timer firings
-                if state._v is None or state.timeout_set is None or state.timeout_set >= wm:
-                    break
-                state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-                drain(detect((1,), iter([]), state))
-            state.hasTimedOut = False
-        if events and state._v is not None:
-            state._wm = max(ts for _, ts, _ in events) // 1000
-            state.hasTimedOut = True
-            drain(detect((1,), iter([]), state))
-        wm_final = (
-            max((ts for _, ts, _ in events), default=0) // 1000 if events else None
+        # without a ttl the engine runs branching without timers
+        frames, wm_final = replay(
+            detect, events, cuts,
+            lambda e: {f"__p{k}": bool(e[2] >> (k - 1) & 1) for k in range(1, n + 1)},
+            timers=False,
         )
+        got = [
+            (r.anchor_id, tuple(case_us(getattr(r, f"t{s}")) for s in range(1, n + 1)), r.state, r.skipped)
+            for f in frames for r in f.itertuples(index=False)
+        ]
 
         want = []
         for rr in range(len(opts) + 1):
@@ -997,9 +923,7 @@ def soak_skip(n_cases):
     greedy fold over the per-anchor brute matches). Dense ts collisions
     (0..120 us over up to 30 events) hammer the same-end-event and
     same-ts-anchor tie-breaks."""
-    import pandas as pd
-
-    from test_properties_round5 import _FakeState, brute_skip_past_last, slot_layout
+    from test_properties_round5 import brute_skip_past_last, slot_layout
     from flink_uba_spark.streaming.pattern import make_pattern_matcher
 
     t0, fails = time.time(), 0
@@ -1023,38 +947,16 @@ def soak_skip(n_cases):
             negations={k: f"x{k}" for k in gslot},
             after_match="skip_past_last",
         )
-        state = _FakeState()
-        got = []
-
-        def drain(gen):
-            for f in gen:
-                for r in f.itertuples(index=False):
-                    key = tuple(
-                        None if pd.isna(getattr(r, f"t{s}"))
-                        else pd.Timestamp(getattr(r, f"t{s}")).value // 1000
-                        for s in range(1, n + 1)
-                    )
-                    got.append((r.anchor_id, key, r.state))
-
-        lo = -1
-        for hi in cuts + [10 ** 9]:
-            batch = [e for e in events if lo < e[1] <= hi]
-            lo = hi
-            if not batch:
-                continue
-            pdf = pd.DataFrame(
-                [
-                    {
-                        "event_id": eid, "ts": pd.Timestamp(ts, unit="us"),
-                        **{
-                            f"__{kind}{k}": bool(m >> si & 1)
-                            for si, (kind, k) in enumerate(slots)
-                        },
-                    }
-                    for eid, ts, m in batch
-                ]
-            )
-            drain(det((1,), iter([pdf]), state))
+        # plain steps, no ttl: the engine runs it without timers
+        frames, _ = replay(
+            det, events, cuts,
+            lambda e: {f"__{kind}{k}": bool(e[2] >> si & 1) for si, (kind, k) in enumerate(slots)},
+            timers=False,
+        )
+        got = [
+            (r.anchor_id, tuple(case_us(getattr(r, f"t{s}")) for s in range(1, n + 1)), r.state)
+            for f in frames for r in f.itertuples(index=False)
+        ]
         want = brute_skip_past_last(
             events, [(w, None) for w in withins], guards=guards
         )
@@ -1156,9 +1058,8 @@ def soak_strict(n_cases):
     """Strict-contiguity soak (round 6): randomized plain chains with
     next()/notNext() transitions, the NFA over random micro-batch splits
     vs the independent brute walk in tests/test_round6_ops.py."""
-    from test_round6_ops import FakeState, _brute_strict, _rows
+    from test_round6_ops import _brute_strict
     from flink_uba_spark.streaming.pattern import make_pattern_matcher
-    import pandas as pd
 
     t0, fails = time.time(), 0
     pool = ["A", "B", "C", "D", "X", "Y", "Z"]
@@ -1183,22 +1084,12 @@ def soak_strict(n_cases):
         detect = make_pattern_matcher(
             types, withins, stricts=stricts, not_nexts=nnx
         )
-        st = FakeState()
-        got = []
-        lo = -1
-        for hi in cuts + [10 ** 15]:
-            batch = [e for e in evs if lo < e[1] <= hi]
-            lo = hi
-            if not batch:
-                continue
-            for f in detect((1,), iter([_rows(*batch)]), st):
-                for r in f.itertuples(index=False):
-                    got.append(
-                        (r.anchor_id,
-                         tuple(pd.Timestamp(getattr(r, f"t{s}")).value // 1000
-                               for s in range(1, n + 1)),
-                         r.state)
-                    )
+        # plain steps, no ttl: the engine runs it without timers
+        frames, _ = replay(detect, evs, cuts, lambda e: {"event_type": e[2]}, timers=False)
+        got = [
+            (r.anchor_id, tuple(case_us(getattr(r, f"t{s}")) for s in range(1, n + 1)), r.state)
+            for f in frames for r in f.itertuples(index=False)
+        ]
         want = _brute_strict(evs, types, withins, stricts, nnx)
         if sorted(got) != want:
             fails += 1
@@ -1324,9 +1215,6 @@ def soak_stream_any(n_cases):
     band) plus mid-stream timer firings, checked for SET equality with
     brute_any: a complete replay must emit every combination exactly
     once regardless of how the stream was cut."""
-    import pandas as pd
-
-    from test_properties_round5 import _FakeState
     from test_round7_ops import brute_any, brute_skip_to_next
     from flink_uba_spark.streaming.pattern import make_any_matcher
 
@@ -1343,61 +1231,17 @@ def soak_stream_any(n_cases):
         cuts = sorted({rnd.randint(1, 60) for _ in range(rnd.randint(0, 4))})
 
         def run_mode(after_match):
-            detect = make_any_matcher(n, withins, after_match=after_match)
-            state = _FakeState()
-            got = []
-
-            def drain(gen):
-                for f in gen:
-                    for r in f.itertuples(index=False):
-                        got.append(
-                            tuple(int(getattr(r, f"i{k}")) for k in range(1, n + 1))
-                            + tuple(
-                                pd.Timestamp(getattr(r, f"t{k}")).value // 1000
-                                for k in range(1, n + 1)
-                            )
-                        )
-
-            lo, wm = -1, 0
-            for hi in cuts + [10 ** 9]:
-                batch = [e for e in events if lo < e[1] <= hi]
-                lo = hi
-                if not batch:
-                    continue
-                state._wm = wm  # lags one batch, as in Spark
-                pdf = pd.DataFrame(
-                    [
-                        {
-                            "event_id": eid,
-                            "ts": pd.Timestamp(ts, unit="us"),
-                            **{f"__p{k}": bool(m >> (k - 1) & 1) for k in range(1, n + 1)},
-                        }
-                        for eid, ts, m in batch
-                        if m
-                    ]
-                )
-                if not len(pdf):
-                    continue
-                state.hasTimedOut = False
-                drain(detect((1,), iter([pdf]), state))
-                wm = max(wm, max(ts for _, ts, _ in batch) // 1000)
-                for _ in range(8):  # mid-stream timer firings
-                    if (
-                        state._v is None
-                        or state.timeout_set is None
-                        or state.timeout_set >= wm
-                    ):
-                        break
-                    state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-                    drain(detect((1,), iter([]), state))
-                    state.hasTimedOut = False
-            if state._v is not None and events:
-                # final availableNow timer drive at wm = max event ts
-                state._wm = max(ts for _, ts, _ in events) // 1000
-                state.hasTimedOut = True
-                drain(detect((1,), iter([]), state))
-                state.hasTimedOut = False
-            return sorted(got)
+            frames, _ = replay(
+                make_any_matcher(n, withins, after_match=after_match),
+                [e for e in events if e[2]],  # the scan filter
+                cuts,
+                lambda e: {f"__p{k}": bool(e[2] >> (k - 1) & 1) for k in range(1, n + 1)},
+            )
+            return sorted(
+                tuple(int(getattr(r, f"i{k}")) for k in range(1, n + 1))
+                + tuple(case_us(getattr(r, f"t{k}")) for k in range(1, n + 1))
+                for f in frames for r in f.itertuples(index=False)
+            )
 
         got = run_mode(None)
         sgot = run_mode("skip_to_next")
@@ -1440,10 +1284,7 @@ def soak_iter(n_cases):
             if rnd.random() < 0.6:
                 conds[k] = (rnd.choice(["ge2x", "gt", "le"]), rnd.randint(1, k - 1))
         cuts = sorted({rnd.randint(1, 50) * 1000 for _ in range(rnd.randint(0, 4))})
-        final_wm = (
-            (max(ts for _, ts, _, _ in events) // 1000) * 1000 if events else None
-        )
-        got = run_iter_stream(events, withins, conds, n, cuts)
+        got, final_wm = run_iter_stream(events, withins, conds, n, cuts)
         want = brute_iter(events, withins, conds, final_wm_us=final_wm)
         if got != want:
             fails += 1
@@ -1467,10 +1308,11 @@ def soak_fused(n_cases):
     pending chains, and the seg_lens segmentation must survive every
     update). Reference: brute_chain with the exact-count spec per
     branch, unioned (rows are branch-disjoint through nK where bound),
-    at the driven final watermark."""
+    at the driven final watermark. Times are in whole ms, so the
+    ms-granularity watermark closes runs mid-stream."""
     import pandas as pd
 
-    from test_properties_round5 import _FakeState, brute_chain
+    from test_properties_round5 import brute_chain
     from flink_uba_spark.streaming.pattern import (
         make_fused_matcher,
         make_pattern_matcher,
@@ -1479,17 +1321,17 @@ def soak_fused(n_cases):
     t0, fails = time.time(), 0
     for seed in range(n_cases):
         rnd = random.Random(seed * 22801763489 + 17)
-        gap = rnd.randint(2, 40)
-        w1 = rnd.choice([None, rnd.randint(2, 60)])
-        w3 = rnd.randint(2, 80)
+        gap = rnd.randint(2, 40) * 1000
+        w1 = rnd.choice([None, rnd.randint(2, 60) * 1000])
+        w3 = rnd.randint(2, 80) * 1000
         mn = rnd.randint(1, 2)
         mx = mn + rnd.randint(0, 2)
         events = [
-            (i, rnd.randint(0, 120),
+            (i, rnd.randint(0, 120) * 1000,
              rnd.getrandbits(3) if rnd.random() < 0.92 else 0)
             for i in range(rnd.randint(0, 26))
         ]
-        cuts = sorted({rnd.randint(1, 120) for _ in range(rnd.randint(0, 4))})
+        cuts = sorted({rnd.randint(1, 120) * 1000 for _ in range(rnd.randint(0, 4))})
 
         counts = list(range(mn, mx + 1))
         detect = make_fused_matcher(
@@ -1505,56 +1347,19 @@ def soak_fused(n_cases):
                 for m in counts
             ],
         )
-        state = _FakeState()
-        got = []
-
-        def drain(gen):
-            for f in gen:
-                for r in f.itertuples(index=False):
-                    def us(v):
-                        t = pd.Timestamp(v)
-                        return None if pd.isna(t) else t.value // 1000
-                    got.append((
-                        r.anchor_id,
-                        (us(r.t1), us(r.t2), us(r.t2_last),
-                         None if pd.isna(r.n2) else int(r.n2), us(r.t3)),
-                        r.state,
-                    ))
-
-        lo, wm = -1, 0
-        for hi in cuts + [10 ** 9]:
-            batch = [e for e in events if lo < e[1] <= hi]
-            lo = hi
-            if not batch:
-                continue
-            state._wm = wm  # lags one batch, as in Spark
-            pdf = pd.DataFrame(
-                [
-                    {
-                        "event_id": eid,
-                        "ts": pd.Timestamp(ts, unit="us"),
-                        **{f"__p{k}": bool(m >> (k - 1) & 1)
-                           for k in range(1, 4)},
-                    }
-                    for eid, ts, m in batch
-                ]
-            )
-            state.hasTimedOut = False
-            drain(detect((1,), iter([pdf]), state))
-            wm = max(wm, max(ts for _, ts, _ in batch) // 1000)
-            for _ in range(8):  # mid-stream merged-timer firings
-                if state._v is None or state.timeout_set is None or state.timeout_set >= wm:
-                    break
-                state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-                drain(detect((1,), iter([]), state))
-            state.hasTimedOut = False
-        if events and state._v is not None:
-            state._wm = max(ts for _, ts, _ in events) // 1000
-            state.hasTimedOut = True
-            drain(detect((1,), iter([]), state))
-        wm_final = (
-            max((ts for _, ts, _ in events), default=0) // 1000 if events else None
+        frames, wm_final = replay(
+            detect, events, cuts,
+            lambda e: {f"__p{k}": bool(e[2] >> (k - 1) & 1) for k in range(1, 4)},
         )
+        got = [
+            (
+                r.anchor_id,
+                (case_us(r.t1), case_us(r.t2), case_us(r.t2_last),
+                 None if pd.isna(r.n2) else int(r.n2), case_us(r.t3)),
+                r.state,
+            )
+            for f in frames for r in f.itertuples(index=False)
+        ]
 
         want = []
         for m in counts:
@@ -1675,8 +1480,10 @@ def soak_budget_stream(n_cases):
     t0, fails = time.time(), 0
     for seed in range(n_cases):
         rnd = random.Random(seed * 69069 + 5)
-        gap = rnd.randint(2, 25)
-        sfx = rnd.randint(2, 40)
+        # times in whole ms: a µs-scale case never moves the watermark
+        # past case time 0, and every match stays pending
+        gap = rnd.randint(2, 25) * 1000
+        sfx = rnd.randint(2, 40) * 1000
         budget = rnd.randint(0, 15)
         cap = rnd.randint(1, 4)
         events = []
@@ -1684,8 +1491,8 @@ def soak_budget_stream(n_cases):
             m = rnd.getrandbits(3)
             # earliest-class rule: collapse multi-class masks
             m = 1 if m & 1 else (2 if m & 2 else (4 if m & 4 else 0))
-            events.append((i, rnd.randint(0, 60), m, rnd.randint(0, 8)))
-        cuts = {rnd.randint(1, 60) for _ in range(rnd.randint(0, 4))}
+            events.append((i, rnd.randint(0, 60) * 1000, m, rnd.randint(0, 8)))
+        cuts = {rnd.randint(1, 60) * 1000 for _ in range(rnd.randint(0, 4))}
         got, wm_final = _drive_stream(events, cuts, budget, gap, sfx, cap)
         want = brute_budget_run_stream(events, budget, gap, sfx, cap, wm_final)
         if sorted(got) != want:
@@ -1799,9 +1606,7 @@ def soak_pref(n_cases):
     ``t1 + horizon < final_wm`` strictly (the fold's decidability
     contract — the streaming alternation/PERMUTE MATCH_RECOGNIZE
     route's engine)."""
-    import pandas as pd
-
-    from test_properties_round5 import _FakeState, brute_chain
+    from test_properties_round5 import brute_chain
     from flink_uba_spark.streaming.pattern import (
         make_pattern_matcher,
         make_preference_fused,
@@ -1851,51 +1656,14 @@ def soak_pref(n_cases):
                 (det, [f"c{s}" for s in branch_slots[bi]], project)
             )
         detect = make_preference_fused(built, n, horizon)
-        state = _FakeState()
-        got = []
-
-        def drain(gen):
-            for f in gen:
-                for r in f.itertuples(index=False):
-                    def us(v):
-                        t = pd.Timestamp(v)
-                        return None if pd.isna(t) else t.value // 1000
-                    got.append((
-                        int(r.anchor_id), int(r._1),
-                        tuple(us(getattr(r, f"t{k}")) for k in range(1, n + 1)),
-                    ))
-
-        lo, wm = -1, 0
-        for hi in cuts + [10 ** 9]:
-            batch = [e for e in events if lo < e[1] <= hi]
-            lo = hi
-            if not batch:
-                continue
-            state._wm = wm
-            pdf = pd.DataFrame(
-                [
-                    {
-                        "event_id": eid,
-                        "ts": pd.Timestamp(ts, unit="us"),
-                        **{f"c{j}": bool(m >> j & 1) for j in range(nslots)},
-                    }
-                    for eid, ts, m in batch
-                ]
-            )
-            state.hasTimedOut = False
-            drain(detect((1,), iter([pdf]), state))
-            wm = max(wm, max(ts for _, ts, _ in batch) // 1000)
-            for _ in range(8):
-                if state._v is None or state.timeout_set is None or state.timeout_set >= wm:
-                    break
-                state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-                drain(detect((1,), iter([]), state))
-            state.hasTimedOut = False
-        if events and state._v is not None:
-            state._wm = max(ts for _, ts, _ in events) // 1000
-            state.hasTimedOut = True
-            drain(detect((1,), iter([]), state))
-        wm_final = max((ts for _, ts, _ in events), default=0) // 1000
+        frames, wm_final = replay(
+            detect, events, cuts,
+            lambda e: {f"c{j}": bool(e[2] >> j & 1) for j in range(nslots)},
+        )
+        got = [
+            (int(r.anchor_id), int(r._1), tuple(case_us(getattr(r, f"t{k}")) for k in range(1, n + 1)))
+            for f in frames for r in f.itertuples(index=False)
+        ]
 
         per_anchor = {}
         for bi in range(B):
@@ -1984,9 +1752,6 @@ def soak_skip_to_stream(n_cases):
     horizon replay (``>=`` for skip_to, strictly-past for past_last;
     bound-violating candidates pruned BEFORE the fold), candidates
     final once ``end + H < final_wm``."""
-    import pandas as pd
-
-    from test_properties_round5 import _FakeState
     from flink_uba_spark.streaming.skip_replay import (
         make_quantified_chain_replayer,
     )
@@ -2014,48 +1779,15 @@ def soak_skip_to_stream(n_cases):
             n, withins_us, [None] * n, h_us, within_overall_us=wo_us,
             mode=mode, skip_step=skip_step,
         )
-        state = _FakeState()
-        got = []
-
-        def drain(gen):
-            for f in gen:
-                for r in f.itertuples(index=False):
-                    got.append((
-                        int(r.anchor_id),
-                        tuple(pd.Timestamp(getattr(r, f"t{k}")).value // 1000
-                              for k in range(1, n + 1)),
-                        int(r.end_id),
-                    ))
-
-        lo, wm = -1, 0
-        for hi in cuts + [10 ** 9]:
-            batch = [e for e in events if lo < e[1] <= hi]
-            lo = hi
-            if not batch:
-                continue
-            state._wm = wm
-            pdf = pd.DataFrame(
-                [
-                    {"event_id": eid, "ts": pd.Timestamp(ts, unit="us"),
-                     **{f"f{k}": bool(m >> (k - 1) & 1)
-                        for k in range(1, n + 1)}}
-                    for eid, ts, m in batch
-                ]
-            )
-            state.hasTimedOut = False
-            drain(detect((1,), iter([pdf]), state))
-            wm = max(wm, max(ts for _, ts, _ in batch) // 1000)
-            for _ in range(8):
-                if state._v is None or state.timeout_set is None or state.timeout_set >= wm:
-                    break
-                state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-                drain(detect((1,), iter([]), state))
-            state.hasTimedOut = False
-        if events and state._v is not None:
-            state._wm = max(ts for _, ts, _ in events) // 1000
-            state.hasTimedOut = True
-            drain(detect((1,), iter([]), state))
-        wm_final_us = (max((ts for _, ts, _ in events), default=0) // 1000) * 1000
+        frames, wm_final = replay(
+            detect, events, cuts,
+            lambda e: {f"f{k}": bool(e[2] >> (k - 1) & 1) for k in range(1, n + 1)},
+        )
+        got = [
+            (int(r.anchor_id), tuple(case_us(getattr(r, f"t{k}")) for k in range(1, n + 1)), int(r.end_id))
+            for f in frames for r in f.itertuples(index=False)
+        ]
+        wm_final_us = wm_final * 1000
 
         cands = _skip_brute_chain_cands(events, n, withins_us)
         if wo_us is not None:
@@ -2093,9 +1825,6 @@ def soak_lazy_stream(n_cases):
     independent brute — per-count skip-till-next candidates,
     earliest-completion preference, the strictly-past horizon replay,
     final once ``t3 + H < final_wm``."""
-    import pandas as pd
-
-    from test_properties_round5 import _FakeState
     from flink_uba_spark.streaming.skip_replay import (
         make_quantified_chain_replayer,
     )
@@ -2122,7 +1851,6 @@ def soak_lazy_stream(n_cases):
             3, [None, gap_us, sfx_us], [None, (gap_us, mn, mx, True), None],
             h_us, within_overall_us=wo_us,
         )
-        state = _FakeState()
         got = []
 
         def drain(gen):
@@ -2130,39 +1858,14 @@ def soak_lazy_stream(n_cases):
                 for r in f.itertuples(index=False):
                     got.append((
                         int(r.anchor_id),
-                        tuple(pd.Timestamp(getattr(r, c)).value // 1000
+                        tuple(case_us(getattr(r, c))
                               for c in ("t1", "t2", "t2_last", "t3")),
                         int(r.n2), int(r.end_id),
                     ))
 
-        lo, wm = -1, 0
-        for hi in cuts + [10 ** 9]:
-            batch = [e for e in events if lo < e[1] <= hi]
-            lo = hi
-            if not batch:
-                continue
-            state._wm = wm
-            pdf = pd.DataFrame(
-                [
-                    {"event_id": eid, "ts": pd.Timestamp(ts, unit="us"),
-                     **{f"f{k}": bool(m >> (k - 1) & 1) for k in range(1, 4)}}
-                    for eid, ts, m in batch
-                ]
-            )
-            state.hasTimedOut = False
-            drain(detect((1,), iter([pdf]), state))
-            wm = max(wm, max(ts for _, ts, _ in batch) // 1000)
-            for _ in range(8):
-                if state._v is None or state.timeout_set is None or state.timeout_set >= wm:
-                    break
-                state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-                drain(detect((1,), iter([]), state))
-            state.hasTimedOut = False
-        if events and state._v is not None:
-            state._wm = max(ts for _, ts, _ in events) // 1000
-            state.hasTimedOut = True
-            drain(detect((1,), iter([]), state))
-        wm_final_us = (max((ts for _, ts, _ in events), default=0) // 1000) * 1000
+        frames, wm_final = replay(detect, events, cuts, lambda e: {f"f{k}": bool(e[2] >> (k - 1) & 1) for k in range(1, 4)})
+        drain(frames)
+        wm_final_us = wm_final * 1000
 
         # brute: per-count skip-till-next candidates over the total order
         total = _skip_brute_order(events, 3)
@@ -2328,9 +2031,7 @@ def soak_trail_stream(n_cases):
     family's decidability cut (emitted ends are non-decreasing, so the
     stream result is exactly the batch fold's ``end + H < final_wm``
     prefix)."""
-    import pandas as pd
-
-    from test_properties_round5 import _FakeState, brute_skip_past_last
+    from test_properties_round5 import brute_skip_past_last
     from flink_uba_spark.streaming.skip_replay import (
         make_quantified_chain_replayer,
     )
@@ -2360,7 +2061,6 @@ def soak_trail_stream(n_cases):
             n, withins_us, [None] * (n - 1) + [(gap_us, mn, mx)], h_us,
             within_overall_us=wo_us,
         )
-        state = _FakeState()
         got = []
         tcols = [f"t{k}" for k in range(1, n + 1)] + [f"t{n}_last"]
 
@@ -2369,40 +2069,14 @@ def soak_trail_stream(n_cases):
                 for r in f.itertuples(index=False):
                     got.append((
                         int(r.anchor_id),
-                        tuple(pd.Timestamp(getattr(r, c)).value // 1000
+                        tuple(case_us(getattr(r, c))
                               for c in tcols)
                         + (int(getattr(r, f"n{n}")),),
                     ))
 
-        lo, wm = -1, 0
-        for hi in cuts + [10 ** 9]:
-            batch = [e for e in events if lo < e[1] <= hi]
-            lo = hi
-            if not batch:
-                continue
-            state._wm = wm
-            pdf = pd.DataFrame(
-                [
-                    {"event_id": eid, "ts": pd.Timestamp(ts, unit="us"),
-                     **{f"f{k}": bool(m >> (k - 1) & 1)
-                        for k in range(1, n + 1)}}
-                    for eid, ts, m in batch
-                ]
-            )
-            state.hasTimedOut = False
-            drain(detect((1,), iter([pdf]), state))
-            wm = max(wm, max(ts for _, ts, _ in batch) // 1000)
-            for _ in range(8):
-                if state._v is None or state.timeout_set is None or state.timeout_set >= wm:
-                    break
-                state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-                drain(detect((1,), iter([]), state))
-            state.hasTimedOut = False
-        if events and state._v is not None:
-            state._wm = max(ts for _, ts, _ in events) // 1000
-            state.hasTimedOut = True
-            drain(detect((1,), iter([]), state))
-        wm_final_us = (max((ts for _, ts, _ in events), default=0) // 1000) * 1000
+        frames, wm_final = replay(detect, events, cuts, lambda e: {f"f{k}": bool(e[2] >> (k - 1) & 1) for k in range(1, n + 1)})
+        drain(frames)
+        wm_final_us = wm_final * 1000
 
         bsteps = [(w, None) for w in withins_us[:-1]] + [
             (gap_us, (gap_us, mx, mn))
@@ -2435,9 +2109,6 @@ def soak_quant_stream(n_cases):
     within_overall — over arbitrary batch splits + mid-stream timer
     fires, vs brute_skip_past_last (opts forwarded) truncated at the
     family's decidability cut ``end + H < final_wm``."""
-    import pandas as pd
-
-    from test_properties_round5 import _FakeState, brute_skip_past_last
     from flink_uba_spark.streaming.skip_replay import (
         make_quantified_chain_replayer,
     )
@@ -2482,7 +2153,6 @@ def soak_quant_stream(n_cases):
             n, withins_us, kleenes, h_us, within_overall_us=wo_us,
             optionals=opts,
         )
-        state = _FakeState()
         got = []
 
         def drain(gen):
@@ -2490,48 +2160,17 @@ def soak_quant_stream(n_cases):
                 for r in f.itertuples(index=False):
                     key = []
                     for k in range(1, n + 1):
-                        t = pd.Timestamp(getattr(r, f"t{k}"))
-                        key.append(None if pd.isna(t) else t.value // 1000)
+                        key.append(case_us(getattr(r, f"t{k}")))
                         if kleenes[k - 1] is not None:
-                            key.append(
-                                pd.Timestamp(
-                                    getattr(r, f"t{k}_last")
-                                ).value // 1000
-                            )
+                            key.append(case_us(getattr(r, f"t{k}_last")))
                             key.append(int(getattr(r, f"n{k}")))
                     got.append(
                         (int(r.anchor_id), tuple(key), int(r.end_id))
                     )
 
-        lo, wm = -1, 0
-        for hi in cuts + [10 ** 9]:
-            batch = [e for e in events if lo < e[1] <= hi]
-            lo = hi
-            if not batch:
-                continue
-            state._wm = wm
-            pdf = pd.DataFrame(
-                [
-                    {"event_id": eid, "ts": pd.Timestamp(ts, unit="us"),
-                     **{f"f{k}": bool(m >> (k - 1) & 1)
-                        for k in range(1, n + 1)}}
-                    for eid, ts, m in batch
-                ]
-            )
-            state.hasTimedOut = False
-            drain(detect((1,), iter([pdf]), state))
-            wm = max(wm, max(ts for _, ts, _ in batch) // 1000)
-            for _ in range(8):
-                if state._v is None or state.timeout_set is None or state.timeout_set >= wm:
-                    break
-                state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-                drain(detect((1,), iter([]), state))
-            state.hasTimedOut = False
-        if events and state._v is not None:
-            state._wm = max(ts for _, ts, _ in events) // 1000
-            state.hasTimedOut = True
-            drain(detect((1,), iter([]), state))
-        wm_final_us = (max((ts for _, ts, _ in events), default=0) // 1000) * 1000
+        frames, wm_final = replay(detect, events, cuts, lambda e: {f"f{k}": bool(e[2] >> (k - 1) & 1) for k in range(1, n + 1)})
+        drain(frames)
+        wm_final_us = wm_final * 1000
 
         bsteps = [
             (withins_us[k - 1],
@@ -2599,7 +2238,7 @@ def soak_quant_value_stream(n_cases):
     recomputed from the member slices."""
     import pandas as pd
 
-    from test_properties_round5 import _FakeState, brute_chain
+    from test_properties_round5 import brute_chain
     from flink_uba_spark.streaming.skip_replay import (
         make_quantified_chain_replayer,
     )
@@ -2658,8 +2297,11 @@ def soak_quant_value_stream(n_cases):
             optionals=opts, mode=skip_kind, all_rows=all_rows,
             n_vals=0 if all_rows else 1, aggs=aggs,
         )
-        state = _FakeState()
         got = []
+
+        def cols(e):
+            flags = {f"f{k}": bool(e[2] >> (k - 1) & 1) for k in range(1, n + 1)}
+            return flags if all_rows else {**flags, "v0": e[3]}
 
         def drain(gen):
             for f in gen:
@@ -2667,7 +2309,7 @@ def soak_quant_value_stream(n_cases):
                     if all_rows:
                         got.append((int(r.anchor_id), int(r.seq),
                                     int(r.event_id),
-                                    pd.Timestamp(r.ts).value // 1000))
+                                    case_us(r.ts)))
                         continue
                     rec = [int(r.anchor_id)]
                     for i in range(len(aggs)):
@@ -2679,40 +2321,9 @@ def soak_quant_value_stream(n_cases):
                     rec.append(int(r.end_id))
                     got.append(tuple(rec))
 
-        lo, wm = -1, 0
-        for hi in cuts + [10 ** 9]:
-            batch = [e for e in events if lo < e[1] <= hi]
-            lo = hi
-            if not batch:
-                continue
-            state._wm = wm
-            pdf = pd.DataFrame(
-                [
-                    {"event_id": eid, "ts": pd.Timestamp(ts, unit="us"),
-                     **{f"f{k}": bool(m >> (k - 1) & 1)
-                        for k in range(1, n + 1)},
-                     "v0": v}
-                    for eid, ts, m, v in batch
-                ]
-            )
-            if all_rows:
-                pdf = pdf.drop(columns=["v0"])
-            state.hasTimedOut = False
-            drain(detect((1,), iter([pdf]), state))
-            wm = max(wm, max(ts for _, ts, _m, _v in batch) // 1000)
-            for _ in range(8):
-                if state._v is None or state.timeout_set is None or state.timeout_set >= wm:
-                    break
-                state._wm, state.hasTimedOut, state.timeout_set = wm, True, None
-                drain(detect((1,), iter([]), state))
-            state.hasTimedOut = False
-        if events and state._v is not None:
-            state._wm = max(ts for _, ts, _m, _v in events) // 1000
-            state.hasTimedOut = True
-            drain(detect((1,), iter([]), state))
-        wm_final_us = (
-            max((ts for _, ts, _m, _v in events), default=0) // 1000
-        ) * 1000
+        frames, wm_final = replay(detect, events, cuts, cols)
+        drain(frames)
+        wm_final_us = wm_final * 1000
 
         bsteps = [
             (withins_us[k - 1],

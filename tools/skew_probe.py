@@ -25,6 +25,7 @@ import pandas as pd
 # the repository this tool belongs to, wherever it is checked out
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tests"))
 
 N1 = 200_000           # events at 1×; 10% on the hot key
 TYPES = ["signup", "view", "click", "error", "purchase"]
@@ -156,8 +157,10 @@ def probes(spark, path):
 
 def nfa_probe(copies: int) -> float:
     """The streaming NFA's per-key cost on the hot key alone (pure numpy;
-    this is exactly the work one executor task does for the key)."""
+    this is exactly the work one executor task does for the key), in one
+    micro-batch of the state harness (tests/state_harness.py)."""
     from flink_uba_spark.streaming.pattern import make_pattern_matcher
+    from state_harness import T0, StateHarness
 
     rng = np.random.RandomState(7)
     m = N1 // 10 * copies
@@ -165,35 +168,17 @@ def nfa_probe(copies: int) -> float:
     ids = np.arange(m, dtype="int64")
     et = rng.choice(TYPES, size=m)
 
-    class _S:
-        _v, hasTimedOut, _wm = None, False, 0
-        exists = property(lambda s: s._v is not None)
-        get = property(lambda s: s._v)
-
-        def getCurrentWatermarkMs(self):
-            return self._wm
-
-        def update(self, v):
-            self._v = v
-
-        def setTimeoutTimestamp(self, ms):
-            pass
-
-        def remove(self):
-            self._v = None
-
     detect = make_pattern_matcher(
         ["signup", "view", "error", "purchase"],
         [None, 3600 * 10**6, 6 * 3600 * 10**6, 12 * 3600 * 10**6],
         kleenes=[None, None, (6 * 3600 * 10**6, 3), None],
     )
+    # past watermark 0, at or below which rows are late
     pdf = pd.DataFrame(
-        {"event_id": ids, "ts": pd.to_datetime(ts, unit="us"), "event_type": et}
+        {"event_id": ids, "ts": pd.to_datetime(T0 + ts, unit="us"), "user_id": 0, "event_type": et}
     )
-    st = _S()
     t0 = time.time()
-    for _ in detect((0,), iter([pdf]), st):
-        pass
+    StateHarness(detect).batch(pdf)
     dt = time.time() - t0
 
     # round-6 variant on the same hot-key frame: strict entry + UNCAPPED
@@ -205,10 +190,8 @@ def nfa_probe(copies: int) -> float:
         kleenes=[None, None, (6 * 3600 * 10**6, None), None],
         stricts={2},
     )
-    st = _S()
     t0 = time.time()
-    for _ in detect6((0,), iter([pdf]), st):
-        pass
+    StateHarness(detect6).batch(pdf)
     return dt, time.time() - t0
 
 
